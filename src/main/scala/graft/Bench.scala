@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import graft.core.GraftSession
 
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -14,64 +13,17 @@ import org.apache.spark.sql.functions.col
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // INT96 writes NO stats (GraftSession)
-      // Static conf, default 100 entries: a 258-query suite evicts the
-      // whole-stage-codegen class cache between the warm-up pass and the
-      // timed pass, so heavy multi-stage queries re-pay Janino
-      // compilation INSIDE their timed region (t27 measured 23.1 s
-      // in-suite vs 7.9 s warm isolated on identical code — the delta is
-      // recompilation, not execution). Sizing the cache to hold the
-      // suite's generated classes makes the timed pass measure the
-      // steady state the warm-up pass exists to establish; production
-      // long-lived sessions running many distinct queries want the same.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.warehouse.dir", // bucketed saveAsTable scratch
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate()
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
 
+    // teardown is billed to the query that left the residue
     def once(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      GraftSession.attempt(spark) {
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }.foreach { e =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      finally {
-        spark.catalog.clearCache() // release per-query persists (d03/d05 sig tables)
-        // localCheckpoint blocks (d03/d07/d11 lineage truncation) are NOT
-        // in the SQL cache — they live until the RDD object is GC'd, so
-        // their shuffle/memory footprint lands on every LATER query's
-        // wall time (r6: d03 17.2 s in-suite vs 2.5 s isolated). Release
-        // them eagerly — and BLOCKING, so the removal cost is billed
-        // inside this `finally` to the query that created the blocks,
-        // not to whichever neighbor runs while the async removal drains
-        // (r8: d08 12.1 s in-suite vs 2.6 s isolated from exactly this).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        // Memory-sink temp views (streaming drains) pin every drained
-        // row in heap for the rest of the suite — 28 streaming queries
-        // × 2 passes of accumulated sinks turned into GC debt billed to
-        // whichever queries ran late (r10: st04 6.4 s in-suite vs 1.8 s
-        // isolated from exactly this). Drop each query's sinks in its
-        // own teardown so the rows are collectable immediately. The
-        // names come from the Streams registry every sink-creating site
-        // feeds — not a naming-convention scrape of the catalog, which
-        // a future non-"_sink" queryName would silently slip past.
-        graft.streaming.Streams.drainRegisteredMemorySinks()
-          .foreach(spark.catalog.dropTempView)
+        failed += name
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -98,7 +50,7 @@ object Bench {
     val results = names.map { n =>
       System.gc(); Thread.sleep(300)
       n -> once(n)
-    }
+    }.filterNot { case (n, _) => failed(n) }
     // Locale.ROOT formatting: f"%.3f" under a comma-decimal default
     // locale would emit invalid JSON
     def num(v: Double, d: Int): String =
@@ -109,9 +61,13 @@ object Bench {
         "\"" + key + "\":" + num(v, if (short) 2 else 3)
       }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2).sum
+    // a failed query has no time: it is named here, left out of
+    // `queries` and `total`, and the run exits non-zero
+    val failedJson = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(failed.toArray)
     // Full-name per-query detail, written where the judge can read it.
-    val fullLine = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(short = false)},"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(short = false)},"sf":"$sfDir","failed":$failedJson}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -121,10 +77,11 @@ object Bench {
     // compact line (unique short keys = prefix before the first '_',
     // 2-decimal secs, ~1.3k chars) so the driver's JSON parse succeeds;
     // full names live in BENCH_FULL.json (tracked in git).
-    val line = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(short = true)},"sf":"$sfDir","detail":"BENCH_FULL.json"}"""
+    val line = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(short = true)},"sf":"$sfDir","detail":"BENCH_FULL.json","failed":$failedJson}"""
     // Stop Spark BEFORE printing so the JSON is the final stdout line
     // (shutdown logging goes to stderr, but don't race it).
     spark.stop()
     println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+  /** `SPARK_GRAFT_CPUS`, default 32: the local cores a harness session runs on. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def builder(master: String = s"local[$cpus]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -48,11 +51,44 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
 
-  def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
+  /** The session every harness main (Bench, Verify, Probe, PlanAudit,
+    * SchemaAudit, GenScale, ScaleStress) and the test base run on: the
+    * production conf above on `cores` local cores with as many shuffle
+    * partitions, so the oracle checks the plans the bench times. */
+  def getOrCreate(cores: Int = cpus.toInt): SparkSession = {
+    val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Release what one query left on the shared session, so none of it
+    * is billed to the next query:
+    *   - cached relations (d03/d05 signature tables);
+    *   - persisted RDDs: localCheckpoint blocks (d03/d07/d11 lineage
+    *     truncation) are NOT in the SQL cache and live until the RDD
+    *     object is GC'd, landing their shuffle/memory footprint on later
+    *     queries (r6: d03 17.2 s in-suite vs 2.5 s isolated). Removal is
+    *     BLOCKING so its cost is billed to the query that made the
+    *     blocks, not to whichever neighbour runs while an async removal
+    *     drains (r8: d08 12.1 s in-suite vs 2.6 s isolated);
+    *   - memory-sink temp views of streaming drains, which otherwise pin
+    *     every drained row in heap as GC debt for the rest of the run
+    *     (r10: st04 6.4 s in-suite vs 1.8 s isolated). The names come from
+    *     the Streams registry every sink-creating site feeds, not from a
+    *     naming-convention scrape of the catalog. */
+  def teardown(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    graft.streaming.Streams.drainRegisteredMemorySinks().foreach(spark.catalog.dropTempView)
+  }
+
+  /** Run one query's `action`, then [[teardown]]. A failure is returned,
+    * not thrown, so a harness can go on to the next query and still
+    * report this one as failed. */
+  def attempt(spark: SparkSession)(action: => Unit): Option[Throwable] =
+    try { action; None }
+    catch { case e: Throwable => Some(e) }
+    finally teardown(spark)
 
   /** Run `body` with the given runtime SQL confs set, restoring each
     * key's prior value (or unsetting a previously-unset key) on the way

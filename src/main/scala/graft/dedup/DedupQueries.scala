@@ -24,26 +24,15 @@ object DedupQueries extends QueryPack {
 
   /** Distinct `w`-word shingle ARRAY of `text` (empty when the doc has
     * <w words), via the native [[graft.functions.ShingleArray]]
-    * expression — value-identical to [[shinglesComposed]] (ExtensionsSpec
-    * pins the equality) but one tight loop instead of five interpreted
-    * higher-order functions (measured: st21b's corpus signing pass
-    * 1.6 → 0.6 s at sf0.1). */
+    * expression — value-identical to the composed form it replaced
+    * (ExtensionsSpec pins the equality) but one tight loop instead of
+    * five interpreted higher-order functions (measured: st21b's corpus
+    * signing pass 1.6 → 0.6 s at sf0.1). */
   def shingles(text: Column, w: Int = 3): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.ShingleArray(
         org.apache.spark.sql.graftbridge.Bridge.expression(text),
         org.apache.spark.sql.catalyst.expressions.Literal(w)))
-
-  /** The composed-expression form [[shingles]] replaced (kept as the
-    * differential-test witness: Spark's `sequence(0, n)` would go
-    * *descending* for n<0, hence the size guard). */
-  private[graft] def shinglesComposed(text: Column, w: Int = 3): Column = {
-    val toks = split(text, " ")
-    when(size(toks) >= w,
-      array_distinct(transform(sequence(lit(0), size(toks) - w),
-        i => concat_ws(" ", slice(toks, i + 1, lit(w))))))
-      .otherwise(array())
-  }
 
   /** Engine-portable hash of a shingle under permutation `j`: an
     * 8-hex-char (32-bit) slice of one of TWO md5 digests — 2 md5 calls
@@ -131,8 +120,8 @@ object DedupQueries extends QueryPack {
     * probe), and st26 (streaming scrub). Their verdict-equivalence
     * contracts hold only while all sides chunk identically, so no
     * consumer declares its own copy of this expression. Native
-    * [[graft.functions.ChunkArray]] — value-identical to
-    * [[chunkArrayComposed]] (ExtensionsSpec pins it, null edges
+    * [[graft.functions.ChunkArray]] — value-identical to the
+    * composed form it replaced (ExtensionsSpec pins it, null edges
     * included) in one tight loop instead of two interpreted
     * higher-order functions per row. */
   def chunkArray(ws: Column): Column =
@@ -140,13 +129,6 @@ object DedupQueries extends QueryPack {
       graft.functions.ChunkArray(
         org.apache.spark.sql.graftbridge.Bridge.expression(ws),
         org.apache.spark.sql.catalyst.expressions.Literal(8)))
-
-  /** The composed-expression form [[chunkArray]] replaced (kept as the
-    * differential-test witness). */
-  private[graft] def chunkArrayComposed(ws: Column): Column =
-    transform(
-      sequence(lit(0), ((size(ws) - 1) / lit(8)).cast("int")),
-      i => array_join(slice(ws, i * 8 + 1, lit(8)), " "))
 
   /** Aligned 8-word chunk relation (doc_id, chunk_pos, chunk), built
     * MAP-SIDE (transform + slice over the doc's own word array — no

@@ -308,8 +308,6 @@ object SnapshotCatalog {
   private val logHints =
     new java.util.concurrent.ConcurrentHashMap[String, LogHint]()
 
-  private[graft] def dropLogHints(): Unit = logHints.clear()
-
   private def refreshHint(root: String): Option[LogHint] = {
     val names = listManifestNames(root)
     val commits = names.collect { case CommitName(n) => n.toInt }
@@ -350,9 +348,6 @@ object SnapshotCatalog {
 
   /** True once the root has at least one committed version. */
   def isTable(root: String): Boolean = latestVersionOption(root).isDefined
-
-  private def checkpointVersions(root: String): Seq[Int] =
-    listManifestNames(root).collect { case CheckpointName(n) => n.toInt }.sorted
 
   /** The newest checkpoint ≤ v that resolution can SOUNDLY start from,
     * via the validated hint: the chosen checkpoint must exist and —

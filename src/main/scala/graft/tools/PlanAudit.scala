@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit dump: writes PLANS.md with the AQE-final formatted plan of
   * each headline query — the reviewable evidence behind PlanShapeSpec's
   * assertions (pushdown reaching the scan, broadcasts, TakeOrdered,
@@ -108,18 +106,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // INT96 writes NO stats (GraftSession)
-      .config("spark.sql.warehouse.dir", // bucketed saveAsTable scratch
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.getOrCreate(8)
 
     val sb = new StringBuilder
     sb.append("# PLANS — AQE-final physical plans of the headline queries\n\n")
@@ -132,7 +119,7 @@ object PlanAudit {
         capturePlan(graft.SparkEntry.queries(name)(spark, sfDir))
       }
       sb.append(s"\n## $name — $why\n\n```\n$plan\n```\n")
-      spark.catalog.clearCache()
+      graft.core.GraftSession.teardown(spark)
     }
     // st25's registry entry returns the JDBC READBACK (a Derby table
     // scan); the dataflow worth auditing is the batch twin of the
@@ -171,7 +158,7 @@ object PlanAudit {
         graft.similarity.SimilarityQueries.s21Serves(spark, sfDir)._1)
       sb.append("\n## s21_ivf_delete (tombstone serve) — pruned probe scan + broadcast tombstone anti-join, before compaction\n\n")
       sb.append(s"```\n$plan\n```\n")
-      spark.catalog.clearCache()
+      graft.core.GraftSession.teardown(spark)
     }
     // st33's registry entry returns a memory-sink readback; the kernel
     // worth auditing is the per-row scoring expression — built here as

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc query prober: time one registered query N times and print the
   * executed plan — the `.explain`-and-iterate loop from the build notes. */
 object Probe {
@@ -9,27 +7,15 @@ object Probe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // INT96 writes NO stats (GraftSession)
-      .config("spark.sql.warehouse.dir", // bucketed saveAsTable scratch
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.getOrCreate()
     // comma-separated names run in sequence within one JVM (for
     // cross-query interference hunting)
     val names = name.split(",")
     (1 to reps).foreach { i =>
       names.foreach { n =>
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(n)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
+        try graft.SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        finally graft.core.GraftSession.teardown(spark)
         println(f"[probe] run $i $n: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       }
     }

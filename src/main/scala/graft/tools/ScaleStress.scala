@@ -256,12 +256,9 @@ object ScaleStress {
     graft.SparkEntry.queries(name)(spark, dir)
       .write.format("noop").mode("overwrite").save()
     val sec = (System.nanoTime() - t0) / 1e9
-    // Teardown outside the timed window: clearCache alone misses
-    // localCheckpoint blocks (d14's chunked corpus), which would stay in
-    // the block manager and pressure every LATER timed query at that
-    // scale — the same leak Bench's teardown releases.
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // teardown outside the timed window (d14's localCheckpoint blocks
+    // would otherwise pressure every later timed query at that scale)
+    graft.core.GraftSession.teardown(spark)
     sec
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Startup schema audit CLI — prints `Tables.audit()`'s named diffs for a
   * scale-factor directory (empty output + exit 0 = clean). Run this first
   * when a testdata regeneration lands: the round-7 drift (events.ts
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SchemaAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.getOrCreate(4)
     val diffs = graft.core.Tables(spark, sfDir).audit()
     if (diffs.isEmpty) println(s"[schema-audit] $sfDir: clean")
     else {

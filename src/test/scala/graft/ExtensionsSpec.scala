@@ -2,6 +2,7 @@ package graft
 
 import graft.core.GraftExtensions
 import graft.streaming.Streams
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -75,7 +76,7 @@ class ExtensionsSpec extends SparkTestBase {
     val native = df.select(col("doc_id"),
       DedupQueries.shingles(col("text")).as("shs")).collect()
     val composed = df.select(col("doc_id"),
-      DedupQueries.shinglesComposed(col("text")).as("shs")).collect()
+      ExtensionsSpec.shinglesComposed(col("text")).as("shs")).collect()
     assert(native.map(_.toString).toSeq == composed.map(_.toString).toSeq)
     // 2) explode(native array) == ngrams generator rows (ADVICE r18:
     //    the generator equality needs the whitespace edges covered too)
@@ -115,11 +116,11 @@ class ExtensionsSpec extends SparkTestBase {
     val native = df.select(col("doc_id"),
       DedupQueries.chunkArray(col("ws")).as("c")).collect()
     val composed = df.select(col("doc_id"),
-      DedupQueries.chunkArrayComposed(col("ws")).as("c")).collect()
+      ExtensionsSpec.chunkArrayComposed(col("ws")).as("c")).collect()
     assert(native.map(_.toString).toSeq == composed.map(_.toString).toSeq)
     val withNulls = Seq((0L, Seq[String]("a", null, "b", "c"))).toDF("doc_id", "ws")
     val n2 = withNulls.select(DedupQueries.chunkArray(col("ws"))).collect()
-    val c2 = withNulls.select(DedupQueries.chunkArrayComposed(col("ws"))).collect()
+    val c2 = withNulls.select(ExtensionsSpec.chunkArrayComposed(col("ws"))).collect()
     assert(n2.map(_.toString).toSeq == c2.map(_.toString).toSeq)
   }
 
@@ -211,6 +212,18 @@ class RoundEightExtensionsSpec extends SparkTestBase {
       s"session-conf residue: before=$before after=$after")
   }
 
+  test("session parity: the test session holds every conf GraftSession.builder sets") {
+    // the builder's collected options: Spark-private, public in bytecode
+    val set = Class.forName("org.apache.spark.sql.SparkSessionBuilder").getMethod("options")
+      .invoke(graft.core.GraftSession.builder())
+      .asInstanceOf[scala.collection.Map[String, String]]
+    val chosen = Set("spark.master", "spark.sql.shuffle.partitions", "spark.sql.warehouse.dir")
+    val drift = set.toSeq.filterNot { case (k, _) => chosen(k) }
+      .collect { case (k, v) if !spark.conf.getOption(k).contains(v) => s"$k: builder=$v test=${spark.conf.getOption(k)}" }
+    assert(set.contains("spark.sql.autoBroadcastJoinThreshold"))
+    assert(drift.isEmpty, drift.mkString("; "))
+  }
+
   test("withConf restores a previously-unset key to unset and rethrows body errors") {
     val key = "spark.sql.graft.probe.conf"
     assert(spark.conf.getOption(key).isEmpty)
@@ -236,4 +249,24 @@ class RoundEightExtensionsSpec extends SparkTestBase {
       assert(r.getAs[Long]("n_docs_kept") > 0)
     }
   }
+}
+
+object ExtensionsSpec {
+  /** The composed-expression form `DedupQueries.shingles` replaced, kept
+    * as the differential-test witness: Spark's `sequence(0, n)` would go
+    * *descending* for n<0, hence the size guard. */
+  def shinglesComposed(text: Column, w: Int = 3): Column = {
+    val toks = split(text, " ")
+    when(size(toks) >= w,
+      array_distinct(transform(sequence(lit(0), size(toks) - w),
+        i => concat_ws(" ", slice(toks, i + 1, lit(w))))))
+      .otherwise(array())
+  }
+
+  /** The composed-expression form `DedupQueries.chunkArray` replaced,
+    * kept as the differential-test witness. */
+  def chunkArrayComposed(ws: Column): Column =
+    transform(
+      sequence(lit(0), ((size(ws) - 1) / lit(8)).cast("int")),
+      i => array_join(slice(ws, i * 8 + 1, lit(8)), " "))
 }

@@ -40,10 +40,8 @@ class PlanInvariantsSpec extends SparkTestBase {
       }
     }
     // Some builders persist/localCheckpoint eagerly at construction;
-    // release their blocks so this sweep doesn't pressure later suites
-    // (catalog.clearCache alone misses localCheckpoint blocks).
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // release their blocks so this sweep doesn't pressure later suites.
+    graft.core.GraftSession.teardown(spark)
     assert(bad.isEmpty,
       s"CartesianProduct planned in: ${bad.mkString(", ")} — a non-broadcast " +
         "cross join cannot run at fact scale; broadcast the small side or " +
