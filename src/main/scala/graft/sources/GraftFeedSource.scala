@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -351,27 +351,6 @@ class GraftFeedSource(spark: SparkSession, root: String,
     spec.fold(base)(sp => SnapshotCatalog.reconstructPartCols(base, sp))
   }
 
-  /** Anti-join `df` (streaming) against DV position files (static right
-    * side — stream-static left-anti is supported): the bootstrap of a
-    * DV-bearing table serves the deletes-applied snapshot instead of
-    * refusing. Broadcast under the same gate as batch serving. */
-  private def subtractDvs(df: DataFrame, dvPaths: Seq[String]): DataFrame =
-    if (dvPaths.isEmpty) df
-    else {
-      val dv0 = spark.read.parquet(dvPaths: _*)
-      val bytes = dvPaths.map { p =>
-        val hp = new Path(p)
-        hp.getFileSystem(spark.sessionState.newHadoopConf())
-          .getFileStatus(hp).getLen
-      }.sum
-      val dv = if (bytes <= SnapshotCatalog.dvBroadcastMaxBytes) broadcast(dv0)
-               else dv0
-      df.withColumn("__dv_file", col("_metadata.file_path"))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-        .join(dv, Seq("__dv_file", "__dv_pos"), "left_anti")
-        .drop("__dv_file", "__dv_pos")
-    }
-
   private def emptyBatch: DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.emptyStreamingDF(spark, schema)
 
@@ -416,9 +395,12 @@ class GraftFeedSource(spark: SparkSession, root: String,
     if (files.isEmpty) None
     else {
       val base = streamingRead(files, to.toInt)
+      // a bootstrap of a DV-bearing table serves the deletes-applied
+      // snapshot instead of refusing: the streaming scan anti-joins the
+      // static DV side (stream-static left-anti is supported)
       val served =
         if (from.isEmpty)
-          subtractDvs(base, SnapshotCatalog.dvFiles(root, to.toInt))
+          SnapshotCatalog.joinDeletes(base, SnapshotCatalog.dvEntries(root, to.toInt))
         else base
       Some(served.select(baseSchema.fieldNames.map(col): _*))
     }
@@ -436,8 +418,8 @@ class GraftFeedSource(spark: SparkSession, root: String,
         val files = SnapshotCatalog.addedFiles(root, None, to.toInt)
         if (files.isEmpty) None
         else Some(
-          subtractDvs(streamingRead(files, to.toInt),
-              SnapshotCatalog.dvFiles(root, to.toInt))
+          SnapshotCatalog.joinDeletes(streamingRead(files, to.toInt),
+              SnapshotCatalog.dvEntries(root, to.toInt))
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(to))
             .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(
@@ -453,25 +435,12 @@ class GraftFeedSource(spark: SparkSession, root: String,
             val deletes =
               if (dvAdds.isEmpty) None
               else {
-                val dv0 = spark.read.parquet(dvAdds.map(_.path): _*)
-                val bytes = dvAdds.map { e =>
-                  if (e.size >= 0) e.size
-                  else {
-                    val hp = new Path(e.path)
-                    hp.getFileSystem(spark.sessionState.newHadoopConf())
-                      .getFileStatus(hp).getLen
-                  }
-                }.sum
-                val dv = if (bytes <= SnapshotCatalog.dvBroadcastMaxBytes)
-                  broadcast(dv0) else dv0
                 // only the files the positions reference are opened
-                val touched = dv0.select("__dv_file").distinct()
+                val touched = spark.read.parquet(dvAdds.map(_.path): _*)
+                  .select("__dv_file").distinct()
                   .collect().map(_.getString(0)).toSeq.sorted
-                Some(streamingRead(touched, v)
-                  .withColumn("__dv_file", col("_metadata.file_path"))
-                  .withColumn("__dv_pos", col("_metadata.row_index"))
-                  .join(dv, Seq("__dv_file", "__dv_pos"), "left_semi")
-                  .drop("__dv_file", "__dv_pos")
+                Some(SnapshotCatalog.joinDeletes(streamingRead(touched, v),
+                    dvAdds, onlyDeleted = true)
                   .withColumn("_change_type", lit("delete")))
               }
             val ts = new java.sql.Timestamp(

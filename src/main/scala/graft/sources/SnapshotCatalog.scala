@@ -753,12 +753,14 @@ object SnapshotCatalog {
     * generations don't inflate size-gated decisions
     * (broadcast-vs-join thresholds). */
   def liveDataBytes(root: String): Long =
-    latestVersionOption(root).map { v =>
-      manifestEntries(root, v).map { e =>
-        if (e.size >= 0) e.size
-        else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }
-      }.sum
-    }.getOrElse(0L)
+    latestVersionOption(root)
+      .map(v => manifestEntries(root, v).map(entryBytes).sum).getOrElse(0L)
+
+  /** An entry's on-disk bytes: the log-carried size, or a filesystem
+    * probe for a path-only entry. */
+  private[sources] def entryBytes(e: FileEntry): Long =
+    if (e.size >= 0) e.size
+    else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }
 
   /** Try to publish exactly version `v` as a DELTA commit (`adds`
     * joined, `removes` dropped, relative to v−1). Returns false
@@ -1739,8 +1741,7 @@ object SnapshotCatalog {
     * rows as deletes); `_commit_version` stamps each row. Cost is
     * O(changed rows): inserts read only the added files, deletes read
     * only the files the DV positions reference (anti-join-free — a
-    * SEMI join against the O(deleted) position set, broadcast under
-    * the same 64 MB gate as serving).
+    * [[joinDeletes]] SEMI join against the O(deleted) position set).
     *
     * FAILS LOUDLY across a [[replace]] like [[addedFiles]]: a
     * compaction/retraction rewrites surviving rows wholesale, so
@@ -1751,7 +1752,7 @@ object SnapshotCatalog {
     * fell off retention. */
   def changeFeedRows(spark: SparkSession, root: String,
                      fromV: Int, toV: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.lit
     require(fromV < toV, s"changeFeedRows: empty interval $fromV -> $toV")
     // hive-partitioned tables: the data files don't CONTAIN the
     // partition columns — reconstruct them from each row's file path
@@ -1777,19 +1778,12 @@ object SnapshotCatalog {
       val deletes =
         if (d.dvAdds.isEmpty) None
         else {
-          val dv0 = spark.read.parquet(d.dvAdds.map(_.path): _*)
-          val dvBytes = d.dvAdds.map(e =>
-            if (e.size >= 0) e.size
-            else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }).sum
-          val dv = if (dvBytes <= dvBroadcastMaxBytes) broadcast(dv0) else dv0
           // only the files the positions reference are opened
-          val touched = dv0.select("__dv_file").distinct()
+          val touched = spark.read.parquet(d.dvAdds.map(_.path): _*)
+            .select("__dv_file").distinct()
             .collect().map(_.getString(0)).toSeq.sorted
-          Some(withPartCols(spark.read.parquet(touched: _*), v)
-            .withColumn("__dv_file", col("_metadata.file_path"))
-            .withColumn("__dv_pos", col("_metadata.row_index"))
-            .join(dv, Seq("__dv_file", "__dv_pos"), "left_semi")
-            .drop("__dv_file", "__dv_pos")
+          Some(joinDeletes(withPartCols(spark.read.parquet(touched: _*), v),
+              d.dvAdds, onlyDeleted = true)
             .withColumn("_change_type", lit("delete")))
         }
       (inserts.toSeq ++ deletes.toSeq)
@@ -1895,9 +1889,7 @@ object SnapshotCatalog {
         val vec = partitionVecOf(path)
         partitionScope.forall { case (c, vl) => vec.contains(hiveSeg(c, vl)) }
       }
-    val dvBytes = dvs.map(e =>
-      if (e.size >= 0) e.size
-      else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }).sum
+    val dvBytes = dvs.map(entryBytes).sum
     val liveRows = entries.map(_.rows).filter(_ >= 0).sum
     val delRows = dvs.map(_.rows).filter(_ >= 0).sum
     val due =
@@ -1906,9 +1898,6 @@ object SnapshotCatalog {
         entries.size > maxLiveFiles
     if (!due) return None
 
-    def sizeOf(e: FileEntry): Long =
-      if (e.size >= 0) e.size
-      else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }
     def uriOf(p: String): String = new Path(p).toUri.getPath
 
     // files bearing live DV positions (O(deleted rows) metadata read —
@@ -1932,13 +1921,13 @@ object SnapshotCatalog {
     // partitioned and flat tables alike.
     val smallSel = entries
       .filterNot(e => bearingUris.contains(uriOf(e.path)))
-      .filter(e => sizeOf(e) < minFileBytes && inScope(e.path))
+      .filter(e => entryBytes(e) < minFileBytes && inScope(e.path))
       .groupBy(e => partitionVecOf(e.path)).values.flatMap { group =>
-        val asc = group.sortBy(sizeOf)
+        val asc = group.sortBy(entryBytes)
         var n = asc.length
-        var sum = asc.iterator.map(sizeOf).sum
-        while (n >= 2 && sum < 2L * sizeOf(asc(n - 1))) {
-          sum -= sizeOf(asc(n - 1)); n -= 1
+        var sum = asc.iterator.map(entryBytes).sum
+        while (n >= 2 && sum < 2L * entryBytes(asc(n - 1))) {
+          sum -= entryBytes(asc(n - 1)); n -= 1
         }
         // fan-out floor: a merge must claim at least minMergeFanout
         // files — pair-merges buy almost no file-count reduction per
@@ -2011,16 +2000,8 @@ object SnapshotCatalog {
         val raw = spec.fold(raw0)(sp => reconstructPartCols(raw0, sp))
         val applied =
           if (liveBearing.isEmpty) raw
-          else {
-            import org.apache.spark.sql.functions.broadcast
-            val dv0 = spark.read.parquet(dvs.map(_.path): _*)
-            val dv = if (dvBytes <= dvBroadcastMaxBytes) broadcast(dv0) else dv0
-            raw.withColumn("__dv_file", col("_metadata.file_path"))
-              .withColumn("__dv_pos", col("_metadata.row_index"))
-              .join(dv, Seq("__dv_file", "__dv_pos"), "left_anti")
-              .drop("__dv_file", "__dv_pos")
-          }
-        val selBytes = selection.iterator.map(sizeOf).sum
+          else joinDeletes(raw, dvs)
+        val selBytes = selection.iterator.map(entryBytes).sum
         val byTarget = math.max(1L,
           (selBytes + targetFileBytes - 1) / targetFileBytes).toInt
         val rewritten =
@@ -2097,10 +2078,7 @@ object SnapshotCatalog {
     * source's `maxBytesPerTrigger` reads this per candidate version:
     * O(1) cached log metadata, no listing. */
   def addedBytesOf(root: String, v: Int): Long =
-    commitDeltaFull(root, v).adds.map { e =>
-      if (e.size >= 0) e.size
-      else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }
-    }.sum
+    commitDeltaFull(root, v).adds.map(entryBytes).sum
 
   /** The source files every surviving `COPY INTO` has loaded, as of
     * version `v` — resolved from the log's accumulative `L` lines
@@ -2392,18 +2370,47 @@ object SnapshotCatalog {
   // [[replace]] (compaction) applies them physically and resets the DV
   // set atomically in its own commit.
 
-  private[sources] def dvTotalBytes(root: String, v: Int): Long =
-    dvEntries(root, v).map { e =>
-      if (e.size >= 0) e.size
-      else { val p = new Path(e.path); fsFor(p).getFileStatus(p).getLen }
-    }.sum
-
-  /** Broadcast ceiling for the DV side of the serve anti-join. The
-    * sys-prop override exists so a spec can cross the threshold with
-    * kilobytes of DVs instead of staging 64 MB. */
+  /** Broadcast ceiling for the DV side of [[joinDeletes]], the one DV
+    * join, so this is the one DV broadcast gate. The sys-prop override
+    * exists so a spec can cross the threshold with kilobytes of DVs
+    * instead of staging 64 MB. */
   private[sources] def dvBroadcastMaxBytes: Long =
     sys.props.get("graft.dv.broadcast.max.bytes").map(_.toLong)
       .getOrElse(64L * 1024 * 1024)
+
+  /** THE deletion-vector join — serving, the change feeds, maintenance
+    * and the row-level ops all apply DVs here. `df` (a batch or
+    * streaming scan whose `_metadata` is still reachable) gains each
+    * row's position as `__dv_file`/`__dv_pos` and joins the DV files
+    * `dvs` on it: an anti join drops the deleted rows, or with
+    * `onlyDeleted` a semi join keeps only them. The DV side broadcasts
+    * while its logged bytes stay within [[dvBroadcastMaxBytes]], else
+    * the join shuffles: DVs pile up between compactions, and a trickle
+    * of deletes must degrade to a shuffle, not a driver OOM. No DVs
+    * means no join (`onlyDeleted` callers always pass some). The
+    * position columns are dropped unless `keepPositions`. */
+  private[sources] def joinDeletes(df: DataFrame, dvs: Seq[FileEntry],
+                                   onlyDeleted: Boolean = false,
+                                   keepPositions: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val withPos = df.withColumn("__dv_file", col("_metadata.file_path"))
+      .withColumn("__dv_pos", col("_metadata.row_index"))
+    if (dvs.isEmpty) return if (keepPositions) withPos else df
+    val dv0 = df.sparkSession.read.parquet(dvs.map(_.path): _*)
+    val dv = if (dvs.map(entryBytes).sum <= dvBroadcastMaxBytes) broadcast(dv0) else dv0
+    val how = if (onlyDeleted) "semi" else "anti"
+    val joined = withPos.join(dv, Seq("__dv_file", "__dv_pos"), "left_" + how)
+    if (keepPositions) joined else joined.drop("__dv_file", "__dv_pos")
+  }
+
+  /** Version `v`'s live rows (its DVs applied) with their positions —
+    * the frame every row-level op matches against. The FileIndex
+    * relation, not a raw leaf-file read: partition columns are served,
+    * so conditions may reference them. */
+  private def liveWithPositions(spark: SparkSession, root: String,
+                                v: Int): DataFrame =
+    joinDeletes(SnapshotFileIndex.snapshotDF(spark, root, Some(v),
+      subtractDeletes = false), dvEntries(root, v), keepPositions = true)
 
   /** Logically delete the live snapshot's rows matching `cond`:
     * positions of surviving matches land as a DV batch and ONE commit
@@ -2417,18 +2424,7 @@ object SnapshotCatalog {
                   cond: org.apache.spark.sql.Column): (Int, Long) = {
     import org.apache.spark.sql.functions.col
     val v = latestVersion(root)
-    // the FileIndex relation (not a raw leaf-file read): partition
-    // columns are served, so `cond` may reference them; positions come
-    // off the same `_metadata` columns either way
-    val base = SnapshotFileIndex
-      .snapshotDF(spark, root, Some(v), subtractDeletes = false)
-      .withColumn("__dv_file", col("_metadata.file_path"))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    val existing = dvFiles(root, v)
-    val live =
-      if (existing.isEmpty) base
-      else base.join(spark.read.parquet(existing: _*),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
+    val live = liveWithPositions(spark, root, v)
     val newDel = live.filter(cond).select(col("__dv_file"), col("__dv_pos"))
     val batch = "d" + java.util.UUID.randomUUID().toString.take(8)
     val dir = s"$root/dv/$batch"
@@ -2446,16 +2442,8 @@ object SnapshotCatalog {
     // append conflicts: an appended file whose stats are disjoint from
     // `cond`'s bounds provably holds no row this delete should have
     // matched, so skipping it is safe (the Delta ConcurrentAppend
-    // narrowing); unprovable shapes keep the conservative abort. The
-    // RESOLVED condition comes off the analyzed filter plan — a Spark 4
-    // Column is a lazy node tree, not a catalyst expression.
-    val (condLb, condSb) = base.filter(cond).queryExecution.analyzed
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          SnapshotFileIndex.predicateBounds(Seq(f.condition))
-      }
-      .getOrElse((Map.empty[String, (Long, Long)],
-        Map.empty[String, (Option[Array[Byte]], Option[Array[Byte]])]))
+    // narrowing); unprovable shapes keep the conservative abort
+    val (condLb, condSb) = condBounds(live, cond)
     var attempt = 0
     while (attempt < 100) {
       val pv = latestVersion(root)
@@ -2563,15 +2551,7 @@ object SnapshotCatalog {
     // — the update rows themselves — and DV-delete its own output
     if (isBatchCommitted(root, batch)) return (latestVersion(root), 0L)
     val v = latestVersion(root)
-    val base = SnapshotFileIndex
-      .snapshotDF(spark, root, Some(v), subtractDeletes = false)
-      .withColumn("__dv_file", col("_metadata.file_path"))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    val existing = dvFiles(root, v)
-    val live =
-      if (existing.isEmpty) base
-      else base.join(spark.read.parquet(existing: _*),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
+    val live = liveWithPositions(spark, root, v)
     val keys = updates.select(keyCols.map(col): _*).distinct()
     val matched = live.join(broadcast(keys), keyCols, "left_semi")
       .select(col("__dv_file"), col("__dv_pos"))
@@ -2630,6 +2610,18 @@ object SnapshotCatalog {
     }
     sys.error(s"mergeOnRead on $root lost 100 consecutive CAS races")
   }
+
+  /** `cond`'s necessary envelope over `df`'s columns, for the same
+    * narrowed abort. The RESOLVED condition comes off the analyzed
+    * filter plan — a Spark 4 Column is a lazy node tree, not a catalyst
+    * expression. */
+  private def condBounds(df: DataFrame, cond: org.apache.spark.sql.Column)
+      : (Map[String, (Long, Long)],
+         Map[String, (Option[Array[Byte]], Option[Array[Byte]])]) =
+    df.filter(cond).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        SnapshotFileIndex.predicateBounds(Seq(f.condition))
+    }.getOrElse((Map.empty, Map.empty))
 
   /** The per-column [min, max] envelope of a key set — the necessary
     * condition [[entryProvablyUnmatched]] tests appended files against
@@ -2709,17 +2701,9 @@ object SnapshotCatalog {
     import org.apache.spark.sql.types.IntegerType
     if (isBatchCommitted(root, batch)) return (latestVersion(root), 0L)
     val v = latestVersion(root)
-    val base = SnapshotFileIndex
-      .snapshotDF(spark, root, Some(v), subtractDeletes = false)
-      .withColumn("__dv_file", col("_metadata.file_path"))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    val existing = dvFiles(root, v)
-    val live =
-      if (existing.isEmpty) base
-      else base.join(spark.read.parquet(existing: _*),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val tableCols = base.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
-    val colType = base.schema.fields.map(f => f.name -> f.dataType).toMap
+    val live = liveWithPositions(spark, root, v)
+    val tableCols = live.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
+    val colType = live.schema.fields.map(f => f.name -> f.dataType).toMap
     (matched ++ bySource).collect {
       case MergeUpdateClause(_, set) => set.map(_._1) }
       .flatten.filterNot(tableCols.contains) match {
@@ -2878,16 +2862,8 @@ object SnapshotCatalog {
     import org.apache.spark.sql.functions.col
     if (isBatchCommitted(root, batch)) return (latestVersion(root), 0L)
     val v = latestVersion(root)
-    val base = SnapshotFileIndex
-      .snapshotDF(spark, root, Some(v), subtractDeletes = false)
-      .withColumn("__dv_file", col("_metadata.file_path"))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    val existing = dvFiles(root, v)
-    val live =
-      if (existing.isEmpty) base
-      else base.join(spark.read.parquet(existing: _*),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val tableCols = base.columns.filterNot(Set("__dv_file", "__dv_pos"))
+    val live = liveWithPositions(spark, root, v)
+    val tableCols = live.columns.filterNot(Set("__dv_file", "__dv_pos"))
     val matched = live.filter(cond)
     val dvDir = s"$root/dv/u${java.util.UUID.randomUUID().toString.take(8)}"
     matched.select(col("__dv_file"), col("__dv_pos"))
@@ -2920,13 +2896,7 @@ object SnapshotCatalog {
       .getOrElse(Seq.empty)
     val (newEntries, schemaJson, partJson) =
       stageBatch(updated, root, batch, spec, recordStats = true)
-    val (condLb, condSb) = base.filter(cond).queryExecution.analyzed
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          SnapshotFileIndex.predicateBounds(Seq(f.condition))
-      }
-      .getOrElse((Map.empty[String, (Long, Long)],
-        Map.empty[String, (Option[Array[Byte]], Option[Array[Byte]])]))
+    val (condLb, condSb) = condBounds(live, cond)
     var attempt = 0
     while (attempt < 100) {
       val pv = latestVersion(root)
@@ -2947,28 +2917,15 @@ object SnapshotCatalog {
     sys.error(s"updateWhere on $root lost 100 consecutive CAS races")
   }
 
-  /** Read a snapshot with its deletion vectors applied — the data scan
-    * anti-joined against the in-effect (file, position) pairs. The DV
-    * side is O(deleted rows) and broadcasts under 64 MB (the common
-    * case: deletes are sparse); beyond that it degrades to a shuffled
-    * anti-join rather than an executor OOM. */
+  /** Read a snapshot with its deletion vectors applied: the
+    * [[readSnapshot]] scan anti-joined against the in-effect (file,
+    * position) pairs by [[joinDeletes]], the one DV join (a broadcast
+    * under [[dvBroadcastMaxBytes]], a shuffle past it). */
   def readSnapshotWithDeletes(spark: SparkSession, root: String,
                               version: Option[Int] = None,
-                              mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val v = version.getOrElse(latestVersion(root))
-    val data = readSnapshot(spark, root, Some(v), mergeSchema)
-    val dvs = dvFiles(root, v)
-    if (dvs.isEmpty) data
-    else {
-      val dv0 = spark.read.parquet(dvs: _*)
-      val dv = if (dvTotalBytes(root, v) <= dvBroadcastMaxBytes) broadcast(dv0) else dv0
-      data.withColumn("__dv_file", col("_metadata.file_path"))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-        .join(dv, Seq("__dv_file", "__dv_pos"), "left_anti")
-        .drop("__dv_file", "__dv_pos")
-    }
-  }
+                              mergeSchema: Boolean = false): DataFrame =
+    SnapshotFileIndex.snapshotDF(spark, root, version, mergeSchema,
+      subtractDeletes = true)
 
   // ---- file-level min/max skipping (Iceberg-style manifest stats) ----
 
@@ -3050,12 +3007,9 @@ object SnapshotCatalog {
                       if (kind == "long")
                         (math.min(mn0.toLong, mn.toLong).toString,
                          math.max(mx0.toLong, mx.toLong).toString)
-                      else {
-                        val (a, b) = (unb64(mn0), unb64(mn))
-                        val (c2, d) = (unb64(mx0), unb64(mx))
-                        (b64(if (a <= b) a else b),
-                         b64(if (c2 >= d) c2 else d))
-                      }
+                      else // parquet's bytewise order, never UTF-16's
+                        (if (cmpUtf8(statStrBytes(mn0), statStrBytes(mn)) <= 0) mn0 else mn,
+                         if (cmpUtf8(statStrBytes(mx0), statStrBytes(mx)) >= 0) mx0 else mx)
                     perCol(name) = (kind, lo, hi)
                   case _ => // kind flipped across row groups: drop stats
                     perCol.remove(name)
@@ -3085,12 +3039,14 @@ object SnapshotCatalog {
     ()
   }
 
-  /** Per-file recorded (kind, min, max) for `col` across a snapshot's
-    * batches. Malformed or truncated sidecar lines are SKIPPED (the
-    * file reads as stats-less, i.e. conservatively kept) — a stats
-    * sidecar must never turn a skipping optimization into a read
-    * failure. */
-  private def snapshotStats(root: String, files: Seq[String], col: String)
+  /** Per-file (kind, min, max) for `col` that [[writeColumnStats]]
+    * recorded in the sidecars of `files`' batches — the stats of
+    * path-only entries ([[commitRetry]] commits), which the log does not
+    * carry; [[SnapshotFileIndex]] falls back to it for exactly those.
+    * Malformed or truncated sidecar lines are SKIPPED (the file reads as
+    * stats-less, i.e. conservatively kept) — a stats sidecar must never
+    * turn a skipping optimization into a read failure. */
+  private[sources] def sidecarStats(root: String, files: Seq[String], col: String)
       : Map[String, (String, String, String)] =
     files.map(f => new Path(f).getParent.getName).distinct
       .flatMap { batch =>
@@ -3115,30 +3071,11 @@ object SnapshotCatalog {
         }
       }.toMap
 
-  /** The per-file (kind, min, max) surface for `col` at version `v`:
-    * the LOG-CARRIED stats first (one metadata resolution, zero extra
-    * IO — the enriched commit/checkpoint lines), then the per-batch
-    * sidecar tier for exactly the files the log lacks stats for (the
-    * path-only compatibility commits, e.g. [[commitRetry]] +
-    * [[writeColumnStats]] callers). String bounds stay encoded
-    * (decode with [[statStrBytes]]). */
-  private[sources] def statsAt(root: String, v: Int,
-                               col: String): Map[String, (String, String, String)] = {
-    val entries = manifestEntries(root, v)
-    val fromLog = entries.flatMap(e => e.stats.get(col).map(e.path -> _)).toMap
-    if (fromLog.size == entries.size) fromLog
-    else {
-      val missing = entries.collect {
-        case e if !fromLog.contains(e.path) => e.path }
-      snapshotStats(root, missing, col) ++ fromLog
-    }
-  }
-
   /** A recorded string bound as its raw UTF-8 bytes. Parquet UTF8
     * min/max statistics order by UNSIGNED BYTE comparison — which
     * diverges from Java's UTF-16 code-unit `String` order for
-    * non-ASCII data (supplementary code points sort below U+E000..FFFF
-    * bytewise but above them in UTF-16) — so every pruning comparison
+    * non-ASCII data (supplementary code points sort above U+E000..FFFF
+    * bytewise but below them in UTF-16) — so every pruning comparison
     * against these bounds must be bytewise, never `String < String`. */
   private[sources] def statStrBytes(enc: String): Array[Byte] =
     java.util.Base64.getDecoder.decode(enc)
@@ -3146,104 +3083,6 @@ object SnapshotCatalog {
   /** Unsigned-bytewise comparison — the parquet UTF8 stats order. */
   private[sources] def cmpUtf8(a: Array[Byte], b: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(a, b)
-
-  /** Read a snapshot restricted to files whose recorded [min, max] for
-    * `col` intersects [lo, hi] — file skipping from batch-sidecar stats,
-    * no footer or data IO for skipped files. Files with no recorded
-    * stats are conservatively KEPT. Returns (frame, files read, files
-    * in the snapshot). The caller still applies its own row predicate:
-    * skipping prunes FILES, the filter prunes rows within kept files. */
-  def readSnapshotPruned(spark: SparkSession, root: String, col: String,
-                         lo: Long, hi: Long,
-                         version: Option[Int] = None): (DataFrame, Int, Int) = {
-    val v = version.getOrElse(latestVersion(root))
-    val files = manifestFiles(root, v)
-    val stats = statsAt(root, v, col)
-    val kept = files.filter { f =>
-      stats.get(f) match {
-        case Some(("long", mn, mx)) => mx.toLong >= lo && mn.toLong <= hi
-        case _                      => true // no/other-kind stats -> never skip
-      }
-    }
-    val df =
-      if (kept.isEmpty) readSnapshot(spark, root, Some(v)).limit(0)
-      else spark.read.parquet(kept: _*)
-    (df, kept.size, files.size)
-  }
-
-  /** Box pruning: a snapshot read restricted to files whose recorded
-    * [min, max] intersects EVERY range of a multi-column long-range
-    * predicate — the serve side of a Z-ordered layout committed
-    * through the catalog (src06 proves row-group pruning inside
-    * files; a z-clustered REWRITE makes the per-FILE ranges tight in
-    * both dimensions, so the box prunes whole files before any footer
-    * is opened). Files missing stats for any column are conservatively
-    * kept. Returns (frame, files read, files in the snapshot). */
-  def readSnapshotPrunedBox(spark: SparkSession, root: String,
-                            ranges: Seq[(String, Long, Long)],
-                            version: Option[Int] = None): (DataFrame, Int, Int) = {
-    val v = version.getOrElse(latestVersion(root))
-    val files = manifestFiles(root, v)
-    val statsByCol = ranges.map { case (c, _, _) =>
-      c -> statsAt(root, v, c)
-    }.toMap
-    val kept = files.filter { f =>
-      ranges.forall { case (c, lo, hi) =>
-        statsByCol(c).get(f) match {
-          case Some(("long", mn, mx)) => mx.toLong >= lo && mn.toLong <= hi
-          case _                      => true
-        }
-      }
-    }
-    val df =
-      if (kept.isEmpty) readSnapshot(spark, root, Some(v)).limit(0)
-      else spark.read.parquet(kept: _*)
-    (df, kept.size, files.size)
-  }
-
-  /** [[readSnapshotPruned]] over a TIMESTAMP range: parquet stores
-    * Spark timestamps as INT64 epoch micros (TIMESTAMP_MICROS), so the
-    * recorded long stats ARE the time bounds — the range key the
-    * reference's dashboards actually filter on
-    * (`fire_detection_app.py:99` prunes the last N minutes). */
-  def readSnapshotPrunedTs(spark: SparkSession, root: String, col: String,
-                           lo: java.sql.Timestamp, hi: java.sql.Timestamp,
-                           version: Option[Int] = None): (DataFrame, Int, Int) = {
-    def micros(t: java.sql.Timestamp): Long =
-      t.getTime / 1000L * 1000000L + t.getNanos / 1000L
-    readSnapshotPruned(spark, root, col, micros(lo), micros(hi), version)
-  }
-
-  /** [[readSnapshotPruned]] over a STRING range. The recorded bounds
-    * are parquet UTF8 min/max, ordered by UNSIGNED UTF-8 BYTES — the
-    * comparison is bytewise ([[cmpUtf8]]), because Java's UTF-16
-    * `String` order diverges for non-ASCII data and a code-unit compare
-    * could wrongly skip a file containing matching rows. Spark's own
-    * row-level string comparison (`UTF8String.compareTo`) is ALSO
-    * unsigned-bytewise, so the pruning order and the row-predicate
-    * order agree exactly — bytewise pruning is sound for the caller's
-    * range filter on any data, ASCII or not. */
-  def readSnapshotPrunedStr(spark: SparkSession, root: String, col: String,
-                            lo: String, hi: String,
-                            version: Option[Int] = None): (DataFrame, Int, Int) = {
-    val v = version.getOrElse(latestVersion(root))
-    val files = manifestFiles(root, v)
-    val stats = statsAt(root, v, col)
-    val loB = lo.getBytes("UTF-8")
-    val hiB = hi.getBytes("UTF-8")
-    val kept = files.filter { f =>
-      stats.get(f) match {
-        case Some(("string", mn, mx)) =>
-          cmpUtf8(statStrBytes(mx), loB) >= 0 &&
-            cmpUtf8(statStrBytes(mn), hiB) <= 0
-        case _ => true
-      }
-    }
-    val df =
-      if (kept.isEmpty) readSnapshot(spark, root, Some(v)).limit(0)
-      else spark.read.parquet(kept: _*)
-    (df, kept.size, files.size)
-  }
 
   private def readUtf8(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)

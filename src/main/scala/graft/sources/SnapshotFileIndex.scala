@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * at 10⁵–10⁶ files the difference between milliseconds of log reads
   * and minutes of namenode round-trips per query plan (the Delta
   * checkpoint-stats design). Only path-only legacy entries fall back to
-  * a filesystem probe.
+  * a filesystem probe, and to their batch's stats sidecar.
   *
   * Tables committed with `partitionBy` get a real [[partitionSchema]]:
   * hive-style partition values parse from the log-recorded paths, so
@@ -153,23 +153,37 @@ class SnapshotFileIndex(spark: SparkSession, root: String, version: Int)
   private def bounds(dataFilters: Seq[Expression]) =
     SnapshotFileIndex.predicateBounds(dataFilters)
 
+  /** Sidecar stats per bound column for the path-only entries, whose
+    * commits ([[SnapshotCatalog.commitRetry]]) put no stats in the log:
+    * read on the first such entry, at most once per column. */
+  private val sidecars =
+    collection.mutable.Map.empty[String, Map[String, (String, String, String)]]
+
+  private def statsOf(e: SnapshotCatalog.FileEntry,
+                      c: String): Option[(String, String, String)] =
+    if (e.size >= 0) e.stats.get(c)
+    else sidecars.synchronized {
+      sidecars.getOrElseUpdate(c, SnapshotCatalog.sidecarStats(
+        root, entries.filter(_.size < 0).map(_.path), c))
+    }.get(e.path)
+
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val (lb, sb) = bounds(dataFilters)
-    // stats skipping straight off the log-carried entry stats — no
-    // sidecar or footer IO at plan time; entries without stats for a
-    // bound column are conservatively kept
+    // stats skipping off the log-carried entry stats — no footer IO at
+    // plan time, sidecar IO only for path-only entries; entries without
+    // stats for a bound column are conservatively kept
     val kept =
       if (lb.isEmpty && sb.isEmpty) statuses
       else statuses.filter { case (_, e) =>
         val longOk = lb.forall { case (c, (lo, hi)) =>
-          e.stats.get(c) match {
+          statsOf(e, c) match {
             case Some(("long", mn, mx)) => mx.toLong >= lo && mn.toLong <= hi
             case _                      => true
           }
         }
         val strOk = sb.forall { case (c, (lo, hi)) =>
-          e.stats.get(c) match {
+          statsOf(e, c) match {
             case Some(("string", mn, mx)) =>
               lo.forall(SnapshotCatalog.cmpUtf8(
                 SnapshotCatalog.statStrBytes(mx), _) >= 0) &&
@@ -331,15 +345,6 @@ object SnapshotFileIndex {
     scans(df.queryExecution.executedPlan).sum
   }
 
-  /** The snapshot as an ordinary DataFrame whose scan prunes files (and
-    * hive-style partitions) from the log-carried metadata at PLANNING
-    * time. Deletion vectors in effect are subtracted on top when
-    * `subtractDeletes` (the anti-join wraps the pruned scan, so
-    * skipping still applies underneath); pass false for the raw
-    * snapshot ([[SnapshotCatalog.readSnapshot]] semantics). Schema
-    * resolves from the log's `S` lines — per-version, evolution-aware —
-    * with a footer read only for tables whose commits predate schema
-    * recording. */
   /** (data schema, partition schema) a snapshot serves — the log's `S`
     * lines when every live commit recorded one (zero IO; a
     * time-traveled version serves ITS schema — src16); else one footer
@@ -367,11 +372,19 @@ object SnapshotFileIndex {
     (dataSchema, partSchema)
   }
 
+  /** The snapshot as an ordinary DataFrame whose scan prunes files (and
+    * hive-style partitions) from the log-carried metadata at PLANNING
+    * time. Deletion vectors in effect are subtracted on top when
+    * `subtractDeletes`, by [[SnapshotCatalog.joinDeletes]] (the
+    * anti-join wraps the pruned scan, so skipping still applies
+    * underneath); pass false for the raw snapshot
+    * ([[SnapshotCatalog.readSnapshot]] semantics). Schema resolves from
+    * the log's `S` lines — per-version, evolution-aware — with a footer
+    * read only for tables whose commits predate schema recording. */
   def snapshotDF(spark: SparkSession, root: String,
                  version: Option[Int] = None,
                  mergeSchema: Boolean = false,
                  subtractDeletes: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val v = version.getOrElse(SnapshotCatalog.latestVersion(root))
     val index = new SnapshotFileIndex(spark, root, v)
     val (dataSchema, _) = servedSchemas(spark, root, v, mergeSchema)
@@ -384,24 +397,7 @@ object SnapshotFileIndex {
       options = Map.empty)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
     val base = org.apache.spark.sql.graftbridge.Bridge.ofRows(
       spark, LogicalRelation(relation))
-    val dvs = if (subtractDeletes) SnapshotCatalog.dvFiles(root, v) else Seq.empty
-    if (dvs.isEmpty) base
-    else {
-      // DVs accumulate unboundedly between compactions: broadcast only
-      // under the same 64 MB gate as readSnapshotWithDeletes, else a
-      // shuffled anti-join — a trickle of deletes before the next
-      // OPTIMIZE must degrade to a shuffle, not a driver OOM
-      val dv0 = spark.read.parquet(dvs: _*)
-      val dv =
-        if (SnapshotCatalog.dvTotalBytes(root, v) <=
-              SnapshotCatalog.dvBroadcastMaxBytes)
-          broadcast(dv0)
-        else dv0
-      base
-        .withColumn("__dv_file", col("_metadata.file_path"))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-        .join(dv, Seq("__dv_file", "__dv_pos"), "left_anti")
-        .drop("__dv_file", "__dv_pos")
-    }
+    if (subtractDeletes) SnapshotCatalog.joinDeletes(base, SnapshotCatalog.dvEntries(root, v))
+    else base
   }
 }

@@ -641,8 +641,9 @@ object SourceQueries extends QueryPack {
         // time each batch records per-file [min, max] of the skip
         // column, read from the PARQUET FOOTERS the writer already
         // paid for (zero data scan), into a per-batch sidecar; a
-        // range read then consults the sidecars and opens ONLY files
-        // whose interval intersects the predicate — pruning without a
+        // `readSnapshot` range read then plans from the sidecars (these
+        // path-only commits carry no stats in the log) and opens ONLY
+        // files whose interval intersects the predicate — pruning without a
         // partition column, which is what saves the scan when the
         // table is range-ingested (time, ids) but not partitioned by
         // the query key. Six range-disjoint ingest batches land; a
@@ -666,13 +667,15 @@ object SourceQueries extends QueryPack {
           SnapshotCatalog.commitRetry(root)(prev => (prev ++ files).distinct.sorted)
         }
         val (lo, hi) = (2L * w, 4L * w - 1L)
-        val (prunedDf, nRead, nTotal) =
-          SnapshotCatalog.readSnapshotPruned(spark, root, "event_id", lo, hi)
-        val pruned = prunedDf.filter(col("event_id").between(lo, hi))
+        val q = SnapshotCatalog.readSnapshot(spark, root)
+          .where(col("event_id").between(lo, hi))
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("event_type")).as("n_types"),
             graft.functions.Canon.sumCents(col("value")).as("sum_value_cents"))
-          .head()
+        val pruned = q.collect().head // collect: THIS execution carries the metrics
+        val nRead = SnapshotFileIndex.scannedFiles(q)
+        val nTotal = SnapshotCatalog
+          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
         val full = SnapshotCatalog.readSnapshot(spark, root)
           .filter(col("event_id").between(lo, hi))
           .agg(count(lit(1)), countDistinct(col("event_type")),
@@ -728,19 +731,20 @@ object SourceQueries extends QueryPack {
         }
         val (loSec, hiSecExcl) = (t0 + 2L * w, t0 + 4L * w)
         val lo = new java.sql.Timestamp(loSec * 1000L)
-        val hiIncl = new java.sql.Timestamp(hiSecExcl * 1000L)
-        // prune on the CLOSED superset [lo, hiExcl] (conservative —
-        // boundary files are kept), filter rows half-open like the slices
-        val (prunedDf, nRead, nTotal) =
-          SnapshotCatalog.readSnapshotPrunedTs(spark, root, "ts", lo, hiIncl)
+        val hiExcl = new java.sql.Timestamp(hiSecExcl * 1000L)
+        // rows half-open like the slices; both bounds are whole seconds,
+        // so this keeps exactly the `unix_timestamp(ts)` range while
+        // handing the planner a bound on `ts` itself to prune files with
         def rangeFilter(d: org.apache.spark.sql.DataFrame) =
-          d.filter(unix_timestamp(col("ts")) >= loSec &&
-            unix_timestamp(col("ts")) < hiSecExcl)
-        val pruned = rangeFilter(prunedDf)
+          d.where(col("ts") >= lit(lo) && col("ts") < lit(hiExcl))
+        val q = rangeFilter(SnapshotCatalog.readSnapshot(spark, root))
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("event_type")).as("n_types"),
             graft.functions.Canon.sumCents(col("value")).as("sum_value_cents"))
-          .head()
+        val pruned = q.collect().head // collect: THIS execution carries the metrics
+        val nRead = SnapshotFileIndex.scannedFiles(q)
+        val nTotal = SnapshotCatalog
+          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
         val full = rangeFilter(SnapshotCatalog.readSnapshot(spark, root))
           .agg(count(lit(1)), countDistinct(col("event_type")),
             graft.functions.Canon.sumCents(col("value")))
@@ -971,14 +975,12 @@ object SourceQueries extends QueryPack {
           SnapshotCatalog.append(li.filter(col("l_orderkey") >= b * w &&
             col("l_orderkey") < (b + 1) * w).coalesce(1), root, s"b$b")
         }
-        val ranges = Seq(("l_partkey", 100L, 299L), ("l_orderkey", 200L, 599L))
-        def boxAgg(d: org.apache.spark.sql.DataFrame) =
-          d.filter(col("l_partkey").between(100, 299) &&
+        def box(d: org.apache.spark.sql.DataFrame) =
+          d.where(col("l_partkey").between(100, 299) &&
               col("l_orderkey").between(200, 599))
             .agg(count(lit(1)).as("n_rows"),
-              sum(col("l_quantity")).cast(LongType).as("sum_qty")).head()
-        val preRewrite = boxAgg(SnapshotCatalog.readSnapshotPrunedBox(
-          spark, root, ranges)._1)
+              sum(col("l_quantity")).cast(LongType).as("sum_qty"))
+        val preRewrite = box(SnapshotCatalog.readSnapshot(spark, root)).head()
         // the maintenance rewrite: z-cluster the table, THROUGH the
         // catalog (stats refresh with the new generation's files)
         val z = graft.functions.ZOrder.zorder(col("l_partkey"), col("l_orderkey"))
@@ -989,10 +991,12 @@ object SourceQueries extends QueryPack {
             .sortWithinPartitions("zval")
             .drop("zval"),
           root, "z0")
-        val (boxDf, nRead, nTotal) =
-          SnapshotCatalog.readSnapshotPrunedBox(spark, root, ranges)
-        val post = boxAgg(boxDf)
-        val full = boxAgg(SnapshotCatalog.readSnapshot(spark, root))
+        val q = box(SnapshotCatalog.readSnapshot(spark, root))
+        val post = q.collect().head // collect: THIS execution carries the metrics
+        val nRead = SnapshotFileIndex.scannedFiles(q)
+        val nTotal = SnapshotCatalog
+          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
+        val full = box(SnapshotCatalog.readSnapshot(spark, root)).head()
         spark.range(1).select(
           lit(post.getLong(0)).as("n_rows"),
           lit(post.getLong(1)).as("sum_qty"),
@@ -1088,10 +1092,12 @@ object SourceQueries extends QueryPack {
             .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value")),
               count(col("quality"))).head() == plain
         // stats-pruned serve on the clustered layout
-        val (slice, nRead, nTotal) = SnapshotCatalog.readSnapshotPruned(
-          spark, root, "event_id", w, 2L * w - 1L)
-        val sliceAgg = slice.filter(col("event_id").between(w, 2L * w - 1L))
-          .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value"))).head()
+        val slice = SnapshotCatalog.readSnapshot(spark, root)
+          .where(col("event_id").between(w, 2L * w - 1L))
+          .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value")))
+        val sliceAgg = slice.collect().head
+        val nRead = SnapshotFileIndex.scannedFiles(slice)
+        val nTotal = SnapshotCatalog.manifestFiles(root, vC).size
         val sliceFull = SnapshotCatalog.readSnapshot(spark, root)
           .filter(col("event_id").between(w, 2L * w - 1L))
           .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value"))).head()
@@ -1183,8 +1189,9 @@ object SourceQueries extends QueryPack {
         // PLANNING-TIME FILE SKIPPING, NO API OPT-IN — src14/src15's
         // stats tier moved INSIDE Catalyst: [[SnapshotFileIndex]]
         // surfaces a snapshot as an ordinary DataFrame whose FileIndex
-        // consults the typed stats sidecars during the scan's file
-        // listing (the Delta TahoeFileIndex pattern), so ANY query
+        // consults the log-carried typed stats (a batch's sidecar only
+        // for path-only entries) during the scan's file listing (the
+        // Delta TahoeFileIndex pattern), so ANY query
         // shape — here plain SQL TEXT against a registered view, the
         // reference's dashboard idiom (`fire_detection_app.py:99`
         // filters the last N minutes in SQL) — prunes files from its

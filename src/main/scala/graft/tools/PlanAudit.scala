@@ -203,11 +203,13 @@ object PlanAudit {
         SnapshotCatalog.append(ev.filter(col("event_id") >= b * w &&
           col("event_id") < (b + 1) * w).repartition(2), root, s"b$b")
       }
-      val (pruned, nRead, nTotal) = SnapshotCatalog.readSnapshotPruned(
-        spark, root, "event_id", 2L * w, 4L * w - 1L)
-      val plan = capturePlan(pruned
-        .filter(col("event_id").between(2L * w, 4L * w - 1L))
-        .agg(count(lit(1)).as("n_rows"), sum(col("value")).as("sum_value")))
+      val q = SnapshotCatalog.readSnapshot(spark, root)
+        .where(col("event_id").between(2L * w, 4L * w - 1L))
+        .agg(count(lit(1)).as("n_rows"), sum(col("value")).as("sum_value"))
+      val plan = capturePlan(q)
+      val nRead = graft.sources.SnapshotFileIndex.scannedFiles(q)
+      val nTotal = SnapshotCatalog
+        .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
       sb.append(s"\n## src14/src15_stats_skipping (pruned serve frame) — scan opens $nRead of $nTotal snapshot files; skipped files never enter the plan\n\n")
       sb.append(s"```\n$plan\n```\n")
     }

@@ -320,13 +320,39 @@ class CatalogHardeningSpec extends SparkTestBase {
       "bytewise pruning lost the supplementary-plane row")
     assert(SnapshotFileIndex.scannedFiles(df) == 1L,
       "the ASCII file should still prune away")
-    // same order on the explicit pruned-read API: range [U+E000, U+10001]
-    // contains U+10000 bytewise (Java order would skip the file)
+    // same order on a closed range read: [U+E000, U+10001] contains
+    // U+10000 bytewise (Java order would skip the file)
     val hi = new String(Character.toChars(0x10001))
-    val (dfS, nS, totS) = SnapshotCatalog.readSnapshotPrunedStr(
-      spark, root, "k", e000, hi)
+    val (rowS, nS, totS) =
+      prunedAgg(root, col("k").between(e000, hi), count(lit(1)))
     assert(totS == 2 && nS == 1, s"read $nS/$totS files")
-    assert(dfS.filter(col("k").between(e000, hi)).count() == 1L)
+    assert(rowS.getLong(0) == 1L)
+  }
+
+  test("a file's string stats merge its row groups by unsigned UTF-8 bytes: a U+E000 row group is never masked by a U+10000 one") {
+    val root = graft.streaming.Streams.dataDir("graft_utf8groups_")
+    val spark2 = spark
+    import spark2.implicits._
+    // ONE file whose first row groups hold only U+E000 (ee 80 80) and
+    // whose last hold only U+10000 (f0 90 80 80): the file's bytewise
+    // min is U+E000, while a UTF-16 merge of the row-group stats would
+    // record U+10000 and prune the file away for `k = U+E000`
+    val supp = new String(Character.toChars(0x10000))
+    val e000 = "\ue000"
+    val rows = (0 until 400).map(i => (i.toLong, if (i < 200) e000 else supp))
+    graft.core.GraftSession.withConf(spark, "parquet.block.row.count.limit" -> "50") {
+      SnapshotCatalog.append(rows.toDF("id", "k").coalesce(1), root, "b0")
+    }
+    val files = SnapshotCatalog.manifestFiles(root, SnapshotCatalog.latestVersion(root))
+    assert(files.size == 1, s"expected one file, got ${files.size}")
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(files.head), spark.sessionState.newHadoopConf()))
+    val nGroups = try reader.getFooter.getBlocks.size finally reader.close()
+    assert(nGroups >= 2, s"the file must span several row groups, has $nGroups")
+    val (row, nRead, _) = prunedAgg(root, col("k") === e000, count(lit(1)))
+    assert(row.getLong(0) == 200L, "the U+E000 rows were pruned away")
+    assert(nRead == 1L)
   }
 
   // -- size-gated DV anti-join on the planner-integrated serve path -------

@@ -339,16 +339,21 @@ class DeltaLogSpec extends SparkTestBase {
       SnapshotCatalog.append(
         rows.toDF("id", "ts", "k").coalesce(1), root, s"b$b")
     }
+    // (rows in [ts(11), ts(14)], files read, files in the snapshot)
+    def tsRange(r: String): (Long, Long, Int) = {
+      val (row, n, tot) =
+        prunedAgg(r, col("ts").between(ts(11), ts(14)), count(lit(1)))
+      (row.getLong(0), n, tot)
+    }
     // timestamp range fully inside batch 1 → batches 0 and 2 skip
-    val (dfT, nT, totT) = SnapshotCatalog.readSnapshotPrunedTs(
-      spark, root, "ts", ts(11), ts(14))
+    val (rowsT, nT, totT) = tsRange(root)
     assert(totT == 3 && nT == 1, s"ts pruning read $nT/$totT files")
-    assert(dfT.filter(col("ts").between(ts(11), ts(14))).count() == 10L)
+    assert(rowsT == 10L)
     // string range fully inside batch 2 → one file read
-    val (dfS, nS, totS) = SnapshotCatalog.readSnapshotPrunedStr(
-      spark, root, "k", "k020", "k029")
+    val (rowS, nS, totS) =
+      prunedAgg(root, col("k").between("k020", "k029"), count(lit(1)))
     assert(totS == 3 && nS == 1, s"string pruning read $nS/$totS files")
-    assert(dfS.filter(col("k").between("k020", "k029")).count() == 10L)
+    assert(rowS.getLong(0) == 10L)
     // a malformed stats CELL in a commit line (the torn-metadata shape)
     // must read as stats-less — conservatively kept, never a failure:
     // rewrite b0's add line with garbage where its stats record was
@@ -361,14 +366,14 @@ class DeltaLogSpec extends SparkTestBase {
     }.mkString("\n") + "\n"
     java.nio.file.Files.writeString(commit1.toPath, rewritten)
     SnapshotCatalog.dropCaches() // a fresh reader process sees the torn file
-    val (dfC, nC, _) = SnapshotCatalog.readSnapshotPrunedTs(
-      spark, root, "ts", ts(11), ts(14))
+    val (rowsC, nC, _) = tsRange(root)
     assert(nC == 2, s"malformed log stats should force b0 into the read set, read $nC")
-    assert(dfC.filter(col("ts").between(ts(11), ts(14))).count() == 10L)
+    assert(rowsC == 10L)
 
     // the SIDECAR tier still serves tables written by the path-only
     // compatibility surface (commitRetry + writeColumnStats, src14's
-    // shape) — and a corrupt sidecar degrades to conservatively-read
+    // shape): the planner's index falls back to it for path-only
+    // entries — and a corrupt sidecar degrades to conservatively-read
     val root2 = graft.streaming.Streams.dataDir("graft_typedskip_legacy_")
     (0 until 3).foreach { b =>
       val rows = (0 until 10).map { i =>
@@ -379,15 +384,13 @@ class DeltaLogSpec extends SparkTestBase {
       SnapshotCatalog.writeColumnStats(root2, s"b$b", "ts", files)
       SnapshotCatalog.commitRetry(root2)(prev => (prev ++ files).distinct.sorted)
     }
-    val (_, nL, totL) = SnapshotCatalog.readSnapshotPrunedTs(
-      spark, root2, "ts", ts(11), ts(14))
+    val (_, nL, totL) = tsRange(root2)
     assert(totL == 3 && nL == 1, s"legacy sidecar pruning read $nL/$totL files")
     val side = new java.io.File(s"$root2/data/b0/_stats_ts.txt")
     java.nio.file.Files.writeString(side.toPath, "part-garbage\t12")
-    val (dfC2, nC2, _) = SnapshotCatalog.readSnapshotPrunedTs(
-      spark, root2, "ts", ts(11), ts(14))
+    val (rowsC2, nC2, _) = tsRange(root2)
     assert(nC2 == 2, s"corrupt sidecar should force b0 into the read set, read $nC2")
-    assert(dfC2.filter(col("ts").between(ts(11), ts(14))).count() == 10L)
+    assert(rowsC2 == 10L)
   }
 
   test("vacuum ownership is FULLY-QUALIFIED: a foreign-scheme file whose path component matches the root is never deleted") {

@@ -175,21 +175,17 @@ class SnapshotCatalogSpec extends SparkTestBase {
 
     // range fully inside b1: b0's files SKIP (their stats exclude it),
     // b1's are read despite having no stats — never skipped blind
-    val (df, nRead, nTotal) =
-      SnapshotCatalog.readSnapshotPruned(spark, root, "id", 60L, 70L)
+    val (got, nRead, nTotal) =
+      prunedAgg(root, col("id").between(60L, 70L), count(lit(1)), sum("id"))
     assert(nTotal == f0.size + f1.size)
     assert(nRead == f1.size, s"expected only b1's ${f1.size} files, read $nRead")
-    val got = df.filter(col("id").between(60L, 70L))
-      .agg(count(lit(1)), sum("id")).head()
     assert(got.getLong(0) == 11L && got.getLong(1) == (60L to 70L).sum)
 
     // range inside b0: its stats ADMIT the intersecting files; b1 is
     // still read (no stats), so the read set is b1 + b0's overlap
-    val (df2, nRead2, _) =
-      SnapshotCatalog.readSnapshotPruned(spark, root, "id", 1L, 10L)
+    val (got2, nRead2, _) =
+      prunedAgg(root, col("id").between(1L, 10L), count(lit(1)), sum("id"))
     assert(nRead2 > f1.size && nRead2 <= nTotal)
-    val got2 = df2.filter(col("id").between(1L, 10L))
-      .agg(count(lit(1)), sum("id")).head()
     assert(got2.getLong(0) == 10L && got2.getLong(1) == 55L)
   }
 
