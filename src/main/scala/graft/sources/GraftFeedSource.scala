@@ -434,15 +434,8 @@ class GraftFeedSource(spark: SparkSession, root: String,
                 .withColumn("_change_type", lit("insert")))
             val deletes =
               if (dvAdds.isEmpty) None
-              else {
-                // only the files the positions reference are opened
-                val touched = spark.read.parquet(dvAdds.map(_.path): _*)
-                  .select("__dv_file").distinct()
-                  .collect().map(_.getString(0)).toSeq.sorted
-                Some(SnapshotCatalog.joinDeletes(streamingRead(touched, v),
-                    dvAdds, onlyDeleted = true)
-                  .withColumn("_change_type", lit("delete")))
-              }
+              else Some(SnapshotCatalog.deletedRows(spark, dvAdds)(
+                streamingRead(_, v)))
             val ts = new java.sql.Timestamp(
               SnapshotCatalog.commitTimeMs(root, v))
             (inserts.toSeq ++ deletes.toSeq)

@@ -1740,8 +1740,8 @@ object SnapshotCatalog {
     * commit contributes both — its upserts as inserts, the superseded
     * rows as deletes); `_commit_version` stamps each row. Cost is
     * O(changed rows): inserts read only the added files, deletes read
-    * only the files the DV positions reference (anti-join-free — a
-    * [[joinDeletes]] SEMI join against the O(deleted) position set).
+    * only the files the DV positions reference (anti-join-free —
+    * [[deletedRows]] semi-joins the O(deleted) position set).
     *
     * FAILS LOUDLY across a [[replace]] like [[addedFiles]]: a
     * compaction/retraction rewrites surviving rows wholesale, so
@@ -1777,15 +1777,8 @@ object SnapshotCatalog {
           .withColumn("_change_type", lit("insert")))
       val deletes =
         if (d.dvAdds.isEmpty) None
-        else {
-          // only the files the positions reference are opened
-          val touched = spark.read.parquet(d.dvAdds.map(_.path): _*)
-            .select("__dv_file").distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-          Some(joinDeletes(withPartCols(spark.read.parquet(touched: _*), v),
-              d.dvAdds, onlyDeleted = true)
-            .withColumn("_change_type", lit("delete")))
-        }
+        else Some(deletedRows(spark, d.dvAdds)(touched =>
+          withPartCols(spark.read.parquet(touched: _*), v)))
       (inserts.toSeq ++ deletes.toSeq)
         .map(_.withColumn("_commit_version", lit(v.toLong)))
     }
@@ -2383,7 +2376,8 @@ object SnapshotCatalog {
     * streaming scan whose `_metadata` is still reachable) gains each
     * row's position as `__dv_file`/`__dv_pos` and joins the DV files
     * `dvs` on it: an anti join drops the deleted rows, or with
-    * `onlyDeleted` a semi join keeps only them. The DV side broadcasts
+    * `onlyDeleted` (the change feeds' [[deletedRows]]) a semi join
+    * keeps only them. The DV side broadcasts
     * while its logged bytes stay within [[dvBroadcastMaxBytes]], else
     * the join shuffles: DVs pile up between compactions, and a trickle
     * of deletes must degrade to a shuffle, not a driver OOM. No DVs
@@ -2401,6 +2395,21 @@ object SnapshotCatalog {
     val how = if (onlyDeleted) "semi" else "anti"
     val joined = withPos.join(dv, Seq("__dv_file", "__dv_pos"), "left_" + how)
     if (keepPositions) joined else joined.drop("__dv_file", "__dv_pos")
+  }
+
+  /** The rows a commit's DV batch `dvAdds` deletes, as `_change_type =
+    * delete` rows — the delete side of both change feeds. Only the
+    * files the positions reference are opened, through `read` (a batch
+    * or streaming scan of those files), and [[joinDeletes]] keeps just
+    * the deleted positions. */
+  private[sources] def deletedRows(spark: SparkSession, dvAdds: Seq[FileEntry])(
+      read: Seq[String] => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val touched = spark.read.parquet(dvAdds.map(_.path): _*)
+      .select("__dv_file").distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+    joinDeletes(read(touched), dvAdds, onlyDeleted = true)
+      .withColumn("_change_type", lit("delete"))
   }
 
   /** Version `v`'s live rows (its DVs applied) with their positions —

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
@@ -343,6 +343,30 @@ object SnapshotFileIndex {
       case other => other.children.flatMap(scans)
     }
     scans(df.queryExecution.executedPlan).sum
+  }
+
+  /** Run `q`, a query over `root`'s latest snapshot, and return (its
+    * rows, the files its scans opened, the files in that snapshot) —
+    * the one count behind every file-skipping audit, read off this
+    * very execution. */
+  def collectScanned(q: DataFrame, root: String): (Array[Row], Long, Int) = {
+    val rows = q.collect()
+    (rows, scannedFiles(q),
+      SnapshotCatalog.manifestFiles(root, SnapshotCatalog.latestVersion(root)).size)
+  }
+
+  /** `root`'s latest snapshot as a plain parquet scan of every file it
+    * lists, in the snapshot's schema (partition values from the file
+    * paths): its listing consults no stats, so a range predicate opens
+    * every file — the reference a skipping audit checks the planner's
+    * pruned read against. Raw rows, like
+    * [[SnapshotCatalog.readSnapshot]]: deletion vectors are not applied. */
+  def unprunedDF(spark: SparkSession, root: String): DataFrame = {
+    val v = SnapshotCatalog.latestVersion(root)
+    val (data, part) = servedSchemas(spark, root, v)
+    val raw = spark.read.schema(data)
+      .parquet(SnapshotCatalog.manifestFiles(root, v): _*)
+    if (part.isEmpty) raw else SnapshotCatalog.reconstructPartCols(raw, part)
   }
 
   /** (data schema, partition schema) a snapshot serves — the log's `S`

@@ -667,20 +667,14 @@ object SourceQueries extends QueryPack {
           SnapshotCatalog.commitRetry(root)(prev => (prev ++ files).distinct.sorted)
         }
         val (lo, hi) = (2L * w, 4L * w - 1L)
-        val q = SnapshotCatalog.readSnapshot(spark, root)
-          .where(col("event_id").between(lo, hi))
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("event_type")).as("n_types"),
-            graft.functions.Canon.sumCents(col("value")).as("sum_value_cents"))
-        val pruned = q.collect().head // collect: THIS execution carries the metrics
-        val nRead = SnapshotFileIndex.scannedFiles(q)
-        val nTotal = SnapshotCatalog
-          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
-        val full = SnapshotCatalog.readSnapshot(spark, root)
-          .filter(col("event_id").between(lo, hi))
-          .agg(count(lit(1)), countDistinct(col("event_type")),
-            graft.functions.Canon.sumCents(col("value")))
-          .head()
+        def rangeAgg(d: org.apache.spark.sql.DataFrame) =
+          d.where(col("event_id").between(lo, hi))
+            .agg(count(lit(1)).as("n_rows"),
+              countDistinct(col("event_type")).as("n_types"),
+              graft.functions.Canon.sumCents(col("value")).as("sum_value_cents"))
+        val (Array(pruned), nRead, nTotal) = SnapshotFileIndex.collectScanned(
+          rangeAgg(SnapshotCatalog.readSnapshot(spark, root)), root)
+        val full = rangeAgg(SnapshotFileIndex.unprunedDF(spark, root)).head()
         spark.range(1).select(
           lit(pruned.getLong(0)).as("n_rows"),
           lit(pruned.getLong(1)).as("n_types"),
@@ -735,20 +729,14 @@ object SourceQueries extends QueryPack {
         // rows half-open like the slices; both bounds are whole seconds,
         // so this keeps exactly the `unix_timestamp(ts)` range while
         // handing the planner a bound on `ts` itself to prune files with
-        def rangeFilter(d: org.apache.spark.sql.DataFrame) =
+        def rangeAgg(d: org.apache.spark.sql.DataFrame) =
           d.where(col("ts") >= lit(lo) && col("ts") < lit(hiExcl))
-        val q = rangeFilter(SnapshotCatalog.readSnapshot(spark, root))
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("event_type")).as("n_types"),
-            graft.functions.Canon.sumCents(col("value")).as("sum_value_cents"))
-        val pruned = q.collect().head // collect: THIS execution carries the metrics
-        val nRead = SnapshotFileIndex.scannedFiles(q)
-        val nTotal = SnapshotCatalog
-          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
-        val full = rangeFilter(SnapshotCatalog.readSnapshot(spark, root))
-          .agg(count(lit(1)), countDistinct(col("event_type")),
-            graft.functions.Canon.sumCents(col("value")))
-          .head()
+            .agg(count(lit(1)).as("n_rows"),
+              countDistinct(col("event_type")).as("n_types"),
+              graft.functions.Canon.sumCents(col("value")).as("sum_value_cents"))
+        val (Array(pruned), nRead, nTotal) = SnapshotFileIndex.collectScanned(
+          rangeAgg(SnapshotCatalog.readSnapshot(spark, root)), root)
+        val full = rangeAgg(SnapshotFileIndex.unprunedDF(spark, root)).head()
         spark.range(1).select(
           lit(pruned.getLong(0)).as("n_rows"),
           lit(pruned.getLong(1)).as("n_types"),
@@ -991,12 +979,9 @@ object SourceQueries extends QueryPack {
             .sortWithinPartitions("zval")
             .drop("zval"),
           root, "z0")
-        val q = box(SnapshotCatalog.readSnapshot(spark, root))
-        val post = q.collect().head // collect: THIS execution carries the metrics
-        val nRead = SnapshotFileIndex.scannedFiles(q)
-        val nTotal = SnapshotCatalog
-          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
-        val full = box(SnapshotCatalog.readSnapshot(spark, root)).head()
+        val (Array(post), nRead, nTotal) = SnapshotFileIndex.collectScanned(
+          box(SnapshotCatalog.readSnapshot(spark, root)), root)
+        val full = box(SnapshotFileIndex.unprunedDF(spark, root)).head()
         spark.range(1).select(
           lit(post.getLong(0)).as("n_rows"),
           lit(post.getLong(1)).as("sum_qty"),
@@ -1092,15 +1077,12 @@ object SourceQueries extends QueryPack {
             .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value")),
               count(col("quality"))).head() == plain
         // stats-pruned serve on the clustered layout
-        val slice = SnapshotCatalog.readSnapshot(spark, root)
-          .where(col("event_id").between(w, 2L * w - 1L))
-          .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value")))
-        val sliceAgg = slice.collect().head
-        val nRead = SnapshotFileIndex.scannedFiles(slice)
-        val nTotal = SnapshotCatalog.manifestFiles(root, vC).size
-        val sliceFull = SnapshotCatalog.readSnapshot(spark, root)
-          .filter(col("event_id").between(w, 2L * w - 1L))
-          .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value"))).head()
+        def slice(d: org.apache.spark.sql.DataFrame) =
+          d.where(col("event_id").between(w, 2L * w - 1L))
+            .agg(count(lit(1)), graft.functions.Canon.sumCents(col("value")))
+        val (Array(sliceAgg), nRead, nTotal) = SnapshotFileIndex.collectScanned(
+          slice(SnapshotCatalog.readSnapshot(spark, root)), root)
+        val sliceFull = slice(SnapshotFileIndex.unprunedDF(spark, root)).head()
         val serveOk = nRead < nTotal && sliceAgg == sliceFull
         spark.range(1).select(
           lit(plain.getLong(0)).as("n_rows"),
@@ -1199,7 +1181,7 @@ object SourceQueries extends QueryPack {
         // read helper; the planner does the skipping, and parquet's
         // row-group pruning composes within the kept files. Audited by
         // the EXECUTED scan's own numFiles metric vs the snapshot's
-        // file count, and against the full-scan result.
+        // file count, and against an unpruned scan of every file.
         import graft.sources.{SnapshotCatalog, SnapshotFileIndex}
         val root = graft.streaming.Streams.dataDir("graft_snapplan_")
         val ev = graft.core.Tables(spark, dir).events
@@ -1220,11 +1202,8 @@ object SourceQueries extends QueryPack {
              |  CAST(sum(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_cents
              |FROM graft_events_snap
              |WHERE event_id BETWEEN $lo AND $hi""".stripMargin)
-        val r = q.collect().head // collect: THIS execution carries the metrics
-        val scanned = SnapshotFileIndex.scannedFiles(q)
-        val total = SnapshotCatalog
-          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
-        val full = SnapshotCatalog.readSnapshot(spark, root)
+        val (Array(r), scanned, total) = SnapshotFileIndex.collectScanned(q, root)
+        val full = SnapshotFileIndex.unprunedDF(spark, root)
           .filter(col("event_id").between(lo, hi))
           .agg(count(lit(1)), countDistinct(col("event_type")),
             graft.functions.Canon.sumCents(col("value"))).head()
@@ -1276,10 +1255,7 @@ object SourceQueries extends QueryPack {
           """SELECT count(*) AS n_signup,
             |  CAST(sum(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
             |FROM graft_events_part WHERE event_type = 'signup'""".stripMargin)
-        val r = q.collect().head
-        val scanned = SnapshotFileIndex.scannedFiles(q)
-        val total = SnapshotCatalog
-          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
+        val (Array(r), scanned, total) = SnapshotFileIndex.collectScanned(q, root)
         // the dim-join path: small dim broadcast, join on the PARTITION
         // column — the DPP-eligible shape
         val spark2 = spark
@@ -1425,10 +1401,7 @@ object SourceQueries extends QueryPack {
         // the named partition-filtered read cuts files at planning time
         val cut = spark.sql(
           s"SELECT count(*) AS n FROM graft_src25.db.$tbl WHERE event_type = 'signup'")
-        cut.collect()
-        val scanned = SnapshotFileIndex.scannedFiles(cut)
-        val total = SnapshotCatalog
-          .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
+        val (_, scanned, total) = SnapshotFileIndex.collectScanned(cut, root)
         val nSplit = ev.filter(col("event_id") <= split).count()
         stats.select(col("event_type"), col("n_events"), col("n_hot"),
             col("max_value_cents"), col("sum_value_cents"),

@@ -2487,9 +2487,7 @@ object StreamingQueries extends QueryPack {
         val nRows = snap.count()
         val q2 = snap.filter(col("event_type") === "signup")
           .agg(count(lit(1)).as("n"), Canon.sumCents(col("value")).as("c"))
-        val r = q2.collect().head
-        val scanned = SnapshotFileIndex.scannedFiles(q2)
-        val total = SnapshotCatalog.manifestFiles(root, latest).size
+        val (Array(r), scanned, total) = SnapshotFileIndex.collectScanned(q2, root)
         val kinds = SnapshotCatalog.history(root).map(_._2).toSet
         spark.range(1).select(
           lit(nRows).as("n_rows"),

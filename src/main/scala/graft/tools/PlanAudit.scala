@@ -206,10 +206,8 @@ object PlanAudit {
       val q = SnapshotCatalog.readSnapshot(spark, root)
         .where(col("event_id").between(2L * w, 4L * w - 1L))
         .agg(count(lit(1)).as("n_rows"), sum(col("value")).as("sum_value"))
+      val (_, nRead, nTotal) = graft.sources.SnapshotFileIndex.collectScanned(q, root)
       val plan = capturePlan(q)
-      val nRead = graft.sources.SnapshotFileIndex.scannedFiles(q)
-      val nTotal = SnapshotCatalog
-        .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
       sb.append(s"\n## src14/src15_stats_skipping (pruned serve frame) — scan opens $nRead of $nTotal snapshot files; skipped files never enter the plan\n\n")
       sb.append(s"```\n$plan\n```\n")
     }
@@ -281,10 +279,7 @@ object PlanAudit {
         .filter(col("event_type") === "signup")
         .agg(count(lit(1)).as("n"),
           graft.functions.Canon.sumCents(col("value")).as("cents"))
-      q.collect()
-      val scanned = SnapshotFileIndex.scannedFiles(q)
-      val total = SnapshotCatalog
-        .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
+      val (_, scanned, total) = SnapshotFileIndex.collectScanned(q, root)
       val plan = capturePlan(q)
       sb.append(s"\n## src23_partitioned_catalog (hive-partitioned catalog scan) — partition filter cut the listing to $scanned of $total files; partition values served from the log\n\n")
       sb.append(s"```\n$plan\n```\n")
@@ -313,10 +308,7 @@ object PlanAudit {
         """SELECT count(*) AS n,
           |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
           |FROM graft_plan.db.events WHERE event_type = 'signup'""".stripMargin)
-      q.collect()
-      val scanned = SnapshotFileIndex.scannedFiles(q)
-      val total = SnapshotCatalog
-        .manifestFiles(root, SnapshotCatalog.latestVersion(root)).size
+      val (_, scanned, total) = SnapshotFileIndex.collectScanned(q, root)
       val plan = capturePlan(q)
       sb.append(s"\n## src25_sql_catalog (named-table SQL through the TableCatalog) — analysis rewrite planned the v1 FileIndex scan; partition filter cut $scanned of $total files\n\n")
       sb.append(s"```\n$plan\n```\n")

@@ -323,8 +323,9 @@ class CatalogHardeningSpec extends SparkTestBase {
     // same order on a closed range read: [U+E000, U+10001] contains
     // U+10000 bytewise (Java order would skip the file)
     val hi = new String(Character.toChars(0x10001))
-    val (rowS, nS, totS) =
-      prunedAgg(root, col("k").between(e000, hi), count(lit(1)))
+    val (Array(rowS), nS, totS) = SnapshotFileIndex.collectScanned(
+      SnapshotCatalog.readSnapshot(spark, root).where(col("k").between(e000, hi))
+        .agg(count(lit(1))), root)
     assert(totS == 2 && nS == 1, s"read $nS/$totS files")
     assert(rowS.getLong(0) == 1L)
   }
@@ -350,7 +351,9 @@ class CatalogHardeningSpec extends SparkTestBase {
         new Path(files.head), spark.sessionState.newHadoopConf()))
     val nGroups = try reader.getFooter.getBlocks.size finally reader.close()
     assert(nGroups >= 2, s"the file must span several row groups, has $nGroups")
-    val (row, nRead, _) = prunedAgg(root, col("k") === e000, count(lit(1)))
+    val (Array(row), nRead, _) = SnapshotFileIndex.collectScanned(
+      SnapshotCatalog.readSnapshot(spark, root).where(col("k") === e000)
+        .agg(count(lit(1))), root)
     assert(row.getLong(0) == 200L, "the U+E000 rows were pruned away")
     assert(nRead == 1L)
   }
@@ -406,6 +409,58 @@ class CatalogHardeningSpec extends SparkTestBase {
       assert(planH.contains("BroadcastHashJoin"),
         s"under the gate the engine should still request the broadcast:\n$planH")
     } finally {
+      sys.props.remove("graft.dv.broadcast.max.bytes")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoPrev)
+      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("the row-level ops' DV join rides the same gate: deleteWhere broadcasts under it even with auto-broadcast off, shuffles past it") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val root = graft.streaming.Streams.dataDir("graft_dvgate_dml_")
+    val spark2 = spark
+    import spark2.implicits._
+    SnapshotCatalog.append((1L to 100L).toDF("id").coalesce(1), root, "b0")
+    SnapshotCatalog.deleteWhere(spark, root, col("id") % 2 === 0L)
+    // every later deleteWhere matches against the live rows, so its DV
+    // batch write carries the anti join against the DVs already present
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def dvJoinPlan(cond: org.apache.spark.sql.Column): String = {
+      plans.clear()
+      SnapshotCatalog.deleteWhere(spark, root, cond)
+      eventually(timeout(20.seconds)) {
+        assert(plans.asScala.exists(_.contains("LeftAnti")))
+      }
+      plans.asScala.filter(_.contains("LeftAnti")).mkString("\n")
+    }
+    val autoPrev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.listenerManager.register(listener)
+    // the size-based auto-broadcast is off, so a BroadcastHashJoin can
+    // only come from the gate's own hint
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    try {
+      val under = dvJoinPlan(col("id") % 3 === 0L)
+      assert(under.contains("BroadcastHashJoin"),
+        s"under the gate the DML DV join should broadcast:\n$under")
+      sys.props("graft.dv.broadcast.max.bytes") = "1"
+      val past = dvJoinPlan(col("id") % 5 === 0L)
+      assert(!past.contains("BroadcastHashJoin"),
+        s"past the gate the DML DV join must not force a broadcast:\n$past")
+      val expect = (1L to 100L).filter(i => i % 2 != 0 && i % 3 != 0 && i % 5 != 0)
+      assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root)
+        .collect().map(_.getLong(0)).toSet == expect.toSet)
+    } finally {
+      spark.listenerManager.unregister(listener)
       sys.props.remove("graft.dv.broadcast.max.bytes")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoPrev)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.SnapshotCatalog
+import graft.sources.{SnapshotCatalog, SnapshotFileIndex}
 import org.apache.spark.sql.functions._
 
 /** The three reader-visible guarantees of the snapshot seam (src11):
@@ -173,20 +173,26 @@ class SnapshotCatalogSpec extends SparkTestBase {
     val f1 = SnapshotCatalog.writeData((51L to 100L).toDF("id").repartition(2), root, "b1")
     SnapshotCatalog.commitRetry(root)(prev => (prev ++ f1).distinct.sorted)
 
+    def rangeAgg(d: org.apache.spark.sql.DataFrame, lo: Long, hi: Long) =
+      d.where(col("id").between(lo, hi)).agg(count(lit(1)), sum("id"))
+    def pruned(lo: Long, hi: Long) = SnapshotFileIndex.collectScanned(
+      rangeAgg(SnapshotCatalog.readSnapshot(spark, root), lo, hi), root)
     // range fully inside b1: b0's files SKIP (their stats exclude it),
     // b1's are read despite having no stats — never skipped blind
-    val (got, nRead, nTotal) =
-      prunedAgg(root, col("id").between(60L, 70L), count(lit(1)), sum("id"))
+    val (Array(got), nRead, nTotal) = pruned(60L, 70L)
     assert(nTotal == f0.size + f1.size)
     assert(nRead == f1.size, s"expected only b1's ${f1.size} files, read $nRead")
     assert(got.getLong(0) == 11L && got.getLong(1) == (60L to 70L).sum)
 
     // range inside b0: its stats ADMIT the intersecting files; b1 is
     // still read (no stats), so the read set is b1 + b0's overlap
-    val (got2, nRead2, _) =
-      prunedAgg(root, col("id").between(1L, 10L), count(lit(1)), sum("id"))
+    val (Array(got2), nRead2, _) = pruned(1L, 10L)
     assert(nRead2 > f1.size && nRead2 <= nTotal)
     assert(got2.getLong(0) == 10L && got2.getLong(1) == 55L)
+    // skipping kept every matching row: a scan of every file agrees
+    val unpruned = SnapshotFileIndex.unprunedDF(spark, root)
+    assert(got == rangeAgg(unpruned, 60L, 70L).head() &&
+      got2 == rangeAgg(unpruned, 1L, 10L).head())
   }
 
   test("sweepOrphans removes only aged uncommitted batches; young and committed files survive") {

@@ -35,6 +35,29 @@ class SnapshotFileIndexSpec extends SparkTestBase {
       s"expected the 2 intersecting files of 6 in the scan, got $scanned")
   }
 
+  test("unprunedDF, the skipping audits' reference, skips no file by its stats and serves the snapshot's columns, partition values too") {
+    val root = graft.streaming.Streams.dataDir("graft_fidxfull_")
+    val spark2 = spark
+    import spark2.implicits._
+    (0 until 3).foreach { b =>
+      SnapshotCatalog.append((b * 10L + 1L to b * 10L + 10L)
+        .map(i => (i, if (i % 2 == 0) "even" else "odd")).toDF("id", "p")
+        .coalesce(1), root, s"b$b", partitionBy = Seq("p"))
+    }
+    val pred = col("id").between(12L, 14L) && col("p") === "even"
+    val (pruned, nRead, nTotal) = SnapshotFileIndex.collectScanned(
+      SnapshotCatalog.readSnapshot(spark, root).where(pred).orderBy("id"), root)
+    assert(nTotal == 6 && nRead == 1L, s"pruned read opened $nRead of $nTotal")
+    val unpruned = SnapshotFileIndex.unprunedDF(spark, root)
+    assert(unpruned.schema == SnapshotCatalog.readSnapshot(spark, root).schema)
+    assert(unpruned.where(pred).orderBy("id").collect().toSeq == pruned.toSeq &&
+      pruned.map(_.getLong(0)).toSeq == Seq(12L, 14L))
+    // no stats cut the reference: a range inside one batch opens all six
+    val range = unpruned.where(col("id").between(12L, 14L))
+    assert(range.collect().length == 3 && SnapshotFileIndex.scannedFiles(range) == 6L,
+      "the reference skipped files by their stats")
+  }
+
   test("string and equality predicates prune; unsupported shapes read everything (never unsound)") {
     val root = stage("graft_fidxs_")
     val v = SnapshotCatalog.latestVersion(root)

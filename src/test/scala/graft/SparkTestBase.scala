@@ -1,7 +1,6 @@
 package graft
 
-import graft.sources.{SnapshotCatalog, SnapshotFileIndex}
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (getOrCreate reuses the
@@ -9,18 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
-
-  /** Aggregate the rows of `root`'s latest snapshot matching `pred`,
-    * read the way every range read runs — `readSnapshot(...).where(pred)`,
-    * files skipped by the planner. Returns (the aggregate row, files the
-    * scan opened, files in the snapshot). */
-  def prunedAgg(root: String, pred: Column, aggs: Column*): (Row, Long, Int) = {
-    val q = SnapshotCatalog.readSnapshot(spark, root).where(pred)
-      .agg(aggs.head, aggs.tail: _*)
-    val row = q.collect().head // collect: THIS execution carries the metrics
-    (row, SnapshotFileIndex.scannedFiles(q),
-      SnapshotCatalog.manifestFiles(root, SnapshotCatalog.latestVersion(root)).size)
-  }
 }
 
 object SparkTestBase {
