@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.{GraftQuery, QueryPack}
-import graft.core.Tables
+import graft.core.{BroadcastGate, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -178,8 +178,7 @@ object DedupQueries extends QueryPack {
     * arrays (see d05's scaladoc). Persists the signature table; callers
     * run under Verify/Bench which clear cache per query. */
   def verifiedPairs(docs: DataFrame, minJaccardE4: Long = 2000,
-                    checkpoint: Boolean = true,
-                    broadcastVerifyMaxDocs: Long = 100000L): DataFrame = {
+                    checkpoint: Boolean = true): DataFrame = {
     // ONE pass over the corpus text: the exploded shingle relation is
     // persisted, and signatures, band rows, intersection counts AND
     // per-doc shingle counts all derive from that cache — at 100 TB the
@@ -191,22 +190,14 @@ object DedupQueries extends QueryPack {
     try {
       val cand = candidatePairs(bandRows(sig))
       val scnt = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      // The verify joins are size-gated on the MATERIALIZED corpus row
-      // count (a metadata-only count — parquet footers, no scan), never
-      // on optimizer estimates: past `broadcastVerifyMaxDocs` they are
-      // EXPLICITLY shuffled (merge hints), because at 100 TB neither
-      // the candidate list nor the per-doc count table fits one
-      // executor's broadcast build — and the static auto-broadcast
-      // threshold decides on plan ESTIMATES, which a ×100 stress
-      // corpus put just under the session threshold while the actual
-      // hashed-relation build (several × the payload, under a block
-      // manager already holding the persisted shingle cache) OOM'd
-      // the driver, three runs out of three. The shuffled form is
-      // SCALE.md's documented plan for this stage — linear,
-      // AQE-skew-splittable (d03's pinned behavior); below the gate
-      // the planner's broadcast keeps fixture-scale runs fast.
-      // PlanShapeSpec pins the large form via broadcastVerifyMaxDocs=0.
-      val shuffleVerify = docs.count() > broadcastVerifyMaxDocs
+      // BroadcastGate on the corpus's input bytes: past it the verify
+      // joins are merge-hinted — at 100 TB neither the candidate list
+      // nor the per-doc count table fits one executor's broadcast
+      // build; the shuffled form is SCALE.md's linear,
+      // AQE-skew-splittable plan. Under it they carry no hint (the gate
+      // measures the corpus, not these sides) and the planner decides.
+      val shuffleVerify =
+        !BroadcastGate.fits(docs.sparkSession, BroadcastGate.inputBytes(docs))
       def shaped(df: DataFrame): DataFrame =
         if (shuffleVerify) df.hint("merge") else df
       val inter = cand
@@ -874,14 +865,8 @@ object DedupQueries extends QueryPack {
         // modulo rule is applied to the REP, not the doc. Scale shape:
         // the cluster-label table is O(near-dup docs) — usually orders
         // of magnitude smaller than the corpus — so the label join is
-        // EXPLICITLY size-gated on the materialized label count (the
-        // st21/st26 discipline): broadcast while provably small, MERGE
-        // join past the gate. The gate must be explicit, not left to
-        // the optimizer's estimate: a ×100 stress corpus's dense
-        // near-dup graph produced a label table whose plan ESTIMATE
-        // sat under the session's auto-broadcast threshold while the
-        // actual hashed-relation build blew the driver — the exact
-        // estimate-vs-actual trap artifact-size gates exist to close.
+        // gated by BroadcastGate on the materialized label rows:
+        // broadcast while provably small, MERGE join past the gate.
         // At 100 TB the merge path runs exchange-free on a
         // doc_id-bucketed corpus (src05). Everything else is one
         // narrow row-local pass. By construction every cluster is
@@ -890,9 +875,7 @@ object DedupQueries extends QueryPack {
         val docs = t.documents
         val labels = clusterLabels(
           verifiedPairs(docs).select(col("doc_a"), col("doc_b")))
-        val labelJoin =
-          if (labels.count() <= 500000L) broadcast(labels)
-          else labels.hint("merge")
+        val labelJoin = BroadcastGate(labels, BroadcastGate.rowBytes(labels))
         docs.select(col("doc_id"))
           .join(labelJoin, Seq("doc_id"), "left")
           .select(col("doc_id"),
@@ -1056,15 +1039,14 @@ object DedupQueries extends QueryPack {
         // The checkpointed pair list is a LogicalRDD with no size stats,
         // so the planner defaulted all three equi-joins to SortMergeJoin
         // (shuffle + sort on both sides). Broadcast the EDGE side of
-        // each join instead, size-gated on the MATERIALIZED pair count
-        // (the gr01/verifiedPairs discipline — never on estimates): the
-        // wedge stream then never shuffles, and past the gate the hints
-        // drop away and the SMJ fallback returns.
-        val mb: DataFrame => DataFrame =
-          if (e.count() <= 10000000L) broadcast else identity
+        // each join instead, gated by BroadcastGate on the materialized
+        // pair rows: the wedge stream then never shuffles, and past the
+        // gate the edge side is merge-hinted.
+        val bcEdges = BroadcastGate.fits(spark, BroadcastGate.rowBytes(e))
+        def gated(df: DataFrame): DataFrame = BroadcastGate.shape(df, bcEdges)
         val wedges = e.toDF("a", "b")
-          .join(mb(e.toDF("b", "c")), "b")
-        val triangles = wedges.join(mb(e.toDF("a", "c")), Seq("a", "c"))
+          .join(gated(e.toDF("b", "c")), "b")
+        val triangles = wedges.join(gated(e.toDF("a", "c")), Seq("a", "c"))
         e.agg(count(lit(1)).as("n_edges"))
           .crossJoin(broadcast(wedges.agg(count(lit(1)).as("n_wedges"))))
           .crossJoin(broadcast(triangles.agg(count(lit(1)).as("n_triangles"))))

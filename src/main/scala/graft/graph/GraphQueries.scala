@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.{GraftQuery, QueryPack}
-import graft.core.Tables
+import graft.core.{BroadcastGate, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -58,31 +58,29 @@ object GraphQueries extends QueryPack {
         val outdeg = edges.groupBy("src").agg(count(lit(1)).as("od"))
           .localCheckpoint()
         val nodes = outdeg.select(col("src").as("id"))
-        // Per-iteration join strategy, size-gated on the MATERIALIZED
-        // node count (the verifiedPairs discipline — never on optimizer
-        // estimates): the rank/weight/contribution tables are all
-        // node-sized, orders of magnitude smaller than the edge list, so
-        // below the gate they BROADCAST and the EDGE LIST NEVER SHUFFLES
-        // — each iteration is one map-side broadcast join over the
-        // checkpointed edges plus a partially-aggregated narrow
+        // Per-iteration join strategy, gated by BroadcastGate on the
+        // materialized node table: the rank/weight/contribution tables
+        // are all node-sized, orders of magnitude smaller than the edge
+        // list, so under the gate they BROADCAST and the EDGE LIST NEVER
+        // SHUFFLES — each iteration is one map-side broadcast join over
+        // the checkpointed edges plus a partially-aggregated narrow
         // (dst, w-sum) exchange. Each src's contribution weight
         // `r div od` is computed ONCE per node (the wsrc pre-aggregation)
         // before meeting the edges — the r18 form joined the edge-sized
         // srcDeg table against a shuffled rank table and divided per
-        // EDGE row. Past the gate the hints drop away and the planner
-        // shuffles — the rank table no longer fits one executor's build.
-        val bcast = outdeg.count() <= 10000000L
-        def maybeBc(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+        // EDGE row. Past the gate the node-sized sides are merge-hinted.
+        val bcNodes = BroadcastGate.fits(spark, BroadcastGate.rowBytes(outdeg))
+        def gated(df: DataFrame): DataFrame = BroadcastGate.shape(df, bcNodes)
         var ranks = nodes.withColumn("r", lit(1000000L))
         for (_ <- 1 to 3) {
           val wsrc = ranks
-            .join(maybeBc(outdeg), col("id") === col("src"))
+            .join(gated(outdeg), col("id") === col("src"))
             .select(col("src"), expr("r div od").as("w"))
-          val contrib = edges.join(maybeBc(wsrc), "src")
+          val contrib = edges.join(gated(wsrc), "src")
             .groupBy("dst").agg(sum(col("w")).as("in_w"))
             .withColumnRenamed("dst", "id")
           ranks = nodes
-            .join(maybeBc(contrib), Seq("id"), "left")
+            .join(gated(contrib), Seq("id"), "left")
             .select(col("id"),
               (lit(baseE6) +
                 expr(s"(${damping} * coalesce(in_w, 0L)) div 100")).as("r"))

@@ -221,7 +221,7 @@ case class GraftOptimizeCommand(nameParts: Seq[String],
         .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val v = SnapshotCatalog.maintainIfNeeded(spark, root,
       "sqopt" + java.util.UUID.randomUUID().toString.take(12),
-      maxDvBytes = 0L, maxDeletedFrac = 0.0, maxLiveFiles = 1,
+      maxDvBytes = Some(0L), maxDeletedFrac = 0.0, maxLiveFiles = 1,
       clusterBy = cluster, partitionScope = partitionScope)
     Seq(org.apache.spark.sql.Row(v.isDefined, v.orNull))
   }

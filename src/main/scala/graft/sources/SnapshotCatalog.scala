@@ -1804,8 +1804,9 @@ object SnapshotCatalog {
 
   /** Threshold-driven INCREMENTAL OPTIMIZE. The DECISION is from log
     * metadata alone (no scan, no data IO): compact when accumulated
-    * deletion vectors cross `maxDvBytes` (the serve-side broadcast
-    * gate: past it every read pays a shuffled anti-join), when the
+    * deletion vectors cross `maxDvBytes`, by default when they no
+    * longer fit [[graft.core.BroadcastGate]] (past it every read pays a
+    * shuffled anti-join), when the
     * DELETED FRACTION of live rows crosses `maxDeletedFrac` (read
     * amplification: scans keep decoding rows the anti-join then
     * drops), or when the live file count crosses `maxLiveFiles`
@@ -1841,7 +1842,7 @@ object SnapshotCatalog {
     * replaced). Row counts ride the log ([[FileEntry.rows]]); entries
     * lacking them contribute conservatively nothing to the fraction. */
   def maintainIfNeeded(spark: SparkSession, root: String, batch: String,
-                       maxDvBytes: Long = dvBroadcastMaxBytes,
+                       maxDvBytes: Option[Long] = None,
                        maxDeletedFrac: Double = 0.5,
                        maxLiveFiles: Int = Int.MaxValue,
                        compactTo: Int = 2,
@@ -1886,7 +1887,8 @@ object SnapshotCatalog {
     val liveRows = entries.map(_.rows).filter(_ >= 0).sum
     val delRows = dvs.map(_.rows).filter(_ >= 0).sum
     val due =
-      dvBytes > maxDvBytes ||
+      (dvs.nonEmpty &&
+        maxDvBytes.fold(!graft.core.BroadcastGate.fits(spark, dvBytes))(dvBytes > _)) ||
         (liveRows > 0 && delRows.toDouble / liveRows > maxDeletedFrac) ||
         entries.size > maxLiveFiles
     if (!due) return None
@@ -2363,35 +2365,27 @@ object SnapshotCatalog {
   // [[replace]] (compaction) applies them physically and resets the DV
   // set atomically in its own commit.
 
-  /** Broadcast ceiling for the DV side of [[joinDeletes]], the one DV
-    * join, so this is the one DV broadcast gate. The sys-prop override
-    * exists so a spec can cross the threshold with kilobytes of DVs
-    * instead of staging 64 MB. */
-  private[sources] def dvBroadcastMaxBytes: Long =
-    sys.props.get("graft.dv.broadcast.max.bytes").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
-
   /** THE deletion-vector join — serving, the change feeds, maintenance
     * and the row-level ops all apply DVs here. `df` (a batch or
     * streaming scan whose `_metadata` is still reachable) gains each
     * row's position as `__dv_file`/`__dv_pos` and joins the DV files
     * `dvs` on it: an anti join drops the deleted rows, or with
     * `onlyDeleted` (the change feeds' [[deletedRows]]) a semi join
-    * keeps only them. The DV side broadcasts
-    * while its logged bytes stay within [[dvBroadcastMaxBytes]], else
-    * the join shuffles: DVs pile up between compactions, and a trickle
+    * keeps only them. The DV side is sized by [[graft.core.BroadcastGate]]
+    * on its logged bytes: it broadcasts under the gate and the join
+    * shuffles past it — DVs pile up between compactions, and a trickle
     * of deletes must degrade to a shuffle, not a driver OOM. No DVs
     * means no join (`onlyDeleted` callers always pass some). The
     * position columns are dropped unless `keepPositions`. */
   private[sources] def joinDeletes(df: DataFrame, dvs: Seq[FileEntry],
                                    onlyDeleted: Boolean = false,
                                    keepPositions: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val withPos = df.withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
     if (dvs.isEmpty) return if (keepPositions) withPos else df
-    val dv0 = df.sparkSession.read.parquet(dvs.map(_.path): _*)
-    val dv = if (dvs.map(entryBytes).sum <= dvBroadcastMaxBytes) broadcast(dv0) else dv0
+    val dv = graft.core.BroadcastGate(df.sparkSession.read.parquet(dvs.map(_.path): _*),
+      dvs.map(entryBytes).sum)
     val how = if (onlyDeleted) "semi" else "anti"
     val joined = withPos.join(dv, Seq("__dv_file", "__dv_pos"), "left_" + how)
     if (keepPositions) joined else joined.drop("__dv_file", "__dv_pos")
@@ -2929,7 +2923,7 @@ object SnapshotCatalog {
   /** Read a snapshot with its deletion vectors applied: the
     * [[readSnapshot]] scan anti-joined against the in-effect (file,
     * position) pairs by [[joinDeletes]], the one DV join (a broadcast
-    * under [[dvBroadcastMaxBytes]], a shuffle past it). */
+    * under [[graft.core.BroadcastGate]], a shuffle past it). */
   def readSnapshotWithDeletes(spark: SparkSession, root: String,
                               version: Option[Int] = None,
                               mergeSchema: Boolean = false): DataFrame =

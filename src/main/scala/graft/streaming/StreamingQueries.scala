@@ -18,45 +18,6 @@ import org.apache.spark.sql.types.LongType
   */
 object StreamingQueries extends QueryPack {
 
-  /** Conservative in-memory estimate of a persisted parquet artifact's
-    * broadcast footprint. On-disk parquet bytes are dictionary+snappy
-    * compressed; re-materialized as a driver-collected Scala Set (or a
-    * broadcast hash relation) the same strings expand several-fold —
-    * JVM object headers, 2-byte chars, hash-table load factor — so
-    * comparing raw disk bytes against a memory budget under-estimates
-    * and an index "just under the threshold" could pressure the
-    * driver. ×8 is deliberately pessimistic: past-threshold the only
-    * cost is switching to the stored-index join path, which is
-    * output-identical (spec-pinned) and scale-safe. */
-  private[streaming] val ParquetExpansionFactor = 8L
-
-  private[streaming] def estBroadcastBytes(dir: String): Long = {
-    // a catalog-managed artifact is sized by its LIVE manifest's files
-    // only — a raw directory walk would also count superseded
-    // generations awaiting expiry and over-trip the broadcast gate
-    val raw =
-      if (graft.sources.SnapshotCatalog.isTable(dir))
-        graft.sources.SnapshotCatalog.liveDataBytes(dir)
-      else {
-        // recursive walk: a partitioned/bucketed index layout (the shape
-        // src05 recommends at 100 TB) nests its files in subdirectories —
-        // summing only top-level files would measure ~0 bytes and always
-        // select the broadcast path, defeating the threshold
-        def walk(f: java.io.File): Long =
-          if (f.isFile) f.length()
-          else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-        walk(new java.io.File(dir))
-      }
-    raw * ParquetExpansionFactor
-  }
-
-  /** Default size threshold for broadcasting a persisted index
-    * artifact, overridable via `SPARK_GRAFT_BROADCAST_MAX` (bytes) so
-    * the stress harness can force the stored-index join paths (st21 /
-    * st26) without staging a multi-GB fixture index. */
-  private[graft] def broadcastMaxDefault: Long =
-    sys.env.get("SPARK_GRAFT_BROADCAST_MAX").map(_.toLong).getOrElse(32L << 20)
-
   /** st26's STATIC artifacts, persisted and session-cached per source
     * dir (the stageEvents/dedupGateArtifacts pattern): the staged
     * batch-doc topic and the existing corpus's distinct chunk index.
@@ -114,35 +75,27 @@ object StreamingQueries extends QueryPack {
 
   /** st26 scrub over a staged doc stream against a PERSISTED chunk
     * index: ONE per-batch anti-join code shape ([[chunkScrubJoinForm]],
-    * the d15 probe) for both index sizes, with the probe's join
-    * strategy chosen by the artifact's ESTIMATED IN-MEMORY size
-    * ([[estBroadcastBytes]] — on-disk bytes × a conservative
-    * decompression/JVM expansion factor):
-    *   - index ≤ `broadcastMaxBytes` → the index side carries a
-    *     `broadcast()` hint, so the anti-join is a broadcast hash join
-    *     and the micro-batch's chunks never shuffle for the probe
-    *     (st21's small-index discipline — no driver-side
-    *     `collect()`/closure materialization anywhere);
-    *   - larger → the bare index relation: a shuffled anti-join whose
-    *     stream side is micro-batch-sized, so the ~O(corpus) index
-    *     never materializes on any single executor. At 100 TB this is
-    *     the live path; d08b's Bloom tier sits between the two (false
-    *     positives over-scrub — the safe direction for
-    *     decontamination-style gates).
+    * the d15 probe) for both index sizes, the index side shaped by
+    * [[graft.core.BroadcastGate]] on its on-disk bytes: broadcast, the
+    * micro-batch's chunks never shuffle for the probe; past the gate, a
+    * shuffled anti-join whose stream side is micro-batch-sized, so the
+    * ~O(corpus) index never materializes on any single executor. At
+    * 100 TB this is the live path; d08b's Bloom tier sits between the
+    * two (false positives over-scrub — the safe direction for
+    * decontamination-style gates).
     * Each incoming doc is chunked ROW-LOCALLY (the shared chunkArray
     * kernel), and re-emitted rebuilt from its surviving chunks —
     * content REWRITE, not just a flag (st16 flags; this scrubs). Zero
     * streaming state, append mode, no watermark. Both forms are
     * spec-pinned identical on the same staged corpus. */
   def chunkScrubStream(spark: org.apache.spark.sql.SparkSession, staged: String,
-                       indexDir: String, sinkName: String,
-                       broadcastMaxBytes: Long = broadcastMaxDefault): org.apache.spark.sql.DataFrame = {
+                       indexDir: String, sinkName: String): org.apache.spark.sql.DataFrame = {
+    import graft.core.BroadcastGate
     import graft.dedup.DedupQueries
-    val indexBytes = estBroadcastBytes(indexDir)
-    val small = indexBytes <= broadcastMaxBytes
-    println(s"[st26] index est ${indexBytes >> 20} MB " +
-      (if (small) s"<= ${broadcastMaxBytes >> 20} MB: broadcast-join path"
-       else s"> ${broadcastMaxBytes >> 20} MB: stored-index join path"))
+    val indexBytes = BroadcastGate.dirBytes(indexDir)
+    val small = BroadcastGate.fits(spark, indexBytes)
+    println(s"[st26] index ${indexBytes >> 20} MB on disk: " +
+      (if (small) "broadcast-join path" else "stored-index join path"))
     val chunked = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), DedupQueries.chunkArray(col("ws")).as("chunks"))
@@ -153,7 +106,7 @@ object StreamingQueries extends QueryPack {
         .option("checkpointLocation", Streams.scratchDir(s"graft_cp_$sinkName"))
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           val idx = graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir)
-          chunkScrubJoinForm(b, if (small) broadcast(idx) else idx)
+          chunkScrubJoinForm(b, BroadcastGate.shape(idx, small))
             .write.mode("append").parquet(outDir)
           ()
         }
@@ -229,25 +182,6 @@ object StreamingQueries extends QueryPack {
       .select("doc_id")
       .dropDuplicates("doc_id")
 
-  /** The st21 gate: each micro-batch of incoming docs signs itself PER
-    * ROW, bands the signature, probes the band index for candidates,
-    * and exact-Jaccard verifies against the stored shingle table
-    * ([[dedupGateVerify]] — one verify kernel, both paths). The index-probe
-    * form is chosen by the index artifact's estimated in-memory size
-    * ([[estBroadcastBytes]], the st26 discipline):
-    *   - ≤ `broadcastMaxBytes` → the index is BROADCAST into a
-    *     stream-static join; the only streaming state is the
-    *     once-per-(pair|doc) emission dedup, sized by near-dup density
-    *     (ScaleToolsSpec pins state rows = candidate pairs);
-    *   - larger → per-batch STORED-INDEX join inside foreachBatch (the
-    *     d12 probe shape): each micro-batch's banded rows join the
-    *     persisted index relation, so the ~O(corpus) index never
-    *     materializes on any single executor or rebroadcasts per
-    *     batch. Zero streaming state — each doc lives in exactly one
-    *     micro-batch, so the within-batch emission dedup is complete.
-    * Both forms are spec-pinned identical on the same staged corpus.
-    * At 100 TB a bucketed-by-(band_id, band_hash) index layout (src05)
-    * turns the per-batch join's index side into a pruned probe. */
   /** The between-ingests INDEX-UPDATE job for the st21 gate artifacts —
     * d16's append step in the streaming artifacts' shape (ex_id band
     * rows + ex_shs shingle arrays, both derived from ONE signing pass).
@@ -296,29 +230,47 @@ object StreamingQueries extends QueryPack {
     ()
   }
 
+  /** The st21 gate: each micro-batch of incoming docs signs itself PER
+    * ROW, bands the signature, probes the band index for candidates,
+    * and exact-Jaccard verifies against the stored shingle table
+    * ([[dedupGateVerify]] — one verify kernel, both paths). The
+    * index-probe form is chosen by [[graft.core.BroadcastGate]] on the
+    * index artifact's on-disk bytes:
+    *   - under the gate the index is BROADCAST into a stream-static
+    *     join; the only streaming state is the once-per-(pair|doc)
+    *     emission dedup (ScaleToolsSpec pins state rows = candidate
+    *     pairs);
+    *   - past it, a per-batch STORED-INDEX merge join inside
+    *     foreachBatch (the d12 probe shape), so the ~O(corpus) index
+    *     never materializes on one executor or rebroadcasts per batch.
+    *     Zero streaming state — each doc lives in exactly one
+    *     micro-batch, so the within-batch emission dedup is complete.
+    * Both forms are spec-pinned identical on the same staged corpus. */
   def dedupGateDrain(spark: org.apache.spark.sql.SparkSession, staged: String,
-                     indexDir: String, arrDir: String,
-                     broadcastMaxBytes: Long = broadcastMaxDefault): org.apache.spark.sql.DataFrame =
+                     indexDir: String, arrDir: String): org.apache.spark.sql.DataFrame =
     Streams.withStreamShufflePartitions(spark) {
+      import graft.core.BroadcastGate
       import graft.dedup.DedupQueries
       val exArr = graft.sources.SnapshotCatalog.readTableOrDir(spark, arrDir)
       val stream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-      val est = estBroadcastBytes(indexDir)
-      if (est <= broadcastMaxBytes) {
-        println(s"[st21] index est ${est >> 20} MB <= ${broadcastMaxBytes >> 20} MB: broadcast path")
+      val indexBytes = BroadcastGate.dirBytes(indexDir)
+      val small = BroadcastGate.fits(spark, indexBytes)
+      def index = BroadcastGate.shape(
+        graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir), small)
+      if (small) {
+        println(s"[st21] index ${indexBytes >> 20} MB on disk: broadcast path")
         // under a broadcast index the banded rows never shuffle, so
         // carrying the shingle array alongside the bands is free
         val candidates = minhashSigned(stream)
           .select(col("doc_id"), col("shs"), posexplode(minhashBandArray))
           .toDF("doc_id", "shs", "band_id", "band_hash")
-          .join(broadcast(graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir)),
-            Seq("band_id", "band_hash"))
+          .join(index, Seq("band_id", "band_hash"))
           .select(col("doc_id"), col("ex_id"), col("shs"))
           .dropDuplicates("doc_id", "ex_id")
         Streams.drainToMemory(dedupGateVerify(candidates, exArr),
           "st21_sink", outputMode = "append")
       } else {
-        println(s"[st21] index est ${est >> 20} MB > ${broadcastMaxBytes >> 20} MB: stored-index join path")
+        println(s"[st21] index ${indexBytes >> 20} MB on disk: stored-index join path")
         val outDir = Streams.dataDir("graft_dedupgate_out_")
         val q = stream.writeStream
           .outputMode("append")
@@ -333,8 +285,7 @@ object StreamingQueries extends QueryPack {
             val candIds = minhashSigned(b)
               .select(col("doc_id"), posexplode(minhashBandArray))
               .toDF("doc_id", "band_id", "band_hash")
-              .join(graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir),
-                Seq("band_id", "band_hash"))
+              .join(index, Seq("band_id", "band_hash"))
               .select(col("doc_id"), col("ex_id"))
               .dropDuplicates("doc_id", "ex_id")
             val shingled = b.select(col("doc_id"),

@@ -377,48 +377,28 @@ class CatalogHardeningSpec extends SparkTestBase {
     assert(gotB == expect)
     assert(planB.contains("BroadcastHashJoin") && planB.contains("LeftAnti"),
       s"small DV set should broadcast:\n$planB")
-    // past the gate: the engine must STOP FORCING a broadcast. The
-    // planner (and AQE) may still choose one when the measured size is
-    // genuinely small — that size-based choice is exactly what the gate
-    // restores; the hazard was the unconditional hint building an
-    // arbitrarily large DV set on the driver. To observe the hint's
-    // absence with kilobyte test data, disable the size-based
-    // auto-broadcast: any remaining BroadcastHashJoin could then only
-    // come from a forced hint.
-    val autoPrev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    sys.props("graft.dv.broadcast.max.bytes") = "1"
-    try {
-      val (gotS, planS) = servedPlan()
-      assert(gotS == expect, "gated plan changed results")
-      assert(!planS.contains("BroadcastHashJoin"),
-        s"DV side past the gate must not force a broadcast:\n$planS")
-      assert(planS.contains("LeftAnti"), s"anti-join disappeared:\n$planS")
-      // readSnapshotWithDeletes rides the same gate
-      val df = SnapshotCatalog.readSnapshotWithDeletes(spark, root)
-      assert(df.collect().map(_.getLong(0)).toSet == expect)
+    // past the gate the DV side is merge-hinted: the frame built under
+    // a 1-byte ceiling plans a shuffle even once the ceiling is back at
+    // 64 MB, where an unhinted kilobyte side would auto-broadcast
+    val pastServed = pastTheGate(SnapshotFileIndex.snapshotDF(spark, root))
+    val pastRead = pastTheGate(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
+    for (df <- Seq(pastServed, pastRead)) {
+      assert(df.collect().map(_.getLong(0)).toSet == expect, "gated plan changed results")
       val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("SortMergeJoin") && p.contains("LeftAnti"),
+        s"DV side past the gate must shuffle:\n$p")
       assert(!p.contains("BroadcastHashJoin"),
-        s"readSnapshotWithDeletes past the gate must not force a broadcast:\n$p")
-      // under the gate the hint still wins over the disabled threshold —
-      // proof the earlier broadcast came from the engine's own request
-      sys.props.remove("graft.dv.broadcast.max.bytes")
-      val (gotH, planH) = servedPlan()
-      assert(gotH == expect)
-      assert(planH.contains("BroadcastHashJoin"),
-        s"under the gate the engine should still request the broadcast:\n$planH")
-    } finally {
-      sys.props.remove("graft.dv.broadcast.max.bytes")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoPrev)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        s"DV side past the gate must not broadcast:\n$p")
     }
+    // a session that disables broadcasting gets no gated broadcast
+    val (gotOff, planOff) = graft.core.GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(servedPlan())
+    assert(gotOff == expect)
+    assert(!planOff.contains("BroadcastHashJoin"),
+      s"a disabled threshold must mean no DV broadcast:\n$planOff")
   }
 
-  test("the row-level ops' DV join rides the same gate: deleteWhere broadcasts under it even with auto-broadcast off, shuffles past it") {
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
-    import scala.jdk.CollectionConverters._
+  test("the row-level ops' DV join rides the same gate: deleteWhere broadcasts under it, merge-joins past it and with broadcasting disabled") {
     val root = graft.streaming.Streams.dataDir("graft_dvgate_dml_")
     val spark2 = spark
     import spark2.implicits._
@@ -426,44 +406,25 @@ class CatalogHardeningSpec extends SparkTestBase {
     SnapshotCatalog.deleteWhere(spark, root, col("id") % 2 === 0L)
     // every later deleteWhere matches against the live rows, so its DV
     // batch write carries the anti join against the DVs already present
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    def dvJoinPlan(cond: org.apache.spark.sql.Column): String = {
-      plans.clear()
-      SnapshotCatalog.deleteWhere(spark, root, cond)
-      eventually(timeout(20.seconds)) {
-        assert(plans.asScala.exists(_.contains("LeftAnti")))
-      }
-      plans.asScala.filter(_.contains("LeftAnti")).mkString("\n")
-    }
-    val autoPrev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.listenerManager.register(listener)
-    // the size-based auto-broadcast is off, so a BroadcastHashJoin can
-    // only come from the gate's own hint
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
-      val under = dvJoinPlan(col("id") % 3 === 0L)
-      assert(under.contains("BroadcastHashJoin"),
-        s"under the gate the DML DV join should broadcast:\n$under")
-      sys.props("graft.dv.broadcast.max.bytes") = "1"
-      val past = dvJoinPlan(col("id") % 5 === 0L)
-      assert(!past.contains("BroadcastHashJoin"),
-        s"past the gate the DML DV join must not force a broadcast:\n$past")
-      val expect = (1L to 100L).filter(i => i % 2 != 0 && i % 3 != 0 && i % 5 != 0)
-      assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root)
-        .collect().map(_.getLong(0)).toSet == expect.toSet)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      sys.props.remove("graft.dv.broadcast.max.bytes")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoPrev)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    }
+    def dvJoinPlan(cond: org.apache.spark.sql.Column): String =
+      capturePlans(SnapshotCatalog.deleteWhere(spark, root, cond))(
+          _.exists(_.executedPlan.toString.contains("LeftAnti")))._2
+        .map(_.executedPlan.toString).filter(_.contains("LeftAnti")).mkString("\n")
+    val under = dvJoinPlan(col("id") % 3 === 0L)
+    assert(under.contains("BroadcastHashJoin"),
+      s"under the gate the DML DV join should broadcast:\n$under")
+    // AQE's runtime broadcast stays on past the gate; the merge hint
+    // must still hold the join to a shuffle
+    val past = pastTheGate(dvJoinPlan(col("id") % 5 === 0L))
+    assert(past.contains("SortMergeJoin") && !past.contains("BroadcastHashJoin"),
+      s"past the gate the DML DV join must shuffle:\n$past")
+    val off = graft.core.GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(dvJoinPlan(col("id") % 7 === 0L))
+    assert(!off.contains("BroadcastHashJoin"),
+      s"a disabled threshold must mean no DML DV broadcast:\n$off")
+    val expect = (1L to 100L)
+      .filter(i => i % 2 != 0 && i % 3 != 0 && i % 5 != 0 && i % 7 != 0)
+    assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root)
+      .collect().map(_.getLong(0)).toSet == expect.toSet)
   }
 }

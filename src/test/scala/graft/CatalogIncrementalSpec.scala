@@ -88,7 +88,7 @@ class CatalogIncrementalSpec extends SparkTestBase {
     val (_, nDel) = SnapshotCatalog.deleteWhere(spark, root, col("id") <= 100L)
     assert(nDel == 100L)
     val fired3 = SnapshotCatalog.maintainIfNeeded(spark, root, "c3",
-      maxDvBytes = 1L, minFileBytes = bound2)
+      maxDvBytes = Some(1L), minFileBytes = bound2)
     assert(fired3.isDefined)
     assert(SnapshotCatalog.dvFiles(root, fired3.get).isEmpty,
       "fired OPTIMIZE left DVs in effect")

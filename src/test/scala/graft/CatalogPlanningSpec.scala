@@ -168,7 +168,7 @@ class CatalogPlanningSpec extends SparkTestBase {
     SnapshotCatalog.deleteWhere(spark, root, col("id") === 15L)
     val v2 = SnapshotCatalog.latestVersion(root)
     val fired2 = SnapshotCatalog.maintainIfNeeded(spark, root, "c4",
-      maxDvBytes = 1L)
+      maxDvBytes = Some(1L))
     assert(fired2.contains(v2 + 1) &&
       SnapshotCatalog.dvFiles(root, fired2.get).isEmpty)
     // the FILE-COUNT trigger (ingest litter): 3 more appends cross 3

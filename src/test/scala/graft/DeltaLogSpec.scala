@@ -445,7 +445,7 @@ class DeltaLogSpec extends SparkTestBase {
     // ONE maintenance fire clears the danglers METADATA-ONLY (selection
     // empty → plain dvReset, not a re-land of the dangling positions)
     val fired = SnapshotCatalog.maintainIfNeeded(spark, root, "c0",
-      maxDvBytes = 0L, minFileBytes = 1L)
+      maxDvBytes = Some(0L), minFileBytes = 1L)
     assert(fired.nonEmpty, "dangling DV litter did not trigger the reset")
     val v1 = fired.get
     assert(SnapshotCatalog.dvEntries(root, v1).isEmpty,
@@ -454,7 +454,7 @@ class DeltaLogSpec extends SparkTestBase {
       "the metadata-only reset must not touch data files")
     // CONVERGES: the next fire has nothing to do — no commit per fire
     assert(SnapshotCatalog.maintainIfNeeded(spark, root, "c1",
-      maxDvBytes = 0L, minFileBytes = 1L).isEmpty,
+      maxDvBytes = Some(0L), minFileBytes = 1L).isEmpty,
       "dangling-DV cleanup did not converge — a fresh commit per fire")
     assert(SnapshotCatalog.latestVersion(root) == v1)
     assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).count() == 11L)

@@ -435,23 +435,56 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), s"hybrid retrieval went cartesian:\n$p")
   }
 
-  test("d05: verify-stage joins are shuffled, never estimate-gated broadcasts") {
-    // the ×100 lesson: candidate/count tables estimate under the session
-    // broadcast threshold while their actual build OOMs a loaded driver —
-    // past the corpus-count gate the verify stage must plan its joins as
-    // exchanges. Probe the UN-checkpointed form with the gate forced
-    // (the registry query's executed plan is one ExistingRDD scan of the
-    // materialized pair list, and the fixture sits under the gate).
-    val docs = graft.core.Tables(spark, sfDir).documents
-    val df = graft.dedup.DedupQueries.verifiedPairs(docs,
-      checkpoint = false, broadcastVerifyMaxDocs = 0L)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    // the verify stage is 4 joins (cand⋈sh ×2, inter⋈scnt ×2) — all must
-    // plan as exchanges; upstream stages (band self-join) are pinned
-    // separately (d03's skew test)
-    assert("SortMergeJoin".r.findAllIn(p).length >= 4,
-      s"expected all four verify-stage joins shuffled:\n$p")
+  test("broadcast gate: gr01/d11/d19/d05 gated joins merge-join past the ceiling with unchanged rows; gr01/d11 broadcast under it") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def registry(name: String): () => org.apache.spark.sql.DataFrame =
+      () => SparkEntry.queries(name)(spark, sfDir)
+    // gr01: under the gate the checkpointed edge list meets each
+    // iteration's broadcast join with no exchange in between
+    def edgesNeverShuffle(p: SparkPlan): Unit = {
+      val edgeScans = ancestors(p) {
+        case r: RDDScanExec => r.output.map(_.name) == Seq("src", "dst")
+        case _ => false
+      }
+      assert(edgeScans.size >= 3, s"expected the edge list in every iteration:\n$p")
+      edgeScans.foreach { up =>
+        val (below, join) = up.span(!_.isInstanceOf[BroadcastHashJoinExec])
+        assert(join.nonEmpty && !below.exists(_.isInstanceOf[Exchange]),
+          s"the edge list shuffled inside an iteration:\n$p")
+      }
+    }
+    // d11: under the gate both edge-side joins broadcast
+    def edgesBroadcast(p: SparkPlan): Unit =
+      assert("BroadcastHashJoin".r.findAllIn(p.toString).length >= 2 &&
+        !p.toString.contains("SortMergeJoin"), s"expected 2 gated broadcasts:\n$p")
+    // (query, gated joins, its under-the-gate plan check). d19's label
+    // broadcast has its own test above. d05 is the UN-checkpointed
+    // verify stage — the registry query's executed plan is one
+    // ExistingRDD scan of the materialized pair list — and its four
+    // verify joins (cand⋈sh ×2, inter⋈scnt ×2) are left to the planner
+    // under the gate
+    val cases = Seq(
+      ("gr01", registry("gr01_pagerank"), 9, Some(edgesNeverShuffle _)),
+      ("d11", registry("d11_triangle_count"), 2, Some(edgesBroadcast _)),
+      ("d19", registry("d19_cluster_safe_split"), 1, None),
+      ("d05", () => graft.dedup.DedupQueries.verifiedPairs(
+        graft.core.Tables(spark, sfDir).documents, checkpoint = false), 4, None))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for ((name, query, gated, underCheck) <- cases) {
+      val under = query()
+      val expect = rows(under)
+      underCheck.foreach(_(under.queryExecution.executedPlan))
+      // built past the gate, run at the default ceiling: only the
+      // gate's merge hints keep these kilobyte sides from broadcasting
+      val past = pastTheGate(query())
+      assert(rows(past) == expect, s"$name: past-gate rows differ")
+      val p = past.queryExecution.executedPlan.toString
+      assert("SortMergeJoin".r.findAllIn(p).length >= gated,
+        s"$name: expected all $gated gated joins shuffled:\n$p")
+    }
   }
 
   test("q89: fence table broadcasts back over the stream; the rank window is the only group exchange") {

@@ -81,6 +81,40 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  private def scansDir(dir: String)(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    p match {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.inputFiles.exists(_.contains(dir.stripSuffix("/") + "/"))
+      case _ => false
+    }
+
+  /** Each scan of `indexDir` in the batch plans `qes`: the plan nodes
+    * between it and its nearest join, and that join. */
+  private def indexJoins(qes: Seq[org.apache.spark.sql.execution.QueryExecution],
+                         indexDir: String) =
+    qes.flatMap(qe => ancestors(qe.executedPlan)(scansDir(indexDir))).map { up =>
+      val (below, rest) =
+        up.span(!_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])
+      (below, rest.headOption)
+    }
+
+  /** Past the gate the index joins by sort-merge with no broadcast
+    * exchange over its scan, although AQE's runtime broadcast is on.
+    * Join outputs above it may still broadcast (st21's candidates into
+    * dedupGateVerify). */
+  private def assertIndexMergeJoined(
+      qes: Seq[org.apache.spark.sql.execution.QueryExecution], indexDir: String): Unit = {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val probes = indexJoins(qes, indexDir)
+    assert(probes.nonEmpty, "no batch plan scanned the index")
+    assert(probes.forall { case (below, join) =>
+        join.exists(_.isInstanceOf[SortMergeJoinExec]) &&
+          !below.exists(_.isInstanceOf[BroadcastExchangeExec]) },
+      "past the gate the index side must sort-merge join, never broadcast:\n" +
+        qes.map(_.executedPlan).mkString("\n"))
+  }
+
   test("st26: broadcast-set and stored-index-join scrub forms are identical (past-broadcast fallback)") {
     import graft.dedup.DedupQueries
     import graft.streaming.StreamingQueries
@@ -92,16 +126,16 @@ class StreamingSpec extends SparkTestBase {
     val indexDir = Streams.dataDir("graft_scrub_idx_")
     DedupQueries.chunkRelation(docs.filter(col("doc_id") < splitId))
       .select("chunk").distinct().write.mode("overwrite").parquet(indexDir)
-    // threshold forced to each extreme selects each path over the SAME
-    // staged corpus and index artifact
+    // the default ceiling broadcasts the kilobyte index; past the gate
+    // the SAME staged corpus and index take the stored-index join
     val bc = StreamingQueries
-      .chunkScrubStream(spark, staged, indexDir, "st26_spec_bc",
-        broadcastMaxBytes = Long.MaxValue)
+      .chunkScrubStream(spark, staged, indexDir, "st26_spec_bc")
       .collect().map(_.toSeq).toSet
-    val jn = StreamingQueries
-      .chunkScrubStream(spark, staged, indexDir, "st26_spec_jn",
-        broadcastMaxBytes = 0L)
-      .collect().map(_.toSeq).toSet
+    val (jn, qes) = capturePlans {
+      pastTheGate(StreamingQueries.chunkScrubStream(spark, staged, indexDir, "st26_spec_jn"))
+        .collect().map(_.toSeq).toSet
+    }(indexJoins(_, indexDir).nonEmpty)
+    assertIndexMergeJoined(qes, indexDir)
     assert(bc.nonEmpty, "scrub emitted no rows")
     assert(bc === jn, "join-form scrub diverges from broadcast form")
     // the fixture really exercises the scrub: some doc lost chunks and
@@ -114,16 +148,18 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.StreamingQueries
     val (staged, indexDir, arrDir) =
       StreamingQueries.dedupGateArtifacts(spark, sfDir)
-    // threshold forced to each extreme selects each path over the SAME
-    // staged corpus and index artifacts
+    // the default ceiling broadcasts the kilobyte index; past the gate
+    // the SAME staged corpus and index artifacts take the stored-index join
     val bc = StreamingQueries
-      .dedupGateDrain(spark, staged, indexDir, arrDir,
-        broadcastMaxBytes = Long.MaxValue)
+      .dedupGateDrain(spark, staged, indexDir, arrDir)
       .collect().map(_.getLong(0)).toSet
-    val jn = StreamingQueries
-      .dedupGateDrain(spark, staged, indexDir, arrDir,
-        broadcastMaxBytes = 0L)
-      .collect().map(_.getLong(0)).toSet
+    val (jn, qes) = capturePlans {
+      pastTheGate(StreamingQueries.dedupGateDrain(spark, staged, indexDir, arrDir))
+        .collect().map(_.getLong(0)).toSet
+    }(indexJoins(_, indexDir).nonEmpty)
+    // the micro-batch candidates still broadcast into dedupGateVerify;
+    // only the index side must not
+    assertIndexMergeJoined(qes, indexDir)
     assert(bc.nonEmpty, "gate flagged no docs — fixture exercises nothing")
     assert(bc === jn, "stored-index-join gate diverges from broadcast form")
   }
