@@ -1313,15 +1313,14 @@ object SnapshotCatalog {
     * table rewrite), prior versions time-travel to the pre-correction
     * content, and the change feed refuses across it like any rewrite.
     * Deletion vectors on untouched files stay in effect; DV positions
-    * into replaced files go dangling harmlessly (they match no served
-    * row). Last-writer-wins per partition: the remove set is
-    * recomputed from the latest version on every CAS attempt, so a
+    * into replaced files are withdrawn ([[relandDvs]]). Last-writer-wins
+    * per partition: the remove set is recomputed from the latest
+    * version on every CAS attempt, so a
     * racing append into a touched partition is superseded — the
     * overwrite DEFINES those partitions' content (Spark's dynamic
     * overwrite contract). Returns (version, touched partitions). */
   def replacePartitions(spark: SparkSession, root: String,
                         updates: DataFrame, batch: String): (Int, Int) = {
-    import org.apache.spark.sql.functions.col
     if (isBatchCommitted(root, batch)) return (latestVersion(root), 0)
     val spec = partitionSpecAt(root, latestVersion(root)).getOrElse(
       sys.error(s"replacePartitions on $root: table has no partition spec — " +
@@ -1368,40 +1367,29 @@ object SnapshotCatalog {
       // threshold-OPTIMIZE decision's deleted-fraction/DV-bytes reads
       // (a big overwrite could trigger a spurious compaction). The
       // commit already knows the removed set, so restructure the DV
-      // side here: withdraw every in-effect DV entry (`W` lines) and
-      // re-land only the positions referencing SURVIVING files —
-      // O(deleted rows), paid by the op that created the dangling.
+      // side here ([[relandDvs]]): withdraw every in-effect DV entry
+      // (`W` lines) and re-land only the positions referencing
+      // SURVIVING files — O(deleted rows), paid by the op that created
+      // the dangling.
       val dvsInEffect = if (pv == 0) Seq.empty else dvEntries(root, pv)
-      val (dvRemoves, dvAdds) =
-        if (dvsInEffect.isEmpty) (Seq.empty[String], Seq.empty[FileEntry])
+      val reland =
+        if (dvsInEffect.isEmpty) None
         else {
           val removedUri = removes.map(f => new Path(f).toUri.getPath).toSet
-          val dv0 = spark.read.parquet(dvsInEffect.map(_.path): _*)
-          val refd = dv0.select("__dv_file").distinct()
-            .collect().map(_.getString(0))
+          val refd = dvBearingFiles(spark, dvsInEffect)
           val surviving = refd.filterNot(f =>
             removedUri.contains(new Path(f).toUri.getPath))
-          if (surviving.length == refd.length)
-            (Seq.empty[String], Seq.empty[FileEntry]) // nothing dangles
-          else {
-            val keep = dv0.filter(col("__dv_file").isin(surviving.toSeq: _*))
-            val dvDir = s"$root/dv/w${java.util.UUID.randomUUID().toString.take(8)}"
-            keep.coalesce(1).write.mode("overwrite").parquet(dvDir)
-            val sized = listDataEntries(dvDir)
-            val nKeep = spark.read.parquet(sized.map(_._1): _*).count()
-            if (nKeep == 0L) {
-              fsFor(new Path(dvDir)).delete(new Path(dvDir), true)
-              (dvsInEffect.map(_.path), Seq.empty[FileEntry])
-            } else
-              (dvsInEffect.map(_.path), sized.map { case (f, sz) =>
-                FileEntry(f, sz, if (sized.size == 1) nKeep else -1L) })
-          }
+          if (surviving.length == refd.length) None // nothing dangles
+          else Some(relandDvs(spark, root, dvsInEffect, surviving))
         }
       if (tryCommitEntries(root, pv + 1,
             adds = entries.distinct.sortBy(_.path), removes = removes,
-            dvAdds = dvAdds, dvRemoves = dvRemoves,
+            dvAdds = reland.toSeq.flatMap(_._2.entries),
+            dvRemoves = reland.toSeq.flatMap(_._1),
             schemaJson = schemaJson, partJson = partJson))
         return (pv + 1, touched.size)
+      // the lost attempt's re-land batch will never be referenced
+      reland.foreach(_._2.discard())
       attempt += 1
     }
     sys.error(s"replacePartitions on $root lost 100 consecutive CAS races")
@@ -1840,7 +1828,9 @@ object SnapshotCatalog {
     * for rewriting (a table of large clean files over `maxLiveFiles`
     * is not litter — rewriting it would be the quadratic this
     * replaced). Row counts ride the log ([[FileEntry.rows]]); entries
-    * lacking them contribute conservatively nothing to the fraction. */
+    * lacking them contribute conservatively nothing to the fraction.
+    * Commits through [[commitRowLevel]]: an intervening append is
+    * safe, any other intervening commit aborts the pass. */
   def maintainIfNeeded(spark: SparkSession, root: String, batch: String,
                        maxDvBytes: Option[Long] = None,
                        maxDeletedFrac: Double = 0.5,
@@ -1898,10 +1888,7 @@ object SnapshotCatalog {
     // files bearing live DV positions (O(deleted rows) metadata read —
     // the only data IO the selection itself costs)
     val bearingRaw: Seq[String] =
-      if (dvs.isEmpty) Seq.empty
-      else spark.read.parquet(dvs.map(_.path): _*)
-        .select("__dv_file").distinct()
-        .collect().map(_.getString(0)).toSeq
+      if (dvs.isEmpty) Seq.empty else dvBearingFiles(spark, dvs)
     val bearingUris: Set[String] = bearingRaw.map(uriOf).toSet
     val liveBearing = entries.filter(e =>
       bearingUris.contains(uriOf(e.path)) && inScope(e.path))
@@ -1953,26 +1940,9 @@ object SnapshotCatalog {
     val survivingRaw = bearingRaw.filterNot(f =>
       selUrisForDv.contains(uriOf(f))).filter(f =>
       liveUris.contains(uriOf(f)))
-    val (dvWithdraws, dvSurviveAdds) =
-      if (dvs.isEmpty || survivingRaw.isEmpty)
-        (Seq.empty[String], Seq.empty[FileEntry])
-      else {
-        import org.apache.spark.sql.functions.broadcast
-        val dv0 = spark.read.parquet(dvs.map(_.path): _*)
-        // broadcast semi-join against a paths frame, not an isin over
-        // O(files) literals — at 100 TB the surviving set can be tens
-        // of thousands of paths and a giant In-expression in the plan
-        val keepPaths = broadcast(
-          spark.createDataset(survivingRaw)(
-            org.apache.spark.sql.Encoders.STRING).toDF("__dv_file"))
-        val keep = dv0.join(keepPaths, Seq("__dv_file"), "left_semi")
-        val dvDir = s"$root/dv/w${java.util.UUID.randomUUID().toString.take(8)}"
-        keep.coalesce(1).write.mode("overwrite").parquet(dvDir)
-        val sized = listDataEntries(dvDir)
-        val nKeep = spark.read.parquet(sized.map(_._1): _*).count()
-        (dvs.map(_.path), sized.map { case (f, sz) =>
-          FileEntry(f, sz, if (sized.size == 1) nKeep else -1L) })
-      }
+    val reland =
+      if (dvs.isEmpty || survivingRaw.isEmpty) None
+      else Some(relandDvs(spark, root, dvs, survivingRaw))
     val spec = partitionSpecAt(root, v)
     val specCols = spec.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
     val fullSchema = schemaAt(root, v)
@@ -2010,38 +1980,19 @@ object SnapshotCatalog {
       }
 
     val selPaths = selection.map(_.path).toSet
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
-      if (pv != v) {
-        // the rewrite was computed against v: intervening APPENDS are
-        // safe (their files are disjoint from the selection and carry
-        // no DV positions), but any intervening remove/DV commit
-        // invalidates the selection or the reset — abort like any
-        // row-level op
-        ((v + 1) to pv).foreach { cv =>
-          val d = if (commitExists(root, cv)) commitDeltaFull(root, cv)
-            else throw new IllegalStateException(
-              s"maintainIfNeeded on $root: commit $cv expired mid-op")
-          if (d.removes.nonEmpty || d.dvReset || d.dvAdds.nonEmpty ||
-              d.dvRemoves.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"maintainIfNeeded on $root: a concurrent non-append commit " +
-                s"landed at $cv under the rewrite — retry against the new " +
-                "snapshot")
-        }
-      }
-      if (tryCommitEntries(root, pv + 1,
-            adds = newEntries.distinct.sortBy(_.path),
-            removes = selPaths.toSeq.sorted,
-            dvReset = dvs.nonEmpty && survivingRaw.isEmpty,
-            dvAdds = dvSurviveAdds, dvRemoves = dvWithdraws,
-            schemaJson = schemaJson,
-            partJson = spec.map(_.json)))
-        return Some(pv + 1)
-      attempt += 1
-    }
-    sys.error(s"maintainIfNeeded on $root lost 100 consecutive CAS races")
+    // the rewrite was computed against v: intervening appends are safe
+    // (their files are disjoint from the selection and carry no DV
+    // positions); any other commit invalidates the selection or the reset
+    Some(commitRowLevel("maintainIfNeeded", root, v, reland.map(_._2), _ => true) { nv =>
+      tryCommitEntries(root, nv,
+        adds = newEntries.distinct.sortBy(_.path),
+        removes = selPaths.toSeq.sorted,
+        dvReset = dvs.nonEmpty && survivingRaw.isEmpty,
+        dvAdds = reland.toSeq.flatMap(_._2.entries),
+        dvRemoves = reland.toSeq.flatMap(_._1),
+        schemaJson = schemaJson,
+        partJson = spec.map(_.json))
+    })
   }
 
   /** Reconstruct hive partition columns from each row's file path (the
@@ -2393,17 +2344,57 @@ object SnapshotCatalog {
 
   /** The rows a commit's DV batch `dvAdds` deletes, as `_change_type =
     * delete` rows — the delete side of both change feeds. Only the
-    * files the positions reference are opened, through `read` (a batch
-    * or streaming scan of those files), and [[joinDeletes]] keeps just
-    * the deleted positions. */
+    * files the positions reference ([[dvBearingFiles]]) are opened,
+    * through `read` (a batch or streaming scan of those files), and
+    * [[joinDeletes]] keeps just the deleted positions. */
   private[sources] def deletedRows(spark: SparkSession, dvAdds: Seq[FileEntry])(
       read: Seq[String] => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val touched = spark.read.parquet(dvAdds.map(_.path): _*)
-      .select("__dv_file").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    joinDeletes(read(touched), dvAdds, onlyDeleted = true)
+    joinDeletes(read(dvBearingFiles(spark, dvAdds)), dvAdds, onlyDeleted = true)
       .withColumn("_change_type", lit("delete"))
+  }
+
+  /** The files the DV set `dvs` points at: its distinct `__dv_file`
+    * values as recorded, sorted — one O(deleted rows) read. */
+  private def dvBearingFiles(spark: SparkSession, dvs: Seq[FileEntry]): Seq[String] =
+    spark.read.parquet(dvs.map(_.path): _*).select("__dv_file").distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  /** A DV batch staged under `<root>/dv/` for a commit that has not
+    * landed yet: its log entries and row count. */
+  private final case class StagedDv(dir: Path, entries: Seq[FileEntry], rows: Long) {
+    def discard(): Unit = fsFor(dir).delete(dir, true)
+  }
+
+  /** THE DV-batch writer: the positions frame (`__dv_file`, `__dv_pos`)
+    * lands as ONE batch `<root>/dv/<tag><uuid>` and is counted back.
+    * Each entry records the row count when the batch is one file (-1
+    * otherwise). An empty batch is deleted and stages no entries. */
+  private def stageDvBatch(root: String, tag: String, positions: DataFrame): StagedDv = {
+    val dir = new Path(s"$root/dv/$tag${java.util.UUID.randomUUID().toString.take(8)}")
+    positions.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val sized = listDataEntries(dir.toString)
+    val n = positions.sparkSession.read.parquet(sized.map(_._1): _*).count()
+    if (n == 0L) { fsFor(dir).delete(dir, true); StagedDv(dir, Seq.empty, 0L) }
+    else StagedDv(dir, sized.map { case (f, sz) =>
+      FileEntry(f, sz, if (sized.size == 1) n else -1L) }, n)
+  }
+
+  /** Re-land the DV set `dvs` under a rewrite: withdraw every entry and
+    * restage only the positions into the `keep` files (recorded
+    * `__dv_file` values) — the files a [[replacePartitions]] did not
+    * replace, or the bearing files a scoped [[maintainIfNeeded]] did
+    * not claim. `keep` joins as a broadcast semi-join against a paths
+    * frame, not an `isin` over O(files) literals: at 100 TB it can be
+    * tens of thousands of paths. Returns the withdrawn paths and the
+    * staged batch. */
+  private def relandDvs(spark: SparkSession, root: String, dvs: Seq[FileEntry],
+                        keep: Seq[String]): (Seq[String], StagedDv) = {
+    import org.apache.spark.sql.functions.broadcast
+    val keepPaths = broadcast(spark.createDataset(keep)(
+      org.apache.spark.sql.Encoders.STRING).toDF("__dv_file"))
+    (dvs.map(_.path), stageDvBatch(root, "w",
+      spark.read.parquet(dvs.map(_.path): _*).join(keepPaths, Seq("__dv_file"), "left_semi")))
   }
 
   /** Version `v`'s live rows (its DVs applied) with their positions —
@@ -2419,79 +2410,70 @@ object SnapshotCatalog {
     * positions of surviving matches land as a DV batch and ONE commit
     * publishes them (no data file is rewritten — audited by callers as
     * manifest equality across the delete). Returns (new version,
-    * deleted row count). Fails with a concurrent-write conflict if a
-    * compaction rewrites the positions' files mid-commit — the same
-    * abort Delta raises for DELETE vs OPTIMIZE races; the caller
+    * deleted row count). Commits through [[commitRowLevel]]: a
+    * concurrent commit that could change the matches — an overlapping
+    * append, another DV commit, a replace or compaction — aborts it,
+    * the abort Delta raises for DELETE vs OPTIMIZE races; the caller
     * retries against the new snapshot. */
   def deleteWhere(spark: SparkSession, root: String,
                   cond: org.apache.spark.sql.Column): (Int, Long) = {
     import org.apache.spark.sql.functions.col
     val v = latestVersion(root)
     val live = liveWithPositions(spark, root, v)
-    val newDel = live.filter(cond).select(col("__dv_file"), col("__dv_pos"))
-    val batch = "d" + java.util.UUID.randomUUID().toString.take(8)
-    val dir = s"$root/dv/$batch"
-    newDel.coalesce(1).write.mode("overwrite").parquet(dir)
-    val sizedDv = listDataEntries(dir)
-    val readBack = spark.read.parquet(sizedDv.map(_._1): _*)
-    val nDel = readBack.count()
-    val dvAdds = sizedDv.map { case (f, sz) =>
-      FileEntry(f, sz, if (sizedDv.size == 1) nDel else -1L) }
-    if (nDel == 0L) { fsFor(new Path(dir)).delete(new Path(dir), true); return (v, 0L) }
-    // files the positions refer to — for the write-conflict check
-    val touched = readBack.select("__dv_file").distinct()
-      .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
+    val staged = stageDvBatch(root, "d",
+      live.filter(cond).select(col("__dv_file"), col("__dv_pos")))
+    if (staged.rows == 0L) return (v, 0L)
     // the predicate's necessary envelope, for narrowing concurrent-
     // append conflicts: an appended file whose stats are disjoint from
     // `cond`'s bounds provably holds no row this delete should have
     // matched, so skipping it is safe (the Delta ConcurrentAppend
     // narrowing); unprovable shapes keep the conservative abort
     val (condLb, condSb) = condBounds(live, cond)
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
-      // a row-level delete computed its matches against version v; a
-      // commit that landed since can change which rows match `cond`
-      // (an append adds candidate rows; another delete/merge shifts
-      // liveness; a replace rewrites the positions' files), so the
-      // matched-position set is stale — abort, UNLESS every intervening
-      // commit is an append whose files provably cannot match
-      abortOnIntervening("deleteWhere", root, v, pv,
-        provablyUnmatched = entryProvablyUnmatched(_, condLb, condSb))
-      val cur = manifestFiles(root, pv).map(f => new Path(f).toUri.getPath).toSet
-      if (!touched.subsetOf(cur))
-        throw new java.util.ConcurrentModificationException(
-          s"deleteWhere on $root: a concurrent replace/compaction rewrote " +
-            "files the delete's positions reference — retry against the " +
-            "new snapshot")
-      if (tryCommitEntries(root, pv + 1, adds = Seq.empty,
-            removes = Seq.empty, dvAdds = dvAdds)) return (pv + 1, nDel)
-      attempt += 1
+    val nv = commitRowLevel("deleteWhere", root, v, Some(staged),
+        entryProvablyUnmatched(_, condLb, condSb)) { nv =>
+      tryCommitEntries(root, nv, adds = Seq.empty, removes = Seq.empty,
+        dvAdds = staged.entries)
     }
-    sys.error(s"deleteWhere on $root lost 100 consecutive CAS races")
+    (nv, staged.rows)
   }
 
-  /** Abort with the concurrent-write conflict every table format
-    * raises when a row-level op's snapshot went stale: matched
-    * positions were computed at `readV`, but `latest` has moved — the
-    * intervening commit may have added rows that match (append/merge),
-    * removed rows the match relied on (delete), or rewritten the files
-    * the positions index (replace).
+  /** THE row-level commit loop — [[deleteWhere]], [[mergeOnRead]],
+    * [[mergeInto]], [[updateWhere]] and [[maintainIfNeeded]] publish
+    * through it: each attempt checks the commits since `readV`, then
+    * tries to publish `latest + 1` with `publish`, up to 100 attempts.
     *
-    * NARROWED the way Delta narrows ConcurrentAppend: an intervening
-    * ADDS-ONLY commit whose every added file PROVABLY holds no row the
-    * op could match (per `provablyUnmatched`, from the log-carried
-    * stats — no data IO) is safe to skip: the op's positions stay
-    * valid (appends never touch existing files) and none of the new
-    * rows belong in its matched set, so a hot appender no longer
-    * livelocks a delete/merge out of its 100 retries. Everything else
-    * — replaces, DV commits, appends without a disjointness proof —
-    * aborts (refusing is always sound). */
-  private def abortOnIntervening(op: String, root: String,
-                                 readV: Int, latest: Int,
-                                 provablyUnmatched: FileEntry => Boolean =
-                                   _ => false): Unit =
-    if (latest != readV) {
+    * The conflict rule is the concurrent-write abort every table format
+    * raises when a row-level op's snapshot went stale: its matched
+    * positions (or its rewrite selection) were computed at `readV`, and
+    * an intervening commit may have added rows that match
+    * (append/merge), removed rows the match relied on (delete), or
+    * rewritten the files the positions index (replace). Every
+    * intervening commit with removes or a DV reset aborts, as does
+    * every DV commit and an expired one. NARROWED the way Delta narrows
+    * ConcurrentAppend: an ADDS-ONLY commit whose every added file
+    * `provablyUnmatched` (from the log-carried stats — no data IO) is
+    * safe to skip — the op's positions stay valid (appends never touch
+    * existing files) and none of the new rows belong in its matched
+    * set, so a hot appender does not livelock a delete/merge out of its
+    * retries. Everything else aborts (refusing is always sound).
+    * [[maintainIfNeeded]] passes "every append is safe": appended files
+    * are disjoint from its selection and carry no DV positions.
+    *
+    * The rule is also why no op re-checks that the files its positions
+    * reference are still live: only a commit with removes or a DV
+    * reset can take a file out, the rule refuses every such commit
+    * after `readV`, and the exclusive publish of `latest + 1` lets
+    * nothing land between the check and the commit.
+    *
+    * On an abort — a stale snapshot or 100 lost races — the op's
+    * `staged` DV batch is deleted: no version will ever reference it. */
+  private def commitRowLevel(op: String, root: String, readV: Int,
+                             staged: Option[StagedDv],
+                             provablyUnmatched: FileEntry => Boolean)(
+                             publish: Int => Boolean): Int = {
+    var attempt = 0
+    while (attempt < 100) {
+      val latest = latestVersion(root)
       val kinds = ((readV + 1) to latest).flatMap { cv =>
         if (!commitExists(root, cv)) Some("expired")
         else {
@@ -2502,12 +2484,19 @@ object SnapshotCatalog {
           else Some("append")
         }
       }
-      if (kinds.nonEmpty)
+      if (kinds.nonEmpty) {
+        staged.foreach(_.discard())
         throw new java.util.ConcurrentModificationException(
           s"$op on $root: version moved $readV -> $latest under the op " +
-            s"(intervening: ${kinds.mkString(", ")}) — matched positions " +
-            "are stale; retry against the new snapshot")
+            s"(intervening: ${kinds.mkString(", ")}) — its snapshot is " +
+            "stale; retry against the new snapshot")
+      }
+      if (publish(latest + 1)) return latest + 1
+      attempt += 1
     }
+    staged.foreach(_.discard())
+    sys.error(s"$op on $root lost 100 consecutive CAS races")
+  }
 
   /** True when `e`'s log-carried stats prove NO row of the file can
     * satisfy the envelope `(longBounds, strBounds)` (a necessary
@@ -2544,8 +2533,8 @@ object SnapshotCatalog {
     * is O(updates + matched positions): no target file is rewritten —
     * the Delta/Iceberg merge-on-read shape, vs src12's copy-on-write
     * MERGE which rewrites the touched partition. Returns (version,
-    * matched-row count). Same concurrent-compaction abort as
-    * [[deleteWhere]]. */
+    * matched-row count). Commits through [[commitRowLevel]], narrowed
+    * on the update keys' envelope. */
   def mergeOnRead(spark: SparkSession, root: String, updates: DataFrame,
                   keyCols: Seq[String], batch: String): (Int, Long) = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -2556,23 +2545,9 @@ object SnapshotCatalog {
     val v = latestVersion(root)
     val live = liveWithPositions(spark, root, v)
     val keys = updates.select(keyCols.map(col): _*).distinct()
-    val matched = live.join(broadcast(keys), keyCols, "left_semi")
-      .select(col("__dv_file"), col("__dv_pos"))
-    val dvDir = s"$root/dv/m${java.util.UUID.randomUUID().toString.take(8)}"
-    matched.coalesce(1).write.mode("overwrite").parquet(dvDir)
-    val sizedDv = listDataEntries(dvDir)
-    val dvBack = spark.read.parquet(sizedDv.map(_._1): _*)
-    val nMatched = dvBack.count()
-    val dvAdds = sizedDv.map { case (f, sz) =>
-      FileEntry(f, sz, if (sizedDv.size == 1) nMatched else -1L) }
-    val touched =
-      if (nMatched == 0L) Set.empty[String]
-      else dvBack.select("__dv_file").distinct()
-        .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-    // no match -> the DV batch carries nothing and will never be
-    // committed: remove it now or it leaks forever (sweepOrphans also
-    // covers a crash before this line)
-    if (nMatched == 0L) fsFor(new Path(dvDir)).delete(new Path(dvDir), true)
+    val staged = stageDvBatch(root, "m",
+      live.join(broadcast(keys), keyCols, "left_semi")
+        .select(col("__dv_file"), col("__dv_pos")))
     // the update batch lands with the full log record (sizes, stats,
     // schema, spec) like any append — laid out per the table's
     // committed partition spec so hive-style pruning stays sound
@@ -2586,32 +2561,17 @@ object SnapshotCatalog {
     // update keys), for the same concurrent-append narrowing as
     // [[deleteWhere]]: an appended file disjoint from the envelope in
     // any key column cannot contain a row whose full key matches any
-    // update. Computed lazily — only a CAS collision pays the tiny agg.
+    // update (a concurrent append with matching keys would otherwise
+    // leave the duplicate keys the upsert contract forbids). Computed
+    // lazily — only a CAS collision pays the tiny agg.
     lazy val (keyLb, keySb) = keyEnvelope(keys, keyCols)
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
-      // same staleness rule as [[deleteWhere]]: matched positions were
-      // computed at v — a concurrent append/merge can land rows with
-      // matching keys between v and the winning commit, leaving
-      // duplicate keys the upsert contract forbids; abort unless the
-      // intervening appends are provably key-disjoint
-      abortOnIntervening("mergeOnRead", root, v, pv,
-        provablyUnmatched = entryProvablyUnmatched(_, keyLb, keySb))
-      val cur = manifestFiles(root, pv).map(f => new Path(f).toUri.getPath).toSet
-      if (!touched.subsetOf(cur))
-        throw new java.util.ConcurrentModificationException(
-          s"mergeOnRead on $root: a concurrent replace/compaction rewrote " +
-            "files the merge's matched positions reference — retry against " +
-            "the new snapshot")
-      if (tryCommitEntries(root, pv + 1, adds = newEntries.distinct.sortBy(_.path),
-            removes = Seq.empty,
-            dvAdds = if (nMatched == 0L) Seq.empty else dvAdds,
-            schemaJson = schemaJson, partJson = partJson))
-        return (pv + 1, nMatched)
-      attempt += 1
+    val nv = commitRowLevel("mergeOnRead", root, v, Some(staged),
+        entryProvablyUnmatched(_, keyLb, keySb)) { nv =>
+      tryCommitEntries(root, nv, adds = newEntries.distinct.sortBy(_.path),
+        removes = Seq.empty, dvAdds = staged.entries,
+        schemaJson = schemaJson, partJson = partJson)
     }
-    sys.error(s"mergeOnRead on $root lost 100 consecutive CAS races")
+    (nv, staged.rows)
   }
 
   /** `cond`'s necessary envelope over `df`'s columns, for the same
@@ -2691,9 +2651,10 @@ object SnapshotCatalog {
     * one-projection rule). Cost is O(actioned + inserted rows): no
     * target file is rewritten (the by-source clauses SCAN the whole
     * table to find unmatched rows — inherent to their semantics — but
-    * still write only the actioned positions/copies). Same narrowed
-    * concurrent-commit abort as [[mergeOnRead]], keyed on the source
-    * keys' envelope. Returns (version, actioned target-row count). */
+    * still write only the actioned positions/copies). Commits through
+    * [[commitRowLevel]], narrowed on the source keys' envelope (not at
+    * all under by-source clauses). Returns (version, actioned
+    * target-row count). */
   def mergeInto(spark: SparkSession, root: String, source: DataFrame,
                 keyCols: Seq[String],
                 matched: Seq[MergeMatchedClause],
@@ -2747,33 +2708,22 @@ object SnapshotCatalog {
         .withColumn("__mrg_action", firstClause(bySource.map(_.condition)))
         .filter(col("__mrg_action").isNotNull)
     }
-    val dvDir = s"$root/dv/g${java.util.UUID.randomUUID().toString.take(8)}"
-    bySrcActioned.map(b =>
-        actioned.select(col("__dv_file"), col("__dv_pos"))
-          .unionByName(b.select(col("__dv_file"), col("__dv_pos"))))
-      .getOrElse(actioned.select(col("__dv_file"), col("__dv_pos")))
-      .coalesce(1).write.mode("overwrite").parquet(dvDir)
-    val sizedDv = listDataEntries(dvDir)
-    val dvBack = spark.read.parquet(sizedDv.map(_._1): _*)
-    val nActioned = dvBack.count()
+    val positions = actioned.select(col("__dv_file"), col("__dv_pos"))
+    val staged = stageDvBatch(root, "g", bySrcActioned.fold(positions)(b =>
+      positions.unionByName(b.select(col("__dv_file"), col("__dv_pos")))))
+    val nActioned = staged.rows
     // non-deterministic multi-match refuses BEFORE anything commits: a
     // target row pairing with several source rows would be updated (or
     // deleted) per an arbitrary one of them
-    if (dvBack.groupBy("__dv_file", "__dv_pos").count()
+    if (nActioned > 0L && spark.read.parquet(staged.entries.map(_.path): _*)
+          .groupBy("__dv_file", "__dv_pos").count()
           .filter(col("count") > 1L).limit(1).count() > 0L) {
-      fsFor(new Path(dvDir)).delete(new Path(dvDir), true)
+      staged.discard()
       throw new IllegalStateException(
         s"mergeInto on $root: a target row matches multiple source rows " +
           "under the ON condition — the matched action would be " +
           "non-deterministic; de-duplicate the source on the merge keys")
     }
-    val dvAdds = sizedDv.map { case (f, sz) =>
-      FileEntry(f, sz, if (sizedDv.size == 1) nActioned else -1L) }
-    val touched =
-      if (nActioned == 0L) Set.empty[String]
-      else dvBack.select("__dv_file").distinct()
-        .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-    if (nActioned == 0L) fsFor(new Path(dvDir)).delete(new Path(dvDir), true)
     // the appended batch: each update clause's transformed copies (all
     // columns built against the ORIGINAL row in one projection) plus
     // each insert clause's new rows (unassigned columns NULL)
@@ -2820,31 +2770,18 @@ object SnapshotCatalog {
     }
     lazy val (keyLb, keySb) = keyEnvelope(
       source.select(keyCols.map(col): _*).distinct(), keyCols)
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
-      // the disjoint-keys narrowing is UNSOUND under by-source clauses:
-      // a concurrent append disjoint from the source keys is exactly
-      // what NOT MATCHED BY SOURCE acts on — those merges abort on any
-      // intervening commit
-      abortOnIntervening("mergeInto", root, v, pv,
-        provablyUnmatched =
-          if (bySource.isEmpty) entryProvablyUnmatched(_, keyLb, keySb)
-          else _ => false)
-      val cur = manifestFiles(root, pv).map(f => new Path(f).toUri.getPath).toSet
-      if (!touched.subsetOf(cur))
-        throw new java.util.ConcurrentModificationException(
-          s"mergeInto on $root: a concurrent replace/compaction rewrote " +
-            "files the merge's matched positions reference — retry against " +
-            "the new snapshot")
-      if (tryCommitEntries(root, pv + 1,
-            adds = newEntries.distinct.sortBy(_.path), removes = Seq.empty,
-            dvAdds = if (nActioned == 0L) Seq.empty else dvAdds,
-            schemaJson = schemaJson, partJson = partJson))
-        return (pv + 1, nActioned)
-      attempt += 1
+    // the disjoint-keys narrowing is UNSOUND under by-source clauses:
+    // a concurrent append disjoint from the source keys is exactly
+    // what NOT MATCHED BY SOURCE acts on — those merges abort on any
+    // intervening commit
+    val nv = commitRowLevel("mergeInto", root, v, Some(staged),
+        if (bySource.isEmpty) entryProvablyUnmatched(_, keyLb, keySb)
+        else _ => false) { nv =>
+      tryCommitEntries(root, nv,
+        adds = newEntries.distinct.sortBy(_.path), removes = Seq.empty,
+        dvAdds = staged.entries, schemaJson = schemaJson, partJson = partJson)
     }
-    sys.error(s"mergeInto on $root lost 100 consecutive CAS races")
+    (nv, nActioned)
   }
 
   /** Row-level UPDATE on read (the DV twin of [[mergeOnRead]]): live
@@ -2855,9 +2792,9 @@ object SnapshotCatalog {
     * is O(matched rows): no target file is rewritten. Partitioned
     * tables re-lay the updated rows per the committed spec (an
     * assignment may MOVE a row across partitions — the hive layout
-    * follows the new values). Same narrowed concurrent-commit abort as
-    * [[deleteWhere]], keyed on `cond`'s envelope. Returns (version,
-    * updated row count). */
+    * follows the new values). Commits through [[commitRowLevel]],
+    * narrowed on `cond`'s envelope. Returns (version, updated row
+    * count). */
   def updateWhere(spark: SparkSession, root: String,
                   cond: org.apache.spark.sql.Column,
                   set: Seq[(String, org.apache.spark.sql.Column)],
@@ -2868,20 +2805,9 @@ object SnapshotCatalog {
     val live = liveWithPositions(spark, root, v)
     val tableCols = live.columns.filterNot(Set("__dv_file", "__dv_pos"))
     val matched = live.filter(cond)
-    val dvDir = s"$root/dv/u${java.util.UUID.randomUUID().toString.take(8)}"
-    matched.select(col("__dv_file"), col("__dv_pos"))
-      .coalesce(1).write.mode("overwrite").parquet(dvDir)
-    val sizedDv = listDataEntries(dvDir)
-    val dvBack = spark.read.parquet(sizedDv.map(_._1): _*)
-    val nMatched = dvBack.count()
-    if (nMatched == 0L) {
-      fsFor(new Path(dvDir)).delete(new Path(dvDir), true)
-      return (v, 0L)
-    }
-    val dvAdds = sizedDv.map { case (f, sz) =>
-      FileEntry(f, sz, if (sizedDv.size == 1) nMatched else -1L) }
-    val touched = dvBack.select("__dv_file").distinct()
-      .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
+    val staged = stageDvBatch(root, "u",
+      matched.select(col("__dv_file"), col("__dv_pos")))
+    if (staged.rows == 0L) return (v, 0L)
     // the transformed copies: ONE projection building every column
     // against the ORIGINAL row (SQL UPDATE semantics — `SET a = b,
     // b = a` swaps; a sequential withColumn chain would feed later
@@ -2900,24 +2826,13 @@ object SnapshotCatalog {
     val (newEntries, schemaJson, partJson) =
       stageBatch(updated, root, batch, spec, recordStats = true)
     val (condLb, condSb) = condBounds(live, cond)
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
-      abortOnIntervening("updateWhere", root, v, pv,
-        provablyUnmatched = entryProvablyUnmatched(_, condLb, condSb))
-      val cur = manifestFiles(root, pv).map(f => new Path(f).toUri.getPath).toSet
-      if (!touched.subsetOf(cur))
-        throw new java.util.ConcurrentModificationException(
-          s"updateWhere on $root: a concurrent replace/compaction rewrote " +
-            "files the update's matched positions reference — retry " +
-            "against the new snapshot")
-      if (tryCommitEntries(root, pv + 1,
-            adds = newEntries.distinct.sortBy(_.path), removes = Seq.empty,
-            dvAdds = dvAdds, schemaJson = schemaJson, partJson = partJson))
-        return (pv + 1, nMatched)
-      attempt += 1
+    val nv = commitRowLevel("updateWhere", root, v, Some(staged),
+        entryProvablyUnmatched(_, condLb, condSb)) { nv =>
+      tryCommitEntries(root, nv,
+        adds = newEntries.distinct.sortBy(_.path), removes = Seq.empty,
+        dvAdds = staged.entries, schemaJson = schemaJson, partJson = partJson)
     }
-    sys.error(s"updateWhere on $root lost 100 consecutive CAS races")
+    (nv, staged.rows)
   }
 
   /** Read a snapshot with its deletion vectors applied: the

@@ -95,13 +95,34 @@ object PlanAudit {
   /** Execute the frame and return its AQE-FINAL physical plan: collect
     * first (finalizes AQE so the executed plan is the real one), then
     * keep only the final section — `toString` prepends the pre-AQE
-    * "== Initial Plan ==" section, which must not leak into the audit. */
+    * "== Initial Plan ==" section, which must not leak into the audit.
+    * Tokens that change from run to run with the same plan are
+    * [[normalise]]d, so a PLANS.md diff shows only plan changes. */
   def capturePlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
-    df.queryExecution.executedPlan.toString
+    normalise(df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
-      .linesIterator.takeWhile(_.nonEmpty).mkString("\n")
+      .linesIterator.takeWhile(_.nonEmpty).mkString("\n"))
   }
+
+  /** Run-dependent plan tokens and their stable spellings: expression
+    * ids, lambda variable names, JVM lambda class names, `plan_id`s,
+    * codegen and query-stage numbers, the random suffix of temp
+    * directories, DV batch names and part-file names (the path may be
+    * cut mid-name by the plan's truncation). */
+  private val runTokens: Seq[(scala.util.matching.Regex, String)] = Seq(
+    """#\d+""".r -> "#n",
+    """(lambda \w+?)_\d+""".r -> "$1_n",
+    """Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""".r -> "Lambda",
+    """plan_id=\d+""".r -> "plan_id=n",
+    """\*\(\d+\)""".r -> "*(n)",
+    """(\w+QueryStage) \d+""".r -> "$1 n",
+    """(/graft_[A-Za-z0-9_]*?)\d{6,}""".r -> "$1N",
+    """/dv/[a-z][0-9a-f]{8}""".r -> "/dv/<batch>",
+    """part-[^\s,\]]*""".r -> "part-*")
+
+  private def normalise(plan: String): String =
+    runTokens.foldLeft(plan) { case (p, (re, to)) => re.replaceAllIn(p, to) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"

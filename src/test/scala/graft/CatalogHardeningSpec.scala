@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Round-15 hardening of the catalog's storage tier: conditional-PUT
   * failure semantics (lost race vs transient IO error), the object-store
-  * publisher attestation gate, concurrent-append aborts for row-level
-  * ops, DV orphan GC, unsigned-UTF-8 string pruning, and the serve
-  * path's size-gated DV anti-join. */
+  * publisher attestation gate, concurrent-commit aborts for row-level
+  * ops (no DV batch left behind), DV orphan GC, unsigned-UTF-8 string
+  * pruning, and the serve path's size-gated DV anti-join. */
 class CatalogHardeningSpec extends SparkTestBase {
 
   private def localFs(p: String): FileSystem =
@@ -107,6 +107,20 @@ class CatalogHardeningSpec extends SparkTestBase {
     }
   }
 
+  /** Every DV batch under `root/dv` is one a surviving version
+    * references: an aborted row-level op deleted the batch it staged. */
+  private def assertNoDvLitter(root: String): Unit = {
+    def uri(p: String) = new Path(p).toUri.getPath
+    val referenced = SnapshotCatalog.versions(root)
+      .flatMap(v => SnapshotCatalog.dvFiles(root, v)).map(uri).toSet
+    val dvDir = new java.io.File(s"$root/dv")
+    val batches = Option(dvDir.listFiles()).toSeq.flatten.filter(_.isDirectory)
+    val litter = batches.filterNot(b => SnapshotCatalog.listDataFiles(b.getPath)
+      .exists(f => referenced.contains(uri(f))))
+    assert(litter.isEmpty,
+      s"unreferenced DV batches left behind: ${litter.map(_.getName).mkString(", ")}")
+  }
+
   test("deleteWhere aborts when a concurrent append lands between its snapshot read and its commit") {
     val root = graft.streaming.Streams.dataDir("graft_delrace_")
     val spark2 = spark
@@ -122,7 +136,9 @@ class CatalogHardeningSpec extends SparkTestBase {
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
     // the racer's append landed; the aborted delete left no DV commit
+    // and no DV batch
     assert(SnapshotCatalog.latestVersion(root) == 2)
+    assertNoDvLitter(root)
     assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).count() == 60L)
     // the caller's retry against the new snapshot succeeds and sees the
     // racer's rows as delete candidates too
@@ -149,6 +165,7 @@ class CatalogHardeningSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
+    assertNoDvLitter(root)
     // retried against the new snapshot: the racer's 999 row now matches
     val (_, nM) = SnapshotCatalog.mergeOnRead(spark, root,
       Seq((5L, 100L), (999L, 100L)).toDF("id", "v"), Seq("id"), "u1")
@@ -194,6 +211,7 @@ class CatalogHardeningSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
+    assertNoDvLitter(root)
   }
 
   test("mergeOnRead proceeds past a concurrent append provably outside its key envelope") {
@@ -266,6 +284,120 @@ class CatalogHardeningSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
+    assertNoDvLitter(root)
+  }
+
+  // Every row-level op against both kinds of concurrent commit: an
+  // append overlapping its match envelope, and a compaction that
+  // rewrites the files its positions reference. Each victim matches
+  // ids 5 and 6 of a three-file table (ids 1..10, 11..20, 21..30); the
+  // racer wins the victim's version (4), the victim aborts as stale
+  // and its staged DV batch is gone.
+  private def threeFileTable(prefix: String): String = {
+    val root = graft.streaming.Streams.dataDir(prefix)
+    val spark2 = spark
+    import spark2.implicits._
+    (0 until 3).foreach { b =>
+      SnapshotCatalog.append((10L * b + 1L to 10L * b + 10L).map(i => (i, i))
+        .toDF("id", "v").coalesce(1), root, s"b$b")
+    }
+    root
+  }
+
+  private val rowLevelOps: Seq[(String, String => Unit)] = {
+    import graft.sources.SnapshotCatalog.{MergeInsertClause, MergeUpdateClause}
+    def src = { val s2 = spark; import s2.implicits._
+      Seq((5L, 50L), (6L, 60L)).toDF("id", "v") }
+    Seq(
+      "deleteWhere" -> (root => SnapshotCatalog.deleteWhere(spark, root,
+        col("id").between(5L, 6L))),
+      "mergeOnRead" -> (root => SnapshotCatalog.mergeOnRead(spark, root, src,
+        Seq("id"), "u0")),
+      "mergeInto" -> (root => SnapshotCatalog.mergeInto(spark, root, src,
+        Seq("id"), Seq(MergeUpdateClause(None, Seq("v" -> col("__src_v")))),
+        Seq(MergeInsertClause(None, Seq("id" -> col("__src_id"),
+          "v" -> col("__src_v")))), "g0")),
+      "updateWhere" -> (root => SnapshotCatalog.updateWhere(spark, root,
+        col("id").between(5L, 6L), Seq("v" -> (col("v") + 1L)), "up0")))
+  }
+
+  private val racers: Seq[(String, String => Unit)] = Seq(
+    "an overlapping append" -> { root =>
+      val s2 = spark; import s2.implicits._
+      SnapshotCatalog.append(Seq((6L, 0L)).toDF("id", "v").coalesce(1), root, "race")
+    },
+    "a compaction rewriting its files" -> { root =>
+      assert(SnapshotCatalog.maintainIfNeeded(spark, root, "c0",
+        maxLiveFiles = 0, minMergeFanout = 2).isDefined)
+    })
+
+  for ((op, runOp) <- rowLevelOps; (racer, race) <- racers)
+    test(s"$op aborts as stale when $racer wins its version, and deletes its staged DV batch") {
+      val root = threeFileTable("graft_rlrace_")
+      val injector = new RaceInjector(root, () => race(root), armFor = "commit-v4.txt")
+      SnapshotCatalog.withPublisher(injector) {
+        val e = intercept[java.util.ConcurrentModificationException](runOp(root))
+        assert(e.getMessage.contains("stale"), e.getMessage)
+      }
+      assert(SnapshotCatalog.latestVersion(root) == 4, "the racer's commit must be the only one")
+      assertNoDvLitter(root)
+    }
+
+  test("maintainIfNeeded reports an expired intervening commit as a stale snapshot") {
+    val root = threeFileTable("graft_mtexpire_")
+    val spark2 = spark
+    import spark2.implicits._
+    // the compaction loses version 4 to three appends, and an expire then
+    // drops version 4: the pass cannot prove its rewrite still applies
+    val expiring = new SnapshotCatalog.AtomicPublish {
+      @volatile private var armed = true
+      def publish(fs: FileSystem, tmp: Path, dest: Path): Boolean =
+        if (armed && dest.getName == "commit-v4.txt") {
+          armed = false
+          (0 until 3).foreach(i => SnapshotCatalog.append(
+            Seq((100L + i, 0L)).toDF("id", "v").coalesce(1), root, s"r$i"))
+          SnapshotCatalog.expire(root, keepLast = 2)
+          fs.delete(tmp, false)
+          false
+        } else SnapshotCatalog.LocalLinkPublish.publish(fs, tmp, dest)
+    }
+    SnapshotCatalog.withPublisher(expiring) {
+      val e = intercept[java.util.ConcurrentModificationException] {
+        SnapshotCatalog.maintainIfNeeded(spark, root, "c0", maxLiveFiles = 0,
+          minMergeFanout = 2)
+      }
+      assert(e.getMessage.contains("expired") && e.getMessage.contains("stale"),
+        e.getMessage)
+    }
+    assert(SnapshotCatalog.latestVersion(root) == 6)
+    assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).count() == 33L)
+  }
+
+  test("replacePartitions deletes the DV re-land batch of every CAS attempt it loses") {
+    val root = graft.streaming.Streams.dataDir("graft_rpreland_")
+    val spark2 = spark
+    import spark2.implicits._
+    SnapshotCatalog.append((1L to 20L).map(i => (i, if (i % 2 == 0) "a" else "b"))
+      .toDF("id", "p").coalesce(1), root, "b0", partitionBy = Seq("p"))
+    // DVs in both partitions: overwriting `a` re-lands the `b` positions
+    SnapshotCatalog.deleteWhere(spark, root, col("id") <= 4L)
+    // a racer takes the overwrite's first version; the retry re-lands again
+    val injector = new RaceInjector(root,
+      () => SnapshotCatalog.append(Seq((99L, "c")).toDF("id", "p").coalesce(1),
+        root, "race", partitionBy = Seq("p")),
+      armFor = "commit-v3.txt")
+    SnapshotCatalog.withPublisher(injector) {
+      val (v, nT) = SnapshotCatalog.replacePartitions(spark, root,
+        Seq((100L, "a")).toDF("id", "p"), "o0")
+      assert(v == 4 && nT == 1, s"overwrite landed at $v touching $nT")
+    }
+    assertNoDvLitter(root)
+    val relands = new java.io.File(s"$root/dv").listFiles().count(_.getName.startsWith("w"))
+    assert(relands == 1, s"$relands re-land batches: lost attempts left theirs behind")
+    // partition b keeps its delete of ids 1 and 3; a holds only the overwrite
+    assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root)
+      .select("id").as[Long].collect().sorted.toSeq ==
+      ((5L to 19L by 2L) ++ Seq(99L, 100L)))
   }
 
   // -- DV orphan GC ------------------------------------------------------

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Model-based fuzz of the WHOLE snapshot-catalog seam: random
   * interleavings of append / replace / DV-delete / merge-on-read /
-  * generalized mergeInto / restore / expire are replayed against an
-  * in-memory reference model, and after
+  * generalized mergeInto / restore / expire / DV-update / forced
+  * OPTIMIZE are replayed against an in-memory reference model, and after
   * EVERY operation the catalog's resolved content — at every surviving
   * version, through the full read path (delta-log resolution +
   * checkpoints + deletion vectors) — must equal the model's snapshot
@@ -34,7 +34,7 @@ class CatalogModelSpec extends SparkTestBase {
       (0 until 16).foreach { op =>
         val kind =
           if (versions.isEmpty) 0 // first op must create the table
-          else rnd.nextInt(7)
+          else rnd.nextInt(9)
         kind match {
           case 0 => // append fresh rows
             val fresh = (0 until 1 + rnd.nextInt(4))
@@ -99,6 +99,23 @@ class CatalogModelSpec extends SparkTestBase {
             val nv = SnapshotCatalog.restore(root, target)
             live = versions(target)
             versions(nv) = live
+          case 7 => // DV update by modulus: matched rows re-land transformed
+            val m = Seq(2L, 3L, 5L)(rnd.nextInt(3))
+            val r = rnd.nextInt(m.toInt).toLong
+            val matched = live.keySet.filter(_ % m == r)
+            val (v, nUpd) = SnapshotCatalog.updateWhere(spark, root,
+              col("id") % m === r, Seq("v" -> (col("v") * 3L + 1L)), s"up$op")
+            assert(nUpd == matched.size.toLong,
+              s"trial $trial op $op: update matched $nUpd, model says ${matched.size}")
+            if (nUpd > 0) {
+              live = live ++ matched.map(k => k -> (live(k) * 3L + 1L))
+              versions(v) = live
+            }
+          case 8 => // OPTIMIZE forced past its file-count threshold:
+            // content-neutral, applies and resets the DVs
+            SnapshotCatalog.maintainIfNeeded(spark, root, s"c$op",
+              maxLiveFiles = 0, minMergeFanout = 2)
+              .foreach(v => versions(v) = live)
         }
         // THE INVARIANT: every surviving version reads back as the
         // model snapshotted it, through the full path (log resolution,
