@@ -1384,12 +1384,12 @@ object SnapshotCatalog {
         }
       if (tryCommitEntries(root, pv + 1,
             adds = entries.distinct.sortBy(_.path), removes = removes,
-            dvAdds = reland.toSeq.flatMap(_._2.entries),
-            dvRemoves = reland.toSeq.flatMap(_._1),
+            dvAdds = reland.toSeq.flatMap(_.entries),
+            dvRemoves = if (reland.isDefined) dvsInEffect.map(_.path) else Seq.empty,
             schemaJson = schemaJson, partJson = partJson))
         return (pv + 1, touched.size)
       // the lost attempt's re-land batch will never be referenced
-      reland.foreach(_._2.discard())
+      reland.foreach(_.discard())
       attempt += 1
     }
     sys.error(s"replacePartitions on $root lost 100 consecutive CAS races")
@@ -1983,13 +1983,13 @@ object SnapshotCatalog {
     // the rewrite was computed against v: intervening appends are safe
     // (their files are disjoint from the selection and carry no DV
     // positions); any other commit invalidates the selection or the reset
-    Some(commitRowLevel("maintainIfNeeded", root, v, reland.map(_._2), _ => true) { nv =>
+    Some(commitRowLevel("maintainIfNeeded", root, v, reland, _ => true) { nv =>
       tryCommitEntries(root, nv,
         adds = newEntries.distinct.sortBy(_.path),
         removes = selPaths.toSeq.sorted,
         dvReset = dvs.nonEmpty && survivingRaw.isEmpty,
-        dvAdds = reland.toSeq.flatMap(_._2.entries),
-        dvRemoves = reland.toSeq.flatMap(_._1),
+        dvAdds = reland.toSeq.flatMap(_.entries),
+        dvRemoves = if (reland.isDefined) dvs.map(_.path) else Seq.empty,
         schemaJson = schemaJson,
         partJson = spec.map(_.json))
     })
@@ -2386,15 +2386,15 @@ object SnapshotCatalog {
     * replace, or the bearing files a scoped [[maintainIfNeeded]] did
     * not claim. `keep` joins as a broadcast semi-join against a paths
     * frame, not an `isin` over O(files) literals: at 100 TB it can be
-    * tens of thousands of paths. Returns the withdrawn paths and the
-    * staged batch. */
+    * tens of thousands of paths. The caller withdraws `dvs` in the same
+    * commit that adds the returned batch. */
   private def relandDvs(spark: SparkSession, root: String, dvs: Seq[FileEntry],
-                        keep: Seq[String]): (Seq[String], StagedDv) = {
+                        keep: Seq[String]): StagedDv = {
     import org.apache.spark.sql.functions.broadcast
     val keepPaths = broadcast(spark.createDataset(keep)(
       org.apache.spark.sql.Encoders.STRING).toDF("__dv_file"))
-    (dvs.map(_.path), stageDvBatch(root, "w",
-      spark.read.parquet(dvs.map(_.path): _*).join(keepPaths, Seq("__dv_file"), "left_semi")))
+    stageDvBatch(root, "w",
+      spark.read.parquet(dvs.map(_.path): _*).join(keepPaths, Seq("__dv_file"), "left_semi"))
   }
 
   /** Version `v`'s live rows (its DVs applied) with their positions —
@@ -2460,10 +2460,13 @@ object SnapshotCatalog {
     * are disjoint from its selection and carry no DV positions.
     *
     * The rule is also why no op re-checks that the files its positions
-    * reference are still live: only a commit with removes or a DV
-    * reset can take a file out, the rule refuses every such commit
-    * after `readV`, and the exclusive publish of `latest + 1` lets
-    * nothing land between the check and the commit.
+    * reference are still live: within one table's life only a commit
+    * with removes or a DV reset can take a file out, the rule refuses
+    * every such commit after `readV`, and the exclusive publish of
+    * `latest + 1` lets nothing land between the check and the commit.
+    * A drop deletes the whole root, and a table recreated there starts
+    * its versions again from 1: the op aborts as stale when `latest`
+    * fell below `readV` or its staged DV batch is gone.
     *
     * On an abort — a stale snapshot or 100 lost races — the op's
     * `staged` DV batch is deleted: no version will ever reference it. */
@@ -2474,16 +2477,20 @@ object SnapshotCatalog {
     var attempt = 0
     while (attempt < 100) {
       val latest = latestVersion(root)
-      val kinds = ((readV + 1) to latest).flatMap { cv =>
-        if (!commitExists(root, cv)) Some("expired")
-        else {
-          val d = commitDeltaFull(root, cv)
-          if (d.removes.nonEmpty || d.dvReset) Some("replace")
-          else if (d.dvAdds.nonEmpty || d.dvRemoves.nonEmpty) Some("delete/merge")
-          else if (d.adds.forall(provablyUnmatched)) None // disjoint append
-          else Some("append")
+      val recreated = latest < readV ||
+        staged.exists(s => s.entries.nonEmpty && !fsFor(s.dir).exists(s.dir))
+      val kinds =
+        if (recreated) Seq("drop/recreate")
+        else ((readV + 1) to latest).flatMap { cv =>
+          if (!commitExists(root, cv)) Some("expired")
+          else {
+            val d = commitDeltaFull(root, cv)
+            if (d.removes.nonEmpty || d.dvReset) Some("replace")
+            else if (d.dvAdds.nonEmpty || d.dvRemoves.nonEmpty) Some("delete/merge")
+            else if (d.adds.forall(provablyUnmatched)) None // disjoint append
+            else Some("append")
+          }
         }
-      }
       if (kinds.nonEmpty) {
         staged.foreach(_.discard())
         throw new java.util.ConcurrentModificationException(

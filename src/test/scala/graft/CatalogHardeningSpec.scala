@@ -94,14 +94,18 @@ class CatalogHardeningSpec extends SparkTestBase {
 
   /** Publisher hook that lets a CONCURRENT append win the victim op's
     * version just before the victim's own publish attempt — the
-    * deterministic two-writer interleaving a thread race can't pin. */
-  private class RaceInjector(root: String, mkRacer: () => Unit, armFor: String)
+    * deterministic two-writer interleaving a thread race can't pin.
+    * `forceLoss` makes that attempt lose even when its version is still
+    * free: the racer won it and was then expired or dropped. */
+  private class RaceInjector(root: String, mkRacer: () => Unit, armFor: String,
+                             forceLoss: Boolean = false)
       extends SnapshotCatalog.AtomicPublish {
     @volatile private var armed = true
     def publish(fs: FileSystem, tmp: Path, dest: Path): Boolean = {
       if (armed && dest.getName == armFor) {
         armed = false
         mkRacer() // lands the concurrent commit first (re-entrant publishes pass through)
+        if (forceLoss) { fs.delete(tmp, false); return false }
       }
       SnapshotCatalog.LocalLinkPublish.publish(fs, tmp, dest)
     }
@@ -331,7 +335,10 @@ class CatalogHardeningSpec extends SparkTestBase {
         maxLiveFiles = 0, minMergeFanout = 2).isDefined)
     })
 
-  for ((op, runOp) <- rowLevelOps; (racer, race) <- racers)
+  // deleteWhere and mergeOnRead against an overlapping append are the
+  // dedicated tests above, which also pin the retry after the abort
+  for ((op, runOp) <- rowLevelOps; (racer, race) <- racers
+       if racer != "an overlapping append" || !Set("deleteWhere", "mergeOnRead")(op))
     test(s"$op aborts as stale when $racer wins its version, and deletes its staged DV batch") {
       val root = threeFileTable("graft_rlrace_")
       val injector = new RaceInjector(root, () => race(root), armFor = "commit-v4.txt")
@@ -349,18 +356,11 @@ class CatalogHardeningSpec extends SparkTestBase {
     import spark2.implicits._
     // the compaction loses version 4 to three appends, and an expire then
     // drops version 4: the pass cannot prove its rewrite still applies
-    val expiring = new SnapshotCatalog.AtomicPublish {
-      @volatile private var armed = true
-      def publish(fs: FileSystem, tmp: Path, dest: Path): Boolean =
-        if (armed && dest.getName == "commit-v4.txt") {
-          armed = false
-          (0 until 3).foreach(i => SnapshotCatalog.append(
-            Seq((100L + i, 0L)).toDF("id", "v").coalesce(1), root, s"r$i"))
-          SnapshotCatalog.expire(root, keepLast = 2)
-          fs.delete(tmp, false)
-          false
-        } else SnapshotCatalog.LocalLinkPublish.publish(fs, tmp, dest)
-    }
+    val expiring = new RaceInjector(root, { () =>
+      (0 until 3).foreach(i => SnapshotCatalog.append(
+        Seq((100L + i, 0L)).toDF("id", "v").coalesce(1), root, s"r$i"))
+      SnapshotCatalog.expire(root, keepLast = 2)
+    }, armFor = "commit-v4.txt", forceLoss = true)
     SnapshotCatalog.withPublisher(expiring) {
       val e = intercept[java.util.ConcurrentModificationException] {
         SnapshotCatalog.maintainIfNeeded(spark, root, "c0", maxLiveFiles = 0,
@@ -372,6 +372,33 @@ class CatalogHardeningSpec extends SparkTestBase {
     assert(SnapshotCatalog.latestVersion(root) == 6)
     assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).count() == 33L)
   }
+
+  // A drop deletes the whole root (GraftCatalog.dropTable), and a table
+  // recreated there numbers its versions from 1 again — below, at or
+  // past the version the delete read. The delete lost version 4 to the
+  // dropped table; its retry must not publish into the new one.
+  for (recommits <- Seq(1, 3, 5))
+    test(s"deleteWhere aborts as stale when its table is dropped and recreated up to version $recommits under it") {
+      val root = threeFileTable("graft_rlrecreate_")
+      val spark2 = spark
+      import spark2.implicits._
+      val injector = new RaceInjector(root, { () =>
+        val p = new Path(root)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        (1 to recommits).foreach(i => SnapshotCatalog.append(
+          Seq((100L + i, 0L)).toDF("id", "v").coalesce(1), root, s"n$i"))
+      }, armFor = "commit-v4.txt", forceLoss = true)
+      SnapshotCatalog.withPublisher(injector) {
+        val e = intercept[java.util.ConcurrentModificationException] {
+          SnapshotCatalog.deleteWhere(spark, root, col("id").between(5L, 6L))
+        }
+        assert(e.getMessage.contains("stale"), e.getMessage)
+      }
+      assert(SnapshotCatalog.latestVersion(root) == recommits)
+      assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).select("id").as[Long]
+        .collect().sorted.toSeq == (1 to recommits).map(100L + _))
+      assertNoDvLitter(root)
+    }
 
   test("replacePartitions deletes the DV re-land batch of every CAS attempt it loses") {
     val root = graft.streaming.Streams.dataDir("graft_rpreland_")

@@ -2,25 +2,28 @@
 """Interleaved A/B of the benchmark over two git revisions.
 
     python3 tools/ab.py --base <rev> [--head <rev>] [--workload <name> ...]
-                        [--pairs N] [--seconds S] [--seed N] [--workdir DIR]
+                        [--pairs N]
 
-Each revision is exported (`git archive`) into its own directory under
---workdir and built once through `perfbench/build.py`'s source-hash
+Each revision is exported (`git archive`) into its own temporary
+directory and built once through `perfbench/build.py`'s source-hash
 cache, before any timed run. Then each workload runs N pairs of
-`perfbench/run.py --trace 0`, one run per revision per pair, both with
-the pair's seed, alternating which revision runs first. `--head .` (the
-default) runs the current working tree in place, uncommitted changes
-included.
+`perfbench/run.py --trace 0` for BENCHMARK.json's `run_seconds`, one run
+per revision per pair, both with the pair's seed (1..N), alternating
+which revision runs first. `--head .` (the default) runs the current
+working tree in place, uncommitted changes included.
 
 Prints, per end-to-end metric of BENCHMARK.json: both medians, both
 IQR/median, the head/base ratio of the medians, the pairs in which head
 was better, and a verdict against the metric's bound:
-  regressed  head's median is worse than base's by more than the bound;
-  gain       head is better in at least 9 of 10 pairs and its median
-             beats base's by more than base's interquartile range;
-  same       anything else.
+  regressed   head's median is worse than base's by more than the bound;
+  unresolved  either side's IQR/median is wider than the bound, and not
+              every head run beats every base run: the runs spread too
+              widely to tell;
+  gain        head is better in at least 9 of 10 pairs and its median
+              beats base's by more than base's interquartile range;
+  same        anything else.
 Plus the share of failed ops on each side. Exits 1 when any metric
-regressed or any op failed. --json writes every run's metrics as well.
+regressed or is unresolved, or any op failed.
 """
 import argparse
 import json
@@ -77,10 +80,13 @@ def verdict(spec, base, head):
         return h < b if lower else h > b
     wins = sum(better(h, b) for b, h in zip(base, head))
     q1, mb, q3 = quartiles(base)
-    mh = statistics.median(head)
+    h1, mh, h3 = quartiles(head)
     worse = (mh - mb) / mb if lower else (mb - mh) / mb
     if worse > spec["bound"]:
         return "regressed", wins
+    spread = max((q3 - q1) / mb, (h3 - h1) / mh)
+    if spread > spec["bound"] and not all(better(h, b) for h in head for b in base):
+        return "unresolved", wins
     if wins * 10 >= 9 * len(base) and better(mh, mb) and abs(mh - mb) > q3 - q1:
         return "gain", wins
     return "same", wins
@@ -93,34 +99,38 @@ def main():
     ap.add_argument("--workload", action="append",
                     help="workload to run (repeatable; default: every workload)")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
-    ap.add_argument("--workdir", help="where the revisions are exported (default: a temp dir)")
-    ap.add_argument("--json", help="write every run's result here")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     workloads = a.workload or [w["name"] for w in spec["workloads"]]
-    workdir = os.path.abspath(a.workdir or tempfile.mkdtemp(prefix="graft_ab_"))
+    workdir = tempfile.mkdtemp(prefix="graft_ab_")
+    try:
+        bad = compare(spec, workloads, a, workdir)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+    sys.exit(1 if bad else 0)
+
+
+def compare(spec, workloads, a, workdir):
+    """Build both revisions, run the pairs, print the table; True on a failing verdict."""
     trees = {"base": checkout(a.base, workdir, "base"),
              "head": checkout(a.head, workdir, "head")}
     for side, tree in trees.items():
         print(f"[ab] building {side} ({tree})", file=sys.stderr, flush=True)
         build(tree)
 
-    record, bad = {}, False
+    bad = False
     for w in workloads:
         runs = {"base": [], "head": []}
         for i in range(a.pairs):
             order = ("base", "head") if i % 2 == 0 else ("head", "base")
             for side in order:
-                r = run_once(trees[side], w, a.seed + i, a.seconds)
+                r = run_once(trees[side], w, 1 + i, spec["run_seconds"])
                 runs[side].append(r)
                 print(f"[ab] {w} pair {i + 1}/{a.pairs} {side}: " +
                       " ".join(f"{m['name']}={r['metrics'][m['name']]['value']:.4g}"
                                for m in spec["end_to_end"]), file=sys.stderr, flush=True)
-        record[w] = runs
         print(f"\n{w}: {a.pairs} pairs, base {a.base}, head {a.head}")
         print(f"  {'metric':<14} {'base':>10} {'head':>10} {'IQR/med b':>10} "
               f"{'IQR/med h':>10} {'h/b':>7} {'wins':>6}  verdict (bound)")
@@ -129,7 +139,7 @@ def main():
             h = [r["metrics"][m["name"]]["value"] for r in runs["head"]]
             qb, qh = quartiles(b), quartiles(h)
             v, wins = verdict(m, b, h)
-            bad |= v == "regressed"
+            bad |= v in ("regressed", "unresolved")
             print(f"  {m['name']:<14} {qb[1]:>10.4g} {qh[1]:>10.4g} "
                   f"{(qb[2] - qb[0]) / qb[1]:>10.3f} {(qh[2] - qh[0]) / qh[1]:>10.3f} "
                   f"{qh[1] / qb[1]:>7.3f} {wins:>3}/{a.pairs:<2}  {v} ({m['bound']})")
@@ -138,10 +148,7 @@ def main():
             fail = sum(r["failed"] for r in runs[side])
             bad |= fail > 0
             print(f"  failed_ratio {side}: {fail}/{att} = {fail / max(1, att):.3f}")
-    if a.json:
-        with open(a.json, "w") as f:
-            json.dump({"base": a.base, "head": a.head, "runs": record}, f, indent=1)
-    sys.exit(1 if bad else 0)
+    return bad
 
 
 if __name__ == "__main__":
