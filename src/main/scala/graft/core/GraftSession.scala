@@ -50,6 +50,11 @@ object GraftSession {
       // same static conf (r18 ADVICE).
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
+      // Both Hadoop APIs onto the fork-free local filesystem (LocalFs.scala):
+      // FileSystem for parquet and the catalog, FileContext for Spark's
+      // checkpoint logs and RocksDB state uploads.
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
 
   /** The session every harness main (Bench, Verify, Probe, PlanAudit,
     * SchemaAudit, GenScale, ScaleStress) and the test base run on: the

@@ -1974,8 +1974,8 @@ object SnapshotCatalog {
           else applied
             .repartitionByRange(math.max(compactTo, byTarget), clusterBy.map(col): _*)
             .sortWithinPartitions(clusterBy.map(col): _*)
-        val (staged, stagedSchema, _) =
-          stageBatch(rewritten, root, batch, specCols, recordStats = true)
+        val (staged, stagedSchema, _) = stagingAfterDv(root, reland, batch)(
+          stageBatch(rewritten, root, batch, specCols, recordStats = true))
         (staged, fullSchema.map(_.json).orElse(stagedSchema))
       }
 
@@ -1983,7 +1983,7 @@ object SnapshotCatalog {
     // the rewrite was computed against v: intervening appends are safe
     // (their files are disjoint from the selection and carry no DV
     // positions); any other commit invalidates the selection or the reset
-    Some(commitRowLevel("maintainIfNeeded", root, v, reland, _ => true) { nv =>
+    Some(commitRowLevel("maintainIfNeeded", root, v, reland, Some(batch), _ => true) { nv =>
       tryCommitEntries(root, nv,
         adds = newEntries.distinct.sortBy(_.path),
         removes = selPaths.toSeq.sorted,
@@ -2366,6 +2366,27 @@ object SnapshotCatalog {
     def discard(): Unit = fsFor(dir).delete(dir, true)
   }
 
+  /** Delete what a row-level op staged for a commit that will not land:
+    * its DV batch `dv` and its data batch `batch` — unless a version
+    * references that batch name (the same batch landed first). */
+  private def discardStaged(root: String, dv: Option[StagedDv],
+                            batch: Option[String]): Unit = {
+    dv.foreach(_.discard())
+    batch.filterNot(isBatchCommitted(root, _)).foreach { b =>
+      val dir = new Path(s"$root/data/$b")
+      fsFor(dir).delete(dir, true)
+    }
+  }
+
+  /** `stage`, a row-level op's data-batch write after its DV batch `dv`
+    * was staged: when the write fails (a CHECK violation raised
+    * mid-write), both batches are discarded before the failure
+    * propagates. */
+  private def stagingAfterDv[A](root: String, dv: Option[StagedDv], batch: String)(
+      stage: => A): A =
+    try stage
+    catch { case e: Throwable => discardStaged(root, dv, Some(batch)); throw e }
+
   /** THE DV-batch writer: the positions frame (`__dv_file`, `__dv_pos`)
     * lands as ONE batch `<root>/dv/<tag><uuid>` and is counted back.
     * Each entry records the row count when the batch is one file (-1
@@ -2429,7 +2450,7 @@ object SnapshotCatalog {
     // matched, so skipping it is safe (the Delta ConcurrentAppend
     // narrowing); unprovable shapes keep the conservative abort
     val (condLb, condSb) = condBounds(live, cond)
-    val nv = commitRowLevel("deleteWhere", root, v, Some(staged),
+    val nv = commitRowLevel("deleteWhere", root, v, Some(staged), None,
         entryProvablyUnmatched(_, condLb, condSb)) { nv =>
       tryCommitEntries(root, nv, adds = Seq.empty, removes = Seq.empty,
         dvAdds = staged.entries)
@@ -2469,9 +2490,10 @@ object SnapshotCatalog {
     * fell below `readV` or its staged DV batch is gone.
     *
     * On an abort — a stale snapshot or 100 lost races — the op's
-    * `staged` DV batch is deleted: no version will ever reference it. */
+    * `staged` DV batch and its data batch `batch` are deleted: no
+    * version will ever reference them. */
   private def commitRowLevel(op: String, root: String, readV: Int,
-                             staged: Option[StagedDv],
+                             staged: Option[StagedDv], batch: Option[String],
                              provablyUnmatched: FileEntry => Boolean)(
                              publish: Int => Boolean): Int = {
     var attempt = 0
@@ -2492,7 +2514,7 @@ object SnapshotCatalog {
           }
         }
       if (kinds.nonEmpty) {
-        staged.foreach(_.discard())
+        discardStaged(root, staged, batch)
         throw new java.util.ConcurrentModificationException(
           s"$op on $root: version moved $readV -> $latest under the op " +
             s"(intervening: ${kinds.mkString(", ")}) — its snapshot is " +
@@ -2501,7 +2523,7 @@ object SnapshotCatalog {
       if (publish(latest + 1)) return latest + 1
       attempt += 1
     }
-    staged.foreach(_.discard())
+    discardStaged(root, staged, batch)
     sys.error(s"$op on $root lost 100 consecutive CAS races")
   }
 
@@ -2563,7 +2585,8 @@ object SnapshotCatalog {
     val (newEntries, schemaJson, partJson) =
       if (isBatchCommitted(root, batch))
         (committedBatchFiles(root, batch).map(FileEntry(_)), None, None)
-      else stageBatch(updates, root, batch, spec, recordStats = true)
+      else stagingAfterDv(root, Some(staged), batch)(
+        stageBatch(updates, root, batch, spec, recordStats = true))
     // the key set's necessary envelope (per-keyCol [min, max] over the
     // update keys), for the same concurrent-append narrowing as
     // [[deleteWhere]]: an appended file disjoint from the envelope in
@@ -2572,7 +2595,7 @@ object SnapshotCatalog {
     // leave the duplicate keys the upsert contract forbids). Computed
     // lazily — only a CAS collision pays the tiny agg.
     lazy val (keyLb, keySb) = keyEnvelope(keys, keyCols)
-    val nv = commitRowLevel("mergeOnRead", root, v, Some(staged),
+    val nv = commitRowLevel("mergeOnRead", root, v, Some(staged), Some(batch),
         entryProvablyUnmatched(_, keyLb, keySb)) { nv =>
       tryCommitEntries(root, nv, adds = newEntries.distinct.sortBy(_.path),
         removes = Seq.empty, dvAdds = staged.entries,
@@ -2771,7 +2794,8 @@ object SnapshotCatalog {
     val spec = partitionSpecAt(root, v).map(_.fieldNames.toSeq)
       .getOrElse(Seq.empty)
     val (newEntries, schemaJson, partJson) = appended match {
-      case Some(df) => stageBatch(df, root, batch, spec, recordStats = true)
+      case Some(df) => stagingAfterDv(root, Some(staged), batch)(
+        stageBatch(df, root, batch, spec, recordStats = true))
       case None => (Seq.empty[FileEntry], schemaAt(root, v).map(_.json),
         partitionSpecAt(root, v).map(_.json))
     }
@@ -2781,7 +2805,7 @@ object SnapshotCatalog {
     // a concurrent append disjoint from the source keys is exactly
     // what NOT MATCHED BY SOURCE acts on — those merges abort on any
     // intervening commit
-    val nv = commitRowLevel("mergeInto", root, v, Some(staged),
+    val nv = commitRowLevel("mergeInto", root, v, Some(staged), Some(batch),
         if (bySource.isEmpty) entryProvablyUnmatched(_, keyLb, keySb)
         else _ => false) { nv =>
       tryCommitEntries(root, nv,
@@ -2811,6 +2835,11 @@ object SnapshotCatalog {
     val v = latestVersion(root)
     val live = liveWithPositions(spark, root, v)
     val tableCols = live.columns.filterNot(Set("__dv_file", "__dv_pos"))
+    set.map(_._1).filterNot(tableCols.contains) match {
+      case Seq() => ()
+      case bad => sys.error(s"updateWhere on $root: SET targets " +
+        s"${bad.mkString(", ")} not in the table's columns")
+    }
     val matched = live.filter(cond)
     val staged = stageDvBatch(root, "u",
       matched.select(col("__dv_file"), col("__dv_pos")))
@@ -2821,19 +2850,14 @@ object SnapshotCatalog {
     // assignments the earlier ones' new values), metadata dropped,
     // original column order restored
     val setMap = set.toMap
-    set.map(_._1).filterNot(tableCols.contains) match {
-      case Seq() => ()
-      case bad => sys.error(s"updateWhere on $root: SET targets " +
-        s"${bad.mkString(", ")} not in the table's columns")
-    }
     val updated = matched.select(tableCols.map(c =>
       setMap.getOrElse(c, col(c)).as(c)): _*)
     val spec = partitionSpecAt(root, v).map(_.fieldNames.toSeq)
       .getOrElse(Seq.empty)
-    val (newEntries, schemaJson, partJson) =
-      stageBatch(updated, root, batch, spec, recordStats = true)
+    val (newEntries, schemaJson, partJson) = stagingAfterDv(root, Some(staged), batch)(
+      stageBatch(updated, root, batch, spec, recordStats = true))
     val (condLb, condSb) = condBounds(live, cond)
-    val nv = commitRowLevel("updateWhere", root, v, Some(staged),
+    val nv = commitRowLevel("updateWhere", root, v, Some(staged), Some(batch),
         entryProvablyUnmatched(_, condLb, condSb)) { nv =>
       tryCommitEntries(root, nv,
         adds = newEntries.distinct.sortBy(_.path), removes = Seq.empty,

@@ -92,18 +92,24 @@ final case class JdbcBatchSink(url: String, table: String,
                                idempotent: Boolean = false) extends StreamSink {
 
   /** The per-micro-batch write, exposed so specs can drive a replay
-    * directly (the streaming engine only replays after a real crash). */
+    * directly (the streaming engine only replays after a real crash).
+    * The batch is persisted around the empty probe and the write, so its
+    * plan runs once: run twice, a stateful batch commits every state
+    * store twice and the query's progress counts its input rows twice. */
   def writeBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      if (idempotent) deleteBatchRows(batchId)
-      val w = props.foldLeft(
-        batch.withColumn("batch_id", lit(batchId))
-          .write.format("jdbc")
-          .option("url", url).option("dbtable", table)) {
-        case (acc, (k, v)) => acc.option(k, v)
+    batch.persist()
+    try {
+      if (!batch.isEmpty) {
+        if (idempotent) deleteBatchRows(batchId)
+        val w = props.foldLeft(
+          batch.withColumn("batch_id", lit(batchId))
+            .write.format("jdbc")
+            .option("url", url).option("dbtable", table)) {
+          case (acc, (k, v)) => acc.option(k, v)
+        }
+        w.mode("append").save()
       }
-      w.mode("append").save()
-    }
+    } finally batch.unpersist()
   }
 
   /** Repair step for a replayed batch: remove whatever a prior

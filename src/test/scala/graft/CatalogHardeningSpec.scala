@@ -111,18 +111,21 @@ class CatalogHardeningSpec extends SparkTestBase {
     }
   }
 
-  /** Every DV batch under `root/dv` is one a surviving version
-    * references: an aborted row-level op deleted the batch it staged. */
-  private def assertNoDvLitter(root: String): Unit = {
+  /** Every DV batch under `root/dv` and every data batch under
+    * `root/data` is one a surviving version references: an aborted or
+    * failed row-level op deleted the batches it staged. */
+  private def assertNoStagedLitter(root: String): Unit = {
     def uri(p: String) = new Path(p).toUri.getPath
-    val referenced = SnapshotCatalog.versions(root)
-      .flatMap(v => SnapshotCatalog.dvFiles(root, v)).map(uri).toSet
-    val dvDir = new java.io.File(s"$root/dv")
-    val batches = Option(dvDir.listFiles()).toSeq.flatten.filter(_.isDirectory)
-    val litter = batches.filterNot(b => SnapshotCatalog.listDataFiles(b.getPath)
-      .exists(f => referenced.contains(uri(f))))
-    assert(litter.isEmpty,
-      s"unreferenced DV batches left behind: ${litter.map(_.getName).mkString(", ")}")
+    val versions = SnapshotCatalog.versions(root)
+    val referenced = versions.flatMap(v =>
+      SnapshotCatalog.dvFiles(root, v) ++ SnapshotCatalog.manifestFiles(root, v)).map(uri).toSet
+    val litter = Seq("dv", "data").flatMap { kind =>
+      val batches = Option(new java.io.File(s"$root/$kind").listFiles()).toSeq.flatten
+        .filter(_.isDirectory)
+      batches.filterNot(b => SnapshotCatalog.listDataFiles(b.getPath)
+        .exists(f => referenced.contains(uri(f)))).map(b => s"$kind/${b.getName}")
+    }
+    assert(litter.isEmpty, s"unreferenced staged batches left behind: ${litter.mkString(", ")}")
   }
 
   test("deleteWhere aborts when a concurrent append lands between its snapshot read and its commit") {
@@ -142,7 +145,7 @@ class CatalogHardeningSpec extends SparkTestBase {
     // the racer's append landed; the aborted delete left no DV commit
     // and no DV batch
     assert(SnapshotCatalog.latestVersion(root) == 2)
-    assertNoDvLitter(root)
+    assertNoStagedLitter(root)
     assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).count() == 60L)
     // the caller's retry against the new snapshot succeeds and sees the
     // racer's rows as delete candidates too
@@ -169,7 +172,7 @@ class CatalogHardeningSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
-    assertNoDvLitter(root)
+    assertNoStagedLitter(root)
     // retried against the new snapshot: the racer's 999 row now matches
     val (_, nM) = SnapshotCatalog.mergeOnRead(spark, root,
       Seq((5L, 100L), (999L, 100L)).toDF("id", "v"), Seq("id"), "u1")
@@ -215,7 +218,7 @@ class CatalogHardeningSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
-    assertNoDvLitter(root)
+    assertNoStagedLitter(root)
   }
 
   test("mergeOnRead proceeds past a concurrent append provably outside its key envelope") {
@@ -288,7 +291,7 @@ class CatalogHardeningSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("stale"), e.getMessage)
     }
-    assertNoDvLitter(root)
+    assertNoStagedLitter(root)
   }
 
   // Every row-level op against both kinds of concurrent commit: an
@@ -347,7 +350,7 @@ class CatalogHardeningSpec extends SparkTestBase {
         assert(e.getMessage.contains("stale"), e.getMessage)
       }
       assert(SnapshotCatalog.latestVersion(root) == 4, "the racer's commit must be the only one")
-      assertNoDvLitter(root)
+      assertNoStagedLitter(root)
     }
 
   test("maintainIfNeeded reports an expired intervening commit as a stale snapshot") {
@@ -371,7 +374,21 @@ class CatalogHardeningSpec extends SparkTestBase {
     }
     assert(SnapshotCatalog.latestVersion(root) == 6)
     assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).count() == 33L)
+    assertNoStagedLitter(root)
   }
+
+  // A CHECK constraint fails the data-batch write of a row-level op
+  // after its DV batch is staged: neither batch may outlive the failure.
+  for ((op, runOp) <- rowLevelOps if op != "deleteWhere")
+    test(s"$op failing a CHECK constraint while staging its data deletes both staged batches") {
+      val root = threeFileTable("graft_rlcheck_")
+      SnapshotCatalog.addConstraint(spark, root, "v_is_id", "v = id")
+      val e = intercept[Exception](runOp(root))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("v_is_id")), e.toString)
+      assert(SnapshotCatalog.latestVersion(root) == 4, "the failed op must not commit")
+      assertNoStagedLitter(root)
+    }
 
   // A drop deletes the whole root (GraftCatalog.dropTable), and a table
   // recreated there numbers its versions from 1 again — below, at or
@@ -397,7 +414,7 @@ class CatalogHardeningSpec extends SparkTestBase {
       assert(SnapshotCatalog.latestVersion(root) == recommits)
       assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).select("id").as[Long]
         .collect().sorted.toSeq == (1 to recommits).map(100L + _))
-      assertNoDvLitter(root)
+      assertNoStagedLitter(root)
     }
 
   test("replacePartitions deletes the DV re-land batch of every CAS attempt it loses") {
@@ -418,7 +435,7 @@ class CatalogHardeningSpec extends SparkTestBase {
         Seq((100L, "a")).toDF("id", "p"), "o0")
       assert(v == 4 && nT == 1, s"overwrite landed at $v touching $nT")
     }
-    assertNoDvLitter(root)
+    assertNoStagedLitter(root)
     val relands = new java.io.File(s"$root/dv").listFiles().count(_.getName.startsWith("w"))
     assert(relands == 1, s"$relands re-land batches: lost attempts left theirs behind")
     // partition b keeps its delete of ids 1 and 3; a holds only the overwrite

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 import graft.core.Tables
 import graft.streaming.{JdbcBatchSink, Streams}
@@ -404,5 +405,49 @@ class JdbcSinkSpec extends SparkTestBase {
         .option("driver", driver).load().count()
     }
     assert(e.getMessage != null)
+  }
+
+  /** `body`'s result and every executed micro-batch's progress, per
+    * streaming query it ran, in batch order — complete once each query's
+    * termination event (posted after its last progress) has arrived. */
+  private def batchProgress[A](body: => A): (A, Seq[Seq[StreamingQueryProgress]]) = {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val started, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.id)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.add(e.id)
+    }
+    spark.streams.addListener(listener)
+    val out = try {
+      val out = body
+      eventually(timeout(30.seconds)) {
+        assert(!started.isEmpty && ended.containsAll(started))
+      }
+      out
+    } finally spark.streams.removeListener(listener)
+    // idle triggers also report progress; only executed batches add one
+    (out, progress.asScala.toSeq.filter(_.durationMs.containsKey("addBatch"))
+      .groupBy(_.id).values.map(_.sortBy(_.batchId)).toSeq)
+  }
+
+  test("K4: each micro-batch runs once — input rows counted once, one commit per state store") {
+    import graft.streaming.{FirePipeline, VehiclePipeline}
+    // st25: the staged frames plus the one flush sentinel
+    val (_, Seq(veh)) = batchProgress(VehiclePipeline.runPipeline(spark, sfDir))
+    val frames = Tables(spark, sfDir).documents.count() + 1
+    assert(veh.map(_.numInputRows).sum === frames)
+    // the emitting batch runs the windowed aggregation's 4 shuffle
+    // partitions; a second run of the batch would report 8 stores
+    val Seq(agg) = veh.last.stateOperators.toSeq
+    assert(agg.numStateStoreInstances === 4, agg.json)
+    val ((_, _, staged), Seq(fire)) = batchProgress(FirePipeline.runPipeline(spark, sfDir))
+    assert(fire.map(_.numInputRows).sum === spark.read.parquet(staged).count())
   }
 }
