@@ -806,7 +806,7 @@ object SnapshotCatalog {
       props.map(m => "K\t" + encodeProps(m)).toSeq ++
       loaded.map(f => "L\t" + b64(f)))
       .mkString("\n") + "\n"
-    val won = publishUtf8(fs, commitPath(root, v), body)
+    val won = publishUtf8(fs, commitPath(root, v), body) && !withdrawnBelowFloor(root, v)
     if (won && v == 1) {
       // a table RECREATED at a root a previous table lived at (delete +
       // re-commit from version 1) must not serve the dead table's
@@ -822,6 +822,21 @@ object SnapshotCatalog {
         LogHint(math.max(a.latest, b.latest), a.checkpoints))
     if (won && v % checkpointEvery == 0) writeCheckpoint(root, v)
     won
+  }
+
+  /** Withdraw a publish at `v` into a slot [[expire]] freed: another
+    * commit won `v`, newer ones followed, and an expire deleted the log
+    * below a floor checkpoint that never folds this commit. Expire
+    * deletes oldest first, so commit `v - 1` is gone (one probe); a
+    * floor checkpoint AT `v` is the sound way for it to be gone (a later
+    * expire folded this commit). Only an expire that also drops `v`
+    * between the publish and the probe would be taken for a freed slot.
+    * A withdrawn publish reads as a lost race: the caller's CAS loop
+    * retries at latest + 1. */
+  private def withdrawnBelowFloor(root: String, v: Int): Boolean = {
+    val expired = v > 1 && !commitExists(root, v - 1) && !checkpointExists(root, v)
+    if (expired) { val p = commitPath(root, v); fsFor(p).delete(p, false) }
+    expired
   }
 
   /** Write the full-state checkpoint for `v`: the resolved data-file
@@ -1539,10 +1554,13 @@ object SnapshotCatalog {
       if (dryRun) return (drop.size, dead.size + deadDv.size)
       // (1) the new floor must survive its deltas' deletion
       writeCheckpoint(root, vMin)
-      // (2) expired manifests first — no new reader resolves them after this
+      // (2) expired manifests first — no new reader resolves them after this.
+      // Each version's checkpoint goes before its commit: a stale
+      // committer republishing a freed slot must not find the old
+      // checkpoint there ([[withdrawnBelowFloor]])
       drop.foreach { v =>
-        val c = commitPath(root, v); fsFor(c).delete(c, false)
         val k = checkpointPath(root, v); fsFor(k).delete(k, false)
+        val c = commitPath(root, v); fsFor(c).delete(c, false)
       }
       // the log's shape changed under the hint (the floor moved and old
       // checkpoints are gone): drop it rather than trusting validation
@@ -2315,6 +2333,22 @@ object SnapshotCatalog {
   // the rows). Serving subtracts the DVs with an anti-join; a later
   // [[replace]] (compaction) applies them physically and resets the DV
   // set atomically in its own commit.
+  //
+  // One writer, one reader: [[stageDvBatch]] lands every DV batch (and
+  // counts it from its parquet footer), [[readDvs]] reads every DV file
+  // back in the fixed [[dvSchema]] — no read infers a schema, so no read
+  // runs a Spark job to learn what this section already fixes.
+
+  /** The schema of every DV batch: the scan's `_metadata.file_path` and
+    * `_metadata.row_index`, as [[joinDeletes]] names them. */
+  private[graft] val dvSchema: StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    StructType(Seq(StructField("__dv_file", StringType), StructField("__dv_pos", LongType)))
+  }
+
+  /** THE DV reader: the DV files `paths` read in [[dvSchema]]. */
+  private def readDvs(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(paths: _*)
 
   /** THE deletion-vector join — serving, the change feeds, maintenance
     * and the row-level ops all apply DVs here. `df` (a batch or
@@ -2335,7 +2369,7 @@ object SnapshotCatalog {
     val withPos = df.withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
     if (dvs.isEmpty) return if (keepPositions) withPos else df
-    val dv = graft.core.BroadcastGate(df.sparkSession.read.parquet(dvs.map(_.path): _*),
+    val dv = graft.core.BroadcastGate(readDvs(df.sparkSession, dvs.map(_.path)),
       dvs.map(entryBytes).sum)
     val how = if (onlyDeleted) "semi" else "anti"
     val joined = withPos.join(dv, Seq("__dv_file", "__dv_pos"), "left_" + how)
@@ -2357,7 +2391,7 @@ object SnapshotCatalog {
   /** The files the DV set `dvs` points at: its distinct `__dv_file`
     * values as recorded, sorted — one O(deleted rows) read. */
   private def dvBearingFiles(spark: SparkSession, dvs: Seq[FileEntry]): Seq[String] =
-    spark.read.parquet(dvs.map(_.path): _*).select("__dv_file").distinct()
+    readDvs(spark, dvs.map(_.path)).select("__dv_file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
 
   /** A DV batch staged under `<root>/dv/` for a commit that has not
@@ -2388,17 +2422,34 @@ object SnapshotCatalog {
     catch { case e: Throwable => discardStaged(root, dv, Some(batch)); throw e }
 
   /** THE DV-batch writer: the positions frame (`__dv_file`, `__dv_pos`)
-    * lands as ONE batch `<root>/dv/<tag><uuid>` and is counted back.
-    * Each entry records the row count when the batch is one file (-1
-    * otherwise). An empty batch is deleted and stages no entries. */
-  private def stageDvBatch(root: String, tag: String, positions: DataFrame): StagedDv = {
+    * lands as ONE batch `<root>/dv/<tag><uuid>`, counted from its parquet
+    * footers on the driver (no Spark job); each entry records its
+    * file's count. An empty batch is deleted and stages no entries.
+    * With `refuseRepeats`, a position that occurs twice fails the write
+    * with that message, and nothing stays staged. */
+  private def stageDvBatch(root: String, tag: String, positions: DataFrame,
+                           refuseRepeats: Option[String] = None): StagedDv = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{coalesce, col, lag, lit, raise_error}
     val dir = new Path(s"$root/dv/$tag${java.util.UUID.randomUUID().toString.take(8)}")
-    positions.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val one = positions.coalesce(1)
+    // the batch is one partition, so a window clustered on the file needs
+    // no shuffle; sorted by position, a repeat sits next to its twin
+    val checked = refuseRepeats.fold(one) { msg =>
+      one.withColumn("__dv_prev", lag(col("__dv_pos"), 1)
+          .over(Window.partitionBy("__dv_file").orderBy("__dv_pos")))
+        .filter(coalesce(col("__dv_prev") =!= col("__dv_pos"), lit(true))
+          .or(raise_error(lit(msg))))
+        .drop("__dv_prev")
+    }
+    try checked.write.mode("overwrite").parquet(dir.toString)
+    catch { case e: Throwable => fsFor(dir).delete(dir, true); throw e }
     val sized = listDataEntries(dir.toString)
-    val n = positions.sparkSession.read.parquet(sized.map(_._1): _*).count()
+    val entries = sized.zip(footerStats(sized.map(_._1))).map {
+      case ((f, sz), (_, n, _)) => FileEntry(f, sz, n) }
+    val n = entries.map(_.rows).sum
     if (n == 0L) { fsFor(dir).delete(dir, true); StagedDv(dir, Seq.empty, 0L) }
-    else StagedDv(dir, sized.map { case (f, sz) =>
-      FileEntry(f, sz, if (sized.size == 1) n else -1L) }, n)
+    else StagedDv(dir, entries, n)
   }
 
   /** Re-land the DV set `dvs` under a rewrite: withdraw every entry and
@@ -2415,7 +2466,7 @@ object SnapshotCatalog {
     val keepPaths = broadcast(spark.createDataset(keep)(
       org.apache.spark.sql.Encoders.STRING).toDF("__dv_file"))
     stageDvBatch(root, "w",
-      spark.read.parquet(dvs.map(_.path): _*).join(keepPaths, Seq("__dv_file"), "left_semi"))
+      readDvs(spark, dvs.map(_.path)).join(keepPaths, Seq("__dv_file"), "left_semi"))
   }
 
   /** Version `v`'s live rows (its DVs applied) with their positions —
@@ -2739,21 +2790,15 @@ object SnapshotCatalog {
         .filter(col("__mrg_action").isNotNull)
     }
     val positions = actioned.select(col("__dv_file"), col("__dv_pos"))
-    val staged = stageDvBatch(root, "g", bySrcActioned.fold(positions)(b =>
-      positions.unionByName(b.select(col("__dv_file"), col("__dv_pos")))))
-    val nActioned = staged.rows
     // non-deterministic multi-match refuses BEFORE anything commits: a
     // target row pairing with several source rows would be updated (or
-    // deleted) per an arbitrary one of them
-    if (nActioned > 0L && spark.read.parquet(staged.entries.map(_.path): _*)
-          .groupBy("__dv_file", "__dv_pos").count()
-          .filter(col("count") > 1L).limit(1).count() > 0L) {
-      staged.discard()
-      throw new IllegalStateException(
-        s"mergeInto on $root: a target row matches multiple source rows " +
-          "under the ON condition — the matched action would be " +
-          "non-deterministic; de-duplicate the source on the merge keys")
-    }
+    // deleted) per an arbitrary one of them — its position repeats
+    val staged = stageDvBatch(root, "g", bySrcActioned.fold(positions)(b =>
+      positions.unionByName(b.select(col("__dv_file"), col("__dv_pos")))),
+      refuseRepeats = Some(s"mergeInto on $root: a target row matches multiple " +
+        "source rows under the ON condition — the matched action would be " +
+        "non-deterministic; de-duplicate the source on the merge keys"))
+    val nActioned = staged.rows
     // the appended batch: each update clause's transformed copies (all
     // columns built against the ORIGINAL row in one projection) plus
     // each insert clause's new rows (unassigned columns NULL)

@@ -377,6 +377,44 @@ class CatalogHardeningSpec extends SparkTestBase {
     assertNoStagedLitter(root)
   }
 
+  test("mergeInto refuses a target row matched by two source rows while staging, and leaves no DV batch") {
+    import graft.sources.SnapshotCatalog.MergeUpdateClause
+    val root = threeFileTable("graft_multimatch_")
+    val spark2 = spark
+    import spark2.implicits._
+    // id 25 matches twice; ids 5 and 15 once each, in other files
+    val e = intercept[Exception] {
+      SnapshotCatalog.mergeInto(spark, root,
+        Seq((5L, 1L), (25L, 2L), (15L, 3L), (25L, 4L)).toDF("id", "v"), Seq("id"),
+        Seq(MergeUpdateClause(None, Seq("v" -> col("__src_v")))), Seq.empty, "g0")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("multiple source rows")), e.toString)
+    assert(SnapshotCatalog.latestVersion(root) == 3, "the refused merge committed")
+    assertNoStagedLitter(root)
+  }
+
+  test("an append whose version was taken and then expired under it retries past the floor instead of republishing the freed slot") {
+    val root = graft.streaming.Streams.dataDir("graft_expireslot_")
+    val spark2 = spark
+    import spark2.implicits._
+    SnapshotCatalog.append(Seq(1L).toDF("id").coalesce(1), root, "b0")
+    // before the append publishes v2: three appends take v2..v4 and an
+    // expire keeps (3, 4), so commit-v2 is gone under a floor at 3
+    val expiring = new RaceInjector(root, { () =>
+      (0 until 3).foreach(i => SnapshotCatalog.append(
+        Seq(100L + i).toDF("id").coalesce(1), root, s"r$i"))
+      SnapshotCatalog.expire(root, keepLast = 2)
+    }, armFor = "commit-v2.txt")
+    val v = SnapshotCatalog.withPublisher(expiring) {
+      SnapshotCatalog.append(Seq(7L).toDF("id").coalesce(1), root, "late")
+    }
+    assert(v == 5, s"the append reported version $v")
+    assert(SnapshotCatalog.versions(root) == Seq(3, 4, 5))
+    assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root).select("id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 7L, 100L, 101L, 102L))
+  }
+
   // A CHECK constraint fails the data-batch write of a row-level op
   // after its DV batch is staged: neither batch may outlive the failure.
   for ((op, runOp) <- rowLevelOps if op != "deleteWhere")

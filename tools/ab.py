@@ -22,7 +22,10 @@ was better, and a verdict against the metric's bound:
   gain        head is better in at least 9 of 10 pairs and its median
               beats base's by more than base's interquartile range;
   same        anything else.
-Plus the share of failed ops on each side. Exits 1 when any metric
+Plus the share of failed ops on each side, and per op name (read_all,
+append, merge, ... for lakehouse_rw) both sides' median op wall over
+every timed, untraced op of the pairs, read from each run's record
+`<build dir>/run-<workload>-<seed>-trace0.json`. Exits 1 when any metric
 regressed or is unresolved, or any op failed.
 """
 import argparse
@@ -57,7 +60,7 @@ def build(tree):
 
 
 def run_once(tree, workload, seed, seconds):
-    """One benchmark run; returns its JSON result line."""
+    """One benchmark run; returns its JSON result line and its op walls by op name."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=tree, capture_output=True, text=True)
@@ -65,7 +68,15 @@ def run_once(tree, workload, seed, seconds):
     if not lines:
         sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
         raise SystemExit(f"ab: {workload} seed {seed} in {tree} printed no result")
-    return json.loads(lines[-1])
+    # run.py keeps the run's record in its build dir, resolved from its cwd
+    build_dir = os.path.join(tree, os.environ.get("CARGO_TARGET_DIR") or ".bench_build")
+    with open(os.path.join(build_dir, f"run-{workload}-{seed}-trace0.json")) as f:
+        ops = json.load(f)["ops"]
+    walls = {}
+    for o in ops:
+        if not o["warm"] and not o["traced"]:
+            walls.setdefault(o["name"], []).append(o["wall_ms"])
+    return json.loads(lines[-1]), walls
 
 
 def quartiles(xs):
@@ -123,11 +134,14 @@ def compare(spec, workloads, a, workdir):
     bad = False
     for w in workloads:
         runs = {"base": [], "head": []}
+        walls = {"base": {}, "head": {}}
         for i in range(a.pairs):
             order = ("base", "head") if i % 2 == 0 else ("head", "base")
             for side in order:
-                r = run_once(trees[side], w, 1 + i, spec["run_seconds"])
+                r, op_walls = run_once(trees[side], w, 1 + i, spec["run_seconds"])
                 runs[side].append(r)
+                for name, xs in op_walls.items():
+                    walls[side].setdefault(name, []).extend(xs)
                 print(f"[ab] {w} pair {i + 1}/{a.pairs} {side}: " +
                       " ".join(f"{m['name']}={r['metrics'][m['name']]['value']:.4g}"
                                for m in spec["end_to_end"]), file=sys.stderr, flush=True)
@@ -148,6 +162,15 @@ def compare(spec, workloads, a, workdir):
             fail = sum(r["failed"] for r in runs[side])
             bad |= fail > 0
             print(f"  failed_ratio {side}: {fail}/{att} = {fail / max(1, att):.3f}")
+        names = list(dict.fromkeys(list(walls["base"]) + list(walls["head"])))
+        width = max([14] + [len(n) for n in names])
+        print(f"  {'op median wall':<{width}} {'base ms':>10} {'head ms':>10} {'h/b':>7} {'ops b/h':>9}")
+        for name in names:
+            b, h = walls["base"].get(name, []), walls["head"].get(name, [])
+            mb = statistics.median(b) if b else float("nan")
+            mh = statistics.median(h) if h else float("nan")
+            print(f"  {name:<{width}} {mb:>10.1f} {mh:>10.1f} {mh / mb if b and mb else float('nan'):>7.3f} "
+                  f"{len(b):>4}/{len(h):<4}")
     return bad
 
 
