@@ -396,8 +396,9 @@ class GraftFeedSource(spark: SparkSession, root: String,
     else {
       val base = streamingRead(files, to.toInt)
       // a bootstrap of a DV-bearing table serves the deletes-applied
-      // snapshot instead of refusing: the streaming scan anti-joins the
-      // static DV side (stream-static left-anti is supported)
+      // snapshot instead of refusing: the streaming scan drops the DV
+      // positions (a broadcast filter, or past the gate a stream-static
+      // left-anti join, which is supported)
       val served =
         if (from.isEmpty)
           SnapshotCatalog.joinDeletes(base, SnapshotCatalog.dvEntries(root, to.toInt))

@@ -507,6 +507,7 @@ object SnapshotCatalog {
     deltaCache.clear()
     checkpointCache.clear()
     logHints.clear()
+    DvFiles.clear()
   }
 
   private def commitDeltaFull(root: String, v: Int): CommitDelta = {
@@ -1747,7 +1748,7 @@ object SnapshotCatalog {
     * rows as deletes); `_commit_version` stamps each row. Cost is
     * O(changed rows): inserts read only the added files, deletes read
     * only the files the DV positions reference (anti-join-free —
-    * [[deletedRows]] semi-joins the O(deleted) position set).
+    * [[deletedRows]] keeps just the O(deleted) position set).
     *
     * FAILS LOUDLY across a [[replace]] like [[addedFiles]]: a
     * compaction/retraction rewrites surviving rows wholesale, so
@@ -1814,7 +1815,7 @@ object SnapshotCatalog {
     * longer fit [[graft.core.BroadcastGate]] (past it every read pays a
     * shuffled anti-join), when the
     * DELETED FRACTION of live rows crosses `maxDeletedFrac` (read
-    * amplification: scans keep decoding rows the anti-join then
+    * amplification: scans keep decoding rows the DV filter then
     * drops), or when the live file count crosses `maxLiveFiles`
     * (small-file ingest litter — st40's shape).
     *
@@ -2330,14 +2331,17 @@ object SnapshotCatalog {
   // needed — as small parquet "deletion vector" batches under
   // <root>/dv/; the commit itself is O(deleted rows) and the data files
   // are untouched (time travel to the pre-delete version still serves
-  // the rows). Serving subtracts the DVs with an anti-join; a later
-  // [[replace]] (compaction) applies them physically and resets the DV
-  // set atomically in its own commit.
+  // the rows). Serving drops the DV positions with [[joinDeletes]]: a
+  // filter over positions read on the driver and broadcast while the DV
+  // set fits [[graft.core.BroadcastGate]], a shuffled anti-join past it;
+  // a later [[replace]] (compaction) applies them physically and resets
+  // the DV set atomically in its own commit.
   //
-  // One writer, one reader: [[stageDvBatch]] lands every DV batch (and
-  // counts it from its parquet footer), [[readDvs]] reads every DV file
-  // back in the fixed [[dvSchema]] — no read infers a schema, so no read
-  // runs a Spark job to learn what this section already fixes.
+  // One writer, two readers: [[stageDvBatch]] lands every DV batch (and
+  // counts it from its parquet footer); [[DvFiles]] reads a DV file on
+  // the driver under the gate, [[readDvs]] reads DV files as a Spark
+  // scan past it, both in the fixed [[dvSchema]] — no read infers a
+  // schema, and under the gate no read runs a Spark job at all.
 
   /** The schema of every DV batch: the scan's `_metadata.file_path` and
     * `_metadata.row_index`, as [[joinDeletes]] names them. */
@@ -2353,15 +2357,18 @@ object SnapshotCatalog {
   /** THE deletion-vector join — serving, the change feeds, maintenance
     * and the row-level ops all apply DVs here. `df` (a batch or
     * streaming scan whose `_metadata` is still reachable) gains each
-    * row's position as `__dv_file`/`__dv_pos` and joins the DV files
-    * `dvs` on it: an anti join drops the deleted rows, or with
-    * `onlyDeleted` (the change feeds' [[deletedRows]]) a semi join
-    * keeps only them. The DV side is sized by [[graft.core.BroadcastGate]]
-    * on its logged bytes: it broadcasts under the gate and the join
-    * shuffles past it — DVs pile up between compactions, and a trickle
-    * of deletes must degrade to a shuffle, not a driver OOM. No DVs
-    * means no join (`onlyDeleted` callers always pass some). The
-    * position columns are dropped unless `keepPositions`. */
+    * row's position as `__dv_file`/`__dv_pos`, matched against the DV
+    * files `dvs`: the deleted rows are dropped, or with `onlyDeleted`
+    * (the change feeds' [[deletedRows]]) only they are kept. The DV set
+    * is sized by [[graft.core.BroadcastGate]] on its logged bytes. Under
+    * the gate its positions are read on the driver ([[DvFiles]], cached
+    * per immutable DV file) and broadcast to a [[graft.functions.DvListed]]
+    * filter, so applying them runs no Spark job. Past it they join
+    * merge-hinted, as an anti (or semi) join that shuffles — DVs pile up
+    * between compactions, and a trickle of deletes must degrade to a
+    * shuffle, not a driver OOM. No DVs means no filter (`onlyDeleted`
+    * callers always pass some). The position columns are dropped
+    * unless `keepPositions`. */
   private[sources] def joinDeletes(df: DataFrame, dvs: Seq[FileEntry],
                                    onlyDeleted: Boolean = false,
                                    keepPositions: Boolean = false): DataFrame = {
@@ -2369,11 +2376,19 @@ object SnapshotCatalog {
     val withPos = df.withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
     if (dvs.isEmpty) return if (keepPositions) withPos else df
-    val dv = graft.core.BroadcastGate(readDvs(df.sparkSession, dvs.map(_.path)),
-      dvs.map(entryBytes).sum)
-    val how = if (onlyDeleted) "semi" else "anti"
-    val joined = withPos.join(dv, Seq("__dv_file", "__dv_pos"), "left_" + how)
-    if (keepPositions) joined else joined.drop("__dv_file", "__dv_pos")
+    val spark = df.sparkSession
+    val applied =
+      if (graft.core.BroadcastGate.fits(spark, dvs.map(entryBytes).sum)) {
+        val positions = spark.sparkContext.broadcast(
+          graft.functions.DvPositions(DvFiles.positions(spark.sessionState.newHadoopConf(), dvs)))
+        val listed = graft.functions.DvListed.dvListed(
+          col("__dv_file"), col("__dv_pos"), positions)
+        withPos.filter(if (onlyDeleted) listed else !listed)
+      } else {
+        val dv = graft.core.BroadcastGate.shape(readDvs(spark, dvs.map(_.path)), fits = false)
+        withPos.join(dv, Seq("__dv_file", "__dv_pos"), if (onlyDeleted) "left_semi" else "left_anti")
+      }
+    if (keepPositions) applied else applied.drop("__dv_file", "__dv_pos")
   }
 
   /** The rows a commit's DV batch `dvAdds` deletes, as `_change_type =
@@ -2389,9 +2404,13 @@ object SnapshotCatalog {
   }
 
   /** The files the DV set `dvs` points at: its distinct `__dv_file`
-    * values as recorded, sorted — one O(deleted rows) read. */
+    * values as recorded, sorted. Under [[graft.core.BroadcastGate]] they
+    * come from the driver's [[DvFiles]], as in [[joinDeletes]]; past it
+    * from one O(deleted rows) Spark job. */
   private def dvBearingFiles(spark: SparkSession, dvs: Seq[FileEntry]): Seq[String] =
-    readDvs(spark, dvs.map(_.path)).select("__dv_file").distinct()
+    if (graft.core.BroadcastGate.fits(spark, dvs.map(entryBytes).sum))
+      DvFiles.bearing(spark.sessionState.newHadoopConf(), dvs)
+    else readDvs(spark, dvs.map(_.path)).select("__dv_file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
 
   /** A DV batch staged under `<root>/dv/` for a commit that has not
@@ -2473,8 +2492,8 @@ object SnapshotCatalog {
     * the frame every row-level op matches against. The FileIndex
     * relation, not a raw leaf-file read: partition columns are served,
     * so conditions may reference them. */
-  private def liveWithPositions(spark: SparkSession, root: String,
-                                v: Int): DataFrame =
+  private[sources] def liveWithPositions(spark: SparkSession, root: String,
+                                         v: Int): DataFrame =
     joinDeletes(SnapshotFileIndex.snapshotDF(spark, root, Some(v),
       subtractDeletes = false), dvEntries(root, v), keepPositions = true)
 
@@ -2912,9 +2931,9 @@ object SnapshotCatalog {
   }
 
   /** Read a snapshot with its deletion vectors applied: the
-    * [[readSnapshot]] scan anti-joined against the in-effect (file,
-    * position) pairs by [[joinDeletes]], the one DV join (a broadcast
-    * under [[graft.core.BroadcastGate]], a shuffle past it). */
+    * [[readSnapshot]] scan with the in-effect (file, position) pairs
+    * dropped by [[joinDeletes]] (a broadcast position filter under
+    * [[graft.core.BroadcastGate]], a shuffled anti-join past it). */
   def readSnapshotWithDeletes(spark: SparkSession, root: String,
                               version: Option[Int] = None,
                               mergeSchema: Boolean = false): DataFrame =

@@ -53,9 +53,7 @@ object AbsaJdbcPipeline extends QueryPack {
     * (readback table, jdbc url, staged doc dir). */
   def runPipeline(spark: org.apache.spark.sql.SparkSession,
                   dir: String): (DataFrame, String, String) = {
-    val staged = Streams.dataDir("graft_absa_docs_")
-    Tables(spark, dir).documents.repartition(4)
-      .write.mode("overwrite").parquet(staged)
+    val staged = Streams.stage(Tables(spark, dir).documents.repartition(4), "graft_absa_docs_")
     val url = s"jdbc:derby:${Streams.dataDir("graft_derby_absa_")}/db;create=true"
     val sink = JdbcBatchSink(url, "absa_results",
       Map("driver" -> VehiclePipeline.derbyDriver,
@@ -75,7 +73,7 @@ object AbsaJdbcPipeline extends QueryPack {
     val table = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "absa_results")
       .option("driver", VehiclePipeline.derbyDriver).load()
-    (table, url, staged)
+    (table, url, staged.dir)
   }
 
   val queries: Seq[GraftQuery] = Seq(

@@ -89,7 +89,7 @@ object FirePipeline extends QueryPack {
     val table = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "fire_detections")
       .option("driver", VehiclePipeline.derbyDriver).load()
-    (table, url, staged)
+    (table, url, staged.dir)
   }
 
   val queries: Seq[GraftQuery] = Seq(

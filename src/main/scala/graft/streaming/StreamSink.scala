@@ -114,21 +114,23 @@ final case class JdbcBatchSink(url: String, table: String,
 
   /** Repair step for a replayed batch: remove whatever a prior
     * (possibly partial) attempt committed under this batch_id. Runs on
-    * the driver over a plain JDBC connection — one statement per batch.
-    * A missing table is the expected first-ever-batch case and is
-    * identified by its SQLState (Derby 42X05, Postgres 42P01); any
-    * other database error is a real fault and propagates instead of
-    * silently degrading to a duplicate append. */
+    * the driver over a plain JDBC connection — one statement per batch,
+    * with the batch id bound as a parameter: every batch sends the same
+    * statement text, so the database compiles one DELETE per table
+    * (Derby compiles each distinct text into a class) instead of one
+    * per micro-batch. A missing table is the expected first-ever-batch
+    * case and is identified by its SQLState (Derby 42X05, Postgres
+    * 42P01); any other database error is a real fault and propagates
+    * instead of silently degrading to a duplicate append. */
   private def deleteBatchRows(batchId: Long): Unit = {
     props.get("driver").foreach(Class.forName)
     val conn = java.sql.DriverManager.getConnection(url, jdbcProps)
     try {
-      val st = conn.createStatement()
       // the writer CREATEs with quoted (case-sensitive) column names —
       // the delete must quote too or Derby/Postgres upper-case-fold
       // the identifier and miss the column
-      try st.executeUpdate(
-        s"""DELETE FROM $table WHERE "batch_id" = $batchId""")
+      val st = conn.prepareStatement(s"""DELETE FROM $table WHERE "batch_id" = ?""")
+      try { st.setLong(1, batchId); st.executeUpdate() }
       finally st.close()
     } catch {
       case e: java.sql.SQLException if isMissingTable(e) => ()

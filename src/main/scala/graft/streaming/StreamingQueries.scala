@@ -27,26 +27,21 @@ object StreamingQueries extends QueryPack {
     * conf, and is NOT gate work; ScaleStress times the drain against
     * already-built artifacts. */
   def chunkScrubArtifacts(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): (String, String) = {
+                          dir: String): (Streams.Staged, String) = {
     import graft.dedup.DedupQueries
-    val key = s"graft.staged.chunkscrub.$dir"
-    Option(spark.sparkContext.getLocalProperty(key)) match {
-      case Some(v) =>
-        val Array(a, b) = v.split(","); (a, b)
-      case None =>
-        val docs = Tables(spark, dir).documents
-        val splitId = Tables.incrementalSplitId(docs, "doc_id")
-        val staged = Streams.dataDir("graft_docs_scrub_")
-        docs.filter(col("doc_id") >= splitId)
-          .repartition(2).write.mode("overwrite").parquet(staged)
-        val indexDir = Streams.dataDir("graft_chunk_index_")
-        graft.sources.SnapshotCatalog.replace(
-          DedupQueries.chunkRelation(docs.filter(col("doc_id") < splitId))
-            .select("chunk").distinct(),
-          indexDir, "b0")
-        spark.sparkContext.setLocalProperty(key, s"$staged,$indexDir")
-        (staged, indexDir)
+    val (staged, Seq(indexDir)) = Streams.stagedOnce(spark, s"graft.staged.chunkscrub.$dir") {
+      val docs = Tables(spark, dir).documents
+      val splitId = Tables.incrementalSplitId(docs, "doc_id")
+      val staged = Streams.stage(docs.filter(col("doc_id") >= splitId).repartition(2),
+        "graft_docs_scrub_")
+      val indexDir = Streams.dataDir("graft_chunk_index_")
+      graft.sources.SnapshotCatalog.replace(
+        DedupQueries.chunkRelation(docs.filter(col("doc_id") < splitId))
+          .select("chunk").distinct(),
+        indexDir, "b0")
+      (staged, Seq(indexDir))
     }
+    (staged, indexDir)
   }
 
   /** st26 scrub, stored-index JOIN form — the past-broadcast-size path:
@@ -88,7 +83,7 @@ object StreamingQueries extends QueryPack {
     * content REWRITE, not just a flag (st16 flags; this scrubs). Zero
     * streaming state, append mode, no watermark. Both forms are
     * spec-pinned identical on the same staged corpus. */
-  def chunkScrubStream(spark: org.apache.spark.sql.SparkSession, staged: String,
+  def chunkScrubStream(spark: org.apache.spark.sql.SparkSession, staged: Streams.Staged,
                        indexDir: String, sinkName: String): org.apache.spark.sql.DataFrame = {
     import graft.core.BroadcastGate
     import graft.dedup.DedupQueries
@@ -142,26 +137,21 @@ object StreamingQueries extends QueryPack {
     * work, NOT gate work; ScaleStress times the drain against
     * already-built artifacts for exactly that reason. */
   def dedupGateArtifacts(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): (String, String, String) = {
-    val key = s"graft.staged.dedupgate.$dir"
-    Option(spark.sparkContext.getLocalProperty(key)) match {
-      case Some(v) =>
-        val Array(a, b, c) = v.split(","); (a, b, c)
-      case None =>
-        val docs = Tables(spark, dir).documents
-        val split = Tables.incrementalSplitId(docs, "doc_id")
-        val staged = Streams.dataDir("graft_docs_dedup_")
-        docs.filter(col("doc_id") >= split)
-          .repartition(2).write.mode("overwrite").parquet(staged)
-        val indexDir = Streams.dataDir("graft_dedup_bands_")
-        val arrDir = Streams.dataDir("graft_dedup_shs_")
-        // build through the SAME kernel the index-update job appends
-        // with ([[writeGateArtifacts]]), so build and update can't drift
-        writeGateArtifacts(docs.filter(col("doc_id") < split),
-          indexDir, arrDir, mode = "overwrite")
-        spark.sparkContext.setLocalProperty(key, s"$staged,$indexDir,$arrDir")
-        (staged, indexDir, arrDir)
+                         dir: String): (Streams.Staged, String, String) = {
+    val (staged, Seq(indexDir, arrDir)) = Streams.stagedOnce(spark, s"graft.staged.dedupgate.$dir") {
+      val docs = Tables(spark, dir).documents
+      val split = Tables.incrementalSplitId(docs, "doc_id")
+      val staged = Streams.stage(docs.filter(col("doc_id") >= split).repartition(2),
+        "graft_docs_dedup_")
+      val indexDir = Streams.dataDir("graft_dedup_bands_")
+      val arrDir = Streams.dataDir("graft_dedup_shs_")
+      // build through the SAME kernel the index-update job appends
+      // with ([[writeGateArtifacts]]), so build and update can't drift
+      writeGateArtifacts(docs.filter(col("doc_id") < split),
+        indexDir, arrDir, mode = "overwrite")
+      (staged, Seq(indexDir, arrDir))
     }
+    (staged, indexDir, arrDir)
   }
 
   /** The exact-Jaccard VERIFY stage shared verbatim by both st21 index
@@ -246,7 +236,7 @@ object StreamingQueries extends QueryPack {
     *     Zero streaming state — each doc lives in exactly one
     *     micro-batch, so the within-batch emission dedup is complete.
     * Both forms are spec-pinned identical on the same staged corpus. */
-  def dedupGateDrain(spark: org.apache.spark.sql.SparkSession, staged: String,
+  def dedupGateDrain(spark: org.apache.spark.sql.SparkSession, staged: Streams.Staged,
                      indexDir: String, arrDir: String): org.apache.spark.sql.DataFrame =
     Streams.withStreamShufflePartitions(spark) {
       import graft.core.BroadcastGate
@@ -308,20 +298,12 @@ object StreamingQueries extends QueryPack {
     * stageEvents pattern) — staging is corpus work, not monitor work;
     * ScaleStress times the drain against an already-staged topic. */
   def driftMonitorStaged(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): String = {
-    val key = s"graft.staged.driftmon.$dir"
-    Option(spark.sparkContext.getLocalProperty(key)) match {
-      case Some(v) => v
-      case None =>
-        val docs = Tables(spark, dir).documents
-        val sv = Tables.incrementalSplitId(docs, "doc_id")
-        val staged = Streams.dataDir("graft_docs_drift_")
-        docs.filter(col("doc_id") >= sv)
-          .repartition(2).write.mode("overwrite").parquet(staged)
-        spark.sparkContext.setLocalProperty(key, staged)
-        staged
-    }
-  }
+                         dir: String): Streams.Staged =
+    Streams.stagedOnce(spark, s"graft.staged.driftmon.$dir") {
+      val docs = Tables(spark, dir).documents
+      val sv = Tables.incrementalSplitId(docs, "doc_id")
+      (Streams.stage(docs.filter(col("doc_id") >= sv).repartition(2), "graft_docs_drift_"), Nil)
+    }._1
 
   /** Idempotent partial-append for the live stores (st29/st30/st31):
     * foreachBatch delivery is AT-LEAST-ONCE — after a crash between the
@@ -382,8 +364,7 @@ object StreamingQueries extends QueryPack {
     * appended batch with (batches-so-far, store row count at that
     * instant). */
   def liveProfileDrain(spark: org.apache.spark.sql.SparkSession,
-                       staged: String, store: String,
-                       schema: org.apache.spark.sql.types.StructType,
+                       staged: Streams.Staged, store: String,
                        compactEvery: Int = 0,
                        onBatch: Option[(Int, Long) => Unit] = None): Unit =
     Streams.withStreamShufflePartitions(spark) {
@@ -399,7 +380,7 @@ object StreamingQueries extends QueryPack {
             val n = seen.incrementAndGet()
             if (compactEvery > 0 &&
                 readStore(spark, store).count() >= compactEvery)
-              ProfilingQueries.compactStore(spark, store, schema)
+              ProfilingQueries.compactStore(spark, store, staged.schema)
             onBatch.foreach(f => f(n, readStore(spark, store).count()))
           }
           ()
@@ -552,7 +533,7 @@ object StreamingQueries extends QueryPack {
             Tables(spark, dir).events.limit(1)
               .withColumn("ts", lit(futureTs).cast("timestamp"))
               .withColumn("event_type", lit("__flush__")),
-            staged)
+            staged.dir)
         }
         Streams.withStreamShufflePartitions(spark) {
         val agg = Streams.streamFromStaged(spark, staged)
@@ -656,9 +637,7 @@ object StreamingQueries extends QueryPack {
         // executor lazy model inside mapPartitions), decoded with native
         // expressions, appended through the foreachBatch sink — then the
         // sink table is aggregated. Result ≡ the batch absa01 pipeline.
-        val staged = Streams.dataDir("graft_docs_stage_")
-        Tables(spark, dir).documents.repartition(2)
-          .write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(Tables(spark, dir).documents.repartition(2), "graft_docs_stage_")
         Streams.withStreamShufflePartitions(spark) {
           val docStream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
           val out = Streams.dataDir("graft_absa_sink")
@@ -698,15 +677,16 @@ object StreamingQueries extends QueryPack {
         Streams.withStreamShufflePartitions(spark) {
           val topicDir = Streams.dataDir("graft_topic_")
           val cpProd = Streams.scratchDir("graft_cp_st08p")
-          val producer = FileTopicSink(topicDir, cpProd).start(
-            StreamSink.toRecords(
-              Streams.eventsStream(spark, dir, maxFilesPerTrigger = 2), "user_id"))
+          val records = StreamSink.toRecords(
+            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 2), "user_id")
+          val producer = FileTopicSink(topicDir, cpProd).start(records)
           Streams.awaitDrained(producer)
           producer.stop()
           val eventSchema = org.apache.spark.sql.types.StructType.fromDDL(
             "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, " +
               "value DOUBLE, props STRING")
-          val consumed = Streams.streamFromStaged(spark, topicDir, maxFilesPerTrigger = 4)
+          val consumed = Streams.streamFromStaged(spark,
+              Streams.Staged(topicDir, records.schema), maxFilesPerTrigger = 4)
             .select(from_json(col("value"), eventSchema).as("e"))
             .select(col("e.*"))
           val agg = consumed.groupBy("event_type")
@@ -922,7 +902,7 @@ object StreamingQueries extends QueryPack {
               .map(et => base.withColumn("event_type", lit(et)))
               .reduce(_ unionByName _)
               .coalesce(1) // one file per round = one micro-batch per round
-              .write.mode("append").parquet(staged)
+              .write.mode("append").parquet(staged.dir)
           }
           Streams.awaitDrained(q)
           q.stop()
@@ -959,9 +939,7 @@ object StreamingQueries extends QueryPack {
         // the batch gate. The gate column is the SAME expression object
         // as t09's (QualityQueries.gopherKeep), so batch and streaming
         // tiers can never drift.
-        val staged = Streams.dataDir("graft_docs_qg_")
-        Tables(spark, dir).documents.repartition(2)
-          .write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(Tables(spark, dir).documents.repartition(2), "graft_docs_qg_")
         Streams.withStreamShufflePartitions(spark) {
           val docStream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
           val agg = docStream
@@ -987,8 +965,7 @@ object StreamingQueries extends QueryPack {
         // land, instead of re-scanning the corpus afterwards.
         import graft.dedup.DedupQueries.{shingles, shingleRows}
         val docs = Tables(spark, dir).documents
-        val staged = Streams.dataDir("graft_docs_decon_")
-        docs.repartition(2).write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(docs.repartition(2), "graft_docs_decon_")
         Streams.withStreamShufflePartitions(spark) {
           val evalSh = docs.filter(col("doc_id") % 50 === 0)
             .select(shingleRows(col("text"), 4).as("sh")).distinct()
@@ -1039,8 +1016,7 @@ object StreamingQueries extends QueryPack {
           array_min(array(codebook.map { case (cid, cv) =>
             struct(distTo(cv, m).as("d"), lit(cid).as("cid"))
           }: _*))
-        val staged = Streams.dataDir("graft_emb_pq_")
-        t.embeddings.repartition(2).write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(t.embeddings.repartition(2), "graft_emb_pq_")
         Streams.withStreamShufflePartitions(spark) {
           val encoded = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
             .select(col("vec_id"),
@@ -1172,9 +1148,8 @@ object StreamingQueries extends QueryPack {
             struct((-csimTo(cv)).as("ns"), lit(cid).as("cid"))
           }: _*)), 1, 2),
           s => s.getField("cid"))
-        val staged = Streams.dataDir("graft_annq_")
-        t.embeddings.filter(col("vec_id") % 100 === 0)
-          .repartition(2).write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(t.embeddings.filter(col("vec_id") % 100 === 0).repartition(2),
+          "graft_annq_")
         val out = Streams.dataDir("graft_annserve_out_")
         val cp = Streams.scratchDir("graft_cp_st19")
         Streams.withStreamShufflePartitions(spark) {
@@ -1330,11 +1305,8 @@ object StreamingQueries extends QueryPack {
         val arrDir = Streams.dataDir("graft_st21b_shs_")
         writeGateArtifacts(docs.filter(col("doc_id") < v1),
           indexDir, arrDir, mode = "overwrite")
-        def stage(batch: org.apache.spark.sql.DataFrame): String = {
-          val d = Streams.dataDir("graft_st21b_topic_")
-          batch.repartition(2).write.mode("overwrite").parquet(d)
-          d
-        }
+        def stage(batch: org.apache.spark.sql.DataFrame): Streams.Staged =
+          Streams.stage(batch.repartition(2), "graft_st21b_topic_")
         val batch1 = docs.filter(col("doc_id") >= v1 && col("doc_id") < v2)
         val flagged1 = dedupGateDrain(spark, stage(batch1), indexDir, arrDir)
           .localCheckpoint() // pin before the memory sink is reused below
@@ -1547,10 +1519,9 @@ object StreamingQueries extends QueryPack {
         // row-count bound asserted).
         import graft.operators.ProfilingQueries
         val o = Tables(spark, dir).orders
-        val staged = Streams.dataDir("graft_orders_stage_")
-        o.repartition(4).write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(o.repartition(4), "graft_orders_stage_")
         val store = Streams.dataDir("graft_profile_live_")
-        liveProfileDrain(spark, staged, store, o.schema, compactEvery = 3)
+        liveProfileDrain(spark, staged, store, compactEvery = 3)
         ProfilingQueries.auditedMergedProfile(readStore(spark, store), o)
       },
       Some(graft.operators.ProfilingQueries.auditedProfileOracle),
@@ -1637,12 +1608,11 @@ object StreamingQueries extends QueryPack {
         val sc = ProfilingQueries.suggestConstraints(
           o.filter(col("o_orderkey") < split),
           kinds = ProfilingQueries.rowLocalRuleKinds)
-        val staged = Streams.dataDir("graft_orders_gate_")
         // two staged slices (st06's reasoning): each extra micro-batch
         // replays the gate's replay-guard read + store commit; per-batch
         // evaluation + fold only needs the slice split across >1 batch
-        o.filter(col("o_orderkey") >= split)
-          .repartition(2).write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(o.filter(col("o_orderkey") >= split).repartition(2),
+          "graft_orders_gate_")
         val store = Streams.dataDir("graft_constraint_store_")
         Streams.withStreamShufflePartitions(spark) {
           val q = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
@@ -1790,9 +1760,8 @@ object StreamingQueries extends QueryPack {
             graft.analysis.QualityQueries.dsirTokens(
               docs.filter(col("doc_id") < splitId)))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-        val staged = Streams.dataDir("graft_docs_ig_")
-        docs.filter(col("doc_id") >= splitId).repartition(2)
-          .write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(docs.filter(col("doc_id") >= splitId).repartition(2),
+          "graft_docs_ig_")
         Streams.withStreamShufflePartitions(spark) {
           val toks = filter(split(col("text"), " "),
             w => length(w) > 0)
@@ -1866,8 +1835,7 @@ object StreamingQueries extends QueryPack {
             .select(col("user_id"), col("cents"), lit(-1L).as("sgn"))
           .unionByName(ev.filter(col("event_id") >= split)
             .select(col("user_id"), col("cents"), lit(1L).as("sgn")))
-        val staged = Streams.dataDir("graft_st34_log_")
-        log.repartition(3).write.mode("overwrite").parquet(staged)
+        val staged = Streams.stage(log.repartition(3), "graft_st34_log_")
         val store = Streams.dataDir("graft_st34_deltas_")
         Streams.withStreamShufflePartitions(spark) {
           val q = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)

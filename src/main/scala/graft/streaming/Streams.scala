@@ -3,6 +3,7 @@ package graft.streaming
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.Files
 
 /** Stream-source abstraction (SURVEY §7 "Kafka absence locally").
@@ -143,6 +144,36 @@ object Streams {
     graft.core.GraftSession.withConf(spark, kvs: _*)(body)
   }
 
+  /** A staged stream-source dir and the schema of the frame written
+    * into it: a stream over it reads that schema instead of inferring
+    * one, which would run a Spark job every time a stream starts. */
+  final case class Staged(dir: String, schema: StructType)
+
+  /** `df` written as a fresh staged dir named after `prefix`. */
+  def stage(df: DataFrame, prefix: String): Staged = {
+    val out = dataDir(prefix)
+    df.write.mode("overwrite").parquet(out)
+    Staged(out, df.schema)
+  }
+
+  /** `make`'s staged artifacts, once per thread's session and `key`: the
+    * dirs ride in the SparkContext's local property `key` (comma-joined)
+    * and the staged frame's schema in `key.schema`. */
+  def stagedOnce(spark: SparkSession, key: String)(make: => (Staged, Seq[String]))
+      : (Staged, Seq[String]) = {
+    val sc = spark.sparkContext
+    (Option(sc.getLocalProperty(key)), Option(sc.getLocalProperty(s"$key.schema"))) match {
+      case (Some(dirs), Some(json)) =>
+        val parts = dirs.split(",").toSeq
+        (Staged(parts.head, DataType.fromJson(json).asInstanceOf[StructType]), parts.tail)
+      case _ =>
+        val (staged, rest) = make
+        sc.setLocalProperty(key, (staged.dir +: rest).mkString(","))
+        sc.setLocalProperty(s"$key.schema", staged.schema.json)
+        (staged, rest)
+    }
+  }
+
   /** Stage the `events` table as a multi-file parquet dir so the file
     * source produces several micro-batches (one per trigger with
     * maxFilesPerTrigger=1). Files are RANGE-partitioned on `ts` (file i =
@@ -150,33 +181,32 @@ object Streams {
     * micro-batches arrive in event-time order — no cross-batch
     * late-data drops, which keeps watermarked append-mode results equal
     * to the batch oracle. Staged once per (session, sfDir). */
-  def stageEvents(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
-    val key = s"graft.staged.events.$dir"
-    Option(spark.sparkContext.getLocalProperty(key)).getOrElse {
-      val out = stageEventsFresh(spark, dir, nFiles)
-      spark.sparkContext.setLocalProperty(key, out)
-      out
-    }
-  }
+  def stageEvents(spark: SparkSession, dir: String, nFiles: Int = 4): Staged =
+    stagedOnce(spark, s"graft.staged.events.$dir")(
+      (stageEventsFresh(spark, dir, nFiles), Nil))._1
 
   /** Fresh (uncached) staging — for queries that append sentinel files
     * to their own source dir and must not pollute the shared staging. */
-  def stageEventsFresh(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
-    val out = dataDir("graft_events_stage_")
-    Tables(spark, dir).events
+  def stageEventsFresh(spark: SparkSession, dir: String, nFiles: Int = 4): Staged = {
+    val staged = stage(Tables(spark, dir).events
       .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("ts"))
-      .sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(out)
+      .sortWithinPartitions("ts"), "graft_events_stage_")
     // FileStreamSource processes files ordered by (mtime, path); parquet
     // part files land with near-identical mtimes, which would randomize
     // batch order and cause watermark late-drops. Force mtimes to follow
     // part-file order (= ts-range order from repartitionByRange).
-    val parts = new java.io.File(out).listFiles()
+    orderByPartName(staged.dir)
+    staged
+  }
+
+  /** Force the part files of `dir` to mtimes in part-file order, an hour
+    * back and 10 s apart, so the file source consumes them in that order. */
+  def orderByPartName(dir: String): Unit = {
+    val parts = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .sortBy(_.getName)
     val base = System.currentTimeMillis() - 3600000L
     parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 10000L) }
-    out
   }
 
   /** Append `df` to a staged stream-source dir as ONE file whose mtime is
@@ -210,14 +240,12 @@ object Streams {
                    maxFilesPerTrigger: Int = 1): DataFrame =
     streamFromStaged(spark, stageEvents(spark, dir), maxFilesPerTrigger)
 
-  def streamFromStaged(spark: SparkSession, staged: String,
-                       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(staged).schema
+  def streamFromStaged(spark: SparkSession, staged: Staged,
+                       maxFilesPerTrigger: Int = 1): DataFrame =
     spark.readStream
-      .schema(schema)
+      .schema(staged.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(staged)
-  }
+      .parquet(staged.dir)
 
   /** Drain a bounded stream into an in-memory sink table and return its
     * final contents. `processAllAvailable` gives the synchronous bounded

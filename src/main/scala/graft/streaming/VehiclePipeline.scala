@@ -119,24 +119,18 @@ object VehiclePipeline extends QueryPack {
     * document, range-split into nFiles time-slices with forced mtime
     * order (same rationale as Streams.stageEventsFresh — the file
     * source processes (mtime, path)-ordered). */
-  def stageFrames(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
+  def stageFrames(spark: SparkSession, dir: String, nFiles: Int = 4): Streams.Staged = {
     import spark.implicits._
-    val out = Streams.dataDir("graft_frames_stage_")
-    Tables(spark, dir).documents.select(col("doc_id"))
+    val staged = Streams.stage(Tables(spark, dir).documents.select(col("doc_id"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .as[Long]
       .mapPartitions(_.map(id => (s"cam_${id % 4}", frameJson(id), id)))
       .toDF("key", "value", "doc_id")
       .repartitionByRange(nFiles, col("doc_id"))
       .sortWithinPartitions("doc_id")
-      .select("key", "value")
-      .write.mode("overwrite").parquet(out)
-    val parts = new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    val base = System.currentTimeMillis() - 3600000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 10000L) }
-    out
+      .select("key", "value"), "graft_frames_stage_")
+    Streams.orderByPartName(staged.dir)
+    staged
   }
 
   /** Run the full pipeline against a fresh Derby database and return
@@ -169,7 +163,7 @@ object VehiclePipeline extends QueryPack {
     Seq(1000000000L).foreach { off =>
       Streams.appendOrderedFile(
         Seq(("__flush__", sentinelJson(baseEpoch + off))).toDF("key", "value"),
-        staged)
+        staged.dir)
     }
     Streams.withStreamShufflePartitions(spark) {
       val stream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)

@@ -151,7 +151,7 @@ object PlanAudit {
       import graft.streaming.VehiclePipeline
       val staged = VehiclePipeline.stageFrames(spark, sfDir)
       val plan = capturePlan(VehiclePipeline.windowedCounts(
-        VehiclePipeline.detectFrames(spark.read.parquet(staged))))
+        VehiclePipeline.detectFrames(spark.read.parquet(staged.dir))))
       sb.append("\n## st25_vehicle_pipeline (batch twin) — decode/detect/explode map-side; ONE shuffle of counts\n\n")
       sb.append(s"```\n$plan\n```\n")
     }
@@ -233,10 +233,11 @@ object PlanAudit {
       sb.append(s"```\n$plan\n```\n")
     }
     // src17's registry entry returns audit literals; the plan worth
-    // auditing is the DV-SERVED READ — the full data scan anti-joined
-    // against the broadcast (file, position) deletion vectors: the DV
-    // side must broadcast (O(deleted rows), sparse) and the data side
-    // must never shuffle.
+    // auditing is the DV-SERVED READ — the full data scan filtered by
+    // the broadcast (file, position) deletion vectors: the DV positions
+    // are read on the driver and broadcast (O(deleted rows), sparse), so
+    // no DV scan or join enters the plan, and the data side must never
+    // shuffle.
     locally {
       import graft.sources.SnapshotCatalog
       import org.apache.spark.sql.functions._
@@ -250,7 +251,7 @@ object PlanAudit {
       val plan = capturePlan(SnapshotCatalog.readSnapshotWithDeletes(spark, root)
         .agg(count(lit(1)).as("n_rows"),
           graft.functions.Canon.sumCents(col("value")).as("sum_value_cents")))
-      sb.append(s"\n## src17_deletion_vectors (DV-served read) — broadcast anti-join subtracts $nDel positions; data files unrewritten, fact side unshuffled\n\n")
+      sb.append(s"\n## src17_deletion_vectors (DV-served read) — broadcast position filter drops $nDel positions; data files unrewritten, fact side unshuffled\n\n")
       sb.append(s"```\n$plan\n```\n")
     }
     // src22's registry entry returns audit literals; the plan worth
@@ -337,7 +338,7 @@ object PlanAudit {
     // st41's registry entry returns audit literals; the plan worth
     // auditing is ONE ROW-LEVEL CDC POLL across a DV-delete commit —
     // the retraction side scans only the files the deleted positions
-    // reference and semi-joins the O(deleted) position set.
+    // reference and keeps only the O(deleted) broadcast positions.
     locally {
       import graft.sources.SnapshotCatalog
       import org.apache.spark.sql.functions._
@@ -353,7 +354,7 @@ object PlanAudit {
           .groupBy("_change_type")
           .agg(count(lit(1)).as("n"),
             graft.functions.Canon.sumCents(col("value")).as("cents")))
-      sb.append(s"\n## st41_catalog_cdc_ivm (one row-level CDC poll) — $nDel retractions materialized from DV positions semi-joined back; table never rescanned\n\n")
+      sb.append(s"\n## st41_catalog_cdc_ivm (one row-level CDC poll) — $nDel retractions materialized by a broadcast DV-position filter; table never rescanned\n\n")
       sb.append(s"```\n$plan\n```\n")
     }
     // st38's registry entry returns audit literals; the plan worth

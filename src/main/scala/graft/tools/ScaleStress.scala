@@ -433,12 +433,11 @@ object ScaleStress {
         }
         // st29: stage once (untimed ingest-side work), time the drain
         // with in-loop compaction, then record the store's size
-        val staged = graft.streaming.Streams.dataDir(s"graft_stress_st29s_x$kk")
-        o.repartition(4).write.mode("overwrite").parquet(staged)
+        val staged = graft.streaming.Streams.stage(o.repartition(4), s"graft_stress_st29s_x$kk")
         val live = graft.streaming.Streams.dataDir(s"graft_stress_st29l_x$kk")
         maybeTimed("st29_live_drain") {
           graft.streaming.StreamingQueries.liveProfileDrain(
-            spark, staged, live, o.schema, compactEvery = 3)
+            spark, staged, live, compactEvery = 3)
         }
         if (record) {
           import graft.sources.SnapshotCatalog

@@ -572,7 +572,7 @@ class CatalogHardeningSpec extends SparkTestBase {
     assert(nRead == 1L)
   }
 
-  // -- size-gated DV anti-join on the planner-integrated serve path -------
+  // -- size-gated DV application on the planner-integrated serve path -----
 
   test("snapshotDF degrades the DV anti-join to a shuffle past the broadcast gate; broadcasts under it") {
     val root = graft.streaming.Streams.dataDir("graft_dvgate_")
@@ -586,11 +586,12 @@ class CatalogHardeningSpec extends SparkTestBase {
       val got = df.collect().map(_.getLong(0)).toSet
       (got, df.queryExecution.executedPlan.toString)
     }
-    // under the gate (default 64 MB): DV side broadcasts
+    // under the gate (default 64 MB): the DV positions are broadcast to a
+    // filter, with no join
     val (gotB, planB) = servedPlan()
     assert(gotB == expect)
-    assert(planB.contains("BroadcastHashJoin") && planB.contains("LeftAnti"),
-      s"small DV set should broadcast:\n$planB")
+    assert(planB.contains("dv_listed") && !planB.contains("Join"),
+      s"small DV set should be a broadcast position filter:\n$planB")
     // past the gate the DV side is merge-hinted: the frame built under
     // a 1-byte ceiling plans a shuffle even once the ceiling is back at
     // 64 MB, where an unhinted kilobyte side would auto-broadcast
@@ -601,14 +602,15 @@ class CatalogHardeningSpec extends SparkTestBase {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("SortMergeJoin") && p.contains("LeftAnti"),
         s"DV side past the gate must shuffle:\n$p")
-      assert(!p.contains("BroadcastHashJoin"),
+      assert(!p.contains("BroadcastHashJoin") && !p.contains("dv_listed"),
         s"DV side past the gate must not broadcast:\n$p")
     }
     // a session that disables broadcasting gets no gated broadcast
     val (gotOff, planOff) = graft.core.GraftSession.withConf(spark,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")(servedPlan())
     assert(gotOff == expect)
-    assert(!planOff.contains("BroadcastHashJoin"),
+    assert(planOff.contains("LeftAnti") && !planOff.contains("BroadcastHashJoin") &&
+        !planOff.contains("dv_listed"),
       s"a disabled threshold must mean no DV broadcast:\n$planOff")
   }
 
@@ -619,22 +621,25 @@ class CatalogHardeningSpec extends SparkTestBase {
     SnapshotCatalog.append((1L to 100L).toDF("id").coalesce(1), root, "b0")
     SnapshotCatalog.deleteWhere(spark, root, col("id") % 2 === 0L)
     // every later deleteWhere matches against the live rows, so its DV
-    // batch write carries the anti join against the DVs already present
+    // batch write carries the DVs already present: a position filter
+    // under the gate, an anti join past it
+    def appliesDvs(p: String) = p.contains("LeftAnti") || p.contains("dv_listed")
     def dvJoinPlan(cond: org.apache.spark.sql.Column): String =
       capturePlans(SnapshotCatalog.deleteWhere(spark, root, cond))(
-          _.exists(_.executedPlan.toString.contains("LeftAnti")))._2
-        .map(_.executedPlan.toString).filter(_.contains("LeftAnti")).mkString("\n")
+          _.exists(qe => appliesDvs(qe.executedPlan.toString)))._2
+        .map(_.executedPlan.toString).filter(appliesDvs).mkString("\n")
     val under = dvJoinPlan(col("id") % 3 === 0L)
-    assert(under.contains("BroadcastHashJoin"),
-      s"under the gate the DML DV join should broadcast:\n$under")
+    assert(under.contains("dv_listed") && !under.contains("LeftAnti"),
+      s"under the gate the DML DVs should be a broadcast position filter:\n$under")
     // AQE's runtime broadcast stays on past the gate; the merge hint
     // must still hold the join to a shuffle
     val past = pastTheGate(dvJoinPlan(col("id") % 5 === 0L))
-    assert(past.contains("SortMergeJoin") && !past.contains("BroadcastHashJoin"),
+    assert(past.contains("SortMergeJoin") && !past.contains("BroadcastHashJoin") &&
+        !past.contains("dv_listed"),
       s"past the gate the DML DV join must shuffle:\n$past")
     val off = graft.core.GraftSession.withConf(spark,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")(dvJoinPlan(col("id") % 7 === 0L))
-    assert(!off.contains("BroadcastHashJoin"),
+    assert(off.contains("LeftAnti") && !off.contains("BroadcastHashJoin") && !off.contains("dv_listed"),
       s"a disabled threshold must mean no DML DV broadcast:\n$off")
     val expect = (1L to 100L)
       .filter(i => i % 2 != 0 && i % 3 != 0 && i % 5 != 0 && i % 7 != 0)

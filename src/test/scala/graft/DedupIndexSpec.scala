@@ -146,11 +146,8 @@ class DedupIndexSpec extends SparkTestBase {
     StreamingQueries.writeGateArtifacts(
       docs.filter(col("doc_id") < 10), indexDir, arrDir, mode = "overwrite")
 
-    def stage(batch: org.apache.spark.sql.DataFrame): String = {
-      val d = Streams.dataDir("graft_st21b_topic_")
-      batch.repartition(1).write.mode("overwrite").parquet(d)
-      d
-    }
+    def stage(batch: org.apache.spark.sql.DataFrame): Streams.Staged =
+      Streams.stage(batch.repartition(1), "graft_st21b_topic_")
     def drainFlagged(batch: org.apache.spark.sql.DataFrame): Set[Long] =
       StreamingQueries.dedupGateDrain(spark, stage(batch), indexDir, arrDir)
         .collect().map(_.getLong(0)).toSet

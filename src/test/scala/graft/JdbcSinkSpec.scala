@@ -123,7 +123,7 @@ class JdbcSinkSpec extends SparkTestBase {
     // whole lifecycle claim
     val staged = VehiclePipeline.stageFrames(spark, sfDir)
     val batch = VehiclePipeline.windowedCounts(
-        VehiclePipeline.detectFrames(spark.read.parquet(staged)))
+        VehiclePipeline.detectFrames(spark.read.parquet(staged.dir)))
       .collect().map(_.toSeq).toSet
     assert(got === batch, "streamed table != batch twin")
     // DDL fidelity: createTableColumnTypes must have produced VARCHAR
@@ -229,7 +229,7 @@ class JdbcSinkSpec extends SparkTestBase {
         Seq(("__flush__",
           VehiclePipeline.sentinelJson(VehiclePipeline.baseEpoch + off)))
           .toDF("key", "value")
-          .coalesce(1).write.mode("append").parquet(staged)
+          .coalesce(1).write.mode("append").parquet(staged.dir)
         assert(Streams.awaitDrained(q1) && Streams.awaitDrained(q2))
       }
       q1.stop(); q2.stop()
@@ -346,9 +346,8 @@ class JdbcSinkSpec extends SparkTestBase {
     // contents while the reference-default append shows the documented
     // duplicate.
     def run(idem: Boolean): Long = {
-      val staged = Streams.dataDir("graft_crash_src_")
-      Seq(1L, 2L).toDF("id").repartition(1).write.mode("append").parquet(staged)
-      Seq(3L, 4L).toDF("id").repartition(1).write.mode("append").parquet(staged)
+      val staged = Streams.stage(Seq(1L, 2L).toDF("id").repartition(1), "graft_crash_src_")
+      Seq(3L, 4L).toDF("id").repartition(1).write.mode("append").parquet(staged.dir)
       val url = s"jdbc:derby:${Streams.dataDir("graft_derby_crash_")}/db;create=true"
       val cp = Streams.scratchDir("graft_cp_crash_")
       val sink = JdbcBatchSink(url, "crash_sink", Map("driver" -> driver),
@@ -388,8 +387,7 @@ class JdbcSinkSpec extends SparkTestBase {
     val url = s"jdbc:derby:${Streams.dataDir("graft_derby_empty_")}/db;create=true"
     // a source dir whose only file produces zero rows after the filter →
     // every micro-batch is empty
-    val staged = Streams.dataDir("graft_jdbc_empty_src_")
-    Seq((1L, "x")).toDF("id", "s").write.mode("overwrite").parquet(staged)
+    val staged = Streams.stage(Seq((1L, "x")).toDF("id", "s"), "graft_jdbc_empty_src_")
     val stream = Streams.streamFromStaged(spark, staged).filter(col("id") < 0)
     val sink = JdbcBatchSink(url, "never_created",
       Map("driver" -> driver), Streams.scratchDir("graft_cp_jdbc_e_"))

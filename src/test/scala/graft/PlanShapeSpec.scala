@@ -304,7 +304,7 @@ class PlanShapeSpec extends SparkTestBase {
     import graft.streaming.VehiclePipeline
     val staged = VehiclePipeline.stageFrames(spark, sfDir)
     val df = VehiclePipeline.windowedCounts(
-      VehiclePipeline.detectFrames(spark.read.parquet(staged)))
+      VehiclePipeline.detectFrames(spark.read.parquet(staged.dir)))
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length

@@ -100,16 +100,23 @@ class SnapshotFileIndexSpec extends SparkTestBase {
     val root = stage("graft_fidxdv_")
     val (_, nDel) = SnapshotCatalog.deleteWhere(spark, root, col("id") % 2 === 0)
     assert(nDel == 30L)
-    val df = SnapshotFileIndex.snapshotDF(spark, root)
+    def served() = SnapshotFileIndex.snapshotDF(spark, root)
       .filter(col("id").between(25L, 34L))
+    val df = served()
     val got = df.collect().map(_.getLong(0)).toSet
     assert(got == (25L to 34L).filter(_ % 2 == 1).toSet,
       "DV-wrapped pruned read served deleted rows")
-    // total files touched = pruned data side (2 of 6) + the DV batch
-    // scan (1 file) — far under the 6 an unpruned data side would read
+    // total files touched = the pruned data side (2 of 6) — far under
+    // the 6 an unpruned data side would read; under the broadcast gate
+    // the DV batch is read on the driver, not scanned
     val scanned = SnapshotFileIndex.scannedFiles(df)
-    assert(scanned <= 4L && scanned >= 3L,
-      s"expected 2-of-6 data files + 1 DV file, got $scanned total")
+    assert(scanned <= 3L && scanned >= 2L,
+      s"expected 2-of-6 data files and no DV scan, got $scanned total")
+    // past the gate the DV join adds the DV batch scan (1 file)
+    val past = pastTheGate(served())
+    assert(past.collect().map(_.getLong(0)).toSet == got)
+    assert(SnapshotFileIndex.scannedFiles(past) == scanned + 1L,
+      s"expected the pruned data side + 1 DV file past the gate")
   }
 
   test("schema evolution composes: mergeSchema surfaces the accreted column; pruning still applies") {

@@ -120,9 +120,8 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.StreamingQueries
     val docs = graft.core.Tables(spark, sfDir).documents
     val splitId = graft.core.Tables.incrementalSplitId(docs, "doc_id")
-    val staged = Streams.dataDir("graft_scrub_spec_")
-    docs.filter(col("doc_id") >= splitId)
-      .repartition(2).write.mode("overwrite").parquet(staged)
+    val staged = Streams.stage(docs.filter(col("doc_id") >= splitId).repartition(2),
+      "graft_scrub_spec_")
     val indexDir = Streams.dataDir("graft_scrub_idx_")
     DedupQueries.chunkRelation(docs.filter(col("doc_id") < splitId))
       .select("chunk").distinct().write.mode("overwrite").parquet(indexDir)
@@ -167,12 +166,11 @@ class StreamingSpec extends SparkTestBase {
   test("st29: live profile store accumulates one partial per micro-batch; fold equals one-shot profile") {
     import graft.operators.ProfilingQueries._
     val o = graft.core.Tables(spark, sfDir).orders
-    val staged = Streams.dataDir("graft_orders_spec_")
-    o.repartition(4).write.mode("overwrite").parquet(staged)
+    val staged = Streams.stage(o.repartition(4), "graft_orders_spec_")
     import graft.streaming.StreamingQueries
     // control arm: no compaction — one partial row per micro-batch
     val store = Streams.dataDir("graft_profile_spec_")
-    StreamingQueries.liveProfileDrain(spark, staged, store, o.schema)
+    StreamingQueries.liveProfileDrain(spark, staged, store)
     val parts = graft.sources.SnapshotCatalog.readSnapshot(spark, store)
     // the stream really contributed per-micro-batch partials, and each
     // is one row — the O(1)-rows-per-batch write the design claims
@@ -195,7 +193,7 @@ class StreamingSpec extends SparkTestBase {
     // final report is identical to the uncompacted control arm.
     val storeC = Streams.dataDir("graft_profile_spec_c_")
     val observed = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    StreamingQueries.liveProfileDrain(spark, staged, storeC, o.schema,
+    StreamingQueries.liveProfileDrain(spark, staged, storeC,
       compactEvery = 3,
       onBatch = Some((n, rows) => observed.synchronized { observed += ((n, rows)) }))
     assert(observed.size >= 4, "expected at least 4 micro-batches")
