@@ -226,9 +226,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         sys.error(s"graft catalog: unsupported ALTER TABLE change $other " +
           "— re-types need an explicit rewrite")
     }
-    var attempt = 0
-    while (attempt < 100) {
-      val v = SnapshotCatalog.latestVersion(root)
+    SnapshotCatalog.commitLoop("alterTable", root) { v =>
       val cur = SnapshotCatalog.schemaAt(root, v).getOrElse(
         sys.error(s"$ident: schema not log-carried; ALTER needs an S-lined table"))
       val props = SnapshotCatalog.propertiesAt(root, v)
@@ -284,17 +282,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         cur.fields.filterNot(f => drops.contains(f.name)) ++ adds)
       val nextProps = props ++ setProps --
         unsetProps ++ drops.map(d => s"graft.dropped.$d" -> "true")
-      if (SnapshotCatalog.tryCommitEntries(root, v + 1, adds = Seq.empty,
-            removes = Seq.empty,
-            schemaJson = if (adds.nonEmpty || drops.nonEmpty)
-              Some(next.json) else None,
-            partJson = spec.map(_.json),
-            props = if (nextProps != props) Some(nextProps) else None,
-            schemaSet = drops.nonEmpty))
-        return GraftTable(root, ident.toString, None)
-      attempt += 1
+      Option.when(SnapshotCatalog.tryCommitEntries(root, v + 1, adds = Seq.empty,
+        removes = Seq.empty,
+        schemaJson = if (adds.nonEmpty || drops.nonEmpty)
+          Some(next.json) else None,
+        partJson = spec.map(_.json),
+        props = if (nextProps != props) Some(nextProps) else None,
+        schemaSet = drops.nonEmpty))(GraftTable(root, ident.toString, None))
     }
-    sys.error(s"alterTable on $ident lost 100 consecutive CAS races")
   }
 
   // ---- staged (atomic) CTAS / RTAS -----------------------------------
@@ -679,46 +674,28 @@ case class GraftStagedTable(root: String, fullName: String,
   override def commitStagedChanges(): Unit = {
     val (entries, schemaJson, partJson) = staged.getOrElse(
       sys.error(s"CTAS/RTAS on $fullName: nothing was staged"))
-    val adds = entries.distinct.sortBy(_.path)
     if (!replaceExisting) {
       // CREATE: the whole table IS this one version-1 commit
-      if (!SnapshotCatalog.tryCommitEntries(root, 1, adds = adds,
+      if (!SnapshotCatalog.tryCommitEntries(root, 1,
+            adds = entries.distinct.sortBy(_.path),
             removes = Seq.empty, schemaJson = schemaJson, partJson = partJson,
             props = if (extraProps.isEmpty) None else Some(extraProps)))
         throw new TableAlreadyExistsException(
           Identifier.of(Array.empty[String], fullName))
-    } else {
-      var attempt = 0
-      var done = false
-      while (!done && attempt < 100) {
-        val pv = SnapshotCatalog.latestVersionOption(root).getOrElse(0)
-        val prev =
-          if (pv == 0) Seq.empty else SnapshotCatalog.manifestFiles(root, pv)
+    } else
+      SnapshotCatalog.commitLoop("REPLACE TABLE", root) { pv =>
         if (pv == 0 && !orCreate)
           sys.error(s"REPLACE TABLE $fullName: the table vanished under " +
             "the staged replace")
-        // the rewrite physically removed any dropped column from the
-        // live files — clear tombstones the new schema re-introduces
-        // (same rule as SnapshotCatalog.replace)
-        val props0 = if (pv == 0) Map.empty[String, String]
-          else SnapshotCatalog.propertiesAt(root, pv)
-        val cleared = props0.filterNot { case (k, v) =>
-          (k.startsWith("graft.dropped.") && declaredSchema.fieldNames
-            .contains(k.stripPrefix("graft.dropped."))) ||
-          // REPLACE resets constraints whose columns the new schema no
-          // longer carries — keeping them would fail analysis on every
-          // subsequent write until a manual DROP CONSTRAINT
-          (k.startsWith("graft.constraints.") && !constraintResolves(v))
-        } ++ extraProps
-        done = SnapshotCatalog.tryCommitEntries(root, pv + 1, adds = adds,
-          removes = prev, dvReset = true,
-          schemaJson = schemaJson, partJson = partJson,
-          props = if (cleared != props0) Some(cleared) else None)
-        attempt += 1
+        // REPLACE also resets constraints whose columns the new schema
+        // no longer carries — keeping them would fail analysis on every
+        // subsequent write until a manual DROP CONSTRAINT
+        Option.when(SnapshotCatalog.tryReplaceAt(root, pv, entries,
+          schemaJson, partJson, declaredSchema.fieldNames.toSeq,
+          _.filterNot { case (k, v) =>
+            k.startsWith("graft.constraints.") && !constraintResolves(v)
+          } ++ extraProps))(())
       }
-      if (!done)
-        sys.error(s"REPLACE TABLE $fullName lost 100 consecutive CAS races")
-    }
   }
 
   override def abortStagedChanges(): Unit = {

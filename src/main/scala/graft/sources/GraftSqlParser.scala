@@ -350,19 +350,19 @@ case class GraftClusterByCommand(nameParts: Seq[String], cols: Seq[String])
     AttributeReference("version", IntegerType, nullable = false)())
   override def run(spark: SparkSession): Seq[org.apache.spark.sql.Row] = {
     val root = GraftSqlParser.rootOf(spark, nameParts)
-    val v0 = SnapshotCatalog.latestVersion(root)
-    val schema = SnapshotCatalog.schemaAt(root, v0).getOrElse(
-      sys.error(s"${nameParts.mkString(".")}: schema not log-carried"))
-    cols.filterNot(schema.fieldNames.contains) match {
-      case Seq() => ()
-      case bad => sys.error(s"CLUSTER BY column(s) ${bad.mkString(", ")} " +
-        "not in the table's schema")
-    }
-    val props = SnapshotCatalog.propertiesAt(root, v0)
-    val next =
+    // checked and edited per commit attempt, against the version the
+    // commit follows: a racing DROP COLUMN or property edit is seen
+    val v = SnapshotCatalog.updateProperties(root) { (v, props) =>
+      val schema = SnapshotCatalog.schemaAt(root, v).getOrElse(
+        sys.error(s"${nameParts.mkString(".")}: schema not log-carried"))
+      cols.filterNot(schema.fieldNames.contains) match {
+        case Seq() => ()
+        case bad => sys.error(s"CLUSTER BY column(s) ${bad.mkString(", ")} " +
+          "not in the table's schema")
+      }
       if (cols.isEmpty) props - "graft.clusterBy"
       else props + ("graft.clusterBy" -> cols.mkString(","))
-    val v = SnapshotCatalog.setProperties(root, next)
+    }
     Seq(org.apache.spark.sql.Row(v))
   }
 }

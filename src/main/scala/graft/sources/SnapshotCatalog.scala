@@ -47,10 +47,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     replays: a batch dir any surviving version references is never
   *     rewritten — the already-committed file list is returned instead;
   *   - a commit publishes version N exclusively: two racing committers
-  *     cannot both land on N. [[commitRetry]] is the optimistic
-  *     transaction loop — on collision it re-reads the new latest
-  *     state and re-applies its delta at N+1, so concurrent appenders
-  *     both succeed and neither's files are lost. Exclusivity comes from
+  *     cannot both land on N. [[commitLoop]] is the one optimistic
+  *     transaction loop every write past version 1 publishes through —
+  *     on collision it re-reads the new latest state, re-checks the op
+  *     against it and re-applies its delta at N+1, so concurrent
+  *     appenders both succeed and neither's files are lost. Exclusivity comes from
   *     the [[AtomicPublish]] seam below — NOT from a JVM lock — so it
   *     holds across drivers (two independent jobs racing on one table);
   *   - time travel = resolving an old version, which stays valid until
@@ -184,7 +185,7 @@ object SnapshotCatalog {
     * version) when the destination EXISTS after the failed create;
     * any other IOException — a transient store error, a permission
     * failure — is rethrown, because silently mapping it to "lost" would
-    * make [[commitRetry]] spin re-reading an unchanged latest version
+    * make [[commitLoop]] spin re-reading an unchanged latest version
     * and mask the real fault. */
   object ConditionalPutPublish extends AtomicPublish {
     def publish(fs: FileSystem, tmp: Path, dest: Path): Boolean = {
@@ -343,8 +344,11 @@ object SnapshotCatalog {
   }
 
   def latestVersion(root: String): Int =
-    latestVersionOption(root).getOrElse(
-      sys.error(s"no committed version under $root"))
+    latestVersionOption(root).getOrElse(noTable(root))
+
+  /** The refusal of an op that needs a table at a root holding none. */
+  private def noTable(root: String): Nothing =
+    sys.error(s"no committed version under $root")
 
   /** True once the root has at least one committed version. */
   def isTable(root: String): Boolean = latestVersionOption(root).isDefined
@@ -767,7 +771,7 @@ object SnapshotCatalog {
     * joined, `removes` dropped, relative to v−1). Returns false
     * (leaving no residue) when `v` is already taken — the caller's cue
     * to re-read the latest state and retry at the next version
-    * ([[commitRetry]]). The publish is tmp-write + an exclusive
+    * ([[commitLoop]]). The publish is tmp-write + an exclusive
     * publish ([[AtomicPublish]]), so a reader never observes a
     * partially written manifest and two committers never both land on
     * `v` — across threads AND processes. The winner writes a full
@@ -775,11 +779,8 @@ object SnapshotCatalog {
     * race, or crashing before it, is harmless — checkpoints are derived
     * data and readers just replay more deltas). */
   def tryCommit(root: String, v: Int,
-                adds: Seq[String], removes: Seq[String],
-                dvAdds: Seq[String] = Seq.empty,
-                dvReset: Boolean = false): Boolean =
-    tryCommitEntries(root, v, adds.map(FileEntry(_)), removes,
-      dvAdds.map(FileEntry(_)), dvReset)
+                adds: Seq[String], removes: Seq[String]): Boolean =
+    tryCommitEntries(root, v, adds.map(FileEntry(_)), removes)
 
   /** [[tryCommit]] with the full per-file metadata record — sizes,
     * typed stats, the batch's schema and the table's partition spec —
@@ -838,6 +839,42 @@ object SnapshotCatalog {
     val expired = v > 1 && !commitExists(root, v - 1) && !checkpointExists(root, v)
     if (expired) { val p = commitPath(root, v); fsFor(p).delete(p, false) }
     expired
+  }
+
+  /** THE optimistic commit loop: every catalog write past version 1
+    * publishes through it (the Delta `OptimisticTransaction.commit`
+    * shape). Each attempt reads the latest version `v` (0 before the
+    * first commit) and runs `step(v)`, which re-checks the op against
+    * `v` — throwing to refuse — and tries to publish `v + 1`:
+    * `Some(result)` ends the loop (a win, or a no-op), `None` is a lost
+    * race, retried against the new latest. After 100 lost races the op
+    * gives up.
+    *
+    * An op that ends without publishing — a refusal or the give-up —
+    * deletes what it staged: its DV batch `dv` and its data batch
+    * `batch` ([[discardStaged]] keeps any that a version references). A
+    * non-race IOException (a store outage) aborts at once and keeps
+    * them: the publish may have won before its checkpoint write threw. */
+  private[sources] def commitLoop[A](op: String, root: String,
+                                     dv: Option[StagedDv] = None,
+                                     batch: Option[String] = None)(
+                                     step: Int => Option[A]): A = {
+    var attempt = 0
+    while (attempt < 100) {
+      val v = latestVersionOption(root).getOrElse(0)
+      val result =
+        try step(v)
+        catch {
+          case e: java.io.IOException => throw e
+          case e: Exception => discardStaged(root, dv, batch); throw e
+        }
+      result match {
+        case Some(a) => return a
+        case None => attempt += 1
+      }
+    }
+    discardStaged(root, dv, batch)
+    sys.error(s"$op on $root lost 100 consecutive CAS races")
   }
 
   /** Write the full-state checkpoint for `v`: the resolved data-file
@@ -1000,21 +1037,19 @@ object SnapshotCatalog {
   def properties(root: String): Map[String, String] =
     latestVersionOption(root).map(propertiesAt(root, _)).getOrElse(Map.empty)
 
-  /** Publish a new FULL properties map as one metadata-only commit
-    * (CAS-retried; the caller composes read-modify-write on top —
-    * concurrent writers both land, last `K` line wins). Returns the
-    * committed version. */
-  def setProperties(root: String, props: Map[String, String]): Int = {
-    var attempt = 0
-    while (attempt < 100) {
-      val v = latestVersion(root)
-      if (tryCommitEntries(root, v + 1, adds = Seq.empty,
-            removes = Seq.empty, props = Some(props)))
-        return v + 1
-      attempt += 1
+  /** Read-modify-write the table's properties as one metadata-only
+    * commit: `edit(v, props)` maps version `v`'s properties to the new
+    * full map inside every attempt of [[commitLoop]], against the
+    * version the commit follows — so a racing property commit is
+    * re-read, never overwritten by a stale map. `edit` refuses by
+    * throwing. Returns the committed version. */
+  def updateProperties(root: String)(
+      edit: (Int, Map[String, String]) => Map[String, String]): Int =
+    commitLoop("updateProperties", root) { v =>
+      if (v == 0) noTable(root)
+      Option.when(tryCommitEntries(root, v + 1, adds = Seq.empty,
+        removes = Seq.empty, props = Some(edit(v, propertiesAt(root, v)))))(v + 1)
     }
-    sys.error(s"setProperties on $root lost 100 consecutive CAS races")
-  }
 
   /** The CHECK constraints in force: name → SQL expression text
     * (properties under the `graft.constraints.` namespace). */
@@ -1060,10 +1095,7 @@ object SnapshotCatalog {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name must be an identifier, got '$name'")
     val key = s"graft.constraints.$name"
-    var attempt = 0
-    while (attempt < 100) {
-      val v = latestVersion(root)
-      val props = propertiesAt(root, v)
+    updateProperties(root) { (v, props) =>
       if (props.contains(key))
         sys.error(s"constraint $name already exists on $root " +
           s"(${props(key)}); DROP CONSTRAINT first")
@@ -1074,30 +1106,19 @@ object SnapshotCatalog {
       if (violations > 0)
         sys.error(s"cannot ADD CONSTRAINT $name CHECK ($cond) on $root: " +
           "existing rows violate it")
-      if (tryCommitEntries(root, v + 1, adds = Seq.empty,
-            removes = Seq.empty, props = Some(props + (key -> cond))))
-        return v + 1
-      attempt += 1
+      props + (key -> cond)
     }
-    sys.error(s"addConstraint on $root lost 100 consecutive CAS races")
   }
 
   /** Drop a CHECK constraint (metadata-only properties commit);
     * unknown names refuse loudly (the Delta behavior). */
   def dropConstraint(root: String, name: String): Int = {
     val key = s"graft.constraints.$name"
-    var attempt = 0
-    while (attempt < 100) {
-      val v = latestVersion(root)
-      val props = propertiesAt(root, v)
+    updateProperties(root) { (_, props) =>
       if (!props.contains(key))
         sys.error(s"no constraint named $name on $root")
-      if (tryCommitEntries(root, v + 1, adds = Seq.empty,
-            removes = Seq.empty, props = Some(props - key)))
-        return v + 1
-      attempt += 1
+      props - key
     }
-    sys.error(s"dropConstraint on $root lost 100 consecutive CAS races")
   }
 
   /** Commit `files` as the complete next snapshot, CAS-retrying past
@@ -1109,67 +1130,37 @@ object SnapshotCatalog {
   def commit(root: String, files: Seq[String]): Int =
     commitRetry(root)(_ => files)
 
-  /** The optimistic transaction loop: compute the next snapshot's file
-    * list FROM the current latest (`delta(prevFiles)`), publish the
-    * O(changed-files) difference exclusively at latest+1, and on
-    * collision re-read the new latest and re-apply the delta — so
-    * concurrent appenders serialize without losing each other's files.
-    * Returns the committed version. */
-  def commitRetry(root: String, maxAttempts: Int = 100)(
-      delta: Seq[String] => Seq[String]): Int = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val pv = latestVersionOption(root).getOrElse(0)
+  /** Commit the snapshot `delta(prevFiles)` computes FROM the current
+    * latest: each [[commitLoop]] attempt publishes the O(changed-files)
+    * difference at latest+1, re-applying the delta to a new latest on
+    * collision — so concurrent appenders serialize without losing each
+    * other's files. Returns the committed version. */
+  def commitRetry(root: String)(delta: Seq[String] => Seq[String]): Int =
+    commitLoop("commit", root) { pv =>
       val prev = if (pv == 0) Seq.empty else manifestFiles(root, pv)
       val next = delta(prev).distinct.sorted
       val prevSet = prev.toSet
       val nextSet = next.toSet
-      if (tryCommit(root, pv + 1,
-            adds = next.filterNot(prevSet),
-            removes = prev.filterNot(nextSet))) return pv + 1
-      attempt += 1
+      Option.when(tryCommit(root, pv + 1,
+        adds = next.filterNot(prevSet), removes = prev.filterNot(nextSet)))(pv + 1)
     }
-    sys.error(s"commit on $root lost $maxAttempts consecutive CAS races")
-  }
 
-  /** Append-only fast path: commit `files` as pure adds WITHOUT
-    * resolving the previous version at all — the per-micro-batch commit
-    * cost of a streaming ingest is O(batch files) in bytes written AND
-    * in metadata read (one version listing per attempt), flat in table
-    * size. Sound only because the files live in a fresh batch dir, so
-    * they are disjoint from every prior version by construction. */
-  private def commitAppendEntries(root: String, entries: Seq[FileEntry],
-                                  schemaJson: Option[String],
-                                  partJson: Option[String],
-                                  maxAttempts: Int = 100,
-                                  expectSpec: Option[Option[StructType]] = None)
-      : Int = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val pv = latestVersionOption(root).getOrElse(0)
-      // the staged batch's LAYOUT is fixed by the time we commit, so
-      // the spec check must hold against the version we actually land
-      // on: a concurrent replace changing the spec between [[append]]'s
-      // pre-stage check and the winning commit would otherwise produce
-      // exactly the mixed hive/flat layout the check exists to prevent
-      // — re-validate inside every CAS attempt (observed-latest), fail
-      // loudly if the table's spec moved under the append
-      expectSpec.foreach { expected =>
-        val cur =
-          if (pv == 0) None
-          else partitionSpecAt(root, pv).map(specShape)
-        if (pv != 0 && cur != expected.map(specShape))
-          sys.error(s"append on $root: the table's partition spec changed " +
-            s"under the append (now $cur, staged for ${expected.map(specShape)}) " +
-            "— restage against the new spec")
-      }
-      if (tryCommitEntries(root, pv + 1,
-            adds = entries.distinct.sortBy(_.path), removes = Seq.empty,
-            schemaJson = schemaJson, partJson = partJson)) return pv + 1
-      attempt += 1
+  /** The spec guard of [[append]] and [[replacePartitions]], checked in
+    * every attempt: a batch was STAGED for partition spec `staged`, so
+    * it may only land on a version `v` with that spec — a concurrent
+    * replace that moved it would leave a mixed hive/flat layout (and
+    * give [[replacePartitions]] the wrong partition identity). A root
+    * with no version yet (v = 0) takes any spec. */
+  private def requireStagedSpec(op: String, root: String, v: Int,
+                                staged: Option[StructType]): Unit =
+    if (v > 0) {
+      val cur = partitionSpecAt(root, v).map(specShape)
+      if (cur != staged.map(specShape))
+        throw new java.util.ConcurrentModificationException(
+          s"$op on $root: the table's partition spec moved under the op " +
+            s"(staged ${staged.map(specShape)}, now $cur) — restage " +
+            "against the new spec")
     }
-    sys.error(s"append on $root lost $maxAttempts consecutive CAS races")
-  }
 
   /** A partition spec's identity for consistency checks: field names +
     * types, nullability normalized away (parquet reads everything
@@ -1259,8 +1250,16 @@ object SnapshotCatalog {
       }
       val (entries, schemaJson, partJson) =
         stageBatch(df, root, batch, partitionBy, recordStats)
-      commitAppendEntries(root, entries, schemaJson, partJson,
-        expectSpec = Some(staged))
+      val adds = entries.distinct.sortBy(_.path)
+      // pure adds, resolving no previous version: the files live in a
+      // fresh batch dir, disjoint from every prior version — a streaming
+      // ingest's commit cost stays flat in table size
+      commitLoop("append", root, batch = Some(batch)) { pv =>
+        requireStagedSpec("append", root, pv, staged)
+        Option.when(tryCommitEntries(root, pv + 1, adds = adds,
+          removes = Seq.empty, schemaJson = schemaJson,
+          partJson = partJson))(pv + 1)
+      }
     }
   }
 
@@ -1281,32 +1280,41 @@ object SnapshotCatalog {
     else {
       val (entries, schemaJson, partJson) =
         stageBatch(df, root, batch, partitionBy, recordStats)
-      // a replace defines the content outright, so inherited deletion
-      // vectors stop applying at this version (their row positions
-      // reference the files the rewrite just superseded)
-      var attempt = 0
-      while (attempt < 100) {
-        val pv = latestVersionOption(root).getOrElse(0)
-        val prev = if (pv == 0) Seq.empty else manifestFiles(root, pv)
-        val next = entries.distinct.sortBy(_.path)
-        val nextPaths = next.map(_.path).toSet
-        // a full rewrite physically removed any dropped column from the
-        // live files — clear the tombstones its new schema re-introduces
-        val props0 = if (pv == 0) Map.empty[String, String]
-          else propertiesAt(root, pv)
-        val cleared = props0.filterNot { case (k, _) =>
-          k.startsWith("graft.dropped.") &&
-            df.columns.contains(k.stripPrefix("graft.dropped.")) }
-        if (tryCommitEntries(root, pv + 1,
-              adds = next.filterNot(e => prev.contains(e.path)),
-              removes = prev.filterNot(nextPaths), dvReset = true,
-              schemaJson = schemaJson, partJson = partJson,
-              props = if (cleared != props0) Some(cleared) else None))
-          return pv + 1
-        attempt += 1
+      commitLoop("replace", root, batch = Some(batch)) { pv =>
+        Option.when(tryReplaceAt(root, pv, entries, schemaJson, partJson,
+          df.columns.toSeq))(pv + 1)
       }
-      sys.error(s"replace on $root lost 100 consecutive CAS races")
     }
+  }
+
+  /** One attempt of a replace's commit at `pv + 1` — [[replace]]'s, and
+    * the staged SQL `REPLACE TABLE … AS SELECT`'s: the staged `entries`
+    * become the whole live content, with the batch's schema and
+    * partition spec. Inherited deletion vectors stop applying (their
+    * row positions index the files the rewrite supersedes). The rewrite
+    * physically removed any dropped column from the live files, so the
+    * `graft.dropped.` tombstones of `columns` clear; `editProps` edits
+    * the carried properties further. True on the win. */
+  private[sources] def tryReplaceAt(
+      root: String, pv: Int, entries: Seq[FileEntry],
+      schemaJson: Option[String], partJson: Option[String],
+      columns: Seq[String],
+      editProps: Map[String, String] => Map[String, String] = identity)
+      : Boolean = {
+    val prev = if (pv == 0) Seq.empty else manifestFiles(root, pv)
+    val prevSet = prev.toSet
+    val next = entries.distinct.sortBy(_.path)
+    val nextPaths = next.map(_.path).toSet
+    val props0 = if (pv == 0) Map.empty[String, String]
+      else propertiesAt(root, pv)
+    val props = editProps(props0.filterNot { case (k, _) =>
+      k.startsWith("graft.dropped.") &&
+        columns.contains(k.stripPrefix("graft.dropped.")) })
+    tryCommitEntries(root, pv + 1,
+      adds = next.filterNot(e => prevSet(e.path)),
+      removes = prev.filterNot(nextPaths), dvReset = true,
+      schemaJson = schemaJson, partJson = partJson,
+      props = if (props != props0) Some(props) else None)
   }
 
   /** The hive-style `col=value` segments in a staged file's path, in
@@ -1346,22 +1354,10 @@ object SnapshotCatalog {
       stageBatch(updates, root, batch, cols, recordStats = true)
     val touched: Set[Seq[String]] =
       entries.map(e => partitionVecOf(e.path)).toSet
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersionOption(root).getOrElse(0)
-      // the batch was STAGED under the spec read at entry: a concurrent
-      // replace() that changed the spec would let this commit land a
-      // mixed hive layout (and compute its removes against the wrong
-      // partition identity) — re-validate inside every CAS attempt,
-      // mirroring commitAppendEntries' expectSpec guard
-      val curSpec = if (pv == 0) None else partitionSpecAt(root, pv)
-      if (curSpec.map(specShape) != Some(specShape(spec)))
-        throw new java.util.ConcurrentModificationException(
-          s"replacePartitions on $root: the table's partition spec moved " +
-            s"under the op (staged ${specShape(spec)}, now " +
-            s"${curSpec.map(specShape)}) — restage against the new spec")
-      val prev = if (pv == 0) Seq.empty else manifestEntries(root, pv)
-      val removes = prev.collect {
+    commitLoop("replacePartitions", root, batch = Some(batch)) { pv =>
+      if (pv == 0) noTable(root)
+      requireStagedSpec("replacePartitions", root, pv, Some(spec))
+      val removes = manifestEntries(root, pv).collect {
         case e if touched.contains(partitionVecOf(e.path)) => e.path }
       // a PARTIAL rewrite must not narrow the served schema: untouched
       // partitions' live files still carry every accreted column, so
@@ -1387,7 +1383,7 @@ object SnapshotCatalog {
       // (`W` lines) and re-land only the positions referencing
       // SURVIVING files — O(deleted rows), paid by the op that created
       // the dangling.
-      val dvsInEffect = if (pv == 0) Seq.empty else dvEntries(root, pv)
+      val dvsInEffect = dvEntries(root, pv)
       val reland =
         if (dvsInEffect.isEmpty) None
         else {
@@ -1403,12 +1399,13 @@ object SnapshotCatalog {
             dvAdds = reland.toSeq.flatMap(_.entries),
             dvRemoves = if (reland.isDefined) dvsInEffect.map(_.path) else Seq.empty,
             schemaJson = schemaJson, partJson = partJson))
-        return (pv + 1, touched.size)
-      // the lost attempt's re-land batch will never be referenced
-      reland.foreach(_.discard())
-      attempt += 1
+        Some((pv + 1, touched.size))
+      else {
+        // the lost attempt's re-land batch will never be referenced
+        reland.foreach(_.discard())
+        None
+      }
     }
-    sys.error(s"replacePartitions on $root lost 100 consecutive CAS races")
   }
 
   /** RESTORE the table to an earlier surviving version (the Delta
@@ -1437,21 +1434,20 @@ object SnapshotCatalog {
     // restored schema serves, and keep constraints added after
     // `toVersion` enforcing against pre-constraint data
     val targetProps = propertiesAt(root, toVersion)
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
-      if (pv == toVersion) return pv
-      val cur = manifestFiles(root, pv)
-      if (tryCommitEntries(root, pv + 1,
-            adds = target.filterNot(e => cur.contains(e.path)),
-            removes = cur.filterNot(targetPaths).sorted,
-            dvAdds = targetDvs, dvReset = true,
-            schemaJson = schemaJson, partJson = partJson,
-            props = Some(targetProps)))
-        return pv + 1
-      attempt += 1
+    commitLoop("restore", root) { pv =>
+      if (pv == 0) noTable(root)
+      if (pv == toVersion) Some(pv) // already the live content
+      else {
+        val cur = manifestFiles(root, pv)
+        val curSet = cur.toSet
+        Option.when(tryCommitEntries(root, pv + 1,
+          adds = target.filterNot(e => curSet(e.path)),
+          removes = cur.filterNot(targetPaths).sorted,
+          dvAdds = targetDvs, dvReset = true,
+          schemaJson = schemaJson, partJson = partJson,
+          props = Some(targetProps)))(pv + 1)
+      }
     }
-    sys.error(s"restore on $root lost 100 consecutive CAS races")
   }
 
   /** Snapshot expiry / GC — the maintenance job every table format
@@ -2114,9 +2110,8 @@ object SnapshotCatalog {
     val batch = "copy" + java.util.UUID.randomUUID().toString.take(12)
     val (entries, schemaJson, partJson) =
       stageBatch(aligned, root, batch, spec, recordStats = true)
-    var attempt = 0
-    while (attempt < 100) {
-      val pv = latestVersion(root)
+    commitLoop("COPY INTO", root, batch = Some(batch)) { pv =>
+      if (pv == 0) noTable(root)
       // a concurrent COPY may have loaded an overlap after our listing:
       // committing would double-load those rows — abort loudly, the
       // re-run's fresh listing skips them
@@ -2129,14 +2124,11 @@ object SnapshotCatalog {
               s"${overlap.head} (+${overlap.size - 1} more) — re-run to " +
               "load only the remainder")
       }
-      if (tryCommitEntries(root, pv + 1,
-            adds = entries.distinct.sortBy(_.path), removes = Seq.empty,
-            schemaJson = schemaJson, partJson = partJson,
-            loaded = newFiles))
-        return (newFiles.size, pv + 1)
-      attempt += 1
+      Option.when(tryCommitEntries(root, pv + 1,
+        adds = entries.distinct.sortBy(_.path), removes = Seq.empty,
+        schemaJson = schemaJson, partJson = partJson,
+        loaded = newFiles))((newFiles.size, pv + 1))
     }
-    sys.error(s"COPY INTO on $root lost 100 consecutive CAS races")
   }
 
   /** SHALLOW CLONE (the Delta shape): publish `destRoot` as a NEW table
@@ -2415,16 +2407,17 @@ object SnapshotCatalog {
 
   /** A DV batch staged under `<root>/dv/` for a commit that has not
     * landed yet: its log entries and row count. */
-  private final case class StagedDv(dir: Path, entries: Seq[FileEntry], rows: Long) {
+  private[sources] final case class StagedDv(dir: Path, entries: Seq[FileEntry], rows: Long) {
     def discard(): Unit = fsFor(dir).delete(dir, true)
   }
 
-  /** Delete what a row-level op staged for a commit that will not land:
-    * its DV batch `dv` and its data batch `batch` — unless a version
-    * references that batch name (the same batch landed first). */
+  /** Delete what an op staged for a commit that will not land: its DV
+    * batch `dv` and its data batch `batch` — each unless a version
+    * references it (its commit, or the same batch name, landed first). */
   private def discardStaged(root: String, dv: Option[StagedDv],
                             batch: Option[String]): Unit = {
-    dv.foreach(_.discard())
+    lazy val referenced = survivingDvUnion(root)
+    dv.filterNot(_.entries.exists(e => referenced(e.path))).foreach(_.discard())
     batch.filterNot(isBatchCommitted(root, _)).foreach { b =>
       val dir = new Path(s"$root/data/$b")
       fsFor(dir).delete(dir, true)
@@ -2528,10 +2521,11 @@ object SnapshotCatalog {
     (nv, staged.rows)
   }
 
-  /** THE row-level commit loop — [[deleteWhere]], [[mergeOnRead]],
-    * [[mergeInto]], [[updateWhere]] and [[maintainIfNeeded]] publish
-    * through it: each attempt checks the commits since `readV`, then
-    * tries to publish `latest + 1` with `publish`, up to 100 attempts.
+  /** The row-level ops' conflict check on [[commitLoop]] —
+    * [[deleteWhere]], [[mergeOnRead]], [[mergeInto]], [[updateWhere]]
+    * and [[maintainIfNeeded]] publish through it: each attempt checks
+    * the commits since `readV`, then tries to publish `latest + 1` with
+    * `publish`.
     *
     * The conflict rule is the concurrent-write abort every table format
     * raises when a row-level op's snapshot went stale: its matched
@@ -2559,16 +2553,14 @@ object SnapshotCatalog {
     * its versions again from 1: the op aborts as stale when `latest`
     * fell below `readV` or its staged DV batch is gone.
     *
-    * On an abort — a stale snapshot or 100 lost races — the op's
-    * `staged` DV batch and its data batch `batch` are deleted: no
+    * On an abort — a stale snapshot or 100 lost races — the loop
+    * deletes the op's `staged` DV batch and its data batch `batch`: no
     * version will ever reference them. */
   private def commitRowLevel(op: String, root: String, readV: Int,
                              staged: Option[StagedDv], batch: Option[String],
                              provablyUnmatched: FileEntry => Boolean)(
-                             publish: Int => Boolean): Int = {
-    var attempt = 0
-    while (attempt < 100) {
-      val latest = latestVersion(root)
+                             publish: Int => Boolean): Int =
+    commitLoop(op, root, staged, batch) { latest =>
       val recreated = latest < readV ||
         staged.exists(s => s.entries.nonEmpty && !fsFor(s.dir).exists(s.dir))
       val kinds =
@@ -2583,19 +2575,13 @@ object SnapshotCatalog {
             else Some("append")
           }
         }
-      if (kinds.nonEmpty) {
-        discardStaged(root, staged, batch)
+      if (kinds.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"$op on $root: version moved $readV -> $latest under the op " +
             s"(intervening: ${kinds.mkString(", ")}) — its snapshot is " +
             "stale; retry against the new snapshot")
-      }
-      if (publish(latest + 1)) return latest + 1
-      attempt += 1
+      Option.when(publish(latest + 1))(latest + 1)
     }
-    discardStaged(root, staged, batch)
-    sys.error(s"$op on $root lost 100 consecutive CAS races")
-  }
 
   /** True when `e`'s log-carried stats prove NO row of the file can
     * satisfy the envelope `(longBounds, strBounds)` (a necessary

@@ -50,34 +50,6 @@ class CatalogHardeningSpec extends SparkTestBase {
       "a non-race IO failure was swallowed instead of surfaced")
   }
 
-  test("commitRetry surfaces a non-race publish failure instead of silently spinning at the same version") {
-    val root = graft.streaming.Streams.dataDir("graft_condretry_")
-    // seed one good version through the normal publisher
-    SnapshotCatalog.commitRetry(root)(_ => Seq(s"$root/data/s/part-0.parquet"))
-    var attempts = 0
-    val outage = new SnapshotCatalog.AtomicPublish {
-      def publish(fs: FileSystem, tmp: Path, dest: Path): Boolean = {
-        attempts += 1
-        val failing = new FilterFileSystem(fs) {
-          override def create(f: Path, overwrite: Boolean)
-              : org.apache.hadoop.fs.FSDataOutputStream =
-            throw new java.io.IOException("injected store outage")
-        }
-        SnapshotCatalog.ConditionalPutPublish.publish(failing, tmp, dest)
-      }
-    }
-    SnapshotCatalog.withPublisher(outage) {
-      val e = intercept[java.io.IOException] {
-        SnapshotCatalog.commitRetry(root)(prev =>
-          prev :+ s"$root/data/s/part-1.parquet")
-      }
-      assert(e.getMessage.contains("injected"))
-    }
-    assert(attempts == 1,
-      s"a store outage must abort the retry loop, not spin ($attempts attempts)")
-    assert(SnapshotCatalog.latestVersion(root) == 1, "the failed commit left residue")
-  }
-
   test("object-store schemes refuse to commit without an attested conditional-create capability") {
     val dest = new Path("s3a://bucket/table/manifests/commit-v1.txt")
     // un-attested: loud refusal, never a silent HEAD-then-PUT downgrade
@@ -481,6 +453,191 @@ class CatalogHardeningSpec extends SparkTestBase {
       .select("id").as[Long].collect().sorted.toSeq ==
       ((5L to 19L by 2L) ++ Seq(99L, 100L)))
   }
+
+  // -- the one commit loop ----------------------------------------------
+
+  private lazy val warehouse: String = {
+    val dir = graft.streaming.Streams.dataDir("graft_warehouse_hard_")
+    spark.conf.set("spark.sql.catalog.hard", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.hard.warehouse", dir)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS hard.db")
+    dir
+  }
+  private val tableIds = new java.util.concurrent.atomic.AtomicInteger()
+
+  private def rows(ids: Seq[Long]) = {
+    val s2 = spark; import s2.implicits._
+    ids.map(i => (i, i, if (i % 2 == 0) "a" else "b")).toDF("id", "v", "p").coalesce(1)
+  }
+
+  /** `hard.db.<name>` at `root`: two appends of ids 1..10 and 11..20
+    * partitioned by `p`, so two files in each partition. */
+  private def twoVersionTable(): (String, String) = {
+    val name = s"w${tableIds.incrementAndGet()}"
+    val root = s"$warehouse/db/$name"
+    SnapshotCatalog.append(rows(1L to 10L), root, "b0", partitionBy = Seq("p"))
+    SnapshotCatalog.append(rows(11L to 20L), root, "b1", partitionBy = Seq("p"))
+    (name, root)
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  private def writer(op: String)(prepare: (String, String) => () => Any) = op -> prepare
+
+  /** Every catalog write that publishes through the commit loop: given
+    * a table's name and root, any setup it needs, then the write. */
+  private val writers: Seq[(String, (String, String) => () => Any)] = {
+    import graft.sources.SnapshotCatalog.MergeUpdateClause
+    Seq(
+      writer("updateProperties") { (_, root) =>
+        () => SnapshotCatalog.updateProperties(root)((_, p) => p + ("k" -> "v")) },
+      writer("addConstraint") { (_, root) =>
+        () => SnapshotCatalog.addConstraint(spark, root, "pos", "v > 0") },
+      writer("dropConstraint") { (_, root) =>
+        SnapshotCatalog.addConstraint(spark, root, "pos", "v > 0")
+        () => SnapshotCatalog.dropConstraint(root, "pos") },
+      writer("ALTER TABLE CLUSTER BY") { (name, _) =>
+        () => spark.sql(s"ALTER TABLE hard.db.$name CLUSTER BY (id)") },
+      writer("ALTER TABLE ADD COLUMNS") { (name, _) =>
+        () => spark.sql(s"ALTER TABLE hard.db.$name ADD COLUMNS (z BIGINT)") },
+      writer("REPLACE TABLE AS SELECT") { (name, _) =>
+        () => spark.sql(s"REPLACE TABLE hard.db.$name AS SELECT CAST(1 AS BIGINT) AS id") },
+      writer("commitRetry") { (_, root) =>
+        () => SnapshotCatalog.commitRetry(root)(_ :+ s"$root/data/s/part-1.parquet") },
+      writer("append") { (_, root) =>
+        () => SnapshotCatalog.append(rows(Seq(21L)), root, "a0", partitionBy = Seq("p")) },
+      writer("replace") { (_, root) =>
+        () => SnapshotCatalog.replace(rows(Seq(21L)), root, "r0") },
+      writer("replacePartitions") { (_, root) =>
+        () => SnapshotCatalog.replacePartitions(spark, root, rows(Seq(22L)), "o0") },
+      writer("restore") { (_, root) =>
+        () => SnapshotCatalog.restore(root, 1) },
+      writer("COPY INTO") { (_, root) =>
+        val src = graft.streaming.Streams.dataDir("graft_copysrc_")
+        rows(Seq(30L)).write.mode("overwrite").parquet(src)
+        () => SnapshotCatalog.copyInto(spark, root, src) },
+      writer("deleteWhere") { (_, root) =>
+        () => SnapshotCatalog.deleteWhere(spark, root, col("id") === 5L) },
+      writer("mergeOnRead") { (_, root) =>
+        () => SnapshotCatalog.mergeOnRead(spark, root, rows(Seq(5L)), Seq("id"), "u0") },
+      writer("mergeInto") { (_, root) =>
+        () => SnapshotCatalog.mergeInto(spark, root, rows(Seq(5L)), Seq("id"),
+          Seq(MergeUpdateClause(None, Seq("v" -> col("__src_v")))), Seq.empty, "g0") },
+      writer("updateWhere") { (_, root) =>
+        () => SnapshotCatalog.updateWhere(spark, root, col("id") === 5L,
+          Seq("v" -> (col("v") + 1L)), "up0") },
+      writer("maintainIfNeeded") { (_, root) =>
+        () => SnapshotCatalog.maintainIfNeeded(spark, root, "c0", maxLiveFiles = 0,
+          minMergeFanout = 2) })
+  }
+
+  /** Publisher whose every commit publish goes to `commit`, counted;
+    * checkpoints publish normally. */
+  private class CountingPublish(commit: (FileSystem, Path, Path) => Boolean)
+      extends SnapshotCatalog.AtomicPublish {
+    @volatile var attempts = 0
+    def publish(fs: FileSystem, tmp: Path, dest: Path): Boolean =
+      if (!dest.getName.startsWith("commit-"))
+        SnapshotCatalog.LocalLinkPublish.publish(fs, tmp, dest)
+      else { attempts += 1; commit(fs, tmp, dest) }
+  }
+
+  for ((op, prepare) <- writers)
+    test(s"$op gives up after 100 lost CAS races with the one message, and deletes what it staged") {
+      val (name, root) = twoVersionTable()
+      val run = prepare(name, root)
+      val v0 = SnapshotCatalog.latestVersion(root)
+      val losing = new CountingPublish((fs, tmp, _) => { fs.delete(tmp, false); false })
+      val e = SnapshotCatalog.withPublisher(losing)(intercept[Exception](run()))
+      assert(causes(e).exists(t => String.valueOf(t.getMessage)
+        .endsWith(s" on $root lost 100 consecutive CAS races")), e.toString)
+      assert(losing.attempts == 100, s"${losing.attempts} publish attempts")
+      assert(SnapshotCatalog.latestVersion(root) == v0, "a losing writer committed")
+      assertNoStagedLitter(root)
+    }
+
+  for ((op, prepare) <- writers)
+    test(s"$op surfaces a non-race publish failure instead of silently spinning at the same version") {
+      val (name, root) = twoVersionTable()
+      val run = prepare(name, root)
+      val v0 = SnapshotCatalog.latestVersion(root)
+      val outage = new CountingPublish((fs, tmp, dest) => {
+        val failing = new FilterFileSystem(fs) {
+          override def create(f: Path, overwrite: Boolean)
+              : org.apache.hadoop.fs.FSDataOutputStream =
+            throw new java.io.IOException("injected store outage")
+        }
+        SnapshotCatalog.ConditionalPutPublish.publish(failing, tmp, dest)
+      })
+      val e = SnapshotCatalog.withPublisher(outage)(intercept[Exception](run()))
+      assert(causes(e).exists {
+        case io: java.io.IOException => io.getMessage.contains("injected")
+        case _ => false
+      }, e.toString)
+      assert(outage.attempts == 1,
+        s"a store outage must abort the retry loop, not spin (${outage.attempts} attempts)")
+      assert(SnapshotCatalog.latestVersion(root) == v0, "the failed commit left residue")
+    }
+
+  test("ALTER TABLE CLUSTER BY keeps a CHECK constraint that a racing ADD CONSTRAINT landed under it") {
+    val (name, root) = twoVersionTable()
+    val injector = new RaceInjector(root,
+      () => SnapshotCatalog.addConstraint(spark, root, "pos", "v > 0"),
+      armFor = "commit-v3.txt")
+    SnapshotCatalog.withPublisher(injector) {
+      spark.sql(s"ALTER TABLE hard.db.$name CLUSTER BY (id)")
+    }
+    assert(SnapshotCatalog.latestVersion(root) == 4)
+    val props = SnapshotCatalog.properties(root)
+    assert(props.get("graft.constraints.pos").contains("v > 0"), s"constraint lost: $props")
+    assert(props.get("graft.clusterBy").contains("id"), s"clustering lost: $props")
+    val e = intercept[Exception] {
+      SnapshotCatalog.append(rows(Seq(-2L)), root, "neg", partitionBy = Seq("p"))
+    }
+    assert(causes(e).exists(t => String.valueOf(t.getMessage).contains("pos")), e.toString)
+  }
+
+  test("ALTER TABLE CLUSTER BY checks its columns against the version it commits after, not the one it first read") {
+    val (name, root) = twoVersionTable()
+    val injector = new RaceInjector(root, { () =>
+      spark.sessionState.catalogManager.catalog("hard")
+        .asInstanceOf[graft.sources.GraftCatalog].alterTable(
+          org.apache.spark.sql.connector.catalog.Identifier.of(Array("db"), name),
+          org.apache.spark.sql.connector.catalog.TableChange.deleteColumn(Array("v"), false))
+      ()
+    }, armFor = "commit-v3.txt")
+    val e = SnapshotCatalog.withPublisher(injector) {
+      intercept[Exception](spark.sql(s"ALTER TABLE hard.db.$name CLUSTER BY (v)"))
+    }
+    assert(causes(e).exists(t => String.valueOf(t.getMessage)
+      .contains("not in the table's schema")), e.toString)
+    assert(SnapshotCatalog.latestVersion(root) == 3, "the refused CLUSTER BY committed")
+    assert(!SnapshotCatalog.properties(root).contains("graft.clusterBy"))
+  }
+
+  // The shared spec guard: a replace that flattens the partition spec
+  // wins the version a partitioned write was about to publish.
+  private val specBoundWrites: Seq[(String, String => Any)] = Seq(
+    "append" -> (root => SnapshotCatalog.append(rows(Seq(21L)), root, "a0",
+      partitionBy = Seq("p"))),
+    "replacePartitions" -> (root => SnapshotCatalog.replacePartitions(spark, root,
+      rows(Seq(22L)), "o0")))
+
+  for ((op, run) <- specBoundWrites)
+    test(s"$op refuses when a replace moves the partition spec under it, and deletes its staged batch") {
+      val (_, root) = twoVersionTable()
+      val injector = new RaceInjector(root,
+        () => SnapshotCatalog.replace(rows(1L to 4L), root, "flat"),
+        armFor = "commit-v3.txt")
+      val e = SnapshotCatalog.withPublisher(injector) {
+        intercept[java.util.ConcurrentModificationException](run(root))
+      }
+      assert(e.getMessage.contains("partition spec moved"), e.getMessage)
+      assert(SnapshotCatalog.latestVersion(root) == 3, "only the racer's replace may land")
+      assert(SnapshotCatalog.partitionSpecAt(root, 3).isEmpty)
+      assertNoStagedLitter(root)
+    }
 
   // -- DV orphan GC ------------------------------------------------------
 
