@@ -2,7 +2,7 @@ package graft.analysis
 
 import graft.{GraftQuery, QueryPack}
 import graft.core.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 

@@ -748,7 +748,6 @@ object QualityQueries extends QueryPack {
     GraftQuery(
       "t18_full_pipeline",
       (spark, dir) => {
-        import graft.dedup.DedupQueries.shingles
         val t = Tables(spark, dir)
         // The COMPLETE corpus build in one declarative plan — t13 plus
         // the stage real pipelines cannot ship without: benchmark

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /** The one size-gated broadcast rule, for every join whose build side
-  * the engine sizes itself: the deletion-vector positions (broadcast to
-  * a filter under the gate, joined past it), the st21/st26 index
-  * probes, gr01, d11, d19 and the verifiedPairs verify joins.
+  * the engine sizes itself: the st21/st26 index probes, gr01, d11, d19
+  * and the verifiedPairs verify joins. (Deletion vectors join nothing:
+  * their scan tasks read their own positions; the gate's size is only
+  * [[graft.sources.SnapshotCatalog.maintainIfNeeded]]'s default DV-bytes
+  * trigger.)
   *   - Ceiling: the session's `spark.sql.autoBroadcastJoinThreshold`
   *     (64 MB under [[GraftSession]]); a negative one disables gated
   *     broadcasts too.

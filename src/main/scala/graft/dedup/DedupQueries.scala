@@ -305,8 +305,7 @@ object DedupQueries extends QueryPack {
     * same way. The admitted-id list broadcasts — takedown/admission id
     * lists are batch-metadata-sized, the [[retractBandIndex]]
     * precedent; at 100 TB the same bucketed-layout note applies. */
-  def appendBandIndexFromGate(spark: org.apache.spark.sql.SparkSession,
-                              gateBands: DataFrame, gateSh: DataFrame,
+  def appendBandIndexFromGate(gateBands: DataFrame, gateSh: DataFrame,
                               admittedIds: DataFrame,
                               indexDir: String, shDir: String): Unit = {
     import graft.sources.SnapshotCatalog
@@ -1438,7 +1437,7 @@ object DedupQueries extends QueryPack {
         // (one kernel pass per lifecycle stage).
         val (verdict1, bands1, sh1) =
           gateBatchWithArtifacts(spark, batch1, indexDir, shDir)
-        appendBandIndexFromGate(spark, bands1, sh1,
+        appendBandIndexFromGate(bands1, sh1,
           verdict1.filter(!col("dropped")), indexDir, shDir)
         compactBandIndex(spark, indexDir, shDir)
         gateBatch(spark, docs.filter(col("doc_id") >= v2), indexDir, shDir)

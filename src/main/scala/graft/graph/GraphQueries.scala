@@ -2,9 +2,8 @@ package graft.graph
 
 import graft.{GraftQuery, QueryPack}
 import graft.core.{BroadcastGate, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Graph-analytics tier beyond the dedup diagnostics (d07 connected
   * components, d11 triangle counting): iterative whole-graph algorithms

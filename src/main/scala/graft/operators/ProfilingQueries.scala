@@ -189,7 +189,7 @@ object ProfilingQueries extends QueryPack {
     val fields = df.schema.fields.toSeq
     require(fields.forall(f => statable(f.dataType)),
       "partialProfile requires orderable/groupable column types")
-    val aggs: Seq[Column] = fields.zipWithIndex.flatMap { case (f, i) =>
+    val aggs: Seq[Column] = fields.zipWithIndex.flatMap { case (_, i) =>
       val c = col(s"__p_in_$i")
       Seq(count(c).as(alias(i, "nn")),
           min(c).as(alias(i, "min")),
@@ -365,7 +365,7 @@ object ProfilingQueries extends QueryPack {
     // hash-only aggregate (profile()'s pass-A/pass-B split and for the
     // same reason: min/max(string) buffers would drag the Expand through
     // a SortAggregate chain)
-    val aggsA: Seq[Column] = statIdx.flatMap { case (f, i) =>
+    val aggsA: Seq[Column] = statIdx.flatMap { case (_, i) =>
       val c = col(s"__p_in_$i")
       Seq(count(c).as(alias(i, "nn")),
           min(c).as(alias(i, "lo")), max(c).as(alias(i, "hi")))

@@ -3,80 +3,90 @@ package graft.sources
 import graft.sources.SnapshotCatalog.FileEntry
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
 
-/** The driver's deletion-vector (DV) files: each one read once, on the
-  * driver, with the parquet-hadoop reader — no Spark job — into the
-  * positions it deletes, grouped by data file (the recorded `__dv_file`)
-  * and sorted.
-  *
-  * Keyed by path plus logged size. A DV file is immutable once staged,
-  * and every batch lands under a fresh `<root>/dv/<tag><uuid>` name, so
-  * a table dropped and recreated at the same root never resolves an old
-  * file's key. Bounded by the positions it holds: least recently used
-  * files go first once past [[MaxPositions]]. Callers read only DV sets
-  * that fit [[graft.core.BroadcastGate]], so one set never outgrows what
-  * the gate lets the driver hold. */
-private[sources] object DvFiles {
+/** Deletion-vector (DV) files read with the parquet-hadoop reader — no
+  * Spark job — in [[SnapshotCatalog.dvSchema]]. A scan task reads one
+  * data file's positions at a time ([[Index.positions]]), filtered on
+  * `__dv_file`, so the sorted batch's row-group stats and page indexes
+  * skip the other files' positions. They stay in a process-wide cache
+  * keyed by DV path, logged size and data file: a DV file is immutable
+  * once staged under a fresh `<root>/dv/<tag><uuid>` name, so a table
+  * recreated at the same root never resolves an old key. Least recently
+  * used keys go first once past [[MaxPositions]]. */
+private[graft] object DvFiles {
 
-  /** 4 Mi positions (32 MB of longs) stay cached across reads; a file
-    * read past the bound is still served, just not kept. */
+  /** 4 Mi positions (32 MB of longs) stay cached across reads; a file's
+    * positions read past the bound are still served, just not kept. */
   val MaxPositions: Long = 4L << 20
 
+  /** What a [[graft.functions.DvListed]] predicate broadcasts: each
+    * covered data file's DV entries (path, logged size), and the
+    * session's Hadoop conf to read them with inside the task. */
+  final class Index(byFile: Map[String, Seq[(String, Long)]],
+                    conf: org.apache.spark.SerializableWritable[Configuration])
+      extends Serializable {
+    /** The data file `file`'s deleted positions, sorted; empty when no
+      * DV entry covers it. */
+    def positions(file: String): Array[Long] =
+      byFile.getOrElse(file, Nil).map { case (dv, size) =>
+        DvFiles.positions(conf.value, dv, size, file) } match {
+        case Seq(one) => one
+        case many => val a = many.flatten.toArray; java.util.Arrays.sort(a); a
+      }
+  }
+
   private val cache =
-    new java.util.LinkedHashMap[(String, Long), Map[String, Array[Long]]](64, 0.75f, true)
+    new java.util.LinkedHashMap[(String, Long, String), Array[Long]](64, 0.75f, true)
   private var held = 0L
 
-  /** The positions of every DV file in `dvs`, merged per data file;
-    * `conf` is built only for a file not cached yet. */
-  def positions(conf: => Configuration, dvs: Seq[FileEntry]): Map[String, Array[Long]] =
-    dvs.map(of(conf, _)) match {
-      case Seq(one) => one
-      case many => many.flatMap(_.toSeq).groupBy(_._1).map {
-        case (f, Seq((_, ps))) => f -> ps
-        case (f, parts) => f -> { val a = parts.flatMap(_._2).toArray; java.util.Arrays.sort(a); a }
+  private def positions(conf: Configuration, dv: String, size: Long,
+                        file: String): Array[Long] = {
+    val key = (dv, size, file)
+    cache.synchronized(Option(cache.get(key))).getOrElse {
+      import org.apache.parquet.filter2.predicate.FilterApi
+      val ps = new collection.mutable.ArrayBuilder.ofLong
+      read(conf, dv, FilterCompat.get(FilterApi.eq(FilterApi.binaryColumn("__dv_file"),
+        org.apache.parquet.io.api.Binary.fromString(file)))) { g =>
+        if (g.getFieldRepetitionCount("__dv_pos") > 0) ps.addOne(g.getLong("__dv_pos", 0))
       }
-    }
-
-  /** The data files the DV set `dvs` points at, sorted. */
-  def bearing(conf: => Configuration, dvs: Seq[FileEntry]): Seq[String] =
-    dvs.flatMap(of(conf, _).keys).distinct.sorted
-
-  private def of(conf: => Configuration, e: FileEntry): Map[String, Array[Long]] = {
-    val key = (e.path, SnapshotCatalog.entryBytes(e))
-    val hit = cache.synchronized(Option(cache.get(key)))
-    hit.getOrElse {
-      val read = readFile(conf, e.path)
+      val got = ps.result()
+      java.util.Arrays.sort(got)
       cache.synchronized {
-        if (cache.put(key, read) == null) held += weight(read)
+        val old = cache.put(key, got)
+        held += got.length - (if (old == null) 0 else old.length)
         val it = cache.values.iterator
-        while (held > MaxPositions && it.hasNext) { held -= weight(it.next()); it.remove() }
+        while (held > MaxPositions && it.hasNext) { held -= it.next().length; it.remove() }
       }
-      read
+      got
     }
   }
 
-  /** Forget every file read (a fresh driver). */
+  /** The data files the DV entry `e` covers: its logged coverage, or
+    * for a `V` line logged without one, its file's `__dv_file` column
+    * read on the driver (`conf` is built only then). */
+  def covered(conf: => Configuration, e: FileEntry): Seq[String] = e.covers.getOrElse {
+    val files = collection.mutable.LinkedHashSet.empty[String]
+    read(conf, e.path, FilterCompat.NOOP) { g =>
+      if (g.getFieldRepetitionCount("__dv_file") > 0) files += g.getString("__dv_file", 0)
+    }
+    files.toSeq
+  }
+
+  /** Forget every position read (a fresh process). */
   def clear(): Unit = cache.synchronized { cache.clear(); held = 0L }
 
-  private def weight(m: Map[String, Array[Long]]): Long = m.valuesIterator.map(_.length.toLong).sum
-
-  /** One DV file's positions in [[SnapshotCatalog.dvSchema]]: a row
-    * without a file or a position lists nothing. */
-  private def readFile(conf: Configuration, path: String): Map[String, Array[Long]] = {
-    import org.apache.parquet.example.data.Group
+  /** Each row of the DV file `path` that passes `filter`. */
+  private def read(conf: Configuration, path: String, filter: FilterCompat.Filter)(
+      row: Group => Unit): Unit = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
-    val byFile = collection.mutable.HashMap.empty[String, collection.mutable.ArrayBuilder.ofLong]
-    val reader = ParquetReader.builder(new GroupReadSupport(), new Path(path)).withConf(conf).build()
+    val reader = ParquetReader.builder(new GroupReadSupport(), new Path(path))
+      .withConf(conf).withFilter(filter).build()
     try {
       var g: Group = reader.read()
-      while (g != null) {
-        if (g.getFieldRepetitionCount("__dv_file") > 0 && g.getFieldRepetitionCount("__dv_pos") > 0)
-          byFile.getOrElseUpdate(g.getString("__dv_file", 0), new collection.mutable.ArrayBuilder.ofLong)
-            .addOne(g.getLong("__dv_pos", 0))
-        g = reader.read()
-      }
+      while (g != null) { row(g); g = reader.read() }
     } finally reader.close()
-    byFile.map { case (f, b) => val a = b.result(); java.util.Arrays.sort(a); f -> a }.toMap
   }
 }

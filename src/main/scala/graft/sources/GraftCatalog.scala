@@ -36,8 +36,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * table with one commit protocol. READS are rewritten during analysis
   * ([[GraftCatalogResolution]], the Delta `DeltaAnalysis` pattern) into
   * the planner-integrated [[SnapshotFileIndex]] relation — stats-based
-  * file skipping, hive partition pruning, DPP, and the gated DV
-  * anti-join all apply to named-table SQL exactly as to `snapshotDF`.
+  * file skipping, hive partition pruning, DPP, and the DV filter all
+  * apply to named-table SQL exactly as to `snapshotDF`.
   * WRITES go through the V1 write fallback ([[V1Write]] →
   * [[InsertableRelation]], the JDBC-connector seam): an INSERT lands as
   * one [[SnapshotCatalog.append]] commit (laid out per the table's
@@ -1009,7 +1009,6 @@ case class GraftMergeCommand(root: String, tableName: String,
     val v = SnapshotCatalog.latestVersion(root)
     val (data, part) = SnapshotFileIndex.servedSchemas(spark, root, v)
     val fields = data.fields ++ part.fields
-    val tableCols = fields.map(_.name).toSeq
     val updates = updates0.select(fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     SnapshotCatalog.mergeOnRead(spark, root, updates, keyCols,

@@ -397,8 +397,7 @@ class GraftFeedSource(spark: SparkSession, root: String,
       val base = streamingRead(files, to.toInt)
       // a bootstrap of a DV-bearing table serves the deletes-applied
       // snapshot instead of refusing: the streaming scan drops the DV
-      // positions (a broadcast filter, or past the gate a stream-static
-      // left-anti join, which is supported)
+      // positions with the same filter as a batch read
       val served =
         if (from.isEmpty)
           SnapshotCatalog.joinDeletes(base, SnapshotCatalog.dvEntries(root, to.toInt))

@@ -420,23 +420,29 @@ object SnapshotCatalog {
     * kind `string` with base64'd UTF-8 bounds (unsigned-byte order —
     * see [[statStrBytes]]). `rows` (from the footer the stats pass
     * already opened) feeds maintenance decisions ([[maintainIfNeeded]]'s
-    * deleted-fraction) and CBO sizing without any scan. */
+    * deleted-fraction) and CBO sizing without any scan. A DV entry's
+    * `covers` lists the data files its positions point at (`None` if
+    * logged before coverage was: [[DvFiles.covered]] falls back). */
   final case class FileEntry(
       path: String, size: Long = -1L, rows: Long = -1L,
-      stats: Map[String, (String, String, String)] = Map.empty)
+      stats: Map[String, (String, String, String)] = Map.empty,
+      covers: Option[Seq[String]] = None)
 
-  /** One manifest line for an entry: `path[\tsize\trows[\tstatsEnc]]`,
-    * where statsEnc is `;`-joined `b64(col):kind:min:max` cells —
-    * tab-free by construction (base64 and decimals contain no
-    * tab/colon/semicolon), so the line stays splittable and legacy
-    * path-only lines parse as entries with unknown metadata. */
+  /** One manifest line for an entry:
+    * `path[\tsize\trows[\tstatsEnc[\tcoversEnc]]]`, where statsEnc is
+    * `;`-joined `b64(col):kind:min:max` cells and coversEnc `;`-joined
+    * `b64(path)` cells — tab-free by construction (base64 and decimals
+    * contain no tab/colon/semicolon), so the line stays splittable,
+    * legacy path-only lines parse as entries with unknown metadata and
+    * a reader that predates coverage ignores the last field. */
   private def encodeEntry(e: FileEntry): String = {
     val statsEnc = e.stats.toSeq.sortBy(_._1).map { case (c, (k, mn, mx)) =>
       s"${b64(c)}:$k:$mn:$mx"
     }.mkString(";")
-    if (e.size < 0 && e.rows < 0 && statsEnc.isEmpty) e.path
-    else if (statsEnc.isEmpty) s"${e.path}\t${e.size}\t${e.rows}"
-    else s"${e.path}\t${e.size}\t${e.rows}\t$statsEnc"
+    val coversEnc = e.covers.fold("")(fs => "\t" + fs.map(b64).mkString(";"))
+    if (e.size < 0 && e.rows < 0 && statsEnc.isEmpty && coversEnc.isEmpty) e.path
+    else if (statsEnc.isEmpty && coversEnc.isEmpty) s"${e.path}\t${e.size}\t${e.rows}"
+    else s"${e.path}\t${e.size}\t${e.rows}\t$statsEnc$coversEnc"
   }
 
   private def decodeEntry(line: String): FileEntry = {
@@ -457,7 +463,9 @@ object SnapshotCatalog {
             }
           }.toMap
         else Map.empty[String, (String, String, String)]
-      FileEntry(parts(0), num(1), num(2), stats)
+      val covers = Option.when(parts.length >= 5)(
+        parts(4).split(";").iterator.filter(_.nonEmpty).map(unb64).toSeq)
+      FileEntry(parts(0), num(1), num(2), stats, covers)
     }
   }
 
@@ -1066,7 +1074,7 @@ object SnapshotCatalog {
     * filter is not prunable (it changes semantics), so codegen keeps
     * it fused into the write stage. O(0) extra passes at any scale. */
   private def withConstraintChecks(df: DataFrame, root: String,
-      overrideCons: Option[Map[String, String]] = None): DataFrame = {
+      overrideCons: Option[Map[String, String]]): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, concat_ws, expr, lit, raise_error, struct}
     val cons = overrideCons.getOrElse(latestVersionOption(root)
       .map(v => constraintsOf(propertiesAt(root, v)))
@@ -1743,8 +1751,8 @@ object SnapshotCatalog {
     * commit contributes both — its upserts as inserts, the superseded
     * rows as deletes); `_commit_version` stamps each row. Cost is
     * O(changed rows): inserts read only the added files, deletes read
-    * only the files the DV positions reference (anti-join-free —
-    * [[deletedRows]] keeps just the O(deleted) position set).
+    * only the files the DV entries cover, as the log records them
+    * ([[deletedRows]] keeps just the deleted positions).
     *
     * FAILS LOUDLY across a [[replace]] like [[addedFiles]]: a
     * compaction/retraction rewrites surviving rows wholesale, so
@@ -1807,9 +1815,10 @@ object SnapshotCatalog {
 
   /** Threshold-driven INCREMENTAL OPTIMIZE. The DECISION is from log
     * metadata alone (no scan, no data IO): compact when accumulated
-    * deletion vectors cross `maxDvBytes`, by default when they no
-    * longer fit [[graft.core.BroadcastGate]] (past it every read pays a
-    * shuffled anti-join), when the
+    * deletion vectors cross `maxDvBytes`, by default the size
+    * [[graft.core.BroadcastGate]] lets through (read amplification: every
+    * scan task re-reads its file's positions from the DV files once the
+    * process cache no longer holds them), when the
     * DELETED FRACTION of live rows crosses `maxDeletedFrac` (read
     * amplification: scans keep decoding rows the DV filter then
     * drops), or when the live file count crosses `maxLiveFiles`
@@ -2323,17 +2332,20 @@ object SnapshotCatalog {
   // needed — as small parquet "deletion vector" batches under
   // <root>/dv/; the commit itself is O(deleted rows) and the data files
   // are untouched (time travel to the pre-delete version still serves
-  // the rows). Serving drops the DV positions with [[joinDeletes]]: a
-  // filter over positions read on the driver and broadcast while the DV
-  // set fits [[graft.core.BroadcastGate]], a shuffled anti-join past it;
-  // a later [[replace]] (compaction) applies them physically and resets
+  // the rows). Each DV entry's `V` line records the data files it
+  // covers, as Delta's add actions carry their DV descriptors. Serving
+  // drops the DV positions with [[joinDeletes]]: a filter that, inside
+  // the scan task, reads only the positions of the data file it is
+  // scanning — one path at every DV set size, no shuffle, no join. A
+  // later [[replace]] (compaction) applies them physically and resets
   // the DV set atomically in its own commit.
   //
-  // One writer, two readers: [[stageDvBatch]] lands every DV batch (and
-  // counts it from its parquet footer); [[DvFiles]] reads a DV file on
-  // the driver under the gate, [[readDvs]] reads DV files as a Spark
-  // scan past it, both in the fixed [[dvSchema]] — no read infers a
-  // schema, and under the gate no read runs a Spark job at all.
+  // One writer, one reader: [[stageDvBatch]] lands every DV batch
+  // sorted by (`__dv_file`, `__dv_pos`) and logs its coverage and count
+  // (footer-counted, no extra job); [[DvFiles]] reads a data file's
+  // positions with the parquet-hadoop reader in the fixed [[dvSchema]].
+  // Only a re-land, which is a write, reads DV files as a Spark scan
+  // ([[relandDvs]]).
 
   /** The schema of every DV batch: the scan's `_metadata.file_path` and
     * `_metadata.row_index`, as [[joinDeletes]] names them. */
@@ -2342,25 +2354,19 @@ object SnapshotCatalog {
     StructType(Seq(StructField("__dv_file", StringType), StructField("__dv_pos", LongType)))
   }
 
-  /** THE DV reader: the DV files `paths` read in [[dvSchema]]. */
-  private def readDvs(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(dvSchema).parquet(paths: _*)
-
-  /** THE deletion-vector join — serving, the change feeds, maintenance
-    * and the row-level ops all apply DVs here. `df` (a batch or
-    * streaming scan whose `_metadata` is still reachable) gains each
-    * row's position as `__dv_file`/`__dv_pos`, matched against the DV
-    * files `dvs`: the deleted rows are dropped, or with `onlyDeleted`
-    * (the change feeds' [[deletedRows]]) only they are kept. The DV set
-    * is sized by [[graft.core.BroadcastGate]] on its logged bytes. Under
-    * the gate its positions are read on the driver ([[DvFiles]], cached
-    * per immutable DV file) and broadcast to a [[graft.functions.DvListed]]
-    * filter, so applying them runs no Spark job. Past it they join
-    * merge-hinted, as an anti (or semi) join that shuffles — DVs pile up
-    * between compactions, and a trickle of deletes must degrade to a
-    * shuffle, not a driver OOM. No DVs means no filter (`onlyDeleted`
-    * callers always pass some). The position columns are dropped
-    * unless `keepPositions`. */
+  /** THE deletion-vector application — serving, the change feeds,
+    * maintenance and the row-level ops all apply DVs here. `df` (a
+    * batch or streaming scan whose `_metadata` is still reachable)
+    * gains each row's position as `__dv_file`/`__dv_pos`, matched by a
+    * [[graft.functions.DvListed]] filter against the DV files `dvs`:
+    * the deleted rows are dropped, or with `onlyDeleted` (the change
+    * feeds' [[deletedRows]]) only they are kept. The filter broadcasts
+    * an index from each covered data file to its DV entries (path and
+    * logged size) with the session's Hadoop conf; each task reads its
+    * data file's positions itself, through [[DvFiles]]' cache. So no
+    * DV set size adds a Spark job, a shuffle or a driver-held position.
+    * No DVs means no filter (`onlyDeleted` callers always pass some).
+    * The position columns are dropped unless `keepPositions`. */
   private[sources] def joinDeletes(df: DataFrame, dvs: Seq[FileEntry],
                                    onlyDeleted: Boolean = false,
                                    keepPositions: Boolean = false): DataFrame = {
@@ -2369,17 +2375,15 @@ object SnapshotCatalog {
       .withColumn("__dv_pos", col("_metadata.row_index"))
     if (dvs.isEmpty) return if (keepPositions) withPos else df
     val spark = df.sparkSession
-    val applied =
-      if (graft.core.BroadcastGate.fits(spark, dvs.map(entryBytes).sum)) {
-        val positions = spark.sparkContext.broadcast(
-          graft.functions.DvPositions(DvFiles.positions(spark.sessionState.newHadoopConf(), dvs)))
-        val listed = graft.functions.DvListed.dvListed(
-          col("__dv_file"), col("__dv_pos"), positions)
-        withPos.filter(if (onlyDeleted) listed else !listed)
-      } else {
-        val dv = graft.core.BroadcastGate.shape(readDvs(spark, dvs.map(_.path)), fits = false)
-        withPos.join(dv, Seq("__dv_file", "__dv_pos"), if (onlyDeleted) "left_semi" else "left_anti")
-      }
+    val conf = spark.sessionState.newHadoopConf()
+    val byFile = dvs.flatMap(e => DvFiles.covered(conf, e).map(_ -> (e.path, entryBytes(e))))
+      .groupMap(_._1)(_._2)
+    import org.apache.spark.sql.graftbridge.Bridge
+    val listed = Bridge.column(graft.functions.DvListed(
+      Bridge.expression(col("__dv_file")), Bridge.expression(col("__dv_pos")),
+      spark.sparkContext.broadcast(
+        new DvFiles.Index(byFile, new org.apache.spark.SerializableWritable(conf)))))
+    val applied = withPos.filter(if (onlyDeleted) listed else !listed)
     if (keepPositions) applied else applied.drop("__dv_file", "__dv_pos")
   }
 
@@ -2395,15 +2399,10 @@ object SnapshotCatalog {
       .withColumn("_change_type", lit("delete"))
   }
 
-  /** The files the DV set `dvs` points at: its distinct `__dv_file`
-    * values as recorded, sorted. Under [[graft.core.BroadcastGate]] they
-    * come from the driver's [[DvFiles]], as in [[joinDeletes]]; past it
-    * from one O(deleted rows) Spark job. */
-  private def dvBearingFiles(spark: SparkSession, dvs: Seq[FileEntry]): Seq[String] =
-    if (graft.core.BroadcastGate.fits(spark, dvs.map(entryBytes).sum))
-      DvFiles.bearing(spark.sessionState.newHadoopConf(), dvs)
-    else readDvs(spark, dvs.map(_.path)).select("__dv_file").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+  /** The files the DV set `dvs` points at: the union of their logged
+    * coverage, sorted — a read of the log at any DV set size. */
+  private[graft] def dvBearingFiles(spark: SparkSession, dvs: Seq[FileEntry]): Seq[String] =
+    dvs.flatMap(DvFiles.covered(spark.sessionState.newHadoopConf(), _)).distinct.sorted
 
   /** A DV batch staged under `<root>/dv/` for a commit that has not
     * landed yet: its log entries and row count. */
@@ -2434,19 +2433,20 @@ object SnapshotCatalog {
     catch { case e: Throwable => discardStaged(root, dv, Some(batch)); throw e }
 
   /** THE DV-batch writer: the positions frame (`__dv_file`, `__dv_pos`)
-    * lands as ONE batch `<root>/dv/<tag><uuid>`, counted from its parquet
-    * footers on the driver (no Spark job); each entry records its
-    * file's count. An empty batch is deleted and stages no entries.
-    * With `refuseRepeats`, a position that occurs twice fails the write
-    * with that message, and nothing stays staged. */
+    * lands sorted as ONE batch `<root>/dv/<tag><uuid>`. Each entry
+    * records its file's count (from its parquet footer on the driver)
+    * and the batch's coverage (its distinct `__dv_file` values, observed
+    * by the write) — no extra Spark job. An empty batch is deleted and
+    * stages no entries. With `refuseRepeats`, a position that occurs
+    * twice fails the write with that message, and nothing stays staged. */
   private def stageDvBatch(root: String, tag: String, positions: DataFrame,
                            refuseRepeats: Option[String] = None): StagedDv = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{coalesce, col, lag, lit, raise_error}
+    import org.apache.spark.sql.functions.{coalesce, col, collect_set, lag, lit, raise_error}
     val dir = new Path(s"$root/dv/$tag${java.util.UUID.randomUUID().toString.take(8)}")
-    val one = positions.coalesce(1)
-    // the batch is one partition, so a window clustered on the file needs
-    // no shuffle; sorted by position, a repeat sits next to its twin
+    // one partition, so sorting it and a window clustered on the file
+    // need no shuffle; sorted by position, a repeat sits next to its twin
+    val one = positions.coalesce(1).sortWithinPartitions("__dv_file", "__dv_pos")
     val checked = refuseRepeats.fold(one) { msg =>
       one.withColumn("__dv_prev", lag(col("__dv_pos"), 1)
           .over(Window.partitionBy("__dv_file").orderBy("__dv_pos")))
@@ -2454,14 +2454,18 @@ object SnapshotCatalog {
           .or(raise_error(lit(msg))))
         .drop("__dv_prev")
     }
-    try checked.write.mode("overwrite").parquet(dir.toString)
+    val coverage = org.apache.spark.sql.Observation()
+    try checked.observe(coverage, collect_set(col("__dv_file")).as("files"))
+      .write.mode("overwrite").parquet(dir.toString)
     catch { case e: Throwable => fsFor(dir).delete(dir, true); throw e }
     val sized = listDataEntries(dir.toString)
-    val entries = sized.zip(footerStats(sized.map(_._1))).map {
+    val counted = sized.zip(footerStats(sized.map(_._1))).map {
       case ((f, sz), (_, n, _)) => FileEntry(f, sz, n) }
-    val n = entries.map(_.rows).sum
+    val n = counted.map(_.rows).sum
     if (n == 0L) { fsFor(dir).delete(dir, true); StagedDv(dir, Seq.empty, 0L) }
-    else StagedDv(dir, entries, n)
+    else { // rows passed the observation, so its metrics are in
+      val files = coverage.get("files").asInstanceOf[Seq[String]].sorted
+      StagedDv(dir, counted.map(_.copy(covers = Some(files))), n) }
   }
 
   /** Re-land the DV set `dvs` under a rewrite: withdraw every entry and
@@ -2480,6 +2484,10 @@ object SnapshotCatalog {
     stageDvBatch(root, "w",
       readDvs(spark, dvs.map(_.path)).join(keepPaths, Seq("__dv_file"), "left_semi"))
   }
+
+  /** The DV files `paths` as a Spark scan in [[dvSchema]]: a re-land's input. */
+  private def readDvs(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(paths: _*)
 
   /** Version `v`'s live rows (its DVs applied) with their positions —
     * the frame every row-level op matches against. The FileIndex
@@ -2918,8 +2926,7 @@ object SnapshotCatalog {
 
   /** Read a snapshot with its deletion vectors applied: the
     * [[readSnapshot]] scan with the in-effect (file, position) pairs
-    * dropped by [[joinDeletes]] (a broadcast position filter under
-    * [[graft.core.BroadcastGate]], a shuffled anti-join past it). */
+    * dropped by [[joinDeletes]]' filter. */
   def readSnapshotWithDeletes(spark: SparkSession, root: String,
                               version: Option[Int] = None,
                               mergeSchema: Boolean = false): DataFrame =

@@ -400,7 +400,7 @@ object SnapshotFileIndex {
     * hive-style partitions) from the log-carried metadata at PLANNING
     * time. Deletion vectors in effect are subtracted on top when
     * `subtractDeletes`, by [[SnapshotCatalog.joinDeletes]] (its filter
-    * or anti-join wraps the pruned scan, so skipping still applies
+    * wraps the pruned scan, so skipping still applies
     * underneath); pass false for the raw snapshot
     * ([[SnapshotCatalog.readSnapshot]] semantics). Schema resolves from
     * the log's `S` lines — per-version, evolution-aware — with a footer

@@ -645,7 +645,7 @@ object StreamingQueries extends QueryPack {
           val q = docStream.writeStream
             .outputMode("append")
             .option("checkpointLocation", cp)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
               val scored = graft.ml.AbsaPipeline.decoded(
                 graft.ml.AbsaPipeline.withProbs(batch))
               scored.select("doc_id", "value_label", "table_label", "stream_label")
@@ -963,7 +963,7 @@ object StreamingQueries extends QueryPack {
         // doc's multiple shingle hits to one verdict row. This is how a
         // 100 TB pipeline quarantines contaminated docs before they
         // land, instead of re-scanning the corpus afterwards.
-        import graft.dedup.DedupQueries.{shingles, shingleRows}
+        import graft.dedup.DedupQueries.shingleRows
         val docs = Tables(spark, dir).documents
         val staged = Streams.stage(docs.repartition(2), "graft_docs_decon_")
         Streams.withStreamShufflePartitions(spark) {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.Files
 

@@ -251,7 +251,7 @@ object PlanAudit {
       val plan = capturePlan(SnapshotCatalog.readSnapshotWithDeletes(spark, root)
         .agg(count(lit(1)).as("n_rows"),
           graft.functions.Canon.sumCents(col("value")).as("sum_value_cents")))
-      sb.append(s"\n## src17_deletion_vectors (DV-served read) — broadcast position filter drops $nDel positions; data files unrewritten, fact side unshuffled\n\n")
+      sb.append(s"\n## src17_deletion_vectors (DV-served read) — scan-task position filter drops $nDel positions; data files unrewritten, fact side unshuffled\n\n")
       sb.append(s"```\n$plan\n```\n")
     }
     // src22's registry entry returns audit literals; the plan worth
@@ -354,7 +354,7 @@ object PlanAudit {
           .groupBy("_change_type")
           .agg(count(lit(1)).as("n"),
             graft.functions.Canon.sumCents(col("value")).as("cents")))
-      sb.append(s"\n## st41_catalog_cdc_ivm (one row-level CDC poll) — $nDel retractions materialized by a broadcast DV-position filter; table never rescanned\n\n")
+      sb.append(s"\n## st41_catalog_cdc_ivm (one row-level CDC poll) — $nDel retractions materialized by a scan-task DV-position filter; table never rescanned\n\n")
       sb.append(s"```\n$plan\n```\n")
     }
     // st38's registry entry returns audit literals; the plan worth

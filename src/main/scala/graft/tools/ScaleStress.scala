@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.core.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness (round-9 verdict item 3): synthesize 10×/100×

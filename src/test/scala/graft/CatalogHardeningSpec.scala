@@ -729,75 +729,57 @@ class CatalogHardeningSpec extends SparkTestBase {
     assert(nRead == 1L)
   }
 
-  // -- size-gated DV application on the planner-integrated serve path -----
+  // -- one DV path at every broadcast ceiling ------------------------------
 
-  test("snapshotDF degrades the DV anti-join to a shuffle past the broadcast gate; broadcasts under it") {
+  /** The broadcast ceilings DV application must not depend on: the
+    * session default, 1 byte (every DV set past any size gate, AQE's
+    * runtime threshold still at 64 MB) and -1 (broadcasting disabled). */
+  private def atEveryCeiling[A](body: => A): Seq[(String, A)] = Seq(
+    "default" -> body,
+    "1 byte" -> pastTheGate(body),
+    "-1" -> graft.core.GraftSession.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body))
+
+  private def assertDvFilter(plan: String, what: String): Unit =
+    assert(plan.contains("dv_listed") && !plan.contains("Join") && !plan.contains("Exchange"),
+      s"$what must apply its DVs as a dv_listed filter, with no join and no exchange:\n$plan")
+
+  test("snapshotDF and readSnapshotWithDeletes apply DVs as a dv_listed filter with no join or exchange at every broadcast ceiling") {
     val root = graft.streaming.Streams.dataDir("graft_dvgate_")
     val spark2 = spark
     import spark2.implicits._
     SnapshotCatalog.append((1L to 100L).toDF("id").coalesce(1), root, "b0")
     SnapshotCatalog.deleteWhere(spark, root, col("id") % 2 === 0L)
     val expect = (1L to 100L).filter(_ % 2 == 1).toSet
-    def servedPlan(): (Set[Long], String) = {
-      val df = SnapshotFileIndex.snapshotDF(spark, root)
-      val got = df.collect().map(_.getLong(0)).toSet
-      (got, df.queryExecution.executedPlan.toString)
+    val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "snapshotDF" -> (() => SnapshotFileIndex.snapshotDF(spark, root)),
+      "readSnapshotWithDeletes" -> (() => SnapshotCatalog.readSnapshotWithDeletes(spark, root)))
+    for ((name, read) <- reads; (ceiling, (got, plan)) <- atEveryCeiling {
+           val df = read()
+           (df.collect().map(_.getLong(0)).toSet, df.queryExecution.executedPlan.toString)
+         }) {
+      assert(got == expect, s"$name at the $ceiling ceiling served the wrong rows")
+      assertDvFilter(plan, s"$name at the $ceiling ceiling")
     }
-    // under the gate (default 64 MB): the DV positions are broadcast to a
-    // filter, with no join
-    val (gotB, planB) = servedPlan()
-    assert(gotB == expect)
-    assert(planB.contains("dv_listed") && !planB.contains("Join"),
-      s"small DV set should be a broadcast position filter:\n$planB")
-    // past the gate the DV side is merge-hinted: the frame built under
-    // a 1-byte ceiling plans a shuffle even once the ceiling is back at
-    // 64 MB, where an unhinted kilobyte side would auto-broadcast
-    val pastServed = pastTheGate(SnapshotFileIndex.snapshotDF(spark, root))
-    val pastRead = pastTheGate(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
-    for (df <- Seq(pastServed, pastRead)) {
-      assert(df.collect().map(_.getLong(0)).toSet == expect, "gated plan changed results")
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin") && p.contains("LeftAnti"),
-        s"DV side past the gate must shuffle:\n$p")
-      assert(!p.contains("BroadcastHashJoin") && !p.contains("dv_listed"),
-        s"DV side past the gate must not broadcast:\n$p")
-    }
-    // a session that disables broadcasting gets no gated broadcast
-    val (gotOff, planOff) = graft.core.GraftSession.withConf(spark,
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(servedPlan())
-    assert(gotOff == expect)
-    assert(planOff.contains("LeftAnti") && !planOff.contains("BroadcastHashJoin") &&
-        !planOff.contains("dv_listed"),
-      s"a disabled threshold must mean no DV broadcast:\n$planOff")
   }
 
-  test("the row-level ops' DV join rides the same gate: deleteWhere broadcasts under it, merge-joins past it and with broadcasting disabled") {
+  test("deleteWhere applies the DVs already in effect as a dv_listed filter with no join or exchange at every broadcast ceiling") {
     val root = graft.streaming.Streams.dataDir("graft_dvgate_dml_")
     val spark2 = spark
     import spark2.implicits._
     SnapshotCatalog.append((1L to 100L).toDF("id").coalesce(1), root, "b0")
     SnapshotCatalog.deleteWhere(spark, root, col("id") % 2 === 0L)
     // every later deleteWhere matches against the live rows, so its DV
-    // batch write carries the DVs already present: a position filter
-    // under the gate, an anti join past it
-    def appliesDvs(p: String) = p.contains("LeftAnti") || p.contains("dv_listed")
-    def dvJoinPlan(cond: org.apache.spark.sql.Column): String =
+    // batch write carries the DVs already present; a plan that joined
+    // them would be captured too, and fail
+    def appliesDvs(p: String) = p.contains("Join") || p.contains("dv_listed")
+    def dvPlan(cond: org.apache.spark.sql.Column): String =
       capturePlans(SnapshotCatalog.deleteWhere(spark, root, cond))(
           _.exists(qe => appliesDvs(qe.executedPlan.toString)))._2
         .map(_.executedPlan.toString).filter(appliesDvs).mkString("\n")
-    val under = dvJoinPlan(col("id") % 3 === 0L)
-    assert(under.contains("dv_listed") && !under.contains("LeftAnti"),
-      s"under the gate the DML DVs should be a broadcast position filter:\n$under")
-    // AQE's runtime broadcast stays on past the gate; the merge hint
-    // must still hold the join to a shuffle
-    val past = pastTheGate(dvJoinPlan(col("id") % 5 === 0L))
-    assert(past.contains("SortMergeJoin") && !past.contains("BroadcastHashJoin") &&
-        !past.contains("dv_listed"),
-      s"past the gate the DML DV join must shuffle:\n$past")
-    val off = graft.core.GraftSession.withConf(spark,
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(dvJoinPlan(col("id") % 7 === 0L))
-    assert(off.contains("LeftAnti") && !off.contains("BroadcastHashJoin") && !off.contains("dv_listed"),
-      s"a disabled threshold must mean no DML DV broadcast:\n$off")
+    val conds = Iterator(3L, 5L, 7L)
+    for ((ceiling, plan) <- atEveryCeiling(dvPlan(col("id") % conds.next() === 0L)))
+      assertDvFilter(plan, s"deleteWhere at the $ceiling ceiling")
     val expect = (1L to 100L)
       .filter(i => i % 2 != 0 && i % 3 != 0 && i % 5 != 0 && i % 7 != 0)
     assert(SnapshotCatalog.readSnapshotWithDeletes(spark, root)

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * in effect. The catalog's ops are driver-bound, so each job is fixed
   * overhead: these upper bounds pin that no DV read infers its fixed
   * schema (a job per read), that no DV batch is read back to be
-  * counted (its footer holds the count), and that DVs under the
-  * broadcast gate are applied as a filter over positions read on the
-  * driver, with no broadcast-join job. Jobs are counted by job group
-  * through the status tracker. */
+  * counted (its footer holds the count) or to list the data files it
+  * covers (the log holds them), and that DVs are applied as a filter
+  * whose scan tasks read their own file's positions, with no join job
+  * at any DV set size. Jobs are counted by job group through the
+  * status tracker. */
 class CatalogJobsSpec extends SparkTestBase {
 
   /** The number of Spark jobs `body` runs. */
@@ -65,12 +66,31 @@ class CatalogJobsSpec extends SparkTestBase {
         "g0")),
     ("updateWhere", 2, root =>
       SnapshotCatalog.updateWhere(spark, root, col("id").between(5L, 6L),
-        Seq("v" -> (col("v") + 1L)), "up0")))
+        Seq("v" -> (col("v") + 1L)), "up0")),
+    ("maintainIfNeeded", 3, root =>
+      SnapshotCatalog.maintainIfNeeded(spark, root, "m0", maxDvBytes = Some(0L))))
+
+  private def checkBound(op: String, bound: Int, n: Int): Unit =
+    assert(n <= bound, s"$op ran $n Spark jobs (bound $bound)")
 
   for ((op, bound, run) <- ops)
     test(s"$op with DVs in effect runs at most $bound Spark jobs") {
       val root = tinyTable("graft_jobs_")
-      val n = jobs(run(root))
-      assert(n <= bound, s"$op ran $n Spark jobs (bound $bound)")
+      checkBound(op, bound, jobs(run(root)))
     }
+
+  test("past the broadcast gate a read, a delete and maintenance keep their bounds; dvBearingFiles runs no job at any size") {
+    def bearing(root: String) = SnapshotCatalog.dvBearingFiles(spark,
+      SnapshotCatalog.dvEntries(root, SnapshotCatalog.latestVersion(root)))
+    val under = tinyTable("graft_jobs_bearing_")
+    assert(jobs(bearing(under)) == 0)
+    pastTheGate {
+      for ((op, bound, run) <- ops
+           if Set("a snapshot read", "deleteWhere", "maintainIfNeeded")(op)) {
+        val root = tinyTable("graft_jobs_past_")
+        assert(jobs(bearing(root)) == 0)
+        checkBound(op, bound, jobs(run(root)))
+      }
+    }
+  }
 }

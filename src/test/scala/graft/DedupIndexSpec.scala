@@ -85,7 +85,7 @@ class DedupIndexSpec extends SparkTestBase {
     // path 2: the reuse shape — filter the gate's own artifacts
     val (i2, s2) = build()
     val (v2, bands2, sh2) = DedupQueries.gateBatchWithArtifacts(spark, batch1, i2, s2)
-    DedupQueries.appendBandIndexFromGate(spark, bands2, sh2,
+    DedupQueries.appendBandIndexFromGate(bands2, sh2,
       v2.filter(!col("dropped")), i2, s2)
     def sorted(dir: String, cols: Seq[String]) =
       graft.sources.SnapshotCatalog.readTableOrDir(spark, dir)

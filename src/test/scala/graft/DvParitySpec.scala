@@ -5,13 +5,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Deletion vectors (DVs) are applied two ways, chosen by
-  * `BroadcastGate` on the DV set's logged bytes: under the gate as a
-  * `dv_listed` filter over positions read on the driver and broadcast,
-  * past it as a merge-hinted anti (or semi) join that shuffles. Over
-  * seeded DV sets on a three-file table both must serve the same rows —
-  * and the rows the deletes leave. Each comparison also pins which path
-  * each side took. */
+/** Deletion vectors (DVs) are applied one way: a `dv_listed` filter
+  * whose scan task reads only its data file's positions. Over seeded
+  * DV sets on a three-file table, each served frame is checked against
+  * a reference built here — an anti (or semi) join of the raw scan's
+  * positions against the DV files read as a Spark scan in
+  * [[SnapshotCatalog.dvSchema]] — and against the rows the deletes
+  * leave. Each frame is served at the default broadcast ceiling, at 1
+  * byte (every DV set past any size gate) and at -1 (broadcasting
+  * disabled), and must keep the same rows and the `dv_listed` plan at
+  * each. */
 class DvParitySpec extends SparkTestBase {
 
   private val ids = 1L to 90L
@@ -38,58 +41,80 @@ class DvParitySpec extends SparkTestBase {
     (root, commits)
   }
 
-  /** `frame`'s rows (sorted) built under the gate and built past it,
-    * after checking that each took its path. */
-  private def bothPaths(frame: => DataFrame): (Seq[Row], Seq[Row]) = {
-    def run(): (Seq[Row], String) = {
-      val df = frame
-      val rows = df.collect().toSeq.sortBy(_.toString)
-      (rows, df.queryExecution.executedPlan.toString)
-    }
-    val (under, underPlan) = run()
-    val (past, pastPlan) = pastTheGate(run())
-    checkPaths(underPlan, pastPlan)
-    (under, past)
+  /** The reference: `scan`'s rows with their positions, anti-joined
+    * (`left_anti`) or semi-joined (`left_semi`) against the DV files
+    * `dvs`; the position columns are dropped unless `keepPositions`. */
+  private def reference(scan: DataFrame, dvs: Seq[SnapshotCatalog.FileEntry], how: String,
+                        keepPositions: Boolean = false): Seq[Row] = {
+    val dv = spark.read.schema(SnapshotCatalog.dvSchema).parquet(dvs.map(_.path): _*)
+    val joined = scan.withColumn("__dv_file", col("_metadata.file_path"))
+      .withColumn("__dv_pos", col("_metadata.row_index"))
+      .join(dv, Seq("__dv_file", "__dv_pos"), how)
+    val positions = if (keepPositions) Seq("__dv_file", "__dv_pos") else Nil
+    sorted(joined.select((scan.columns.toSeq ++ positions).map(col): _*))
   }
 
-  private def checkPaths(underPlan: String, pastPlan: String): Unit = {
-    assert(underPlan.contains("dv_listed") && !underPlan.contains("Join"),
-      s"under the gate the DVs must be a position filter:\n$underPlan")
-    assert(pastPlan.contains("SortMergeJoin") && !pastPlan.contains("dv_listed"),
-      s"past the gate the DVs must join with a shuffle:\n$pastPlan")
-  }
+  private def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+
+  /** The broadcast ceilings every frame is served at. */
+  private val ceilings = Seq("default" -> None, "1 byte" -> Some("1"), "-1" -> Some("-1"))
+
+  private def atCeiling[A](ceiling: Option[String])(body: => A): A =
+    ceiling.fold(body)(c => graft.core.GraftSession.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> c)(body))
+
+  private def checkPlan(plan: String, ceiling: String): Unit =
+    assert(plan.contains("dv_listed") && !plan.contains("Join"),
+      s"at the $ceiling ceiling the DVs must be a dv_listed filter, not a join:\n$plan")
+
+  /** `frame`'s rows (sorted), served at every ceiling: the same at each,
+    * each through a `dv_listed` filter. */
+  private def served(frame: => DataFrame): Seq[Row] =
+    ceilings.map { case (name, c) =>
+      atCeiling(c) {
+        val df = frame
+        val rows = sorted(df)
+        checkPlan(df.queryExecution.executedPlan.toString, name)
+        rows
+      }
+    }.reduce { (a, b) => assert(a == b, "rows differ between ceilings"); a }
 
   private def idsOf(rows: Seq[Row]): Set[Long] = rows.map(_.getAs[Long]("id")).toSet
 
   for (seed <- Seq(1, 2, 3))
     test(s"readSnapshotWithDeletes serves the same rows through the filter and the join (seed $seed)") {
       val (root, commits) = seeded("graft_dvparity_read_", seed)
-      val (under, past) = bothPaths(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
-      assert(under == past)
-      assert(idsOf(under) == ids.toSet -- commits.flatMap(_._2))
+      val v = SnapshotCatalog.latestVersion(root)
+      val got = served(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
+      assert(got == reference(SnapshotFileIndex.snapshotDF(spark, root, subtractDeletes = false),
+        SnapshotCatalog.dvEntries(root, v), "left_anti"))
+      assert(idsOf(got) == ids.toSet -- commits.flatMap(_._2))
     }
 
   test("deletedRows keeps the same deleted rows through the filter and the semi join") {
     val (root, commits) = seeded("graft_dvparity_deleted_", 4)
     for ((v, deleted) <- commits) {
       val dvAdds = SnapshotCatalog.changeCommits(root, v - 1, v).flatMap(_._3)
-      val (under, past) = bothPaths(SnapshotCatalog.deletedRows(spark, dvAdds)(
+      val got = served(SnapshotCatalog.deletedRows(spark, dvAdds)(
         files => spark.read.parquet(files: _*)))
-      assert(under == past, s"version $v")
-      assert(idsOf(under) == deleted, s"version $v")
-      assert(under.forall(_.getAs[String]("_change_type") == "delete"))
+      val ref = reference(spark.read.parquet(SnapshotCatalog.manifestFiles(root, v - 1): _*),
+        dvAdds, "left_semi").map(r => Row.fromSeq(r.toSeq :+ "delete"))
+      assert(got == ref, s"version $v")
+      assert(idsOf(got) == deleted, s"version $v")
+      assert(got.forall(_.getAs[String]("_change_type") == "delete"))
     }
   }
 
   test("liveWithPositions keeps the same rows and positions through the filter and the join") {
     val (root, commits) = seeded("graft_dvparity_live_", 5)
     val v = SnapshotCatalog.latestVersion(root)
-    val (under, past) = bothPaths(SnapshotCatalog.liveWithPositions(spark, root, v)
+    val got = served(SnapshotCatalog.liveWithPositions(spark, root, v)
       .select("id", "v", "__dv_file", "__dv_pos"))
-    assert(under == past)
-    assert(idsOf(under) == ids.toSet -- commits.flatMap(_._2))
+    assert(got == reference(SnapshotFileIndex.snapshotDF(spark, root, subtractDeletes = false),
+      SnapshotCatalog.dvEntries(root, v), "left_anti", keepPositions = true))
+    assert(idsOf(got) == ids.toSet -- commits.flatMap(_._2))
     // one row per (file, position)
-    assert(under.map(r => (r.getString(2), r.getLong(3))).distinct.size == under.size)
+    assert(got.map(r => (r.getString(2), r.getLong(3))).distinct.size == got.size)
   }
 
   test("a change-feed drain serves the same inserts and deletes through the filter and the join") {
@@ -120,22 +145,31 @@ class DvParitySpec extends SparkTestBase {
       import scala.jdk.CollectionConverters._
       (got.asScala.toSet, plan)
     }
-    val deletes = commits.flatMap { case (v, d) => d.map(i => (i, "delete", v.toLong)) }.toSet
-    val latest = SnapshotCatalog.latestVersion(root).toLong
-    val bootstrap = (ids.toSet -- commits.flatMap(_._2)).map(i => (i, "insert", latest))
-    for ((sv, expected) <- Seq(Some("1") -> deletes, None -> bootstrap)) {
-      val (under, underPlan) = drain(sv)
-      val (past, pastPlan) = pastTheGate(drain(sv))
-      checkPaths(underPlan, pastPlan)
-      assert(under == past, s"startingVersion $sv")
-      assert(under.filter(_._2 == expected.head._2) == expected, s"startingVersion $sv")
+    // the reference: the rows each DV commit's positions hold, and the
+    // bootstrap snapshot with every DV position anti-joined away
+    val latest = SnapshotCatalog.latestVersion(root)
+    val deletes = commits.flatMap { case (v, _) =>
+      val dvAdds = SnapshotCatalog.changeCommits(root, v - 1, v).flatMap(_._3)
+      reference(spark.read.parquet(SnapshotCatalog.manifestFiles(root, v - 1): _*),
+        dvAdds, "left_semi").map(r => (r.getAs[Long]("id"), "delete", v.toLong))
+    }.toSet
+    val bootstrap = reference(SnapshotFileIndex.snapshotDF(spark, root, subtractDeletes = false),
+      SnapshotCatalog.dvEntries(root, latest), "left_anti")
+      .map(r => (r.getAs[Long]("id"), "insert", latest.toLong)).toSet
+    assert(deletes.map(_._1) == commits.flatMap(_._2).toSet)
+    assert(bootstrap.map(_._1) == ids.toSet -- commits.flatMap(_._2))
+    for ((sv, expected) <- Seq(Some("1") -> deletes, None -> bootstrap);
+         (name, c) <- ceilings) {
+      val (got, plan) = atCeiling(c)(drain(sv))
+      checkPlan(plan, name)
+      assert(got.filter(_._2 == expected.head._2) == expected, s"startingVersion $sv at $name")
     }
   }
 
   test("a table dropped and recreated at its root is never served the old table's DV positions") {
     val (root, commits) = seeded("graft_dvparity_recreate_", 7)
-    // the old table's DV files are now in the driver's cache
-    assert(idsOf(bothPaths(SnapshotCatalog.readSnapshotWithDeletes(spark, root))._1) ==
+    // the old table's DV positions are now in the process-wide cache
+    assert(idsOf(served(SnapshotCatalog.readSnapshotWithDeletes(spark, root))) ==
       ids.toSet -- commits.flatMap(_._2))
     val p = new Path(root)
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
@@ -147,8 +181,40 @@ class DvParitySpec extends SparkTestBase {
     val oldGone = commits.flatMap(_._2).toSet
     val newGone = ids.filterNot(oldGone).take(12).toSet
     SnapshotCatalog.deleteWhere(spark, root, col("id").isin(newGone.toSeq: _*))
-    val (under, past) = bothPaths(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
-    assert(under == past)
-    assert(idsOf(under) == ids.toSet -- newGone)
+    val got = served(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
+    assert(got == reference(SnapshotFileIndex.snapshotDF(spark, root, subtractDeletes = false),
+      SnapshotCatalog.dvEntries(root, SnapshotCatalog.latestVersion(root)), "left_anti"))
+    assert(idsOf(got) == ids.toSet -- newGone)
+  }
+
+  test("a V line logged without its coverage still reads, feeds and maintains the same rows") {
+    val (root, commits) = seeded("graft_dvparity_legacy_", 8)
+    val v = SnapshotCatalog.latestVersion(root)
+    def read() = sorted(SnapshotCatalog.readSnapshotWithDeletes(spark, root))
+    def feeds() = commits.map { case (cv, _) =>
+      sorted(SnapshotCatalog.deletedRows(spark,
+        SnapshotCatalog.changeCommits(root, cv - 1, cv).flatMap(_._3))(
+        files => spark.read.parquet(files: _*)))
+    }
+    val (readBefore, feedsBefore) = (read(), feeds())
+    // the middle DV commit's V line in its pre-coverage form: path,
+    // size, rows — no stats or coverage field
+    val (mid, _) = commits(1)
+    val commit = new java.io.File(new Path(s"$root/manifests/commit-v$mid.txt").toUri.getPath)
+    val lines = scala.io.Source.fromFile(commit).getLines().toList
+    assert(lines.exists(l => l.startsWith("V\t") && l.split("\t", -1).length == 6))
+    java.nio.file.Files.writeString(commit.toPath, lines.map { l =>
+      if (l.startsWith("V\t")) l.split("\t", -1).take(4).mkString("\t") else l
+    }.mkString("\n") + "\n")
+    SnapshotCatalog.dropCaches() // a fresh reader process sees the old line
+    assert(SnapshotCatalog.dvEntries(root, v).exists(_.covers.isEmpty))
+    assert(read() == readBefore)
+    assert(feeds() == feedsBefore)
+    // maintenance rewrites every file the DVs cover, the old line's too
+    assert(SnapshotCatalog.maintainIfNeeded(spark, root, "m0", maxDvBytes = Some(0L)).isDefined)
+    val after = SnapshotCatalog.latestVersion(root)
+    assert(SnapshotCatalog.dvEntries(root, after).isEmpty)
+    assert(sorted(SnapshotCatalog.readSnapshot(spark, root)) == readBefore)
+    assert(read() == readBefore)
   }
 }

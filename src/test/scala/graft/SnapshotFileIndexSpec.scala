@@ -107,16 +107,16 @@ class SnapshotFileIndexSpec extends SparkTestBase {
     assert(got == (25L to 34L).filter(_ % 2 == 1).toSet,
       "DV-wrapped pruned read served deleted rows")
     // total files touched = the pruned data side (2 of 6) — far under
-    // the 6 an unpruned data side would read; under the broadcast gate
-    // the DV batch is read on the driver, not scanned
+    // the 6 an unpruned data side would read; the scan task reads its
+    // file's DV positions itself, so the DV batch is not scanned
     val scanned = SnapshotFileIndex.scannedFiles(df)
     assert(scanned <= 3L && scanned >= 2L,
       s"expected 2-of-6 data files and no DV scan, got $scanned total")
-    // past the gate the DV join adds the DV batch scan (1 file)
+    // past the broadcast gate the plan and the files scanned stay the same
     val past = pastTheGate(served())
     assert(past.collect().map(_.getLong(0)).toSet == got)
-    assert(SnapshotFileIndex.scannedFiles(past) == scanned + 1L,
-      s"expected the pruned data side + 1 DV file past the gate")
+    assert(SnapshotFileIndex.scannedFiles(past) == scanned,
+      s"expected the same pruned data side and no DV scan past the gate")
   }
 
   test("schema evolution composes: mergeSchema surfaces the accreted column; pruning still applies") {
