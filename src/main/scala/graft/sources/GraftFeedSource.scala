@@ -2,8 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
 import org.apache.spark.sql.functions.{col, lit}
@@ -336,18 +335,11 @@ class GraftFeedSource(spark: SparkSession, root: String,
     val spec = SnapshotCatalog.partitionSpecAt(root, v)
     val dataSchema = StructType(baseSchema.fields.filterNot(f =>
       spec.exists(_.fieldNames.contains(f.name))))
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val index = new InMemoryFileIndex(
-      classic, files.map(new Path(_)), Map.empty, Some(dataSchema))
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = StructType(Nil),
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(classic)
-    val base = org.apache.spark.sql.graftbridge.Bridge.ofRows(
-      spark, LogicalRelation(relation, isStreaming = true))
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      files.map(new Path(_)), Map.empty, Some(dataSchema))
+    val base = SnapshotFileIndex.parquetRelation(spark, index, dataSchema,
+      StructType(Nil), isStreaming = true)
     spec.fold(base)(sp => SnapshotCatalog.reconstructPartCols(base, sp))
   }
 

@@ -396,6 +396,24 @@ object SnapshotFileIndex {
     (dataSchema, partSchema)
   }
 
+  /** A parquet relation over `index` as a DataFrame — the one place the
+    * sources build a `HadoopFsRelation`: the snapshot read below and the
+    * feed source's streaming batches ([[GraftFeedSource]]). */
+  private[sources] def parquetRelation(spark: SparkSession, index: FileIndex,
+                                       dataSchema: StructType,
+                                       partitionSchema: StructType,
+                                       isStreaming: Boolean): DataFrame = {
+    val relation = HadoopFsRelation(
+      location = index,
+      partitionSchema = partitionSchema,
+      dataSchema = dataSchema,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(
+      spark, LogicalRelation(relation, isStreaming = isStreaming))
+  }
+
   /** The snapshot as an ordinary DataFrame whose scan prunes files (and
     * hive-style partitions) from the log-carried metadata at PLANNING
     * time. Deletion vectors in effect are subtracted on top when
@@ -412,15 +430,8 @@ object SnapshotFileIndex {
     val v = version.getOrElse(SnapshotCatalog.latestVersion(root))
     val index = new SnapshotFileIndex(spark, root, v)
     val (dataSchema, _) = servedSchemas(spark, root, v, mergeSchema)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    val base = org.apache.spark.sql.graftbridge.Bridge.ofRows(
-      spark, LogicalRelation(relation))
+    val base = parquetRelation(spark, index, dataSchema, index.partitionSchema,
+      isStreaming = false)
     if (subtractDeletes) SnapshotCatalog.joinDeletes(base, SnapshotCatalog.dvEntries(root, v))
     else base
   }

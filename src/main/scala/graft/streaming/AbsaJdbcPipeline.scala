@@ -64,12 +64,8 @@ object AbsaJdbcPipeline extends QueryPack {
           ("review_text VARCHAR(4000), value_label VARCHAR(8), " +
            "table_label VARCHAR(8), stream_label VARCHAR(8)")),
       Streams.scratchDir("graft_cp_st28_"), idempotent = true)
-    Streams.withStreamShufflePartitions(spark) {
-      val docStream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-      val q = sink.start(absaResults(docStream))
-      Streams.awaitDrained(q)
-      q.stop()
-    }
+    Streams.drain(spark)(sink.start(absaResults(
+      Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1))))
     val table = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "absa_results")
       .option("driver", VehiclePipeline.derbyDriver).load()

@@ -80,12 +80,8 @@ object FirePipeline extends QueryPack {
         // Derby from defaulting StringType to CLOB
         "createTableColumnTypes" -> "camera_id VARCHAR(32)"),
       Streams.scratchDir("graft_cp_st27_"), idempotent = true)
-    Streams.withStreamShufflePartitions(spark) {
-      val stream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-      val q = sink.start(detectFires(stream))
-      Streams.awaitDrained(q)
-      q.stop()
-    }
+    Streams.drain(spark)(sink.start(detectFires(
+      Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1))))
     val table = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "fire_detections")
       .option("driver", VehiclePipeline.derbyDriver).load()

